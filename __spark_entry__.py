@@ -28,6 +28,7 @@ from docopenie_spark.functions import textnorm
 from docopenie_spark.operators import assembly, dedup, extract, ner, segment, similarity, textstats
 from docopenie_spark.operators import tokenize as tok
 from docopenie_spark.plans.pipeline import run_pipeline
+from docopenie_spark.session import local_table
 from docopenie_spark.sources.transcripts import DERIVED_SQL_CTE, derived_from_documents
 
 
@@ -1089,7 +1090,7 @@ def _q_kg_coref_expansion(spark, sf_dir):
         fused.split_triples(ann), datagen.entity_dict_df(spark),
         clusters=cl, sentences=fused.split_sentences(ann, turns),
     )
-    empty_bems = spark.createDataFrame([], schemas.BEST_MENTIONS)
+    empty_bems = local_table(spark, [], schemas.BEST_MENTIONS)
     out = bestmention.expand_with_coref(empty_bems, cl, lk)
     return out.select(
         "conv_id", "kind",

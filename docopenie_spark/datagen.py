@@ -36,6 +36,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from . import schemas
+from .session import local_table
 
 BLOCK = 80  # ids per block
 HOT_PER_BLOCK = 8  # first 8 ids of each block → the single hot conversation
@@ -222,7 +223,7 @@ def entity_dict_rows() -> list[tuple]:
 
 
 def entity_dict_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(entity_dict_rows(), schema=schemas.ENTITY_DICT)
+    return local_table(spark, entity_dict_rows(), schemas.ENTITY_DICT)
 
 
 def gazetteer_rows() -> list[tuple]:
@@ -240,4 +241,4 @@ def gazetteer_rows() -> list[tuple]:
 
 
 def gazetteer_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(gazetteer_rows(), schema=schemas.GAZETTEER)
+    return local_table(spark, gazetteer_rows(), schemas.GAZETTEER)

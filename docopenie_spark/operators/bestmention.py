@@ -75,6 +75,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import schemas
+from ..functions.sqltext import sql_strlist
 from ..session import content_broadcast
 from .ner import PRONOUNS
 
@@ -775,10 +776,6 @@ def _pronoun_gate(text_col, type_col):
     return (is_personal & ~not_person) | (~is_personal & not_person)
 
 
-def _strlist(words) -> str:
-    return ", ".join(f"'{w}'" for w in sorted(words))
-
-
 def expand_with_coref(bems: DataFrame, clusters: DataFrame,
                       links: DataFrame | None = None) -> DataFrame:
     """T12: per cluster, if exactly one distinct link (else exactly one
@@ -806,7 +803,7 @@ def expand_with_coref(bems: DataFrame, clusters: DataFrame,
     ).selectExpr("conv_id", "cluster_id",
                  "m.text as m_text", "m.offset as m_offset")
 
-    pron_mentions = m.where(f"lower(m_text) IN ({_strlist(PRONOUNS)})")
+    pron_mentions = m.where(f"lower(m_text) IN ({sql_strlist(PRONOUNS)})")
 
     ann = m
     if links is not None:
@@ -870,7 +867,7 @@ def expand_with_coref(bems: DataFrame, clusters: DataFrame,
     )
     # _possessive_fix as SQL (tool/link/Linker.scala:102-120)
     best = (
-        f"CASE WHEN lower(m_text) IN ({_strlist(POSSESSIVE_PRONOUNS)})"
+        f"CASE WHEN lower(m_text) IN ({sql_strlist(POSSESSIVE_PRONOUNS)})"
         f" THEN (CASE WHEN endswith({raw_best}, 's')"
         f"       THEN concat({raw_best}, \"'\")"
         f"       ELSE concat({raw_best}, \"'s\") END)"
@@ -878,9 +875,9 @@ def expand_with_coref(bems: DataFrame, clusters: DataFrame,
     )
     # the reference's XOR gate (_pronoun_gate; DocumentExtractor.scala:143-145)
     gate = (
-        f"((lower(m_text) IN ({_strlist(PERSONAL_PRONOUNS)}))"
+        f"((lower(m_text) IN ({sql_strlist(PERSONAL_PRONOUNS)}))"
         f" AND NOT (({ent_type}) != 'PERSON'))"
-        f" OR ((NOT (lower(m_text) IN ({_strlist(PERSONAL_PRONOUNS)})))"
+        f" OR ((NOT (lower(m_text) IN ({sql_strlist(PERSONAL_PRONOUNS)})))"
         f" AND (({ent_type}) != 'PERSON'))"
     )
     ref_ddl = schemas.ENTITY_REF.simpleString()

@@ -36,6 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.sqltext import sql_strlist
 from .bestmention import Gazetteer
 
 # (column, reference feature name) in the reference's featuresList order
@@ -119,7 +120,7 @@ def bem_features(bems: DataFrame, clusters: DataFrame,
     def _in(expr: str, names: set[str]) -> str:
         if not names:
             return "false"
-        return f"({expr} IN (%s))" % ", ".join(f"'{n}'" for n in sorted(names))
+        return f"({expr} IN ({sql_strlist(names)}))"
 
     t_lc, c_lc = "lower(target.text)", "lower(container_entity.text)"
     city_t, state_t, country_t = (

@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .. import schemas
+from ..functions.sqltext import sql_strlist
 from .ner import PRONOUN_TYPE
 
 _MALE_F = {"he", "him", "his"}
@@ -224,9 +225,9 @@ def _resolve_plain(m: DataFrame) -> DataFrame:
             for n, c in _CAT_SQL
         ],
     )
-    person_p = ", ".join(f"'{p}'" for p in sorted(_PERSON_PRON))
-    thing_p = ", ".join(f"'{p}'" for p in sorted(_THING_PRON))
-    plural_p = ", ".join(f"'{p}'" for p in sorted(_PLURAL_PRON))
+    person_p = sql_strlist(_PERSON_PRON)
+    thing_p = sql_strlist(_THING_PRON)
+    plural_p = sql_strlist(_PLURAL_PRON)
     ckey = (
         "CASE WHEN is_pron = 1 THEN ("
         f" CASE WHEN lower(text) IN ({person_p}) THEN _l_person"

@@ -26,6 +26,8 @@ from pyspark.sql.types import (
     ArrayType, BinaryType, FloatType, IntegerType, StringType, StructField, StructType,
 )
 
+from ..session import local_table
+
 MEDIA = StructType(
     [
         StructField("media_id", StringType(), False),
@@ -444,4 +446,4 @@ def synthetic_media(spark, n: int = 32, real_payloads: bool = True) -> DataFrame
               "height": 64 if kind == "image" else None,
               "duration_ms": 3500 if kind != "image" else None})
         )
-    return spark.createDataFrame(rows, schema=MEDIA)
+    return local_table(spark, rows, MEDIA)

@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import local_table
+
 
 def _dot(a, b):
     return F.aggregate(
@@ -144,9 +146,7 @@ def weights_row(spark, dims: int, planes: int, tables: int,
     mats = [_plane_weights(dims, planes, t) for t in range(tables)]
     if refine_planes:
         mats.append(_plane_weights(dims, refine_planes, tables))
-    return spark.createDataFrame(
-        [(mats,)], "wmat array<array<array<double>>>"
-    )
+    return local_table(spark, [(mats,)], "wmat array<array<array<double>>>")
 
 
 def _signature_from_wmat(vec_col, table_idx: int):
@@ -246,7 +246,8 @@ def _use_broadcast_quantizer(centroids: list[list[float]], quantizer: str) -> bo
 def centroids_table(spark, centroids: list[list[float]]) -> DataFrame:
     """(cell, cvec) DataFrame form of a quantizer — the broadcast-side
     twin of the literal embedding."""
-    return spark.createDataFrame(
+    return local_table(
+        spark,
         [(i, [float(x) for x in c]) for i, c in enumerate(centroids)],
         "cell int, cvec array<double>",
     )

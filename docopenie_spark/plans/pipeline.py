@@ -13,6 +13,7 @@ becomes per-stage tables + lineage).
 from __future__ import annotations
 
 import os
+import threading
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -88,11 +89,17 @@ COREF_MENTIONS_PER_TURN_BOUND = 16
 # them), so every materialization still computes from the parquet /
 # generator inputs exactly as a fresh build would. Keyed on the Spark
 # session, every scalar argument, and SEMANTIC equality of every input
-# DataFrame plan (Dataset.sameSemantics — canonicalized-plan equality,
-# no false positives; the hash-free linear scan is fine at this size).
+# DataFrame plan (Dataset.sameSemantics — canonicalized-plan equality;
+# the hash-free linear scan is fine at this size) plus equal file
+# listings: two reads of one parquet path compare sameSemantics even
+# after files were appended under it, so Dataset.inputFiles must match
+# too or the hit would be the DAG over the old listing. Guarded by one
+# lock: driver threads sharing a session (a parallel query sweep) must
+# not race the scan against the FIFO eviction.
 # Kill-switch: SPARK_GRAFT_PLAN_CACHE=0.
 _PLAN_CACHE: list[tuple] = []
 _PLAN_CACHE_MAX = 16  # annotate() entries share the list with run_pipeline's
+_PLAN_CACHE_LOCK = threading.Lock()
 
 
 def _plan_cache_enabled() -> bool:
@@ -105,24 +112,28 @@ def _same_df(a: DataFrame | None, b: DataFrame | None) -> bool:
     if a is b:
         return True
     try:
-        return a.sameSemantics(b)
+        return a.sameSemantics(b) and (
+            sorted(a.inputFiles()) == sorted(b.inputFiles())
+        )
     except Exception:
         return False
 
 
 def _plan_cache_get(spark, dfs, scalars):
-    for spark0, dfs0, scalars0, result in _PLAN_CACHE:
-        if spark0 is not spark or scalars0 != scalars:
-            continue
-        if all(_same_df(a, b) for a, b in zip(dfs0, dfs)):
-            return result
+    with _PLAN_CACHE_LOCK:
+        for spark0, dfs0, scalars0, result in _PLAN_CACHE:
+            if spark0 is not spark or scalars0 != scalars:
+                continue
+            if all(_same_df(a, b) for a, b in zip(dfs0, dfs)):
+                return result
     return None
 
 
 def _plan_cache_put(spark, dfs, scalars, result) -> None:
-    _PLAN_CACHE.append((spark, dfs, scalars, result))
-    if len(_PLAN_CACHE) > _PLAN_CACHE_MAX:
-        del _PLAN_CACHE[0]
+    with _PLAN_CACHE_LOCK:
+        _PLAN_CACHE.append((spark, dfs, scalars, result))
+        if len(_PLAN_CACHE) > _PLAN_CACHE_MAX:
+            del _PLAN_CACHE[0]
 
 
 def _input_stats(transcripts: DataFrame) -> tuple[int, int]:

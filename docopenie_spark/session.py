@@ -18,7 +18,10 @@ from __future__ import annotations
 import os
 import threading
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import ArrayType, StructType
 
 ARROW_BATCH = 10_000  # rows per Arrow batch handed to pandas UDFs
 
@@ -40,7 +43,18 @@ _BCAST_LOCK = threading.Lock()
 def content_broadcast(sc, value, key=None):
     """Broadcast ``value``, reusing the same Broadcast object for an
     identical (SparkContext, content) pair. ``key`` defaults to ``value``
-    and must be hashable; pass an explicit key for unhashable values."""
+    and must be hashable; pass an explicit key for unhashable values.
+
+    Assumes deterministic sources. Plans built over equal dictionaries
+    canonicalize equal, so Spark's CacheManager may serve a table
+    persisted by ANOTHER call site into a freshly built plan whose
+    input compares ``sameSemantics``. That is only correct while every
+    input relation yields the same rows each time it is read: a
+    non-deterministic source, or a parquet path appended to or rewritten
+    between the two builds (a re-read of the path still compares equal),
+    can then be answered from the older persisted rows. Unpersist the
+    tables built over the old contents before rebuilding over a changed
+    source."""
     k = (sc.applicationId, type(value).__name__,
          key if key is not None else value)
     with _BCAST_LOCK:
@@ -53,6 +67,52 @@ def content_broadcast(sc, value, key=None):
             b = sc.broadcast(value)
             _BCAST_BY_CONTENT[k] = b
     return b
+
+
+# ------------------------------------------------------ driver-built tables
+#
+# ``spark.createDataFrame(list_of_tuples)`` in PySpark classic
+# parallelizes the pickled rows: a LogicalRDD over a PythonRDD, whose
+# every scan starts Python workers to unpickle a few constant rows, whose
+# size estimate is Long.MaxValue, and whose two builds over the same rows
+# never compare sameSemantics. A pyarrow Table handed to createDataFrame
+# becomes a JVM LocalRelation instead: no Python at execution, exact size
+# statistics, and plan equality across builds. Every table the package
+# builds from driver-side rows goes through :func:`local_table`.
+
+
+def local_table(spark: SparkSession, rows, schema) -> DataFrame:
+    """``rows`` (tuples in ``schema`` field order; dicts for struct
+    values) as a LocalRelation-backed DataFrame with exactly ``schema``
+    (a StructType or a DDL string), nullability included. As with
+    createDataFrame's default schema verification, a value of the wrong
+    type or a None in a non-nullable field raises."""
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    rows = list(rows)
+    columns = [
+        pa.array([r[i] for r in rows], type=f.type)
+        for i, f in enumerate(arrow_schema)
+    ]
+    for col, f in zip(columns, schema.fields):
+        _check_nulls(col, f.dataType, f.nullable, f.name)
+    return spark.createDataFrame(
+        pa.Table.from_arrays(columns, schema=arrow_schema), schema
+    )
+
+
+def _check_nulls(arr, dtype, nullable: bool, path: str) -> None:
+    if not nullable and arr.null_count:
+        raise ValueError(f"local_table: None in non-nullable field {path}")
+    if isinstance(dtype, ArrayType):
+        _check_nulls(arr.flatten(), dtype.elementType, dtype.containsNull,
+                     path + "[]")
+    elif isinstance(dtype, StructType):
+        present = arr.filter(arr.is_valid())
+        for i, f in enumerate(dtype.fields):
+            _check_nulls(present.field(i), f.dataType, f.nullable,
+                         f"{path}.{f.name}")
 
 
 def get_spark(

@@ -42,6 +42,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from ..session import local_table
+
 BUCKET_COL = "_bucket"
 
 
@@ -160,8 +162,8 @@ class StageStore:
             n, out_fp = stats.get(bk, (0, "0"))
             fp = (input_fps or {}).get(bk, out_fp)
             rows.append((stage, bk, run_id, fp, n, wall_ms, sfp))
-        self.spark.createDataFrame(
-            rows,
+        local_table(
+            self.spark, rows,
             "stage string, partition_id int, run_id string, "
             "input_fingerprint string, row_count long, wall_ms long, "
             "schema_fp string",
@@ -169,8 +171,8 @@ class StageStore:
         return run_id
 
     def record_metric(self, run_id: str, stage: str, metric: str, value: float) -> None:
-        self.spark.createDataFrame(
-            [(run_id, stage, metric, float(value), time.time())],
+        local_table(
+            self.spark, [(run_id, stage, metric, float(value), time.time())],
             "run_id string, stage string, metric string, value double, ts double",
         ).write.mode("append").parquet(self._metrics_path())
 

@@ -136,12 +136,14 @@ def test_best_mentions_single_cogroup(spark):
     t = datagen.transcripts_df(spark, 200)
     fn, gz, ln = default_dictionaries()
     gaz_rows = datagen.gazetteer_rows()
+    turns = assembly.with_turn_offsets(t)
     ann = fused.parse_extract_annotate(
-        assembly.with_turn_offsets(t), fn, gz | {r[0] for r in gaz_rows}, ln,
-        emit_sentence_text=True,
+        turns, fn, gz | {r[0] for r in gaz_rows}, ln, emit_sentence_text=True,
     )
-    ents, _ = ner.split_mentions(fused.split_entities(ann))
-    bems = bestmention.best_mentions(ents, assembly.doc_chunks(t), gaz_rows)
+    mentions = fused.split_entities(ann)
+    ents, _ = ner.split_mentions(mentions)
+    chunks = assembly.doc_chunks(t)
+    bems = bestmention.best_mentions(ents, chunks, gaz_rows)
     # the CONSTRUCTED shape: one logical cogroup occurrence (the round-6
     # two-branch union referenced it twice). Asserted on the analyzed
     # plan, which is immune to session cache state — with content-shared
@@ -151,10 +153,14 @@ def test_best_mentions_single_cogroup(spark):
     # tree, double-counting node names.
     analyzed = bems._jdf.queryExecution().analyzed().toString()
     assert analyzed.count("FlatMapCoGroupsInPandas") == 1
-    # and the physical plan, in a cache-free session state, executes it
-    # exactly once; count in the numbered operator TREE (the first
-    # block) — the formatted details section repeats every node name
-    spark.catalog.clearCache()
+    # and the physical plan executes it exactly once. Unpersisting every
+    # DataFrame built here drops any cache entry an earlier test left
+    # that is semantically equal to one of them, so none is substituted
+    # into this plan, while unrelated tables stay cached. Count in the
+    # numbered operator TREE (the first block) — the formatted details
+    # section repeats every node name.
+    for df in (t, turns, ann, mentions, ents, chunks, bems):
+        df.unpersist(blocking=True)
     tree = _formatted_plan(bems).split("\n\n")[0]
     assert tree.count("FlatMapCoGroupsInPandas") == 1
     # and the merged projection still emits both path families
