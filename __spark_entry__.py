@@ -25,7 +25,7 @@ from pyspark.sql import Window
 
 from docopenie_spark import datagen
 from docopenie_spark.functions import textnorm
-from docopenie_spark.operators import assembly, dedup, extract, ner, segment, similarity, textstats
+from docopenie_spark.operators import assembly, dedup, ner, similarity, textstats
 from docopenie_spark.operators import tokenize as tok
 from docopenie_spark.plans.pipeline import run_pipeline
 from docopenie_spark.session import local_table
@@ -462,7 +462,8 @@ def _q_kg_segmentation(spark, sf_dir):
     terminator-gap) whose cumulative match lengths reproduce
     segment_turn's m.start() offsets exactly."""
     t = derived_from_documents(_punctuated_docs(_docs(spark, sf_dir)))
-    return segment.sentences(assembly.with_turn_offsets(t))
+    r = run_pipeline(spark, t, with_linking=False, with_coref_expansion=False)
+    return r.sentences
 
 
 # T7/T8 NER with a REAL oracle (VERDICT r4 #3): the corpus is all-
@@ -1810,14 +1811,14 @@ def _e2e_oracle_sql() -> str:
 
 def _q_kg_sentences(spark, sf_dir):
     t = _kg_transcripts(spark, sf_dir)
-    return segment.sentences(assembly.with_turn_offsets(t))
+    r = run_pipeline(spark, t, with_linking=False, with_coref_expansion=False)
+    return r.sentences
 
 
 def _q_kg_triples_raw(spark, sf_dir):
     t = _kg_transcripts(spark, sf_dir)
-    parsed = tok.parsed_sentences(segment.sentences(assembly.with_turn_offsets(t)))
-    tr = extract.triples_raw(parsed)
-    return tr.select(
+    r = run_pipeline(spark, t, with_linking=False, with_coref_expansion=False)
+    return r.triples_raw.select(
         "conv_id", "turn_idx", "sent_num",
         F.col("arg1.text").alias("arg1"), F.col("rel.text").alias("rel"),
         F.col("arg2.text").alias("arg2"), "confidence", "extractor",

@@ -15,8 +15,8 @@ window is unrepresentative evidence. Two fixes:
 - the size-adaptive pipeline flags (slim sentences / coref hot gate)
   are resolved OUTSIDE the timed region from one untimed stats job and
   passed explicitly, so the timed region is exactly the pipeline — the
-  same shape scaling_bench.py times (the auto-mode ``_input_stats``
-  probe used to run inside the clock);
+  same shape scaling_bench.py times (the auto-mode sizing probe,
+  ``pipeline.adaptive_decisions``, used to run inside the clock);
 - every query runs $SPARK_GRAFT_BENCH_REPEATS times (default 3)
   INTERLEAVED (whole suite round-robin, not back-to-back), and the
   reported number is the per-query MEDIAN; the raw per-repeat walls are
@@ -84,17 +84,11 @@ def main():
     n_docs = docs.count()
     n_turns = TURNS_PER_DOC * n_docs
 
-    # Resolve the size-adaptive flags ONCE, untimed, with the exact
-    # decision rule run_pipeline's auto mode applies — the timed region
-    # then contains the pipeline and nothing else.
+    # Resolve the size-adaptive flags ONCE, untimed, with the decision
+    # function run_pipeline's auto mode calls — the timed region then
+    # contains the pipeline and nothing else.
     transcripts = datagen.transcripts_df(spark, n_turns)
-    total_turns, max_conv_turns = pl._input_stats(transcripts)
-    slim = total_turns >= pl.SLIM_SENTENCE_THRESHOLD
-    hot_thr = (
-        pl.COREF_HOT_THRESHOLD
-        if max_conv_turns * pl.COREF_MENTIONS_PER_TURN_BOUND > pl.COREF_HOT_THRESHOLD
-        else None
-    )
+    slim, hot_thr = pl.adaptive_decisions(transcripts)
     flags = dict(slim_sentences=slim, coref_hot_threshold=hot_thr)
 
     raw: dict[str, list[float]] = {}

@@ -78,14 +78,7 @@ def main():
 
     if which in ("pipeline", "all"):
         # resolve flags outside the clock exactly like bench.py
-        total_turns, max_conv_turns = pl._input_stats(transcripts)
-        slim = total_turns >= pl.SLIM_SENTENCE_THRESHOLD
-        hot = (
-            pl.COREF_HOT_THRESHOLD
-            if max_conv_turns * pl.COREF_MENTIONS_PER_TURN_BOUND
-            > pl.COREF_HOT_THRESHOLD
-            else None
-        )
+        slim, hot = pl.adaptive_decisions(transcripts)
         first_names, gaz_names, last_names = pl.default_dictionaries()
         gaz_rows = datagen.gazetteer_rows()
         gaz_names |= {r[0] for r in gaz_rows}
@@ -93,7 +86,7 @@ def main():
 
         # materialized upstream inputs for the downstream stages
         annotated = fused.parse_extract_annotate(
-            turns, first_names, gaz_names, last_names, rebalance=False,
+            turns, first_names, gaz_names, last_names,
             emit_sentence_text=not slim,
         ).persist()
         annotated.count()
@@ -125,7 +118,7 @@ def main():
             ("fused_arrow_pass", lambda: _noop(
                 fused.parse_extract_annotate(
                     turns, first_names, gaz_names, last_names,
-                    rebalance=False, emit_sentence_text=not slim,
+                    emit_sentence_text=not slim,
                 )
             )),
             ("coref_clusters", lambda: _noop(

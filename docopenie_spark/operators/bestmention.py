@@ -620,7 +620,7 @@ _RESOLVED = (
 
 def best_mentions(entities: DataFrame, doc_chunks: DataFrame,
                   gazetteer_rows: list[tuple]) -> DataFrame:
-    """(ENTITIES, doc chunks) → BEST_MENTIONS.
+    """(entity mentions, doc chunks) → BEST_MENTIONS.
 
     Scale shape: the rule engine runs in Python ONCE PER DISTINCT
     (conv_id, entity_type, name) — ~30 rows per conversation even for the

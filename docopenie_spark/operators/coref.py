@@ -320,7 +320,7 @@ def _assemble(resolved: DataFrame) -> DataFrame:
 
 
 def clusters(mentions: DataFrame, hot_threshold: int | None = 1 << 22) -> DataFrame:
-    """mentions (ENTITIES schema incl. pronoun rows) → CLUSTERS, FULLY
+    """mentions (fused.split_entities, incl. pronoun rows) → CLUSTERS, FULLY
     NATIVE (zero Python): whole-stage-codegen'd key derivation, window
     nearest-preceding-antecedent pronoun resolution, one groupBy for
     cluster assembly. Semantics identical to

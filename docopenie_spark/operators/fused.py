@@ -1,32 +1,30 @@
-"""Fused segment+tokenize stage.
+"""The fused NLP pass: segment + P1 filter + tokenize + extract + NER.
 
-Chained ``mapInPandas`` stages each attach their OWN Python worker to the
-task pipeline — a task running segment → tokenize → extract drives three
+Chained Python stages each attach their OWN Python worker to the task
+pipeline — a task running segment → tokenize → extract drives three
 Python processes with the JVM relaying Arrow batches between them. At 32
 tasks that is ~100 worker processes and a kernel-level IPC storm (measured:
 36% system time, anti-scaling from local[8] to local[32]).
 
-The fix is architectural, not a config knob: fuse per-sentence work into
-ONE UDF per task pipeline. ``parsed_sentences`` does segmentation (T2),
-the P1 filter, and tokenization (T3) in a single Python worker; the
-pipeline then persists its output, so the downstream extractors (T4/T5)
-and NER (T7/T8) each read columnar cache with exactly one Python hop.
-
-Semantics are identical to operators/segment.py + operators/tokenize.py
-(shared pure-Python cores); a parity test asserts it.
+The fix is architectural, not a config knob: ONE ``mapInArrow`` per task
+pipeline. :func:`parse_extract_annotate` runs the pure kernels
+(segment.segment_turn, :func:`_keep`, tokenize.tokenize_sentence,
+extract.extract_sentence, ner.sentence_entities) over the turn table and
+emits sentences, triples and mentions as one row-kind-tagged table; the
+``split_*`` views are JVM filters over it. It is the only Spark path for
+these stages — tests/pipeline_twin.py composes the same kernels
+imperatively as the reference.
 """
 
 from __future__ import annotations
 
 from collections.abc import Iterator
 
-import pandas as pd
 import pyarrow as pa
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .. import schemas
 from ..functions import textnorm
 from ..session import content_broadcast
 from .extract import extract_sentence
@@ -40,47 +38,6 @@ def _keep(s: str) -> bool:
     sentence text: #whitespace-runs >= 3 ⇔ #fields >= 4)."""
     return len(s) <= 750 and len(s.split()) >= 4
 
-
-def parsed_sentences(turns_with_offsets: DataFrame, apply_filter: bool = True,
-                     rebalance: bool = True) -> DataFrame:
-    """Segment+tokenize, TURN-scoped. The upstream offset window partitions
-    by conv_id, which strands the hot conversation (10% of all turns) in
-    one partition — a hard single-task floor for the most expensive UDF.
-    Since this stage needs no conv-locality, we rebalance on
-    (conv_id, turn_idx) first: the per-turn hash spreads the hot
-    conversation across every core (the skew-salting required by the
-    north rule, applied where it actually pays)."""
-    src = turns_with_offsets.select(
-        "conv_id",
-        "turn_idx",
-        "turn_offset",
-        textnorm.normalize_inline_ws(textnorm.asciify(F.col("text"))).alias("text"),
-    )
-    if rebalance:
-        src = src.repartition(F.col("conv_id"), F.col("turn_idx"))
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            recs = []
-            for conv_id, turn_idx, turn_offset, text in zip(
-                b["conv_id"], b["turn_idx"], b["turn_offset"], b["text"]
-            ):
-                for i, (local, s) in enumerate(segment_turn(text)):
-                    if apply_filter and not _keep(s):
-                        continue
-                    recs.append(
-                        (conv_id, turn_idx, i, turn_offset + local, s,
-                         tokenize_sentence(s))
-                    )
-            yield pd.DataFrame(
-                recs,
-                columns=["conv_id", "turn_idx", "sent_num", "offset", "text", "tokens"],
-            ).astype({"turn_idx": "int32", "sent_num": "int32", "offset": "int64"})
-
-    return src.mapInPandas(run, schema=schemas.PARSED_SENTENCES)
-
-
-# ------------------------------------------------- fused extract + NER
 
 _PART_DDL = "struct<text:string,offset:bigint>"
 # row_kind: 's' = sentence (e_offset/e_len carry the doc offset and
@@ -136,7 +93,6 @@ def parse_extract_annotate(
     first_names: set[str],
     gazetteer_names: set[str],
     last_names: set[str] | None = None,
-    rebalance: bool = False,
     emit_sentence_text: bool = False,
 ) -> DataFrame:
     """segment+filter+tokenize+extract+NER in ONE Python pass over the
@@ -169,8 +125,6 @@ def parse_extract_annotate(
         "turn_offset",
         textnorm.normalize_inline_ws(textnorm.asciify(F.col("text"))).alias("text"),
     )
-    if rebalance:
-        src = src.repartition(F.col("conv_id"), F.col("turn_idx"))
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         firsts, gaz, lasts = b_first.value, b_gaz.value, b_last.value
@@ -289,62 +243,6 @@ def split_sentences(annotated: DataFrame,
     )
 
 
-def extract_and_annotate(
-    parsed: DataFrame,
-    first_names: set[str],
-    gazetteer_names: set[str],
-    last_names: set[str] | None = None,
-) -> DataFrame:
-    """T4/T5 extraction AND T7/T8 NER in ONE Python hop over the cached
-    parsed table (round 1 ran them as two separate mapInPandas passes —
-    the token arrays crossed the Arrow boundary twice). Output rows are
-    discriminated by ``row_kind`` ('t' = triple, 'e' = entity/pronoun);
-    :func:`split_triples` / :func:`split_entities` are JVM-side filters
-    over the persisted combined table."""
-    sc = parsed.sparkSession.sparkContext
-    b_first = content_broadcast(sc, frozenset(first_names))
-    b_gaz = content_broadcast(sc, frozenset(gazetteer_names))
-    b_last = content_broadcast(sc, frozenset(last_names or ()))
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        firsts, gaz, lasts = b_first.value, b_gaz.value, b_last.value
-        for b in batches:
-            recs = []
-            for conv_id, turn_idx, sent_num, offset, text, toks in zip(
-                b["conv_id"], b["turn_idx"], b["sent_num"],
-                b["offset"], b["text"], b["tokens"]
-            ):
-                tokens = [
-                    (t["token"], t["start"], t["pos"], t["chunk"], t["lemma"])
-                    for t in toks
-                ]
-                off = int(offset)
-                for a1, r, a2, conf, ext in extract_sentence(tokens, text):
-                    recs.append((
-                        conv_id, "t", int(turn_idx), int(sent_num),
-                        (a1[0], off + a1[1]),
-                        (r[0], off + r[1]),
-                        (a2[0], off + a2[1]),
-                        conf, ext, None, None, None, None, None,
-                    ))
-                for e_text, e_off, e_name, e_type in sentence_entities(
-                    tokens, text, off, firsts, gaz, lasts, True
-                ):
-                    recs.append((
-                        conv_id, "e", int(turn_idx), int(sent_num),
-                        None, None, None, None, None,
-                        e_text, int(e_off), None, e_name, e_type,
-                    ))
-            yield pd.DataFrame(
-                recs,
-                columns=["conv_id", "row_kind", "turn_idx", "sent_num",
-                         "arg1", "rel", "arg2", "confidence", "extractor",
-                         "e_text", "e_offset", "e_len", "e_name", "e_type"],
-            )
-
-    return parsed.mapInPandas(run, schema=ANNOTATED)
-
-
 def split_triples(annotated: DataFrame) -> DataFrame:
     """TRIPLES_RAW view of the combined table (JVM filter, no Python)."""
     return annotated.where(F.col("row_kind") == "t").select(
@@ -354,7 +252,8 @@ def split_triples(annotated: DataFrame) -> DataFrame:
 
 
 def split_entities(annotated: DataFrame) -> DataFrame:
-    """ENTITIES (incl. pronoun mention rows) view of the combined table."""
+    """Entity mentions (incl. pronoun rows) view of the combined table:
+    conv_id, text, offset, name, entity_type."""
     return annotated.where(F.col("row_kind") == "e").select(
         "conv_id",
         F.col("e_text").alias("text"),

@@ -12,26 +12,22 @@ deps; ours is a deterministic dictionary+shape tagger:
 - classification: person-name dictionary → PERSON; org-suffix word or
   all-caps acronym → ORGANIZATION; gazetteer name → LOCATION; else OTHER.
 
-Dictionaries are small dimension data loaded once and shipped to
-executors as broadcast variables — the Spark analogue of the reference's
-process-wide singleton gazetteers (BestEntityMentionFinder.scala:611-637).
+The dictionaries are small dimension data; the fused Arrow pass
+(operators/fused.py) ships them to executors as broadcast variables —
+the Spark analogue of the reference's process-wide singleton gazetteers
+(BestEntityMentionFinder.scala:611-637).
 
-Stage shape: narrow mapInPandas over PARSED_SENTENCES (offsets lifted to
-doc level); also extracts pronoun mentions for the coref stage in the
-same pass (one scan, two outputs discriminated by ``entity_type``).
+Stage shape: ``sentence_entities`` is a pure kernel the fused pass calls
+per sentence (offsets lifted to doc level); it also extracts pronoun
+mentions for the coref stage in the same pass (one scan, two outputs
+discriminated by ``entity_type``).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .. import schemas
-from ..session import content_broadcast
 from .tokenize import POS, START, TOK
 
 ORG_SUFFIXES = {
@@ -84,8 +80,8 @@ def classify(words: list[str], first_names: frozenset, gaz_names: frozenset) -> 
 
 def sentence_entities(toks, text, offset, firsts, gaz, lasts,
                       include_pronouns=True):
-    """Per-sentence entity + pronoun extraction core (shared by
-    :func:`entities` and the fused extract+NER pass in fused.py)."""
+    """Per-sentence entity + pronoun extraction core (the fused Arrow
+    pass in fused.py calls it per sentence)."""
     recs = []
     for i, j in _spans(toks):
         words = [toks[k][TOK] for k in range(i, j + 1)]
@@ -102,43 +98,6 @@ def sentence_entities(toks, text, offset, firsts, gaz, lasts,
                     (t[TOK], int(offset) + t[START], t[TOK], PRONOUN_TYPE)
                 )
     return recs
-
-
-def entities(
-    parsed: DataFrame,
-    first_names: set[str],
-    gazetteer_names: set[str],
-    last_names: set[str] | None = None,
-    include_pronouns: bool = True,
-) -> DataFrame:
-    """PARSED_SENTENCES → ENTITIES (+ pronoun mention rows when asked).
-
-    The name dictionaries are broadcast once per job, not captured per
-    task (broadcast-variable pattern, SURVEY.md §4 'singleton shared
-    models → broadcast variables').
-    """
-    sc = parsed.sparkSession.sparkContext
-    b_first = content_broadcast(sc, frozenset(first_names))
-    b_gaz = content_broadcast(sc, frozenset(gazetteer_names))
-    b_last = content_broadcast(sc, frozenset(last_names or ()))
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        firsts, gaz, lasts = b_first.value, b_gaz.value, b_last.value
-        for b in batches:
-            recs = []
-            for conv_id, offset, text, toks in zip(
-                b["conv_id"], b["offset"], b["text"], b["tokens"]
-            ):
-                tts = [(t["token"], t["start"], t["pos"], t["chunk"], t["lemma"])
-                       for t in toks]
-                for e in sentence_entities(tts, text, offset, firsts, gaz,
-                                           lasts, include_pronouns):
-                    recs.append((conv_id, *e))
-            yield pd.DataFrame(
-                recs, columns=["conv_id", "text", "offset", "name", "entity_type"]
-            ).astype({"offset": "int64"})
-
-    return parsed.mapInPandas(run, schema=schemas.ENTITIES)
 
 
 def split_mentions(ents: DataFrame) -> tuple[DataFrame, DataFrame]:

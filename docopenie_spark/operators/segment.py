@@ -3,9 +3,11 @@ prep/Sentencer.scala:55-94).
 
 The reference runs a statistical segmenter per paragraph and computes
 each segment's document offset as a prefix-sum of segment lengths. Ours
-is a deterministic rule segmenter (terminator chars + closing quotes)
-run per TURN inside ``mapInPandas`` — turn-scoped, so the stage is
-NARROW: no shuffle between assembly and extraction. Offsets are computed
+is a deterministic rule segmenter (terminator chars + closing quotes),
+a pure kernel the fused Arrow pass (operators/fused.py) calls per TURN
+over the asciified, whitespace-normalized text and follows with the P1
+filter (``fused._keep``) — turn-scoped, so the stage is NARROW: no
+shuffle between assembly and extraction. Offsets are computed
 exactly the reference's way: locate each segment in the original turn
 text and add the turn's document offset.
 
@@ -21,15 +23,6 @@ stable turn ordering.)
 from __future__ import annotations
 
 import re
-from collections.abc import Iterator
-
-import pandas as pd
-
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
-from .. import schemas
-from ..functions import textnorm
 
 # A sentence: run of non-terminator chars, then terminators, then optional
 # closing quotes/brackets — or a trailing fragment with no terminator.
@@ -50,37 +43,4 @@ def segment_turn(text: str) -> list[tuple[int, str]]:
         s = raw.strip()
         if s:
             out.append((m.start() + lead, s))
-    return out
-
-
-def sentences(turns_with_offsets: DataFrame, apply_filter: bool = True) -> DataFrame:
-    """turns (+offsets) → SENTENCES table.
-
-    Applies P2 (length-preserving asciify, native translate) BEFORE
-    segmentation and P1 (length / word-count filter) after — the same
-    early-filter ordering the reference uses so the expensive parse never
-    sees junk (prep/Sentencer.scala:105-107; SURVEY.md §4).
-    """
-    src = turns_with_offsets.select(
-        "conv_id",
-        "turn_idx",
-        "turn_offset",
-        textnorm.normalize_inline_ws(textnorm.asciify(F.col("text"))).alias("text"),
-    )
-
-    def seg(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            recs = []
-            for conv_id, turn_idx, turn_offset, text in zip(
-                b["conv_id"], b["turn_idx"], b["turn_offset"], b["text"]
-            ):
-                for i, (local, s) in enumerate(segment_turn(text)):
-                    recs.append((conv_id, turn_idx, i, turn_offset + local, s))
-            yield pd.DataFrame(
-                recs, columns=["conv_id", "turn_idx", "sent_num", "offset", "text"]
-            ).astype({"turn_idx": "int32", "sent_num": "int32", "offset": "int64"})
-
-    out = src.mapInPandas(seg, schema=schemas.SENTENCES)
-    if apply_filter:
-        out = out.where(textnorm.sentence_keep("text"))
     return out

@@ -1,8 +1,8 @@
 """End-to-end pipeline DAG (SURVEY.md §3 EP1 Spark equivalent):
 
-transcripts → turns+offsets → sentences → parsed → [triples_raw ∥
-entities ∥ clusters] → links → best_mentions → best_mentions_expanded →
-substituted triples.
+transcripts → turns+offsets → ONE fused Arrow pass (sentences ∥
+triples_raw ∥ entities) → clusters → links → best_mentions →
+best_mentions_expanded → substituted triples.
 
 ``run_pipeline`` builds the lazy DAG and returns every stage DataFrame;
 callers checkpoint whichever stages they want via sources/checkpoints.py
@@ -30,7 +30,6 @@ class PipelineResult:
     turns: DataFrame
     docs: DataFrame
     sentences: DataFrame
-    parsed: DataFrame
     triples_raw: DataFrame
     entities: DataFrame
     mentions: DataFrame
@@ -147,14 +146,35 @@ def _input_stats(transcripts: DataFrame) -> tuple[int, int]:
     return int(row["n"] or 0), int(row["mx"] or 0)
 
 
-def _slim_sentences(transcripts: DataFrame, slim: bool | None) -> bool:
-    """Resolve the adaptive default. One cheap job over the input;
-    annotate() and run_pipeline() both derive the SAME decision from the
-    same input, so a shared annotated table always matches the
-    split_sentences path."""
-    if slim is not None:
-        return slim
-    return _input_stats(transcripts)[0] >= SLIM_SENTENCE_THRESHOLD
+def adaptive_decisions(
+    transcripts: DataFrame,
+    slim_sentences: bool | None = None,
+    coref_hot_threshold: int | None | str = "auto",
+) -> tuple[bool, int | None]:
+    """(slim, hot_threshold): the size-adaptive decisions (see
+    SLIM_SENTENCE_THRESHOLD / COREF_HOT_THRESHOLD above). An explicit
+    ``slim_sentences`` / non-"auto" ``coref_hot_threshold`` wins; the
+    rest is resolved from ONE cheap job over the RAW input, skipped
+    entirely when both are explicit. annotate() and run_pipeline() derive
+    the SAME decision from the same input, so a shared annotated table
+    always matches the split_sentences path; the benchmarks call this to
+    resolve the flags outside their timed region."""
+    if slim_sentences is not None and coref_hot_threshold != "auto":
+        return slim_sentences, coref_hot_threshold
+    n_turns, max_conv_turns = _input_stats(transcripts)
+    slim = (
+        slim_sentences if slim_sentences is not None
+        else n_turns >= SLIM_SENTENCE_THRESHOLD
+    )
+    if coref_hot_threshold != "auto":
+        return slim, coref_hot_threshold
+    if max_conv_turns * COREF_MENTIONS_PER_TURN_BOUND > COREF_HOT_THRESHOLD:
+        return slim, COREF_HOT_THRESHOLD
+    return slim, None  # no conversation can be hot: skip detection
+
+
+def _rows_key(rows: list[tuple]) -> tuple:
+    return tuple(tuple(r) for r in rows)
 
 
 def default_dictionaries() -> tuple[set[str], set[str], set[str]]:
@@ -192,11 +212,12 @@ def annotate(
     was dropped by a caller's unpersist() re-registers EMPTY."""
     from pyspark import StorageLevel
 
+    # keyed on the RESOLVED gazetteer rows: the default and the same rows
+    # passed explicitly build the same DAG, so they must share one entry
+    gaz_rows = gazetteer_rows if gazetteer_rows is not None else datagen.gazetteer_rows()
     _ck_scalars = (
         "annotate", fabricate_metadata, cache, storage_level,
-        slim_sentences,
-        None if gazetteer_rows is None
-        else tuple(tuple(r) for r in gazetteer_rows),
+        slim_sentences, _rows_key(gaz_rows),
     )
     if _plan_cache_enabled():
         _hit = _plan_cache_get(spark, (transcripts,), _ck_scalars)
@@ -205,15 +226,16 @@ def annotate(
                 _hit.persist(getattr(StorageLevel, storage_level))
             return _hit
 
-    gaz_rows = gazetteer_rows if gazetteer_rows is not None else datagen.gazetteer_rows()
     first_names, gaz_names, last_names = default_dictionaries()
     gaz_names |= {r[0] for r in gaz_rows}
-    slim = _slim_sentences(transcripts, slim_sentences)
+    # only the slim half matters here: hot_threshold=None skips the
+    # sizing job when the caller fixed slim_sentences
+    slim, _ = adaptive_decisions(transcripts, slim_sentences, None)
     if fabricate_metadata:
         transcripts = assembly.fabricated_metadata_turns(transcripts)
     out = fused.parse_extract_annotate(
         assembly.with_turn_offsets(transcripts),
-        first_names, gaz_names, last_names, rebalance=False,
+        first_names, gaz_names, last_names,
         emit_sentence_text=not slim,
     )
     # Record the resolved slim decision IN the annotated schema (ADVICE
@@ -223,13 +245,10 @@ def annotate(
     # silently disagree and yield null/mis-substringed sentence text.
     # Column METADATA on e_text (the column whose 's'-row contents the
     # decision governs) travels through filter/select/persist on any
-    # DERIVED DataFrame — the round-5 Python attribute survived only
-    # the exact returned object and silently fell back after any
-    # transformation. The attribute is kept as a legacy fallback.
+    # DERIVED DataFrame.
     out = out.withMetadata("e_text", {"docopenie_slim": slim})
     if cache:
         out = out.persist(getattr(StorageLevel, storage_level))
-    out._docopenie_slim = slim
     if _plan_cache_enabled():
         _plan_cache_put(spark, (transcripts,), _ck_scalars, out)
     return out
@@ -249,11 +268,11 @@ def run_pipeline(
     slim_sentences: bool | None = None,
     coref_hot_threshold: int | None | str = "auto",
 ) -> PipelineResult:
-    """Build the full DAG. With cache=True the fan-out points (parsed
-    sentences feed BOTH extraction and NER; triples_raw feeds linking AND
-    substitution) are persisted so shared prefixes compute once — the
-    Spark analogue of the reference's lazy-val memoization per document
-    (SURVEY.md §4 row 1). At cluster scale these become checkpoint tables
+    """Build the full DAG. With cache=True the fan-out points (the
+    annotated table feeds sentences, triples AND mentions; triples_raw
+    feeds linking AND substitution) are persisted so shared prefixes
+    compute once — the Spark analogue of the reference's lazy-val
+    memoization per document (SURVEY.md §4 row 1). At cluster scale these become checkpoint tables
     (sources/checkpoints.py) instead of memory.
 
     ``annotated`` (from :func:`annotate` over the SAME transcripts and
@@ -272,11 +291,11 @@ def run_pipeline(
     # are re-applied so the data story is untouched — caches dropped by
     # a previous unpersist() re-register empty and every action
     # recomputes from the inputs.
+    gaz_rows = gazetteer_rows if gazetteer_rows is not None else datagen.gazetteer_rows()
     _ck_scalars = (
         with_linking, with_coref_expansion, fabricate_metadata, cache,
         storage_level, slim_sentences, coref_hot_threshold,
-        None if gazetteer_rows is None
-        else tuple(tuple(r) for r in gazetteer_rows),
+        _rows_key(gaz_rows),
     )
     _ck_dfs = (transcripts, entity_dict, annotated)
     if _plan_cache_enabled():
@@ -288,27 +307,16 @@ def run_pipeline(
                     _df.persist(_lvl)
             return _hit
 
-    gaz_rows = gazetteer_rows if gazetteer_rows is not None else datagen.gazetteer_rows()
     first_names, gaz_names, last_names = default_dictionaries()
     gaz_names |= {r[0] for r in gaz_rows}
-    # size-adaptive decisions (see SLIM_SENTENCE_THRESHOLD /
-    # COREF_HOT_THRESHOLD above), resolved from ONE cheap job over the
-    # RAW input — skipped entirely when the caller passes both
-    # explicitly (the scaling harness does, keeping its timed region
-    # identical across rounds). A shared annotate() over the same
-    # transcripts resolves the identical slim decision.
     # an annotate()-built table carries its own resolved slim decision
-    # (ADVICE r4): trust the marker over re-derivation — the fused pass
+    # (ADVICE r4) as e_text column METADATA, which travels through any
+    # derived DataFrame: trust it over re-derivation — the fused pass
     # either emitted inline sentence text or it did not, and only the
     # producer knows. An explicit contradictory flag is a caller bug.
-    # Resolution order: e_text column METADATA (travels through any
-    # derived DataFrame — VERDICT r5 #2), then the legacy Python
-    # attribute (exact-object only), then re-derivation.
     ann_slim = None
     if annotated is not None and "e_text" in annotated.columns:
         ann_slim = annotated.schema["e_text"].metadata.get("docopenie_slim")
-    if ann_slim is None:
-        ann_slim = getattr(annotated, "_docopenie_slim", None)
     if ann_slim is not None:
         if slim_sentences is not None and slim_sentences != ann_slim:
             raise ValueError(
@@ -316,20 +324,11 @@ def run_pipeline(
                 f"annotated table, which was built with slim={ann_slim}"
             )
         slim_sentences = ann_slim
-    if slim_sentences is not None and coref_hot_threshold != "auto":
-        slim, hot_thr = slim_sentences, coref_hot_threshold
-    else:
-        n_turns, max_conv_turns = _input_stats(transcripts)
-        slim = (
-            slim_sentences if slim_sentences is not None
-            else n_turns >= SLIM_SENTENCE_THRESHOLD
-        )
-        if coref_hot_threshold != "auto":
-            hot_thr = coref_hot_threshold
-        elif max_conv_turns * COREF_MENTIONS_PER_TURN_BOUND > COREF_HOT_THRESHOLD:
-            hot_thr = COREF_HOT_THRESHOLD
-        else:
-            hot_thr = None  # no conversation can be hot: skip detection
+    # the scaling harness passes both explicitly, keeping its timed
+    # region free of the sizing job
+    slim, hot_thr = adaptive_decisions(
+        transcripts, slim_sentences, coref_hot_threshold
+    )
 
     lvl = getattr(StorageLevel, storage_level)
     persisted: list[DataFrame] = []
@@ -363,13 +362,14 @@ def run_pipeline(
     # segment+tokenize+extract+NER in ONE Python pass over the turn table
     # (operators/fused.parse_extract_annotate): token arrays never cross
     # the Arrow boundary — measured, the Arrow transfer itself scales at
-    # ~0.34 efficiency, so bulk python passes are minimized. rebalance
-    # off: the salted turn-offset join already partitions on (conv_id,
-    # salt), balanced even for the hot conversation. Sentences, triples
-    # and entities are JVM filters over the persisted combined table.
+    # ~0.34 efficiency, so bulk python passes are minimized. No
+    # repartition before it: the salted turn-offset join already
+    # partitions on (conv_id, salt), balanced even for the hot
+    # conversation. Sentences, triples and entities are JVM filters over
+    # the persisted combined table.
     if annotated is None:
         annotated = _p(fused.parse_extract_annotate(
-            turns, first_names, gaz_names, last_names, rebalance=False,
+            turns, first_names, gaz_names, last_names,
             emit_sentence_text=not slim,
         ))
     # slim: sentence text reconstructed JVM-side from the turn table (the
@@ -378,9 +378,6 @@ def run_pipeline(
     sents = fused.split_sentences(annotated, turns if slim else None)
     triples_raw = fused.split_triples(annotated)
     mentions = fused.split_entities(annotated)
-    # parsed (with token arrays) is API surface only — built on demand,
-    # not part of the executed DAG
-    parsed = fused.parsed_sentences(turns)
     ents, _prons = ner.split_mentions(mentions)
     cl = _p(coref.clusters(mentions, hot_threshold=hot_thr))
 
@@ -404,7 +401,6 @@ def run_pipeline(
         turns=turns,
         docs=docs,
         sentences=sents,
-        parsed=parsed,
         triples_raw=triples_raw,
         entities=ents,
         mentions=mentions,

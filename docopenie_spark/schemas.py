@@ -6,9 +6,10 @@ StructTypes declared once here — no schema inference anywhere.
 Reference mapping (file:line refer to /root/reference/src/main/scala/edu/knowitall/):
 - TRANSCRIPTS      ← the KBP corpus file rows (BASELINE.json input_hint)
 - SENTENCES        ← KbpSentence             (prep/KbpSentence.scala:3-5)
-- PARSED_SENTENCES ← ParsedKbpSentence       (prep/ParsedKbpSentence.scala:9-18)
 - TRIPLES_RAW      ← Extraction              (repr/extraction/Extraction.scala:15-26)
-- ENTITIES         ← Entity                  (repr/bestmention/BestMention.scala:24-28)
+- entity mentions  ← Entity                  (repr/bestmention/BestMention.scala:24-28);
+                     no table of its own — operators/fused.split_entities
+                     projects (conv_id, text, offset, name, entity_type)
 - CLUSTERS         ← MentionCluster          (repr/coref/Mention.scala:9-12)
 - LINKS            ← FreeBaseLink            (repr/link/Link.scala:22-33)
 - BEST_MENTIONS    ← ResolvedBestMention sum type flattened with a `kind`
@@ -61,27 +62,6 @@ SENTENCES = StructType(
     ]
 )
 
-TOKEN = StructType(
-    [
-        StructField("token", StringType(), False),
-        StructField("start", IntegerType(), False),  # char offset within the sentence
-        StructField("pos", StringType(), False),
-        StructField("chunk", StringType(), False),
-        StructField("lemma", StringType(), False),
-    ]
-)
-
-PARSED_SENTENCES = StructType(
-    [
-        StructField("conv_id", StringType(), False),
-        StructField("turn_idx", IntegerType(), False),
-        StructField("sent_num", IntegerType(), False),
-        StructField("offset", LongType(), False),
-        StructField("text", StringType(), False),
-        StructField("tokens", ArrayType(TOKEN, False), False),
-    ]
-)
-
 # token_indices were dropped in round 2: no downstream consumer (arg
 # cleaning is regex-based, confidence needs only a count) — they cost a
 # list allocation per part plus Arrow array serialization in the hot loop
@@ -102,16 +82,6 @@ TRIPLES_RAW = StructType(
         StructField("arg2", EXTRACTION_PART, False),
         StructField("confidence", DoubleType(), False),
         StructField("extractor", StringType(), False),  # 'verb' | 'relnoun'
-    ]
-)
-
-ENTITIES = StructType(
-    [
-        StructField("conv_id", StringType(), False),
-        StructField("text", StringType(), False),  # raw doc substring
-        StructField("offset", LongType(), False),
-        StructField("name", StringType(), False),  # space-joined tokens
-        StructField("entity_type", StringType(), False),  # PERSON|ORGANIZATION|LOCATION|OTHER
     ]
 )
 

@@ -2,15 +2,20 @@
 implementation row-for-row on the seeded corpus incl. the hot conversation."""
 
 from docopenie_spark import datagen
-from docopenie_spark.operators import assembly, coref, fused, ner
+from docopenie_spark.operators import assembly, coref, fused
 from docopenie_spark.plans.pipeline import default_dictionaries
 
 
-def test_native_clusters_equal_python(spark):
-    t = datagen.transcripts_df(spark, 400)
-    parsed = fused.parsed_sentences(assembly.with_turn_offsets(t))
+def _mentions(spark, n_turns):
+    """The production mention source: the fused pass's entity view."""
+    t = datagen.transcripts_df(spark, n_turns)
     fn, gz, ln = default_dictionaries()
-    mentions = ner.entities(parsed, fn, gz, ln).cache()
+    ann = fused.parse_extract_annotate(assembly.with_turn_offsets(t), fn, gz, ln)
+    return fused.split_entities(ann).cache()
+
+
+def test_native_clusters_equal_python(spark):
+    mentions = _mentions(spark, 400)
     a = coref.clusters(mentions)
     b = coref.clusters_python(mentions)
     assert a.exceptAll(b).isEmpty(), "native ⊄ python"
@@ -22,10 +27,7 @@ def test_segmented_hot_path_equals_python(spark):
     """VERDICT r2 #4: with the hot threshold forced to 1, EVERY
     conversation takes the segmented-scan path — output must still equal
     the python reference exactly (and the plain path)."""
-    t = datagen.transcripts_df(spark, 400)
-    parsed = fused.parsed_sentences(assembly.with_turn_offsets(t))
-    fn, gz, ln = default_dictionaries()
-    mentions = ner.entities(parsed, fn, gz, ln).cache()
+    mentions = _mentions(spark, 400)
     seg = coref.clusters(mentions, hot_threshold=1)
     py = coref.clusters_python(mentions)
     assert seg.exceptAll(py).isEmpty(), "segmented ⊄ python"

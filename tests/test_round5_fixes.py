@@ -79,7 +79,7 @@ def test_annotate_records_slim_decision_and_pipeline_prefers_it(spark):
     # marker, run_pipeline re-derived slim=False from the small input and
     # read the (null) inline text.
     ann = annotate(spark, t, slim_sentences=True)
-    assert ann._docopenie_slim is True
+    assert ann.schema["e_text"].metadata == {"docopenie_slim": True}
     r_marked = run_pipeline(spark, t, annotated=ann)
     r_plain = run_pipeline(spark, t)
     got = {tuple(x) for x in r_marked.sentences.select(

@@ -4,7 +4,7 @@ import pyspark.sql.functions as F
 
 from docopenie_spark import datagen
 from docopenie_spark.functions import textnorm
-from docopenie_spark.operators import assembly, segment, tokenize
+from docopenie_spark.operators import assembly, fused, segment, tokenize
 
 
 def test_segment_turn_offsets_exact():
@@ -48,10 +48,19 @@ def test_asciify_length_preserving(spark):
 
 
 def test_sentence_offsets_address_doc_text(spark):
+    """Document offsets of the fused pass's (P1-filtered) sentences;
+    unfiltered offsets are pinned on the kernel by
+    test_segment_turn_offsets_exact."""
+    from docopenie_spark.plans.pipeline import default_dictionaries
+
     t = datagen.transcripts_df(spark, 160)
     tw = assembly.with_turn_offsets(t)
     docs = assembly.doc_text(t)
-    s = segment.sentences(tw, apply_filter=False)
+    fn, gz, ln = default_dictionaries()
+    s = fused.split_sentences(
+        fused.parse_extract_annotate(tw, fn, gz, ln, emit_sentence_text=True)
+    )
+    assert not s.isEmpty()
     j = s.join(docs, "conv_id").select(
         "text",
         F.expr("substring(doc_text, cast(offset as int)+1, length(text))").alias("sliced"),

@@ -1,6 +1,8 @@
 """Driver-mimic: run every queries() entry on Spark and its oracle_sql()
 on DuckDB at the given sf dir; compare row count + order-insensitive
-values (columns sorted by name). Usage:
+values (columns sorted by name). A query or oracle that raises is
+reported as ERROR and counted as a failure; the sweep goes on to the
+next query. Usage:
 
     python tools/check_oracle.py [sf_dir] [query ...]
 """
@@ -49,12 +51,17 @@ def main():
     for name, fn in e.queries().items():
         if only and name not in only:
             continue
-        sdf = fn(spark, sf_dir)
-        spdf = sdf.toPandas()
-        if name not in oracles:
+        try:
+            spdf = fn(spark, sf_dir).toPandas()
+            opdf = con.execute(oracles[name]).df() if name in oracles else None
+        except Exception as exc:  # e.g. an oracle out of memory on a small host
+            failures.append(name)
+            msg = (str(exc).strip().splitlines() or [""])[0]
+            print(f"{name:24s} ERROR {type(exc).__name__}: {msg}")
+            continue
+        if opdf is None:
             print(f"{name:24s} rows-only: {len(spdf)} rows OK")
             continue
-        opdf = con.execute(oracles[name]).df()
         a, b = normalize(spdf), normalize(opdf)
         status = []
         if len(a) != len(b):

@@ -29,11 +29,7 @@ def main():
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     n_turns = 8 * docs.count()
     transcripts = datagen.transcripts_df(spark, n_turns)
-    total_turns, max_conv = pl._input_stats(transcripts)
-    slim = total_turns >= pl.SLIM_SENTENCE_THRESHOLD
-    hot = (pl.COREF_HOT_THRESHOLD
-           if max_conv * pl.COREF_MENTIONS_PER_TURN_BOUND > pl.COREF_HOT_THRESHOLD
-           else None)
+    slim, hot = pl.adaptive_decisions(transcripts)
 
     # instrument the stage constructors
     import docopenie_spark.operators.assembly as assembly
@@ -52,7 +48,6 @@ def main():
         (fused, "split_sentences"),
         (fused, "split_triples"),
         (fused, "split_entities"),
-        (fused, "parsed_sentences"),
         (ner, "split_mentions"),
         (coref, "clusters"),
         (link, "links"),
