@@ -551,7 +551,6 @@ def _ner_branch_sql() -> str:
     from docopenie_spark.plans.pipeline import default_dictionaries
 
     firsts, gaz, lasts = default_dictionaries()
-    gaz = gaz | {r[0] for r in datagen.gazetteer_rows()}
     return f"""
         , caps AS (
           -- NNP ⇔ starts-uppercase on this corpus; adjacent-run merge
@@ -615,7 +614,6 @@ def _q_kg_ner_spans(spark, sf_dir):
     t = derived_from_documents(_entity_injected_docs(_docs(spark, sf_dir)))
     turns = assembly.with_turn_offsets(t)
     firsts, gaz, lasts = default_dictionaries()
-    gaz |= {r[0] for r in datagen.gazetteer_rows()}  # as run_pipeline does
     ann = fused.parse_extract_annotate(turns, firsts, gaz, lasts)
     ents, _prons = ner.split_mentions(fused.split_entities(ann))
     return ents
@@ -654,7 +652,6 @@ def _q_kg_coref(spark, sf_dir):
     t = derived_from_documents(docs.withColumn("text", c))
     turns = assembly.with_turn_offsets(t)
     firsts, gaz, lasts = default_dictionaries()
-    gaz |= {r[0] for r in datagen.gazetteer_rows()}
     # persisted (r7): three readers, one Python pass (see _q_kg_linking)
     ann = fused.parse_extract_annotate(turns, firsts, gaz, lasts).persist()
     cl = coref.clusters(fused.split_entities(ann))
@@ -893,7 +890,6 @@ def _q_kg_linking(spark, sf_dir):
     t = derived_from_documents(docs.withColumn("text", c))
     turns = assembly.with_turn_offsets(t)
     firsts, gaz, lasts = default_dictionaries()
-    gaz |= {r[0] for r in datagen.gazetteer_rows()}
     # persisted (r7): split_triples / split_entities / split_sentences all
     # read this table — without the persist the fused Arrow pass executed
     # three times per materialization
@@ -999,7 +995,6 @@ def _q_kg_substitution(spark, sf_dir):
     t = derived_from_documents(docs.withColumn("text", c))
     turns = assembly.with_turn_offsets(t)
     firsts, gaz, lasts = default_dictionaries()
-    gaz |= {r[0] for r in datagen.gazetteer_rows()}
     # persisted (r7): three readers, one Python pass (see _q_kg_linking)
     ann = fused.parse_extract_annotate(turns, firsts, gaz, lasts).persist()
     tr = fused.split_triples(ann)
@@ -1083,7 +1078,6 @@ def _q_kg_coref_expansion(spark, sf_dir):
     t = derived_from_documents(docs.withColumn("text", c))
     turns = assembly.with_turn_offsets(t)
     firsts, gaz, lasts = default_dictionaries()
-    gaz |= {r[0] for r in datagen.gazetteer_rows()}
     # persisted (r7): three readers, one Python pass (see _q_kg_linking)
     ann = fused.parse_extract_annotate(turns, firsts, gaz, lasts).persist()
     cl = coref.clusters(fused.split_entities(ann))
@@ -1190,7 +1184,6 @@ def _q_kg_best_mention_rules(spark, sf_dir):
     t = derived_from_documents(docs.withColumn("text", c))
     turns = assembly.with_turn_offsets(t)
     firsts, gaz, lasts = default_dictionaries()
-    gaz |= {r[0] for r in datagen.gazetteer_rows()}
     ann = fused.parse_extract_annotate(turns, firsts, gaz, lasts)
     ents, _prons = ner.split_mentions(fused.split_entities(ann))
     bems = bestmention.best_mentions(
@@ -1379,7 +1372,6 @@ def _q_kg_bem_features(spark, sf_dir):
     t = derived_from_documents(docs.withColumn("text", c))
     turns = assembly.with_turn_offsets(t)
     firsts, gaz, lasts = default_dictionaries()
-    gaz |= {r[0] for r in datagen.gazetteer_rows()}
     # persisted (r7): the mentions view feeds both the rule engine and
     # the coref clusters — two fused-pass executions without it
     ann = fused.parse_extract_annotate(turns, firsts, gaz, lasts).persist()

@@ -10,9 +10,11 @@ Usage: python bench_extra.py [pipeline|headline|all]  (default all)
 
 Method: same session shape as bench.py (local[$SPARK_GRAFT_CPUS],
 shuffle.partitions = cpus), warmup pass first, then REPEATS interleaved
-rounds per stage, median reported, raw kept. Pipeline stages are timed
-with their upstream persists already materialized, so each number is
-that stage's own work (downstream of the shared fan-out points).
+rounds per stage, median reported, raw kept. Pipeline stages are
+run_pipeline's own (pipeline._stage_graph through a recording ``stage``);
+each is timed over its upstream stages' outputs materialized with
+localCheckpoint(), so each number is that stage's own work and never a
+read of a cached copy of its output (see pipeline_stages).
 """
 
 from __future__ import annotations
@@ -28,10 +30,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from pyspark.sql import functions as F  # noqa: E402
 
 from docopenie_spark import datagen  # noqa: E402
-from docopenie_spark.operators import (  # noqa: E402
-    assembly, bestmention, coref, dedup, fused, link, ner, similarity,
-    substitute,
-)
+from docopenie_spark.operators import assembly, dedup, similarity  # noqa: E402
 from docopenie_spark.plans import pipeline as pl  # noqa: E402
 from docopenie_spark.session import get_spark  # noqa: E402
 
@@ -58,6 +57,23 @@ def run_suite(spark, suite, repeats=REPEATS):
     return {n: round(statistics.median(w), 3) for n, w in raw.items()}, raw
 
 
+def pipeline_stages(transcripts, slim, hot):
+    """[(stage name, build)] for every stage of the pipeline's stage graph
+    (pipeline._stage_graph) under the given adaptive flags. Each stage's
+    output is materialized once with localCheckpoint(), which truncates
+    its lineage: ``build()`` rebuilds the stage over its upstream
+    outputs, and no rebuilt plan can match a cached one, so each number
+    is that stage's own work."""
+    stages = []
+
+    def stage(name, fn, *inputs):
+        stages.append((name, lambda: fn(*inputs)))
+        return fn(*inputs).localCheckpoint()
+
+    pl._stage_graph(stage, transcripts, None, datagen.gazetteer_rows(), slim, hot)
+    return stages
+
+
 def main():
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -79,31 +95,7 @@ def main():
     if which in ("pipeline", "all"):
         # resolve flags outside the clock exactly like bench.py
         slim, hot = pl.adaptive_decisions(transcripts)
-        first_names, gaz_names, last_names = pl.default_dictionaries()
-        gaz_rows = datagen.gazetteer_rows()
-        gaz_names |= {r[0] for r in gaz_rows}
-        turns = assembly.with_turn_offsets(transcripts)
-
-        # materialized upstream inputs for the downstream stages
-        annotated = fused.parse_extract_annotate(
-            turns, first_names, gaz_names, last_names,
-            emit_sentence_text=not slim,
-        ).persist()
-        annotated.count()
-        chunks = assembly.doc_chunks(transcripts).persist()
-        chunks.count()
-        sents = fused.split_sentences(annotated, turns if slim else None)
-        triples_raw = fused.split_triples(annotated)
-        mentions = fused.split_entities(annotated)
-        ents, _ = ner.split_mentions(mentions)
-        cl = coref.clusters(mentions, hot_threshold=hot).persist()
-        cl.count()
-        ed = datagen.entity_dict_df(spark)
-        lk = link.links(triples_raw, ed, clusters=cl, sentences=sents).persist()
-        lk.count()
-        bems = bestmention.best_mentions(ents, chunks, gaz_rows).persist()
-        bems.count()
-        bems_x = bestmention.expand_with_coref(bems, cl, lk)
+        stages = pipeline_stages(transcripts, slim, hot)
 
         def full_pipeline():
             r = pl.run_pipeline(
@@ -113,37 +105,12 @@ def main():
             r.unpersist()
 
         suite = [
-            ("turn_offsets", lambda: _noop(turns)),
-            ("doc_chunks", lambda: _noop(assembly.doc_chunks(transcripts))),
-            ("fused_arrow_pass", lambda: _noop(
-                fused.parse_extract_annotate(
-                    turns, first_names, gaz_names, last_names,
-                    emit_sentence_text=not slim,
-                )
-            )),
-            ("coref_clusters", lambda: _noop(
-                coref.clusters(mentions, hot_threshold=hot)
-            )),
-            ("links", lambda: _noop(
-                link.links(triples_raw, ed, clusters=cl, sentences=sents)
-            )),
-            ("best_mentions", lambda: _noop(
-                bestmention.best_mentions(ents, chunks, gaz_rows)
-            )),
-            ("expand_with_coref", lambda: _noop(
-                bestmention.expand_with_coref(bems, cl, lk)
-            )),
-            ("substitute", lambda: _noop(
-                substitute.substituted_triples(
-                    triples_raw, bestmention.display_filter(bems_x)
-                )
-            )),
+            ("turn_offsets", lambda: _noop(assembly.with_turn_offsets(transcripts))),
+            *[(name, lambda b=build: _noop(b())) for name, build in stages],
             ("full_pipeline", full_pipeline),
         ]
         med, raw = run_suite(spark, suite)
         out["pipeline"] = {"median": med, "raw": raw}
-        for df in (annotated, chunks, cl, lk, bems):
-            df.unpersist()
 
     if which in ("headline", "all"):
         emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")

@@ -2,51 +2,28 @@
 stages checkpoint per-partition with lineage and metrics tables so the
 pipeline resumes mid-run without recomputation").
 
-Every stage writes a conv_id-bucketed table through
-sources/checkpoints.StageStore; a killed run leaves lineage rows for the
-buckets it finished, and the next invocation recomputes ONLY missing
-buckets per stage (anti-join of buckets against lineage). Stage inputs
-are filtered with the same bucket predicate so partially-complete stages
-compose: bucket b of `triples` only ever derives from bucket b of
-`parsed` (conv_id-functional bucketing guarantees alignment).
+run_pipeline's stages (pipeline._stage_graph), each through
+sources/checkpoints.StageStore.run_resumable: a conv_id-bucketed table
+per stage, and a killed run leaves lineage rows for the buckets it
+finished, so the next invocation recomputes ONLY missing buckets per
+stage. Every stage input is filtered with the same bucket predicate so
+partially-complete stages compose: bucket b of `triples` only ever
+derives from bucket b of `annotated` (conv_id-functional bucketing).
+
+Slim sentences are always on: the annotated checkpoint must compose
+across buckets written by any earlier run, whatever its input size. The
+coref hot gate is size-adaptive as in run_pipeline (parity-identical).
 """
 
 from __future__ import annotations
 
-import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from .. import datagen
-from ..operators import assembly, bestmention, coref, fused, link, ner, substitute
-from ..sources.checkpoints import BUCKET_COL, StageStore, schema_fingerprint, with_bucket
-from .pipeline import default_dictionaries
-
-
-def _resumable(store: StageStore, stage: str, inputs: list[DataFrame], fn,
-               run_id: str, key: str = "conv_id") -> DataFrame:
-    """Generalized multi-input resume: filter every input to the buckets
-    lineage has NOT recorded for ``stage``, compute, append, read back.
-    Buckets committed under a different output schema (pre-change code)
-    count as not-done — the schema guard in sources/checkpoints."""
-    expected_fp = schema_fingerprint(fn(*[df.limit(0) for df in inputs]).schema)
-    done = store.done_buckets(stage, schema_fp=expected_fp)
-    if len(done) == store.buckets:
-        return store.read_stage(stage, schema_fp=expected_fp)
-    filtered = []
-    for df in inputs:
-        b = with_bucket(df, key, store.buckets)
-        if done:
-            b = b.where(~F.col(BUCKET_COL).isin(done))
-        filtered.append(b.drop(BUCKET_COL))
-    t0 = time.time()
-    out = fn(*filtered)
-    remaining = [b for b in range(store.buckets) if b not in set(done)]
-    store.write_stage(stage, out, key=key, run_id=run_id, only_buckets=remaining)
-    store.record_metric(run_id, stage, "wall_sec", time.time() - t0)
-    return store.read_stage(stage, schema_fp=expected_fp)
+from ..sources.checkpoints import StageStore
+from .pipeline import _stage_graph, adaptive_decisions
 
 
 def run_checkpointed(
@@ -58,48 +35,13 @@ def run_checkpointed(
     """Full pipeline with per-stage checkpoint/lineage/metrics; returns the
     final triples table (read from its checkpoint)."""
     run_id = run_id or uuid.uuid4().hex[:12]
-    first_names, gaz_names, last_names = default_dictionaries()
-    gaz_rows = datagen.gazetteer_rows()
-    entity_dict = datagen.entity_dict_df(spark)
+    slim, hot_thr = adaptive_decisions(transcripts, slim_sentences=True)
 
-    chunks = _resumable(
-        store, "doc_chunks", [transcripts], lambda t: assembly.doc_chunks(t), run_id
-    )
-    annotated = _resumable(
-        store, "annotated", [transcripts],
-        lambda t: fused.parse_extract_annotate(
-            assembly.with_turn_offsets(t), first_names, gaz_names, last_names
-        ),
-        run_id,
-    )
-    # sentence rows (no tokens); text reconstructed from the turn table
-    parsed = fused.split_sentences(annotated, assembly.with_turn_offsets(transcripts))
-    triples_raw = fused.split_triples(annotated)
-    mentions = fused.split_entities(annotated)
-    clusters = _resumable(
-        store, "clusters", [mentions], lambda m: coref.clusters(m), run_id
-    )
-    links = _resumable(
-        store, "links", [triples_raw, clusters, parsed],
-        lambda tr, c, p: link.links(
-            tr, entity_dict, clusters=c,
-            sentences=p.select("conv_id", "turn_idx", "sent_num", "offset", "text"),
-        ),
-        run_id,
-    )
-    bems = _resumable(
-        store, "best_mentions", [mentions, chunks],
-        lambda m, d: bestmention.best_mentions(ner.split_mentions(m)[0], d, gaz_rows),
-        run_id,
-    )
-    bems_x = _resumable(
-        store, "best_mentions_expanded", [bems, clusters, links],
-        lambda b, c, l: bestmention.expand_with_coref(b, c, l), run_id,
-    )
-    triples = _resumable(
-        store, "triples", [triples_raw, bems_x],
-        lambda tr, b: substitute.substituted_triples(tr, bestmention.display_filter(b)),
-        run_id,
-    )
+    def stage(name, fn, *inputs):
+        return store.run_resumable(name, list(inputs), fn, run_id=run_id)
+
+    triples = _stage_graph(
+        stage, transcripts, None, datagen.gazetteer_rows(), slim, hot_thr
+    ).triples
     store.record_metric(run_id, "triples", "row_count", triples.count())
     return triples

@@ -135,6 +135,25 @@ def _plan_cache_put(spark, dfs, scalars, result) -> None:
             del _PLAN_CACHE[0]
 
 
+def _plan_cached(spark, dfs, scalars, storage_level: str, build):
+    """``build()`` → (result, the DataFrames it persisted), memoized in
+    the plan cache. A hit re-applies the persist() registrations that a
+    previous caller's unpersist() dropped (they re-register EMPTY), so
+    every action still computes from the inputs."""
+    from pyspark import StorageLevel
+
+    if not _plan_cache_enabled():
+        return build()[0]
+    hit = _plan_cache_get(spark, dfs, scalars)
+    if hit is None:
+        hit = build()
+        _plan_cache_put(spark, dfs, scalars, hit)
+    for df in hit[1]:
+        if df.storageLevel == StorageLevel.NONE:
+            df.persist(getattr(StorageLevel, storage_level))
+    return hit[0]
+
+
 def _input_stats(transcripts: DataFrame) -> tuple[int, int]:
     """(total turns, max turns in one conversation) in ONE column-pruned
     map-side-combined job over the raw input."""
@@ -177,15 +196,93 @@ def _rows_key(rows: list[tuple]) -> tuple:
     return tuple(tuple(r) for r in rows)
 
 
-def default_dictionaries() -> tuple[set[str], set[str], set[str]]:
+def default_dictionaries(
+    gazetteer_rows: list[tuple] | None = None,
+) -> tuple[set[str], set[str], set[str]]:
     """(first_names, gazetteer_names, last_names) from the synthesized
     dimension data — the stand-ins for the reference's model/gazetteer
-    files under /scratch (BestEntityMentionFinder.scala:556-582)."""
+    files under /scratch (BestEntityMentionFinder.scala:556-582). The
+    names of a caller's own ``gazetteer_rows`` join the gazetteer set."""
     first_names = {p[0] for p in datagen.PERSONS}
     last_names = {p[1] for p in datagen.PERSONS}
     rows = datagen.gazetteer_rows()
     gaz_names = {r[0] for r in rows} | {r[4] for r in rows if len(r) > 4 and r[4]}
+    gaz_names |= {r[0] for r in gazetteer_rows or ()}
     return first_names, gaz_names, last_names
+
+
+def _fused_pass(turns: DataFrame, gaz_rows: list[tuple], slim: bool) -> DataFrame:
+    """segment+tokenize+extract+NER in ONE Python pass over the turn table
+    (operators/fused.parse_extract_annotate): token arrays never cross
+    the Arrow boundary — measured, the Arrow transfer itself scales at
+    ~0.34 efficiency, so bulk python passes are minimized. No
+    repartition before it: the salted turn-offset join already
+    partitions on (conv_id, salt), balanced even for the hot
+    conversation. Slim omits the inline sentence text (split_sentences
+    reconstructs it JVM-side from the turn table)."""
+    return fused.parse_extract_annotate(
+        turns, *default_dictionaries(gaz_rows), emit_sentence_text=not slim
+    )
+
+
+# The fan-out points run_pipeline persists, in build order: the annotated
+# table feeds sentences, triples AND mentions; clusters, links and best
+# mentions each feed expansion plus another reader. doc_chunks is not
+# one (r7): best_mentions is its only consumer, so a persist only paid
+# cache build + CacheManager plan canonicalization for a single read.
+FANOUT_STAGES = ("annotated", "clusters", "links", "best_mentions")
+
+
+def _stage_graph(stage, transcripts: DataFrame, entity_dict: DataFrame | None,
+                 gaz_rows: list[tuple], slim: bool, hot_thr: int | None,
+                 with_linking: bool = True, with_coref_expansion: bool = True,
+                 annotated: DataFrame | None = None) -> PipelineResult:
+    """The pipeline's stages, declared once for every runner (run_pipeline,
+    run_checkpointed, bench_extra.py): each is built by ``stage(name, fn,
+    *inputs)``, which returns ``fn(*inputs)`` or a persisted, checkpointed
+    or timed stand-in. Every conv_id-keyed DataFrame a stage reads is an
+    input, so a checkpoint runner can bucket-filter it. Builders are called
+    through their modules so tools/profile_construction.py sees them."""
+    turns = assembly.with_turn_offsets(transcripts)
+    docs = assembly.doc_text_salted(transcripts)  # full strings: tests/queries only
+    # the rule engine consumes BOUNDED chunks — the hot conversation never
+    # materializes as one row (assembly.doc_chunks)
+    chunks = stage("doc_chunks", lambda t: assembly.doc_chunks(t), transcripts)
+    if annotated is None:
+        annotated = stage("annotated", lambda u: _fused_pass(u, gaz_rows, slim), turns)
+    # slim: sentence text reconstructed JVM-side from the turn table (the
+    # 's' rows carry only offset+length); below the threshold the text
+    # rode inline through Arrow and no join is needed. Sentences, triples
+    # and entities are JVM filters over the combined table.
+    sents = fused.split_sentences(annotated, turns if slim else None)
+    triples_raw = fused.split_triples(annotated)
+    mentions = fused.split_entities(annotated)
+    ents, _prons = ner.split_mentions(mentions)
+    cl = stage("clusters", lambda m: coref.clusters(m, hot_threshold=hot_thr), mentions)
+
+    lk = None
+    if with_linking:
+        ed = (entity_dict if entity_dict is not None
+              else datagen.entity_dict_df(transcripts.sparkSession))
+        # T9/T10: doc_sim scores against coref-extended arg context
+        lk = stage("links", lambda tr, c, s: link.links(tr, ed, clusters=c, sentences=s),
+                   triples_raw, cl, sents)
+
+    bems = stage("best_mentions",
+                 lambda e, ch: bestmention.best_mentions(e, ch, gaz_rows), ents, chunks)
+    bems_x = bems
+    if with_coref_expansion:
+        bems_x = stage("best_mentions_expanded",
+                       lambda b, c, *l: bestmention.expand_with_coref(b, c, *l),
+                       bems, cl, *([lk] if with_linking else []))
+
+    triples = stage("triples", lambda tr, b: substitute.substituted_triples(
+        tr, bestmention.display_filter(b)), triples_raw, bems_x)
+    return PipelineResult(
+        turns=turns, docs=docs, sentences=sents, triples_raw=triples_raw,
+        entities=ents, mentions=mentions, clusters=cl, links=lk,
+        best_mentions=bems, best_mentions_expanded=bems_x, triples=triples,
+    )
 
 
 def annotate(
@@ -215,43 +312,33 @@ def annotate(
     # keyed on the RESOLVED gazetteer rows: the default and the same rows
     # passed explicitly build the same DAG, so they must share one entry
     gaz_rows = gazetteer_rows if gazetteer_rows is not None else datagen.gazetteer_rows()
-    _ck_scalars = (
+    scalars = (
         "annotate", fabricate_metadata, cache, storage_level,
         slim_sentences, _rows_key(gaz_rows),
     )
-    if _plan_cache_enabled():
-        _hit = _plan_cache_get(spark, (transcripts,), _ck_scalars)
-        if _hit is not None:
-            if cache and _hit.storageLevel == StorageLevel.NONE:
-                _hit.persist(getattr(StorageLevel, storage_level))
-            return _hit
 
-    first_names, gaz_names, last_names = default_dictionaries()
-    gaz_names |= {r[0] for r in gaz_rows}
-    # only the slim half matters here: hot_threshold=None skips the
-    # sizing job when the caller fixed slim_sentences
-    slim, _ = adaptive_decisions(transcripts, slim_sentences, None)
-    if fabricate_metadata:
-        transcripts = assembly.fabricated_metadata_turns(transcripts)
-    out = fused.parse_extract_annotate(
-        assembly.with_turn_offsets(transcripts),
-        first_names, gaz_names, last_names,
-        emit_sentence_text=not slim,
-    )
-    # Record the resolved slim decision IN the annotated schema (ADVICE
-    # r4 / VERDICT r5 #2): run_pipeline(annotated=) must join sentence
-    # text back exactly when this pass omitted it — re-deriving the
-    # decision from a possibly-different transcripts DataFrame could
-    # silently disagree and yield null/mis-substringed sentence text.
-    # Column METADATA on e_text (the column whose 's'-row contents the
-    # decision governs) travels through filter/select/persist on any
-    # DERIVED DataFrame.
-    out = out.withMetadata("e_text", {"docopenie_slim": slim})
-    if cache:
+    def build():
+        # only the slim half matters here: hot_threshold=None skips the
+        # sizing job when the caller fixed slim_sentences
+        slim, _ = adaptive_decisions(transcripts, slim_sentences, None)
+        t = (assembly.fabricated_metadata_turns(transcripts)
+             if fabricate_metadata else transcripts)
+        out = _fused_pass(assembly.with_turn_offsets(t), gaz_rows, slim)
+        # Record the resolved slim decision IN the annotated schema (ADVICE
+        # r4 / VERDICT r5 #2): run_pipeline(annotated=) must join sentence
+        # text back exactly when this pass omitted it — re-deriving the
+        # decision from a possibly-different transcripts DataFrame could
+        # silently disagree and yield null/mis-substringed sentence text.
+        # Column METADATA on e_text (the column whose 's'-row contents the
+        # decision governs) travels through filter/select/persist on any
+        # DERIVED DataFrame.
+        out = out.withMetadata("e_text", {"docopenie_slim": slim})
+        if not cache:
+            return out, []
         out = out.persist(getattr(StorageLevel, storage_level))
-    if _plan_cache_enabled():
-        _plan_cache_put(spark, (transcripts,), _ck_scalars, out)
-    return out
+        return out, [out]
+
+    return _plan_cached(spark, (transcripts,), scalars, storage_level, build)
 
 
 def run_pipeline(
@@ -268,12 +355,11 @@ def run_pipeline(
     slim_sentences: bool | None = None,
     coref_hot_threshold: int | None | str = "auto",
 ) -> PipelineResult:
-    """Build the full DAG. With cache=True the fan-out points (the
-    annotated table feeds sentences, triples AND mentions; triples_raw
-    feeds linking AND substitution) are persisted so shared prefixes
-    compute once — the Spark analogue of the reference's lazy-val
-    memoization per document (SURVEY.md §4 row 1). At cluster scale these become checkpoint tables
-    (sources/checkpoints.py) instead of memory.
+    """Build the full DAG. With cache=True the fan-out points
+    (FANOUT_STAGES) are persisted so shared prefixes compute once — the
+    Spark analogue of the reference's lazy-val memoization per document
+    (SURVEY.md §4 row 1). At cluster scale these become checkpoint
+    tables (plans/checkpointed.py) instead of memory.
 
     ``annotated`` (from :func:`annotate` over the SAME transcripts and
     fabrication setting) skips the fused Python pass — callers running
@@ -286,131 +372,66 @@ def run_pipeline(
     scaling protocol does; VERDICT r2 #1a)."""
     from pyspark import StorageLevel
 
-    # plan cache (see header above): a semantically identical invocation
-    # returns the already-ANALYZED lazy DAG; the persist() registrations
-    # are re-applied so the data story is untouched — caches dropped by
-    # a previous unpersist() re-register empty and every action
-    # recomputes from the inputs.
     gaz_rows = gazetteer_rows if gazetteer_rows is not None else datagen.gazetteer_rows()
-    _ck_scalars = (
+    scalars = (
         with_linking, with_coref_expansion, fabricate_metadata, cache,
         storage_level, slim_sentences, coref_hot_threshold,
         _rows_key(gaz_rows),
     )
-    _ck_dfs = (transcripts, entity_dict, annotated)
-    if _plan_cache_enabled():
-        _hit = _plan_cache_get(spark, _ck_dfs, _ck_scalars)
-        if _hit is not None:
-            _lvl = getattr(StorageLevel, storage_level)
-            for _df in _hit.extras.get("persisted", []):
-                if _df.storageLevel == StorageLevel.NONE:
-                    _df.persist(_lvl)
-            return _hit
 
-    first_names, gaz_names, last_names = default_dictionaries()
-    gaz_names |= {r[0] for r in gaz_rows}
-    # an annotate()-built table carries its own resolved slim decision
-    # (ADVICE r4) as e_text column METADATA, which travels through any
-    # derived DataFrame: trust it over re-derivation — the fused pass
-    # either emitted inline sentence text or it did not, and only the
-    # producer knows. An explicit contradictory flag is a caller bug.
-    ann_slim = None
-    if annotated is not None and "e_text" in annotated.columns:
-        ann_slim = annotated.schema["e_text"].metadata.get("docopenie_slim")
-    if ann_slim is not None:
-        if slim_sentences is not None and slim_sentences != ann_slim:
-            raise ValueError(
-                f"slim_sentences={slim_sentences} contradicts the supplied "
-                f"annotated table, which was built with slim={ann_slim}"
-            )
-        slim_sentences = ann_slim
-    # the scaling harness passes both explicitly, keeping its timed
-    # region free of the sizing job
-    slim, hot_thr = adaptive_decisions(
-        transcripts, slim_sentences, coref_hot_threshold
+    def build():
+        # an annotate()-built table carries its own resolved slim decision
+        # (ADVICE r4) as e_text column METADATA, which travels through any
+        # derived DataFrame: trust it over re-derivation — the fused pass
+        # either emitted inline sentence text or it did not, and only the
+        # producer knows. An explicit contradictory flag is a caller bug.
+        slim_flag = slim_sentences
+        ann_slim = None
+        if annotated is not None and "e_text" in annotated.columns:
+            ann_slim = annotated.schema["e_text"].metadata.get("docopenie_slim")
+        if ann_slim is not None:
+            if slim_flag is not None and slim_flag != ann_slim:
+                raise ValueError(
+                    f"slim_sentences={slim_flag} contradicts the supplied "
+                    f"annotated table, which was built with slim={ann_slim}"
+                )
+            slim_flag = ann_slim
+        # the scaling harness passes both explicitly, keeping its timed
+        # region free of the sizing job
+        slim, hot_thr = adaptive_decisions(transcripts, slim_flag, coref_hot_threshold)
+
+        lvl = getattr(StorageLevel, storage_level)
+        persisted: list[DataFrame] = []
+
+        def _p(df: DataFrame) -> DataFrame:
+            if cache:
+                df = df.persist(lvl)
+                persisted.append(df)
+            return df
+
+        def stage(name, fn, *inputs):
+            df = fn(*inputs)
+            return _p(df) if name in FANOUT_STAGES else df
+
+        t = transcripts
+        if fabricate_metadata:
+            # S6: role/ts metadata becomes mention-bearing fabricated turns
+            t = assembly.fabricated_metadata_turns(t)
+        # the raw input is itself a fan-out point: the salted-offset join
+        # reads it twice (rows + per-group partial sums) and doc_chunks /
+        # docs read it again — for a generated/derived source each of those
+        # is a full recompute (measured r7: the bench corpus is a
+        # mapInPandas generator, so the un-persisted turn table ran 2-4×
+        # per pipeline materialization). Persist only if the caller has not
+        # already chosen a level (persist with a different level raises).
+        if cache and t.storageLevel == StorageLevel.NONE:
+            t = _p(t)
+        result = _stage_graph(stage, t, entity_dict, gaz_rows, slim, hot_thr,
+                              with_linking, with_coref_expansion, annotated)
+        result.extras["persisted"] = persisted
+        return result, persisted
+
+    return _plan_cached(
+        spark, (transcripts, entity_dict, annotated), scalars, storage_level,
+        build,
     )
-
-    lvl = getattr(StorageLevel, storage_level)
-    persisted: list[DataFrame] = []
-
-    def _p(df: DataFrame) -> DataFrame:
-        if cache:
-            df = df.persist(lvl)
-            persisted.append(df)
-        return df
-
-    if fabricate_metadata:
-        # S6: role/ts metadata becomes mention-bearing fabricated turns
-        transcripts = assembly.fabricated_metadata_turns(transcripts)
-    # the raw input is itself a fan-out point: the salted-offset join
-    # reads it twice (rows + per-group partial sums) and doc_chunks /
-    # docs read it again — for a generated/derived source each of those
-    # is a full recompute (measured r7: the bench corpus is a mapInPandas
-    # generator, so the un-persisted turn table ran 2-4× per pipeline
-    # materialization). Persist only if the caller has not already
-    # chosen a level (persist with a different level raises).
-    if cache and transcripts.storageLevel == StorageLevel.NONE:
-        transcripts = _p(transcripts)
-    turns = assembly.with_turn_offsets(transcripts)
-    docs = assembly.doc_text_salted(transcripts)  # full strings: tests/queries only
-    # the rule engine consumes BOUNDED chunks — the hot conversation never
-    # materializes as one row (assembly.doc_chunks). Not persisted (r7):
-    # best_mentions is its only consumer, so a persist only paid cache
-    # build + CacheManager plan canonicalization for a single read; the
-    # persisted transcripts underneath keep the rebuild cheap.
-    chunks = assembly.doc_chunks(transcripts)
-    # segment+tokenize+extract+NER in ONE Python pass over the turn table
-    # (operators/fused.parse_extract_annotate): token arrays never cross
-    # the Arrow boundary — measured, the Arrow transfer itself scales at
-    # ~0.34 efficiency, so bulk python passes are minimized. No
-    # repartition before it: the salted turn-offset join already
-    # partitions on (conv_id, salt), balanced even for the hot
-    # conversation. Sentences, triples and entities are JVM filters over
-    # the persisted combined table.
-    if annotated is None:
-        annotated = _p(fused.parse_extract_annotate(
-            turns, first_names, gaz_names, last_names,
-            emit_sentence_text=not slim,
-        ))
-    # slim: sentence text reconstructed JVM-side from the turn table (the
-    # 's' rows carry only offset+length); below the threshold the text
-    # rode inline through Arrow and no join is needed
-    sents = fused.split_sentences(annotated, turns if slim else None)
-    triples_raw = fused.split_triples(annotated)
-    mentions = fused.split_entities(annotated)
-    ents, _prons = ner.split_mentions(mentions)
-    cl = _p(coref.clusters(mentions, hot_threshold=hot_thr))
-
-    lk = None
-    if with_linking:
-        ed = entity_dict if entity_dict is not None else datagen.entity_dict_df(spark)
-        # T9/T10: doc_sim scores against coref-extended arg context
-        lk = _p(link.links(triples_raw, ed, clusters=cl, sentences=sents))
-
-    bems = _p(bestmention.best_mentions(ents, chunks, gaz_rows))
-    if with_coref_expansion:
-        bems_x = bestmention.expand_with_coref(bems, cl, lk)
-    else:
-        bems_x = bems
-
-    triples = substitute.substituted_triples(
-        triples_raw, bestmention.display_filter(bems_x)
-    )
-
-    result = PipelineResult(
-        turns=turns,
-        docs=docs,
-        sentences=sents,
-        triples_raw=triples_raw,
-        entities=ents,
-        mentions=mentions,
-        clusters=cl,
-        links=lk,
-        best_mentions=bems,
-        best_mentions_expanded=bems_x,
-        triples=triples,
-        extras={"persisted": persisted},
-    )
-    if _plan_cache_enabled():
-        _plan_cache_put(spark, _ck_dfs, _ck_scalars, result)
-    return result

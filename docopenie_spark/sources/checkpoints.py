@@ -234,35 +234,42 @@ class StageStore:
         return sorted(r.partition_id for r in rows)
 
     # ----------------------------------------------------------- resume
-    def run_resumable(self, stage: str, input_df: DataFrame, fn,
+    def run_resumable(self, stage: str, inputs: DataFrame | list[DataFrame], fn,
                       key: str = "conv_id", run_id: str | None = None,
                       trust_legacy: bool = True) -> DataFrame:
-        """Compute ``fn(input)`` only for buckets lineage has not recorded
-        for ``stage`` (resume = anti-join of partitions against lineage,
-        SURVEY.md §3 EP3), overwrite those buckets, return the full stage
-        table. Every remaining bucket gets a lineage row (row_count 0 for
-        empty ones), so the next resume short-circuits without reading
-        the input at all.
+        """Compute ``fn(*inputs)`` (one DataFrame or a list, each filtered
+        with the same bucket predicate) only for buckets lineage has not
+        recorded for ``stage`` (resume = anti-join of partitions against
+        lineage, SURVEY.md §3 EP3), overwrite those buckets, return the
+        full stage table. Every remaining bucket gets a lineage row
+        (row_count 0 for empty ones; the input fingerprint is one ``n:fp``
+        part per input, comma-joined), so the next resume short-circuits
+        without reading the inputs at all.
 
         Buckets committed under a different OUTPUT schema than the
         current ``fn`` produces count as not-done (schema guard): the
-        expected schema comes from applying ``fn`` to an empty slice of
-        the input — plan analysis only, nothing executes."""
-        expected_fp = schema_fingerprint(fn(input_df.limit(0)).schema)
+        expected schema comes from applying ``fn`` to empty slices of
+        the inputs — plan analysis only, nothing executes."""
+        dfs = inputs if isinstance(inputs, list) else [inputs]
+        expected_fp = schema_fingerprint(fn(*[df.limit(0) for df in dfs]).schema)
         done = set(self.done_buckets(stage, schema_fp=expected_fp,
                                      trust_legacy=trust_legacy))
         remaining = [b for b in range(self.buckets) if b not in done]
         if not remaining:
             return self.read_stage(stage, schema_fp=expected_fp,
                                    trust_legacy=trust_legacy)
-        src = with_bucket(input_df, key, self.buckets)
+        t0 = time.time()
+        srcs = [with_bucket(df, key, self.buckets) for df in dfs]
         if done:
-            src = src.where(~F.col(BUCKET_COL).isin(sorted(done)))
+            srcs = [s.where(~F.col(BUCKET_COL).isin(sorted(done))) for s in srcs]
+        stats = [_bucket_stats(src, key) for src in srcs]
         input_fps = {
-            bk: f"{n:x}:{fp}" for bk, (n, fp) in _bucket_stats(src, key).items()
+            bk: ",".join("{:x}:{}".format(*st.get(bk, (0, "0"))) for st in stats)
+            for bk in set().union(*stats)
         }
-        out = fn(src.drop(BUCKET_COL))
-        self.write_stage(stage, out, key=key, run_id=run_id,
-                         only_buckets=remaining, input_fps=input_fps)
+        out = fn(*[src.drop(BUCKET_COL) for src in srcs])
+        run_id = self.write_stage(stage, out, key=key, run_id=run_id,
+                                  only_buckets=remaining, input_fps=input_fps)
+        self.record_metric(run_id, stage, "wall_sec", time.time() - t0)
         return self.read_stage(stage, schema_fp=expected_fp,
                                trust_legacy=trust_legacy)

@@ -1,6 +1,9 @@
 """Resumable full-pipeline runs: resumed ≡ fresh, re-run is a no-op."""
 
+import re
+
 import pyspark.sql.functions as F
+import pytest
 
 from docopenie_spark import datagen
 from docopenie_spark.plans.checkpointed import run_checkpointed
@@ -56,6 +59,58 @@ def test_mid_run_kill_then_resume(spark, tmp_path):
     assert store.lineage().count() == n_before
 
 
+class _Killed(Exception):
+    pass
+
+
+class _KilledInLinks(StageStore):
+    """A store whose run dies inside the three-input ``links`` stage,
+    after half of its buckets were written and committed."""
+
+    def run_resumable(self, stage, inputs, fn, **kw):
+        if stage == "links":
+            self.write_stage(stage, fn(*inputs), run_id=kw["run_id"],
+                             only_buckets=[0, 1])
+            raise _Killed
+        return super().run_resumable(stage, inputs, fn, **kw)
+
+
+def test_kill_inside_multi_input_stage_then_resume(spark, tmp_path):
+    t = datagen.transcripts_df(spark, 160)
+    fresh = _norm(run_pipeline(spark, t).triples)
+    root = str(tmp_path / "cp")
+    with pytest.raises(_Killed):
+        run_checkpointed(spark, t, _KilledInLinks(spark, root, buckets=4),
+                         run_id="killed")
+    store = StageStore(spark, root, buckets=4)
+    assert store.done_buckets("links") == [0, 1]
+
+    resumed = _norm(run_checkpointed(spark, t, store, run_id="resume"))
+    assert resumed.exceptAll(fresh).isEmpty()
+    assert fresh.exceptAll(resumed).isEmpty()
+    lin = store.lineage()
+    # the stages before links were not recomputed; links only finished
+    runs = {(r.stage, r.partition_id): r.run_id for r in lin.collect()}
+    for stage in ("doc_chunks", "annotated", "clusters"):
+        assert {runs[(stage, b)] for b in range(4)} == {"killed"}, stage
+    assert [runs[("links", b)] for b in range(4)] == ["killed", "killed",
+                                                      "resume", "resume"]
+
+
+def test_lineage_records_one_input_fingerprint_per_input(spark, tmp_path):
+    t = datagen.transcripts_df(spark, 160)
+    store = StageStore(spark, str(tmp_path / "cp"), buckets=4)
+    run_checkpointed(spark, t, store, run_id="r1")
+    n_inputs = {"doc_chunks": 1, "annotated": 1, "clusters": 1, "links": 3,
+                "best_mentions": 2, "best_mentions_expanded": 3, "triples": 2}
+    rows = store.lineage().where(F.col("row_count") > 0).collect()
+    assert {r.stage for r in rows} == set(n_inputs)
+    for r in rows:
+        parts = r.input_fingerprint.split(",")
+        assert len(parts) == n_inputs[r.stage], r
+        assert all(re.fullmatch(r"[0-9a-f]+:[0-9a-f]+", p) for p in parts), r
+
+
 def test_metrics_recorded(spark, tmp_path):
     t = datagen.transcripts_df(spark, 80)
     store = StageStore(spark, str(tmp_path / "cp"), buckets=4)
@@ -63,6 +118,10 @@ def test_metrics_recorded(spark, tmp_path):
     m = store.metrics().collect()
     stages = {r.stage for r in m}
     assert "annotated" in stages and "triples" in stages
+    assert {r.stage for r in m if r.metric == "wall_sec"} == {
+        "doc_chunks", "annotated", "clusters", "links", "best_mentions",
+        "best_mentions_expanded", "triples",
+    }
     assert all(r.value >= 0 for r in m)
 
 

@@ -1,5 +1,8 @@
 """Checkpoint/lineage/resume (S7 analogue): resumed run ≡ fresh run."""
 
+import shutil
+
+import pytest
 import pyspark.sql.functions as F
 
 from docopenie_spark import datagen
@@ -187,3 +190,92 @@ def test_bucket_is_deterministic(spark):
     # one bucket per conv_id
     multi = a.groupBy("conv_id").count().where(F.col("count") > 1)
     assert multi.isEmpty()
+
+
+# ----------------------------------------- ADVICE: checkpoint schema guard
+
+def test_schema_change_forces_recompute(spark, tmp_path):
+    """Resuming against a checkpoint written by pre-change code (different
+    output schema) must recompute, not silently read stale columns."""
+    store = StageStore(spark, str(tmp_path), buckets=4)
+    src = spark.range(20).select(
+        F.col("id").cast("string").alias("conv_id"), F.col("id").alias("v")
+    )
+    out1 = store.run_resumable("s", src, lambda d: d.select("conv_id", "v"))
+    assert set(out1.columns) == {"conv_id", "v"} and out1.count() == 20
+
+    # "code change": stage now emits v2 — all old-schema buckets are stale
+    out2 = store.run_resumable(
+        "s", src, lambda d: d.select("conv_id", (F.col("v") * 2).alias("v2"))
+    )
+    assert set(out2.columns) == {"conv_id", "v2"}, "stale schema was read back"
+    assert out2.count() == 20
+    assert out2.agg(F.sum("v2")).first()[0] == 2 * sum(range(20))
+
+
+def test_same_schema_resume_short_circuits(spark, tmp_path):
+    """The guard must not break the all-done fast path: a second run with
+    the same fn schema reads back without writing new lineage rows."""
+    store = StageStore(spark, str(tmp_path), buckets=4)
+    src = spark.range(10).select(
+        F.col("id").cast("string").alias("conv_id"), F.col("id").alias("v")
+    )
+    fn = lambda d: d.select("conv_id", "v")  # noqa: E731
+    store.run_resumable("s", src, fn)
+    n_lineage = store.lineage().count()
+    out = store.run_resumable("s", src, fn)
+    assert out.count() == 10
+    assert store.lineage().count() == n_lineage, "short-circuit wrote lineage"
+
+
+# ------------------------------------ ADVICE: legacy null-fp checkpoints
+
+def _null_out_fingerprints(spark, store, tmp_path):
+    """Simulate a pre-guard checkpoint: rewrite lineage with schema_fp
+    nulled (the column existed but the rows predate the guard)."""
+    lin_path = store._lineage_path()
+    lin = spark.read.parquet(lin_path)
+    legacy = lin.withColumn("schema_fp", F.lit(None).cast("string"))
+    tmp = str(tmp_path / "_legacy_lineage")
+    legacy.write.mode("overwrite").parquet(tmp)
+    shutil.rmtree(lin_path)
+    shutil.move(tmp, lin_path)
+
+
+def test_legacy_null_fingerprint_trusted_but_warns(spark, tmp_path):
+    """ADVICE r4: lineage rows with no recorded schema_fp used to count
+    as done SILENTLY — the exact stale-column hazard the guard targets.
+    They still count (pre-guard compatibility) but now emit a warning."""
+    store = StageStore(spark, str(tmp_path / "ck"), buckets=4)
+    src = spark.range(20).select(
+        F.col("id").cast("string").alias("conv_id"), F.col("id").alias("v")
+    )
+    store.run_resumable("s", src, lambda d: d.select("conv_id", "v"))
+    _null_out_fingerprints(spark, store, tmp_path)
+
+    # same schema, different values: if the legacy buckets were NOT
+    # trusted this fn would overwrite v with 99s
+    with pytest.warns(UserWarning, match="predate the schema guard"):
+        out = store.run_resumable(
+            "s", src, lambda d: d.select("conv_id", F.lit(99).cast("long").alias("v"))
+        )
+    vals = {r.v for r in out.collect()}
+    assert vals == set(range(20)), "legacy checkpoint must be read back, not recomputed"
+
+
+def test_legacy_null_fingerprint_recomputed_when_untrusted(spark, tmp_path):
+    store = StageStore(spark, str(tmp_path / "ck"), buckets=4)
+    src = spark.range(20).select(
+        F.col("id").cast("string").alias("conv_id"), F.col("id").alias("v")
+    )
+    store.run_resumable("s", src, lambda d: d.select("conv_id", "v"))
+    _null_out_fingerprints(spark, store, tmp_path)
+
+    assert store.done_buckets(
+        "s", schema_fp="anything", trust_legacy=False
+    ) == []
+    out = store.run_resumable(
+        "s", src, lambda d: d.select("conv_id", F.lit(99).cast("long").alias("v")),
+        trust_legacy=False,
+    )
+    assert {r.v for r in out.collect()} == {99}, "untrusted legacy must recompute"

@@ -1,9 +1,8 @@
-"""Round-5 regression tests: ADVICE r4 fixes (legacy checkpoint
-fingerprints surfaced, annotate() slim-decision marker) + VERDICT r4
-directives (pr_curve quantization, fused-pass robustness fuzzing).
+"""Round-5 regression tests: ADVICE r4 fixes (annotate() slim-decision
+marker; the legacy checkpoint-fingerprint tests moved to
+test_checkpoints.py) + VERDICT r4 directives (pr_curve quantization,
+fused-pass robustness fuzzing).
 """
-
-import shutil
 
 import pytest
 
@@ -14,60 +13,6 @@ from docopenie_spark.functions import textnorm
 from docopenie_spark.operators import classifier, fused, segment, tokenize
 from docopenie_spark.operators.assembly import with_turn_offsets
 from docopenie_spark.plans.pipeline import annotate, run_pipeline
-from docopenie_spark.sources.checkpoints import StageStore
-
-
-# ------------------------------------ ADVICE: legacy null-fp checkpoints
-
-def _null_out_fingerprints(spark, store, tmp_path):
-    """Simulate a pre-guard checkpoint: rewrite lineage with schema_fp
-    nulled (the column existed but the rows predate the guard)."""
-    lin_path = store._lineage_path()
-    lin = spark.read.parquet(lin_path)
-    legacy = lin.withColumn("schema_fp", F.lit(None).cast("string"))
-    tmp = str(tmp_path / "_legacy_lineage")
-    legacy.write.mode("overwrite").parquet(tmp)
-    shutil.rmtree(lin_path)
-    shutil.move(tmp, lin_path)
-
-
-def test_legacy_null_fingerprint_trusted_but_warns(spark, tmp_path):
-    """ADVICE r4: lineage rows with no recorded schema_fp used to count
-    as done SILENTLY — the exact stale-column hazard the guard targets.
-    They still count (pre-guard compatibility) but now emit a warning."""
-    store = StageStore(spark, str(tmp_path / "ck"), buckets=4)
-    src = spark.range(20).select(
-        F.col("id").cast("string").alias("conv_id"), F.col("id").alias("v")
-    )
-    store.run_resumable("s", src, lambda d: d.select("conv_id", "v"))
-    _null_out_fingerprints(spark, store, tmp_path)
-
-    # same schema, different values: if the legacy buckets were NOT
-    # trusted this fn would overwrite v with 99s
-    with pytest.warns(UserWarning, match="predate the schema guard"):
-        out = store.run_resumable(
-            "s", src, lambda d: d.select("conv_id", F.lit(99).cast("long").alias("v"))
-        )
-    vals = {r.v for r in out.collect()}
-    assert vals == set(range(20)), "legacy checkpoint must be read back, not recomputed"
-
-
-def test_legacy_null_fingerprint_recomputed_when_untrusted(spark, tmp_path):
-    store = StageStore(spark, str(tmp_path / "ck"), buckets=4)
-    src = spark.range(20).select(
-        F.col("id").cast("string").alias("conv_id"), F.col("id").alias("v")
-    )
-    store.run_resumable("s", src, lambda d: d.select("conv_id", "v"))
-    _null_out_fingerprints(spark, store, tmp_path)
-
-    assert store.done_buckets(
-        "s", schema_fp="anything", trust_legacy=False
-    ) == []
-    out = store.run_resumable(
-        "s", src, lambda d: d.select("conv_id", F.lit(99).cast("long").alias("v")),
-        trust_legacy=False,
-    )
-    assert {r.v for r in out.collect()} == {99}, "untrusted legacy must recompute"
 
 
 # ------------------------------------- ADVICE: annotate() slim marker
