@@ -448,11 +448,14 @@ _SEG_PUNCT = [
 ]
 
 
-def _punctuated_docs(docs: DataFrame) -> DataFrame:
+def _injected_transcripts(spark: SparkSession, sf_dir: str, pats) -> DataFrame:
+    """Derived transcripts over the documents with every ``(pat, rep)`` of
+    ``pats`` applied in order — the same regexp_replace nesting as the
+    DuckDB side's ``_corpus_prefix_sql``."""
     c = F.col("text")
-    for pat, rep in _SEG_PUNCT:
+    for pat, rep in pats:
         c = F.regexp_replace(c, pat, rep)
-    return docs.withColumn("text", c)
+    return derived_from_documents(_docs(spark, sf_dir).withColumn("text", c))
 
 
 def _q_kg_segmentation(spark, sf_dir):
@@ -461,7 +464,7 @@ def _q_kg_segmentation(spark, sf_dir):
     re-derives sentences with a TILING regex (sentence | fragment |
     terminator-gap) whose cumulative match lengths reproduce
     segment_turn's m.start() offsets exactly."""
-    t = derived_from_documents(_punctuated_docs(_docs(spark, sf_dir)))
+    t = _injected_transcripts(spark, sf_dir, _SEG_PUNCT)
     r = run_pipeline(spark, t, with_linking=False, with_coref_expansion=False)
     return r.sentences
 
@@ -488,13 +491,6 @@ _NER_INJECT = [
     ("\\bslow\\b", "Zorblatt"),               # in no dictionary → OTHER
     ("\\bagg\\b", "Massachusetts"),           # gazetteer state → LOCATION
 ]
-
-
-def _entity_injected_docs(docs: DataFrame) -> DataFrame:
-    c = F.col("text")
-    for pat, rep in _NER_INJECT:
-        c = F.regexp_replace(c, pat, rep)
-    return docs.withColumn("text", c)
 
 
 def _sql_strset(names) -> str:
@@ -604,19 +600,11 @@ def _ner_oracle_sql() -> str:
 
 
 def _q_kg_ner_spans(spark, sf_dir):
-    """T7/T8 entity span assembly externally checked — the REAL fused
-    pass (the same code path run_pipeline executes) over entity-injected
-    derived transcripts, pronoun rows split off exactly as the pipeline
-    does (ner.split_mentions)."""
-    from docopenie_spark.operators import fused
-    from docopenie_spark.plans.pipeline import default_dictionaries
-
-    t = derived_from_documents(_entity_injected_docs(_docs(spark, sf_dir)))
-    turns = assembly.with_turn_offsets(t)
-    firsts, gaz, lasts = default_dictionaries()
-    ann = fused.parse_extract_annotate(turns, firsts, gaz, lasts)
-    ents, _prons = ner.split_mentions(fused.split_entities(ann))
-    return ents
+    """T7/T8 entity span assembly externally checked — run_pipeline's
+    ``.entities`` (fused pass, pronoun rows split off) over
+    entity-injected derived transcripts."""
+    t = _injected_transcripts(spark, sf_dir, _NER_INJECT)
+    return run_pipeline(spark, t, with_linking=False, with_coref_expansion=False).entities
 
 
 # T6 coreference with a REAL oracle (third spine stage this round): the
@@ -639,22 +627,11 @@ _COREF_INJECT = _NER_INJECT + [
 
 
 def _q_kg_coref(spark, sf_dir):
-    """T6 coref clusters externally checked — the real fused pass +
-    the production native resolver (coref.clusters), flattened to one
-    row per cluster member."""
-    from docopenie_spark.operators import coref, fused
-    from docopenie_spark.plans.pipeline import default_dictionaries
-
-    docs = _docs(spark, sf_dir)
-    c = F.col("text")
-    for pat, rep in _COREF_INJECT:
-        c = F.regexp_replace(c, pat, rep)
-    t = derived_from_documents(docs.withColumn("text", c))
-    turns = assembly.with_turn_offsets(t)
-    firsts, gaz, lasts = default_dictionaries()
-    # persisted (r7): three readers, one Python pass (see _q_kg_linking)
-    ann = fused.parse_extract_annotate(turns, firsts, gaz, lasts).persist()
-    cl = coref.clusters(fused.split_entities(ann))
+    """T6 coref clusters externally checked — run_pipeline's ``.clusters``
+    (the production native resolver), flattened to one row per cluster
+    member."""
+    t = _injected_transcripts(spark, sf_dir, _COREF_INJECT)
+    cl = run_pipeline(spark, t, with_linking=False, with_coref_expansion=False).clusters
     return cl.select(
         "conv_id", "cluster_id",
         F.col("best.text").alias("best_text"),
@@ -769,18 +746,17 @@ def _coref_oracle_sql() -> str:
 # confidence round(0.90 - 0.005*(run_len-1), 4). The DuckDB oracle
 # re-derives this with gaps-and-islands runs + adjacency joins.
 def _q_kg_extraction(spark, sf_dir):
-    """T4 verbal extraction externally checked — the real fused pass
-    (same code run_pipeline executes) over raw derived transcripts,
-    triples flattened with doc-level offsets."""
-    from docopenie_spark.operators import fused
-    from docopenie_spark.plans.pipeline import default_dictionaries
-
+    """T4 verbal extraction externally checked — run_pipeline's
+    ``.triples_raw`` over raw derived transcripts, flattened with
+    doc-level offsets."""
     t = derived_from_documents(_docs(spark, sf_dir))
-    turns = assembly.with_turn_offsets(t)
-    firsts, gaz, lasts = default_dictionaries()
-    # persisted (r7): three readers, one Python pass (see _q_kg_linking)
-    ann = fused.parse_extract_annotate(turns, firsts, gaz, lasts).persist()
-    tr = fused.split_triples(ann)
+    r = run_pipeline(spark, t, with_linking=False, with_coref_expansion=False)
+    return _flat_triples(r.triples_raw)
+
+
+def _flat_triples(tr: DataFrame) -> DataFrame:
+    """One row per raw triple: argument and relation text plus their
+    doc-level offsets."""
     return tr.select(
         "conv_id", "turn_idx", "sent_num",
         F.col("arg1.text").alias("arg1"),
@@ -876,30 +852,12 @@ _LINK_INJECT = [
 
 
 def _q_kg_linking(spark, sf_dir):
-    """T9/T10 linking externally checked — the production links()
+    """T9/T10 linking externally checked — run_pipeline's ``.links``
     (candidate explode, P7 cleaning, broadcast join, scoring, argmax)
-    over injected derived transcripts with the full clusters+sentences
+    over injected derived transcripts, with the full clusters+sentences
     context machinery wired."""
-    from docopenie_spark.operators import coref, fused, link
-    from docopenie_spark.plans.pipeline import default_dictionaries
-
-    docs = _docs(spark, sf_dir)
-    c = F.col("text")
-    for pat, rep in _LINK_INJECT:
-        c = F.regexp_replace(c, pat, rep)
-    t = derived_from_documents(docs.withColumn("text", c))
-    turns = assembly.with_turn_offsets(t)
-    firsts, gaz, lasts = default_dictionaries()
-    # persisted (r7): split_triples / split_entities / split_sentences all
-    # read this table — without the persist the fused Arrow pass executed
-    # three times per materialization
-    ann = fused.parse_extract_annotate(turns, firsts, gaz, lasts).persist()
-    lk = link.links(
-        fused.split_triples(ann),
-        datagen.entity_dict_df(spark),
-        clusters=coref.clusters(fused.split_entities(ann)),
-        sentences=fused.split_sentences(ann, turns),
-    )
+    t = _injected_transcripts(spark, sf_dir, _LINK_INJECT)
+    lk = run_pipeline(spark, t, with_coref_expansion=False).links
     return lk.select(
         "conv_id", "text", "offset", "clean_text", "clean_offset",
         "name", "id", F.round("score", 6).alias("score"),
@@ -983,27 +941,14 @@ def _linking_oracle_sql() -> str:
 # per argument (pinned by a test), collapsing the greedy fold to a
 # single closed-form splice in SQL.
 def _q_kg_substitution(spark, sf_dir):
-    """T13 substitution externally checked — production fold over
-    link-derived best mentions on the linking corpus."""
-    from docopenie_spark.operators import coref, fused, link, substitute
-    from docopenie_spark.plans.pipeline import default_dictionaries
+    """T13 substitution externally checked — the production fold over
+    run_pipeline's ``.triples_raw``, with a display set derived from its
+    ``.links`` on the linking corpus (kg_linking's plan-cache entry)."""
+    from docopenie_spark.operators import substitute
 
-    docs = _docs(spark, sf_dir)
-    c = F.col("text")
-    for pat, rep in _LINK_INJECT:
-        c = F.regexp_replace(c, pat, rep)
-    t = derived_from_documents(docs.withColumn("text", c))
-    turns = assembly.with_turn_offsets(t)
-    firsts, gaz, lasts = default_dictionaries()
-    # persisted (r7): three readers, one Python pass (see _q_kg_linking)
-    ann = fused.parse_extract_annotate(turns, firsts, gaz, lasts).persist()
-    tr = fused.split_triples(ann)
-    lk = link.links(
-        tr, datagen.entity_dict_df(spark),
-        clusters=coref.clusters(fused.split_entities(ann)),
-        sentences=fused.split_sentences(ann, turns),
-    )
-    bems = lk.where(F.col("name") != F.col("clean_text")).select(
+    t = _injected_transcripts(spark, sf_dir, _LINK_INJECT)
+    r = run_pipeline(spark, t, with_coref_expansion=False)
+    bems = r.links.where(F.col("name") != F.col("clean_text")).select(
         "conv_id",
         F.struct(
             F.col("clean_text").alias("text"),
@@ -1011,7 +956,7 @@ def _q_kg_substitution(spark, sf_dir):
         ).alias("target"),
         F.col("name").alias("best_mention"),
     )
-    return substitute.substituted_triples(tr, bems)
+    return substitute.substituted_triples(r.triples_raw, bems)
 
 
 def _substitution_oracle_sql() -> str:
@@ -1066,27 +1011,15 @@ _EXPAND_INJECT = _LINK_INJECT + [
 
 def _q_kg_coref_expansion(spark, sf_dir):
     """T12 coref expansion externally checked — production
-    expand_with_coref over production clusters + links, link-decided."""
+    expand_with_coref over run_pipeline's ``.clusters`` + ``.links``,
+    link-decided."""
     from docopenie_spark import schemas
-    from docopenie_spark.operators import bestmention, coref, fused, link
-    from docopenie_spark.plans.pipeline import default_dictionaries
+    from docopenie_spark.operators import bestmention
 
-    docs = _docs(spark, sf_dir)
-    c = F.col("text")
-    for pat, rep in _EXPAND_INJECT:
-        c = F.regexp_replace(c, pat, rep)
-    t = derived_from_documents(docs.withColumn("text", c))
-    turns = assembly.with_turn_offsets(t)
-    firsts, gaz, lasts = default_dictionaries()
-    # persisted (r7): three readers, one Python pass (see _q_kg_linking)
-    ann = fused.parse_extract_annotate(turns, firsts, gaz, lasts).persist()
-    cl = coref.clusters(fused.split_entities(ann))
-    lk = link.links(
-        fused.split_triples(ann), datagen.entity_dict_df(spark),
-        clusters=cl, sentences=fused.split_sentences(ann, turns),
-    )
+    t = _injected_transcripts(spark, sf_dir, _EXPAND_INJECT)
+    r = run_pipeline(spark, t, with_coref_expansion=False)
     empty_bems = local_table(spark, [], schemas.BEST_MENTIONS)
-    out = bestmention.expand_with_coref(empty_bems, cl, lk)
+    out = bestmention.expand_with_coref(empty_bems, r.clusters, r.links)
     return out.select(
         "conv_id", "kind",
         F.col("target.text").alias("target_text"),
@@ -1171,24 +1104,13 @@ _BEM_INJECT = [
 
 
 def _q_kg_best_mention_rules(spark, sf_dir):
-    """T11 rule engine externally checked — the production best_mentions
-    (distinct-pass Python rules + JVM occurrence fan-out + native
-    per-occurrence proximity re-pick) on the two-injection corpus."""
-    from docopenie_spark.operators import bestmention, fused
-    from docopenie_spark.plans.pipeline import default_dictionaries
-
-    docs = _docs(spark, sf_dir)
-    c = F.col("text")
-    for pat, rep in _BEM_INJECT:
-        c = F.regexp_replace(c, pat, rep)
-    t = derived_from_documents(docs.withColumn("text", c))
-    turns = assembly.with_turn_offsets(t)
-    firsts, gaz, lasts = default_dictionaries()
-    ann = fused.parse_extract_annotate(turns, firsts, gaz, lasts)
-    ents, _prons = ner.split_mentions(fused.split_entities(ann))
-    bems = bestmention.best_mentions(
-        ents, assembly.doc_chunks(t), datagen.gazetteer_rows()
-    )
+    """T11 rule engine externally checked — run_pipeline's
+    ``.best_mentions`` (distinct-pass Python rules + JVM occurrence
+    fan-out + native per-occurrence proximity re-pick) on the
+    two-injection corpus."""
+    t = _injected_transcripts(spark, sf_dir, _BEM_INJECT)
+    bems = run_pipeline(spark, t, with_linking=False,
+                        with_coref_expansion=False).best_mentions
     return bems.select(
         "conv_id", "kind",
         F.col("target.text").alias("target_text"),
@@ -1361,27 +1283,14 @@ def _bem_oracle_sql() -> str:
 # (U2, iterative numeric optimization) remains non-SQL-expressible.
 def _q_kg_bem_features(spark, sf_dir):
     """U1 feature vectors externally checked — production bem_features
-    over the production rule-engine output + coref clusters."""
-    from docopenie_spark.operators import bestmention, classifier, coref, fused
-    from docopenie_spark.plans.pipeline import default_dictionaries
+    over run_pipeline's ``.best_mentions`` + ``.clusters``
+    (kg_best_mention_rules' plan-cache entry)."""
+    from docopenie_spark.operators import classifier
 
-    docs = _docs(spark, sf_dir)
-    c = F.col("text")
-    for pat, rep in _BEM_INJECT:
-        c = F.regexp_replace(c, pat, rep)
-    t = derived_from_documents(docs.withColumn("text", c))
-    turns = assembly.with_turn_offsets(t)
-    firsts, gaz, lasts = default_dictionaries()
-    # persisted (r7): the mentions view feeds both the rule engine and
-    # the coref clusters — two fused-pass executions without it
-    ann = fused.parse_extract_annotate(turns, firsts, gaz, lasts).persist()
-    mentions = fused.split_entities(ann)
-    ents, _prons = ner.split_mentions(mentions)
-    bems = bestmention.best_mentions(
-        ents, assembly.doc_chunks(t), datagen.gazetteer_rows()
-    )
-    cl = coref.clusters(mentions)
-    feats = classifier.bem_features(bems, cl, datagen.gazetteer_rows())
+    t = _injected_transcripts(spark, sf_dir, _BEM_INJECT)
+    r = run_pipeline(spark, t, with_linking=False, with_coref_expansion=False)
+    feats = classifier.bem_features(r.best_mentions, r.clusters,
+                                    datagen.gazetteer_rows())
     return feats.select(
         "conv_id", "bem_index", "kind",
         F.col("target.text").alias("target_text"),
@@ -1520,31 +1429,12 @@ _RELNOUN_INJECT = [("\\bcolumn\\b", "Okafor , president of GDC")]
 
 
 def _q_kg_relnoun(spark, sf_dir):
-    """T5 relnoun extraction externally checked — the real fused pass
-    over the appositive-injected corpus, relnoun rows only."""
-    from docopenie_spark.operators import fused
-    from docopenie_spark.plans.pipeline import default_dictionaries
-
-    docs = _docs(spark, sf_dir)
-    c = F.col("text")
-    for pat, rep in _RELNOUN_INJECT:
-        c = F.regexp_replace(c, pat, rep)
-    t = derived_from_documents(docs.withColumn("text", c))
-    turns = assembly.with_turn_offsets(t)
-    firsts, gaz, lasts = default_dictionaries()
-    # persisted (r7): three readers, one Python pass (see _q_kg_linking)
-    ann = fused.parse_extract_annotate(turns, firsts, gaz, lasts).persist()
-    tr = fused.split_triples(ann).where(F.col("extractor") == "relnoun")
-    return tr.select(
-        "conv_id", "turn_idx", "sent_num",
-        F.col("arg1.text").alias("arg1"),
-        F.col("arg1.offset").alias("arg1_offset"),
-        F.col("rel.text").alias("rel"),
-        F.col("rel.offset").alias("rel_offset"),
-        F.col("arg2.text").alias("arg2"),
-        F.col("arg2.offset").alias("arg2_offset"),
-        "confidence", "extractor",
-    )
+    """T5 relnoun extraction externally checked — run_pipeline's
+    ``.triples_raw`` over the appositive-injected corpus, relnoun rows
+    only."""
+    t = _injected_transcripts(spark, sf_dir, _RELNOUN_INJECT)
+    r = run_pipeline(spark, t, with_linking=False, with_coref_expansion=False)
+    return _flat_triples(r.triples_raw.where(F.col("extractor") == "relnoun"))
 
 
 def _relnoun_oracle_sql() -> str:
@@ -1630,13 +1520,7 @@ _E2E_INJECT = _BEM_INJECT + [
 def _q_kg_end_to_end(spark, sf_dir):
     """The flagship: production run_pipeline over the composed oracle
     corpus; final substituted triples, externally checked end-to-end."""
-    from docopenie_spark.plans.pipeline import run_pipeline
-
-    docs = _docs(spark, sf_dir)
-    c = F.col("text")
-    for pat, rep in _E2E_INJECT:
-        c = F.regexp_replace(c, pat, rep)
-    t = derived_from_documents(docs.withColumn("text", c))
+    t = _injected_transcripts(spark, sf_dir, _E2E_INJECT)
     # cache=True (r7): with cache=False the fused Arrow pass re-executed
     # once per fan-out reference inside the triples DAG; the persisted
     # fan-out points compute it once (same leak profile as the other
@@ -1880,11 +1764,7 @@ def _q_kg_eval_diff(spark, sf_dir):
     greedy fold, then re-derives eval_diff's identity-key join
     (including its M×N fan-out semantics on duplicate keys) and the
     changed-args filter."""
-    docs = _docs(spark, sf_dir)
-    c = F.col("text")
-    for pat, rep in _E2E_INJECT:
-        c = F.regexp_replace(c, pat, rep)
-    return _eval_diff_over(spark, derived_from_documents(docs.withColumn("text", c)))
+    return _eval_diff_over(spark, _injected_transcripts(spark, sf_dir, _E2E_INJECT))
 
 
 def _q_kg_eval_diff_full(spark, sf_dir):

@@ -1,7 +1,8 @@
 """Round-5 regression tests: ADVICE r4 fixes (annotate() slim-decision
 marker; the legacy checkpoint-fingerprint tests moved to
 test_checkpoints.py) + VERDICT r4 directives (pr_curve quantization,
-fused-pass robustness fuzzing).
+fused-pass robustness fuzzing). The spine-oracle tests are moving to
+test_oracles.py.
 """
 
 import pytest
@@ -96,149 +97,6 @@ def test_fused_pass_adds_no_exchange_over_assembly(spark):
     full = ann._jdf.queryExecution().executedPlan().toString()
     assert full.count("Exchange") == base.count("Exchange")
     assert "MapInPandas" in full
-
-
-# -------------------------- kg_ner_spans oracle is non-vacuous (DuckDB)
-
-def test_ner_oracle_covers_every_classify_branch():
-    """The external NER check is only as strong as its coverage: the
-    DuckDB side alone must produce all four entity types AND merged
-    multi-name spans at the smallest sf (guards against a datagen or
-    injection change silently collapsing the oracle to one branch)."""
-    import duckdb
-
-    import __spark_entry__ as e
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        "'/root/testdata/sf0.001/documents.parquet'"
-    )
-    sql = e.oracle_sql()["kg_ner_spans"]
-    types = {r[0] for r in con.execute(
-        f"SELECT DISTINCT entity_type FROM ({sql})").fetchall()}
-    assert types == {"PERSON", "ORGANIZATION", "LOCATION", "OTHER"}
-    merged = con.execute(
-        f"SELECT count(*) FROM ({sql}) "
-        "WHERE len(string_split(name, ' ')) > 1 "
-        "AND name NOT IN ('Alice Navarro', 'Summit Research Group')"
-    ).fetchone()[0]
-    assert merged > 0, "adjacency-merged spans must be exercised"
-
-
-# ----------------------------- kg_coref oracle non-vacuity (DuckDB only)
-
-def test_coref_oracle_nonvacuous():
-    """The T6 external check must actually exercise pronoun resolution
-    (all three injected pronoun categories appear as cluster members)
-    and multi-mention clustering, even at the smallest sf."""
-    import duckdb
-
-    import __spark_entry__ as e
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        "'/root/testdata/sf0.001/documents.parquet'"
-    )
-    sql = e.oracle_sql()["kg_coref"]
-    prons = dict(con.execute(
-        f"SELECT mention_text, count(*) FROM ({sql}) "
-        "WHERE mention_text IN ('he', 'it', 'they') GROUP BY 1"
-    ).fetchall())
-    assert set(prons) == {"he", "it", "they"}, prons
-    n_clusters = con.execute(
-        f"SELECT count(DISTINCT (conv_id, cluster_id)) FROM ({sql})"
-    ).fetchone()[0]
-    assert n_clusters > 20
-
-
-# -------------------------- kg_linking oracle preconditions + coverage
-
-def test_linking_oracle_preconditions_and_nonvacuity():
-    """The T9/T10 oracle's closed form rests on two preconditions it
-    must fail loudly on if datagen drifts: (a) 'meridian' is the ONLY
-    ambiguous dictionary key (so doc_sim is provably 0 — the ambiguity
-    semi-join selects nothing on this corpus), and (b) the oracle links
-    both name-keyed (6.0) and alias-keyed (5.5) candidates and exercises
-    the P7 strip."""
-    import duckdb
-    from collections import Counter
-
-    import __spark_entry__ as e
-
-    keys = Counter()
-    for (_i, nm, aliases, _t, _inl, _c) in datagen.entity_dict_rows():
-        keys[nm.lower()] += 1
-        for a in aliases:
-            keys[a.lower()] += 1
-    assert {k for k, c in keys.items() if c > 1} == {"meridian"}
-    assert not any(rep.lower() == "meridian"
-                   for _p, rep in e._LINK_INJECT)
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        "'/root/testdata/sf0.001/documents.parquet'"
-    )
-    sql = e.oracle_sql()["kg_linking"]
-    n, n_ids, n_cleaned = con.execute(
-        f"SELECT count(*), count(DISTINCT id), "
-        f"sum(CASE WHEN text != clean_text THEN 1 ELSE 0 END) FROM ({sql})"
-    ).fetchone()
-    assert n > 20 and n_ids >= 5
-    assert n_cleaned > 0, "P7 lead/trail strip must be exercised"
-    # name- vs alias-keyed candidates both present: with inlinks <= 5000
-    # the alias ceiling is 5.5 + 0.4*log10(5001) < 6.98 and every name
-    # match scores >= 6.0, so the observed spread must straddle 6.75
-    # (alias-only or name-only corpora would sit on one side)
-    lo, hi = con.execute(
-        f"SELECT min(score), max(score) FROM ({sql})").fetchone()
-    assert lo < 6.75 < hi, (lo, hi)
-
-
-# ----------------- kg_substitution oracle geometry + non-vacuity
-
-def test_substitution_oracle_geometry_and_nonvacuity():
-    """The T13 oracle's closed-form splice rests on: at most ONE bems
-    target is contained in any argument span (NP runs disjoint within a
-    turn, offsets disjoint across turns), so the greedy fold degenerates
-    to a single splice. Verify on the actual corpus, and that real
-    substitutions occur."""
-    import duckdb
-
-    import __spark_entry__ as e
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        "'/root/testdata/sf0.001/documents.parquet'"
-    )
-    chain = e._linking_chain_sql()
-    max_n = con.execute(chain + """
-        , bems AS (SELECT DISTINCT conv_id, clean_offset AS m_off,
-                   length(clean_text) AS m_len, name AS best
-                   FROM links WHERE name != clean_text),
-        hits AS (
-          SELECT t.conv_id, t.arg1_offset AS aoff, count(*) AS n
-          FROM triples t JOIN bems b ON b.conv_id = t.conv_id
-            AND b.m_off >= t.arg1_offset
-            AND b.m_off + b.m_len <= t.arg1_offset + length(t.arg1)
-          GROUP BY 1, 2
-          UNION ALL
-          SELECT t.conv_id, t.arg2_offset, count(*)
-          FROM triples t JOIN bems b ON b.conv_id = t.conv_id
-            AND b.m_off >= t.arg2_offset
-            AND b.m_off + b.m_len <= t.arg2_offset + length(t.arg2)
-          GROUP BY 1, 2)
-        SELECT coalesce(max(n), 0) FROM hits""").fetchone()[0]
-    assert max_n <= 1, "closed-form splice needs <=1 contained mention/arg"
-
-    sql = e.oracle_sql()["kg_substitution"]
-    n_sub = con.execute(
-        f"SELECT count(*) FROM ({sql}) "
-        "WHERE subj != subj_raw OR obj != obj_raw").fetchone()[0]
-    assert n_sub > 0, "substitutions must actually occur"
 
 
 # ------------------- kg_coref_expansion oracle gate coverage (DuckDB)

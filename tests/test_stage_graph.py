@@ -53,6 +53,26 @@ def test_each_stage_builder_has_one_call_site():
     assert not wrong, "wire stages once, in pipeline._stage_graph: " + repr(wrong)
 
 
+# the driver's single-operator probes over inputs the pipeline does not
+# build: builder → the one query allowed to call it
+DRIVER_PROBES = {"expand_with_coref": "_q_kg_coref_expansion",
+                 "substituted_triples": "_q_kg_substitution"}
+
+
+def test_driver_queries_read_pipeline_stages():
+    path = REPO / "__spark_entry__.py"
+    funcs = [(f.lineno, f.end_lineno, f.name) for f in ast.parse(path.read_text()).body
+             if isinstance(f, ast.FunctionDef)]
+
+    def enclosing(line):
+        return next((name for lo, hi, name in funcs if lo <= line <= hi), None)
+
+    wrong = [f"{m or '*'}.{n} in {enclosing(line)}:{line}"
+             for (m, n), line in _builder_calls(path)
+             if DRIVER_PROBES.get(n) != enclosing(line)]
+    assert not wrong, "read the stages from run_pipeline: " + repr(wrong)
+
+
 def test_run_pipeline_persists_the_fanout_stages_in_order(spark):
     t = datagen.transcripts_df(spark, 80, seed=43)
     r = pipeline.run_pipeline(spark, t)
