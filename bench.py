@@ -11,16 +11,11 @@ bread-and-butter (agg, broadcast join).
 Noise protocol (VERDICT r4 #1): this sandbox host is co-tenant-noisy
 (memory-bandwidth pressure swings identical runs up to 1.9x — see
 BASELINE.md items 14-16), and a single un-gated pass recorded in a busy
-window is unrepresentative evidence. Two fixes:
-- the size-adaptive pipeline flags (slim sentences / coref hot gate)
-  are resolved OUTSIDE the timed region from one untimed stats job and
-  passed explicitly, so the timed region is exactly the pipeline — the
-  same shape scaling_bench.py times (the auto-mode sizing probe,
-  ``pipeline.adaptive_decisions``, used to run inside the clock);
-- every query runs $SPARK_GRAFT_BENCH_REPEATS times (default 3)
-  INTERLEAVED (whole suite round-robin, not back-to-back), and the
-  reported number is the per-query MEDIAN; the raw per-repeat walls are
-  kept in the JSON (``queries_raw``) so a reader can see the spread.
+window is unrepresentative evidence. So every query runs
+$SPARK_GRAFT_BENCH_REPEATS times (default 3) INTERLEAVED (whole suite
+round-robin, not back-to-back), and the reported number is the
+per-query MEDIAN; the raw per-repeat walls are kept in the JSON
+(``queries_raw``) so a reader can see the spread.
 """
 
 from __future__ import annotations
@@ -38,7 +33,6 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from docopenie_spark import datagen  # noqa: E402
 from docopenie_spark.operators import dedup, similarity  # noqa: E402
-from docopenie_spark.plans import pipeline as pl  # noqa: E402
 from docopenie_spark.plans.pipeline import run_pipeline  # noqa: E402
 from docopenie_spark.session import get_spark  # noqa: E402
 
@@ -84,12 +78,7 @@ def main():
     n_docs = docs.count()
     n_turns = TURNS_PER_DOC * n_docs
 
-    # Resolve the size-adaptive flags ONCE, untimed, with the decision
-    # function run_pipeline's auto mode calls — the timed region then
-    # contains the pipeline and nothing else.
     transcripts = datagen.transcripts_df(spark, n_turns)
-    slim, hot_thr = pl.adaptive_decisions(transcripts)
-    flags = dict(slim_sentences=slim, coref_hot_threshold=hot_thr)
 
     raw: dict[str, list[float]] = {}
     extras: dict[str, float] = {}
@@ -103,7 +92,7 @@ def main():
     # warmup: the full code path on a small slice so the timed numbers
     # measure the queries, not JVM/Arrow/Python-worker bring-up (the
     # driver runs this script cold; a long-lived cluster amortizes it)
-    run_pipeline(spark, datagen.transcripts_df(spark, 2000), **flags).triples.count()
+    run_pipeline(spark, datagen.transcripts_df(spark, 2000)).triples.count()
     dedup.minhash_dedup(docs.limit(50), "doc_id", "text").count()
     dedup.simhash_near_dups(dedup.simhash(docs.limit(50), "doc_id", "text")).count()
 
@@ -115,7 +104,7 @@ def main():
     n = spark.read.parquet(f"{sf_dir}/nation.parquet")
 
     def kg_pipeline():
-        r = run_pipeline(spark, transcripts, **flags)
+        r = run_pipeline(spark, transcripts)
         n_triples = r.triples.count()
         r.unpersist()  # repeats must not accumulate executor storage
         extras["n_triples"] = n_triples

@@ -57,9 +57,9 @@ def run_suite(spark, suite, repeats=REPEATS):
     return {n: round(statistics.median(w), 3) for n, w in raw.items()}, raw
 
 
-def pipeline_stages(transcripts, slim, hot):
+def pipeline_stages(transcripts):
     """[(stage name, build)] for every stage of the pipeline's stage graph
-    (pipeline._stage_graph) under the given adaptive flags. Each stage's
+    (pipeline._stage_graph), built as run_pipeline builds them. Each stage's
     output is materialized once with localCheckpoint(), which truncates
     its lineage: ``build()`` rebuilds the stage over its upstream
     outputs, and no rebuilt plan can match a cached one, so each number
@@ -70,7 +70,7 @@ def pipeline_stages(transcripts, slim, hot):
         stages.append((name, lambda: fn(*inputs)))
         return fn(*inputs).localCheckpoint()
 
-    pl._stage_graph(stage, transcripts, None, datagen.gazetteer_rows(), slim, hot)
+    pl._stage_graph(stage, transcripts, None, datagen.gazetteer_rows())
     return stages
 
 
@@ -93,14 +93,10 @@ def main():
     out: dict[str, dict] = {}
 
     if which in ("pipeline", "all"):
-        # resolve flags outside the clock exactly like bench.py
-        slim, hot = pl.adaptive_decisions(transcripts)
-        stages = pipeline_stages(transcripts, slim, hot)
+        stages = pipeline_stages(transcripts)
 
         def full_pipeline():
-            r = pl.run_pipeline(
-                spark, transcripts, slim_sentences=slim, coref_hot_threshold=hot
-            )
+            r = pl.run_pipeline(spark, transcripts)
             r.triples.count()
             r.unpersist()
 

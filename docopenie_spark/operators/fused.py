@@ -40,15 +40,13 @@ def _keep(s: str) -> bool:
 
 
 _PART_DDL = "struct<text:string,offset:bigint>"
-# row_kind: 's' = sentence (e_offset/e_len carry the doc offset and
-# length; e_text carries the text only when emit_sentence_text is set —
-# sentences are exact substrings of the normalized turn text, so the
-# text is reconstructable JVM-side), 't' = triple, 'e' = entity/pronoun
+# row_kind: 's' = sentence (e_text/e_offset carry its text and doc
+# offset), 't' = triple, 'e' = entity/pronoun
 ANNOTATED = (
     "conv_id string, row_kind string, turn_idx int, sent_num int, "
     f"arg1 {_PART_DDL}, rel {_PART_DDL}, arg2 {_PART_DDL}, "
     "confidence double, extractor string, "
-    "e_text string, e_offset bigint, e_len int, e_name string, e_type string"
+    "e_text string, e_offset bigint, e_name string, e_type string"
 )
 
 # the same schema as Arrow types — the fused pass yields RecordBatches
@@ -71,7 +69,6 @@ ANNOTATED_PA = pa.schema(
         ("extractor", pa.string()),
         ("e_text", pa.string()),
         ("e_offset", pa.int64()),
-        ("e_len", pa.int32()),
         ("e_name", pa.string()),
         ("e_type", pa.string()),
     ]
@@ -93,7 +90,6 @@ def parse_extract_annotate(
     first_names: set[str],
     gazetteer_names: set[str],
     last_names: set[str] | None = None,
-    emit_sentence_text: bool = False,
 ) -> DataFrame:
     """segment+filter+tokenize+extract+NER in ONE Python pass over the
     turn table — the token arrays NEVER cross the Arrow boundary.
@@ -104,16 +100,7 @@ def parse_extract_annotate(
     over bulk data carries a large non-scaling tax. The two-pass design
     (parse → persist tokens → annotate) shipped the WIDE token structs
     out of python and back in; this emits only sentences, triples, and
-    entities (≈ corpus-sized), cutting Arrow volume ~3×.
-
-    By default 's' rows carry ONLY (doc offset, length) — the sentence
-    text is an exact substring of the normalized turn text, so
-    :func:`split_sentences` reconstructs it with a JVM join+substring
-    instead of shipping every kept character through Arrow again and
-    holding it in the persist (round-3 scaling lever: sentence text is
-    the largest single payload of the fused pass's output).
-    ``emit_sentence_text=True`` restores inline text for callers without
-    the turn table at hand."""
+    entities (≈ corpus-sized), cutting Arrow volume ~3×."""
     sc = turns_with_offsets.sparkSession.sparkContext
     b_first = content_broadcast(sc, frozenset(first_names))
     b_gaz = content_broadcast(sc, frozenset(gazetteer_names))
@@ -131,7 +118,7 @@ def parse_extract_annotate(
         for b in batches:
             # columnar accumulators — one list per output column (struct
             # columns as child lists + null mask); pa.array over these is
-            # a C-speed loop, vs pandas transposing 14-wide tuples
+            # a C-speed loop, vs pandas transposing 13-wide tuples
             conv: list = []
             kind: list = []
             til: list = []
@@ -143,7 +130,6 @@ def parse_extract_annotate(
             ext_l: list = []
             etext: list = []
             eoff: list = []
-            elen: list = []
             ename: list = []
             etyp: list = []
             for conv_id, turn_idx, turn_offset, text in zip(
@@ -162,8 +148,7 @@ def parse_extract_annotate(
                     rlt.append(None); rlo.append(None); rlm.append(True)
                     a2t.append(None); a2o.append(None); a2m.append(True)
                     conf_l.append(None); ext_l.append(None)
-                    etext.append(s if emit_sentence_text else None)
-                    eoff.append(off); elen.append(len(s))
+                    etext.append(s); eoff.append(off)
                     ename.append(None); etyp.append(None)
                     for a1, r, a2, cf, ext in extract_sentence(tokens, s):
                         conv.append(conv_id); kind.append("t")
@@ -172,7 +157,7 @@ def parse_extract_annotate(
                         rlt.append(r[0]); rlo.append(off + r[1]); rlm.append(False)
                         a2t.append(a2[0]); a2o.append(off + a2[1]); a2m.append(False)
                         conf_l.append(cf); ext_l.append(ext)
-                        etext.append(None); eoff.append(None); elen.append(None)
+                        etext.append(None); eoff.append(None)
                         ename.append(None); etyp.append(None)
                     for e_text, e_off, e_name, e_type in sentence_entities(
                         tokens, s, off, firsts, gaz, lasts, True
@@ -183,7 +168,7 @@ def parse_extract_annotate(
                         rlt.append(None); rlo.append(None); rlm.append(True)
                         a2t.append(None); a2o.append(None); a2m.append(True)
                         conf_l.append(None); ext_l.append(None)
-                        etext.append(e_text); eoff.append(e_off); elen.append(None)
+                        etext.append(e_text); eoff.append(e_off)
                         ename.append(e_name); etyp.append(e_type)
             yield pa.RecordBatch.from_arrays(
                 [
@@ -198,7 +183,6 @@ def parse_extract_annotate(
                     pa.array(ext_l, pa.string()),
                     pa.array(etext, pa.string()),
                     pa.array(eoff, pa.int64()),
-                    pa.array(elen, pa.int32()),
                     pa.array(ename, pa.string()),
                     pa.array(etyp, pa.string()),
                 ],
@@ -210,36 +194,12 @@ def parse_extract_annotate(
     return src.mapInArrow(run, schema=ANNOTATED)
 
 
-def split_sentences(annotated: DataFrame,
-                    turns_with_offsets: DataFrame | None = None) -> DataFrame:
-    """SENTENCES view of the combined table.
-
-    With ``turns_with_offsets`` the text is RECONSTRUCTED JVM-side:
-    sentence doc offset − turn offset indexes into the normalized turn
-    text (sentences are exact substrings — segment_turn returns stripped
-    slices). Without it the stored ``e_text`` is used (requires the pass
-    to have run with ``emit_sentence_text=True``)."""
-    s = annotated.where(F.col("row_kind") == "s")
-    if turns_with_offsets is None:
-        return s.select(
-            "conv_id", "turn_idx", "sent_num",
-            F.col("e_offset").alias("offset"),
-            F.col("e_text").alias("text"),
-        )
-    t = turns_with_offsets.select(
-        "conv_id", "turn_idx", "turn_offset",
-        textnorm.normalize_inline_ws(textnorm.asciify(F.col("text"))).alias("_nt"),
-    )
-    j = s.select("conv_id", "turn_idx", "sent_num", "e_offset", "e_len").join(
-        t, ["conv_id", "turn_idx"]
-    )
-    text = F.expr(
-        "substring(_nt, cast(e_offset - turn_offset as int) + 1, e_len)"
-    )
-    return j.select(
+def split_sentences(annotated: DataFrame) -> DataFrame:
+    """SENTENCES view of the combined table (JVM filter, no Python)."""
+    return annotated.where(F.col("row_kind") == "s").select(
         "conv_id", "turn_idx", "sent_num",
         F.col("e_offset").alias("offset"),
-        text.alias("text"),
+        F.col("e_text").alias("text"),
     )
 
 

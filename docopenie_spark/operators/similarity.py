@@ -263,7 +263,7 @@ def _broadcast_cells(
     """(id, cell) assignment via a broadcast distance-join — the large-
     quantizer path (no literals in codegen). Shape at scale: the
     broadcast nested-loop join amplifies each row ×n_centroids ONLY
-    map-side over a slim (id, cell, dist) projection; for n_probe=1 the
+    map-side over a narrow (id, cell, dist) projection; for n_probe=1 the
     partial min(struct(dist, cell)) collapses back to one row per id
     BEFORE the exchange, so the shuffle ships (id, 16 bytes). Vectors
     never enter this subplan — callers join them back by unique id.
@@ -317,7 +317,7 @@ def ivf_topk(
       n_centroids × dims stays within codegen budget.
     - ``"broadcast"``: centroids as a broadcast (cell, cvec) table;
       argmin via distance-join + partial min(struct) (corpus side —
-      slim rows only through the exchange, vectors join back by unique
+      narrow rows only through the exchange, vectors join back by unique
       id) and a row_number window (query side, tiny). The large-
       quantizer path the round-5 docstring promised.
     - ``"auto"`` (default): literal until the quantizer exceeds
@@ -454,7 +454,7 @@ def _sig_rows(
     refine_planes: int = 0,
     weights: str = "auto",
 ) -> DataFrame:
-    """One corpus scan → slim (table, bucket[, refined], _id) rows.
+    """One corpus scan → narrow (table, bucket[, refined], _id) rows.
     Signatures are computed IN the scan projection; the vector column is
     dropped before anything shuffles, so every downstream exchange over
     these rows ships three/four ints + the id — never an embedding
@@ -489,7 +489,7 @@ def _sig_rows(
 
 
 def _guarded_sig_rows(e: DataFrame, max_bucket_size: int) -> DataFrame:
-    """Hot-bucket guard over slim signature rows: buckets holding more
+    """Hot-bucket guard over narrow signature rows: buckets holding more
     than ``max_bucket_size`` members (correlated embeddings cluster —
     the within-bucket pair count is quadratic) are re-hashed by the
     secondary ``refined`` signature into sub-buckets; cold buckets keep
@@ -613,7 +613,7 @@ def cosine_neardup_lsh(
     refine_planes: int = 6,
     weights: str = "auto",
 ) -> DataFrame:
-    """Scale path for embedding-cosine near-dup: slim candidate pairs
+    """Scale path for embedding-cosine near-dup: narrow candidate pairs
     from :func:`lsh_candidate_pairs` (the bucket self-join and the pair
     dedup ship ids only), then vectors join BACK by unique id — one
     linear copy of each candidate's embedding, keyed by id, never
@@ -669,7 +669,7 @@ def lsh_topk(
     single table with uncontrolled recall). The corpus is scanned once:
     buckets for all tables come from one projection, exploded to (table,
     bucket) rows; the tiny query side is broadcast — the corpus side
-    never exchanges AT ALL before the final slim aggregations (broadcast
+    never exchanges AT ALL before the final narrow aggregations (broadcast
     hash join over a narrow explode). The cosine is computed IN the join
     projection so the multi-table dedup and the top-k window exchange
     only (query_id, vec_id, cosine) — duplicate collisions recompute an

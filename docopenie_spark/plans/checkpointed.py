@@ -10,9 +10,11 @@ stage. Every stage input is filtered with the same bucket predicate so
 partially-complete stages compose: bucket b of `triples` only ever
 derives from bucket b of `annotated` (conv_id-functional bucketing).
 
-Slim sentences are always on: the annotated checkpoint must compose
-across buckets written by any earlier run, whatever its input size. The
-coref hot gate is size-adaptive as in run_pipeline (parity-identical).
+The stages are built exactly as run_pipeline builds them by default
+(coref's hot-conversation split off). A bucket committed under another
+output schema, such as an `annotated` table written before its layout
+changed, counts as not done and is recomputed (the store's schema
+guard), never read back in the old shape.
 """
 
 from __future__ import annotations
@@ -23,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from .. import datagen
 from ..sources.checkpoints import StageStore
-from .pipeline import _stage_graph, adaptive_decisions
+from .pipeline import _stage_graph
 
 
 def run_checkpointed(
@@ -35,13 +37,10 @@ def run_checkpointed(
     """Full pipeline with per-stage checkpoint/lineage/metrics; returns the
     final triples table (read from its checkpoint)."""
     run_id = run_id or uuid.uuid4().hex[:12]
-    slim, hot_thr = adaptive_decisions(transcripts, slim_sentences=True)
 
     def stage(name, fn, *inputs):
         return store.run_resumable(name, list(inputs), fn, run_id=run_id)
 
-    triples = _stage_graph(
-        stage, transcripts, None, datagen.gazetteer_rows(), slim, hot_thr
-    ).triples
+    triples = _stage_graph(stage, transcripts, None, datagen.gazetteer_rows()).triples
     store.record_metric(run_id, "triples", "row_count", triples.count())
     return triples

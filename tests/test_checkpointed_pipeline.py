@@ -59,6 +59,49 @@ def test_mid_run_kill_then_resume(spark, tmp_path):
     assert store.lineage().count() == n_before
 
 
+def test_annotated_checkpoint_in_the_old_layout_is_recomputed(spark, tmp_path):
+    """``annotated`` buckets committed in ANNOTATED's earlier layout (an
+    ``e_len`` column, and null ``e_text`` on 's' rows whose text was
+    rebuilt from the turn table) must not be read back: the schema guard
+    recomputes every bucket, and the triples equal a fresh run's."""
+    from pyspark.sql.types import StructType
+
+    from docopenie_spark.operators import assembly, fused
+    from docopenie_spark.plans.pipeline import default_dictionaries
+    from docopenie_spark.sources.checkpoints import schema_fingerprint
+
+    t = datagen.transcripts_df(spark, 160)
+    fresh = _norm(run_pipeline(spark, t).triples)
+
+    ann = fused.parse_extract_annotate(
+        assembly.with_turn_offsets(t), *default_dictionaries()
+    )
+    is_s = F.col("row_kind") == "s"
+    cols = ann.columns
+    at = cols.index("e_offset") + 1
+    old_cols = cols[:at] + ["e_len"] + cols[at:]
+    old = ann.select(
+        *[F.when(~is_s, F.col(c)).alias(c) if c == "e_text" else c for c in cols],
+        F.when(is_s, F.length("e_text")).cast("int").alias("e_len"),
+    ).select(*old_cols)
+    old_ddl = fused.ANNOTATED.replace("e_offset bigint,", "e_offset bigint, e_len int,")
+    assert schema_fingerprint(old.schema) == schema_fingerprint(StructType.fromDDL(old_ddl))
+    assert old.where(is_s & F.col("e_text").isNotNull()).isEmpty()
+
+    store = StageStore(spark, str(tmp_path / "cp"), buckets=4)
+    store.write_stage("annotated", old, run_id="old")
+    assert store.done_buckets("annotated") == [0, 1, 2, 3]
+
+    resumed = _norm(run_checkpointed(spark, t, store, run_id="resume"))
+    assert resumed.exceptAll(fresh).isEmpty()
+    assert fresh.exceptAll(resumed).isEmpty()
+    lin = store.lineage().where(F.col("stage") == "annotated").collect()
+    assert sorted(r.partition_id for r in lin if r.run_id == "resume") == [0, 1, 2, 3]
+    back = store.read_stage("annotated")
+    assert "e_len" not in back.columns
+    assert back.where((F.col("row_kind") == "s") & F.col("e_text").isNull()).isEmpty()
+
+
 class _Killed(Exception):
     pass
 

@@ -25,9 +25,8 @@ def _direct_sentences(turns):
 
 
 def test_reconstructed_sentences_equal_direct(spark):
-    """'s' rows carry only offset+length; split_sentences(annotated,
-    turns) must reproduce the exact sentence text the kernels emit
-    (sentences are exact substrings of the normalized turn text)."""
+    """split_sentences over the fused pass must reproduce the exact
+    sentences, offsets and text the kernels emit on the driver."""
     from docopenie_spark.plans.pipeline import default_dictionaries
 
     t = datagen.transcripts_df(spark, 240)
@@ -37,11 +36,6 @@ def test_reconstructed_sentences_equal_direct(spark):
     assert direct
 
     ann = fused.parse_extract_annotate(turns, fn, gz, ln)
-    rebuilt = fused.split_sentences(ann, turns).collect()
-    assert len(rebuilt) == len(direct)
-    assert {tuple(r) for r in rebuilt} == direct
-    # inline-text mode still works without the turn table
-    ann_t = fused.parse_extract_annotate(turns, fn, gz, ln, emit_sentence_text=True)
-    inline = fused.split_sentences(ann_t).collect()
-    assert len(inline) == len(direct)
-    assert {tuple(r) for r in inline} == direct
+    got = fused.split_sentences(ann).collect()
+    assert len(got) == len(direct)
+    assert {tuple(r) for r in got} == direct

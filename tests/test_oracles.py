@@ -185,3 +185,114 @@ def test_substitution_oracle_geometry_and_nonvacuity():
         f"SELECT count(*) FROM ({sql}) "
         "WHERE subj != subj_raw OR obj != obj_raw").fetchone()[0]
     assert n_sub > 0, "substitutions must actually occur"
+
+
+# ------------------- kg_coref_expansion oracle gate coverage (DuckDB)
+
+def test_expansion_oracle_gate_coverage():
+    """The T12 external check must exercise BOTH XOR-gate polarities:
+    a personal pronoun propagated into a PERSON-linked cluster and
+    non-personal pronouns into non-PERSON clusters."""
+    import duckdb
+
+    import __spark_entry__ as e
+
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW documents AS SELECT * FROM "
+        "'/root/testdata/sf0.001/documents.parquet'"
+    )
+    sql = e.oracle_sql()["kg_coref_expansion"]
+    types = dict(con.execute(
+        f"SELECT target_type, count(*) FROM ({sql}) GROUP BY 1").fetchall())
+    assert types.get("PERSON", 0) > 0, "personal-polarity propagation missing"
+    assert types.get("OTHER", 0) > 0, "non-personal polarity missing"
+
+
+# ------------------ kg_best_mention_rules oracle preconditions (DuckDB)
+
+def test_bem_oracle_preconditions_and_nonvacuity():
+    """The T11 oracle's two-branch reduction rests on: the corpus has no
+    sentence punctuation (P-b's period flank, best_org's paren anchor,
+    best_loc's comma regex all dead), its capitalized vocabulary is
+    exactly the two injections' words (so NNP spans classify only
+    PERSON/OTHER — org/loc rules never dispatch), and both rule branches
+    actually fire."""
+    import duckdb
+
+    import __spark_entry__ as e
+
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW documents AS SELECT * FROM "
+        "'/root/testdata/sf0.001/documents.parquet'"
+    )
+    bad = con.execute(
+        "SELECT count(*) FROM documents "
+        "WHERE regexp_matches(text, '[.,()\\x27\"]')").fetchone()[0]
+    assert bad == 0, "corpus must stay punctuation-free"
+
+    spans_sql = e._corpus_prefix_sql(e._BEM_INJECT) + e._ner_branch_sql() + \
+        " SELECT DISTINCT entity_type FROM cls"
+    types = {r[0] for r in con.execute(spans_sql).fetchall()}
+    assert types <= {"PERSON", "OTHER"}, types
+
+    caps = e._corpus_prefix_sql(e._BEM_INJECT) + """
+        SELECT DISTINCT word FROM pos WHERE regexp_matches(word, '[A-Z]')"""
+    words = {r[0] for r in con.execute(caps).fetchall()}
+    assert words == {"Brian", "Okafor", "Zorblatt"}, words
+
+    sql = e.oracle_sql()["kg_best_mention_rules"]
+    kinds = dict(con.execute(
+        f"SELECT kind, count(*) FROM ({sql}) GROUP BY 1").fetchall())
+    assert kinds.get("full", 0) > 0 and kinds.get("identity", 0) > 0
+    crossing = con.execute(
+        f"SELECT count(*) FROM ({sql}) "
+        "WHERE best_mention LIKE '%' || chr(10) || '%'").fetchone()[0]
+    assert crossing > 0, "the cross-turn P-b surface must be exercised"
+
+
+# -------------------- kg_bem_features oracle coverage (DuckDB only)
+
+def test_bem_features_oracle_agree_coverage():
+    """The U1 external check must exercise the Coref Cluster Agrees
+    feature in all three outcomes (1 agree / -1 disagree / 0 neutral)
+    and both live entity-type features."""
+    import duckdb
+
+    import __spark_entry__ as e
+
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW documents AS SELECT * FROM "
+        "'/root/testdata/sf0.001/documents.parquet'"
+    )
+    sql = e.oracle_sql()["kg_bem_features"]
+    agrees = {r[0] for r in con.execute(
+        f"SELECT DISTINCT f_coref_cluster_agrees FROM ({sql})").fetchall()}
+    assert {float(a) for a in agrees} == {-1.0, 0.0, 1.0}, agrees
+    n_p, n_o = con.execute(
+        f"SELECT sum(f_is_person_rule), sum(f_is_other_rule) FROM ({sql})"
+    ).fetchone()
+    assert n_p > 0 and n_o > 0
+
+
+# ---------------------------- kg_relnoun oracle non-vacuity (DuckDB)
+
+def test_relnoun_oracle_nonvacuous():
+    """The T5 external check must fire on the corpus with multi-word
+    argument spans (the NP runs extend past the injected words)."""
+    import duckdb
+
+    import __spark_entry__ as e
+
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW documents AS SELECT * FROM "
+        "'/root/testdata/sf0.001/documents.parquet'"
+    )
+    sql = e.oracle_sql()["kg_relnoun"]
+    n, m1, m2 = con.execute(
+        f"SELECT count(*), max(len(string_split(arg1, ' '))), "
+        f"max(len(string_split(arg2, ' '))) FROM ({sql})").fetchone()
+    assert n > 50 and m1 > 1 and m2 > 1

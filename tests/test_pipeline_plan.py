@@ -1,5 +1,5 @@
-"""run_pipeline's size-adaptive decisions, its plan-cache key, and the
-one Spark path the NLP stages take in the driver queries."""
+"""run_pipeline's construction (no Spark job), its plan-cache key, and
+the one Spark path the NLP stages take in the driver queries."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -8,41 +8,30 @@ from docopenie_spark import datagen
 from docopenie_spark.plans import pipeline as pl
 
 
-def test_adaptive_decisions_both_branches(spark, monkeypatch):
-    t = datagen.transcripts_df(spark, 200)
-    n_turns, max_conv_turns = pl._input_stats(t)
-    assert n_turns > 0 and max_conv_turns > 0
-    bound = max_conv_turns * pl.COREF_MENTIONS_PER_TURN_BOUND
+def test_construction_starts_no_spark_job(spark, tmp_path):
+    """Building annotate(), run_pipeline() and run_pipeline(annotated=)
+    is plan construction only: no eager job sizes the input, over a
+    parquet path the session has never read (so no plan-cache hit)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
-    # at/above both thresholds: slim sentences, hot detection on
-    monkeypatch.setattr(pl, "SLIM_SENTENCE_THRESHOLD", n_turns)
-    monkeypatch.setattr(pl, "COREF_HOT_THRESHOLD", bound - 1)
-    assert pl.adaptive_decisions(t) == (True, bound - 1)
-
-    # below both: inline sentence text, no conversation can be hot
-    monkeypatch.setattr(pl, "SLIM_SENTENCE_THRESHOLD", n_turns + 1)
-    monkeypatch.setattr(pl, "COREF_HOT_THRESHOLD", bound)
-    assert pl.adaptive_decisions(t) == (False, None)
-
-    # explicit values win over the input size
-    assert pl.adaptive_decisions(t, True, "auto") == (True, None)
-    assert pl.adaptive_decisions(t, None, 7) == (False, 7)
-    # both explicit: the sizing job is skipped (no input is touched)
-    assert pl.adaptive_decisions(None, False, None) == (False, None)
-
-
-def test_annotate_and_run_pipeline_apply_adaptive_decisions(spark, monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_PLAN_CACHE", "0")
-    t = datagen.transcripts_df(spark, 200)
-    n_turns, _ = pl._input_stats(t)
-    for threshold, slim in ((n_turns, True), (n_turns + 1, False)):
-        monkeypatch.setattr(pl, "SLIM_SENTENCE_THRESHOLD", threshold)
-        ann = pl.annotate(spark, t, cache=False)
-        assert ann.schema["e_text"].metadata == {"docopenie_slim": slim}
-        r = pl.run_pipeline(spark, t, cache=False)
-        # slim: sentence text is cut back out of the normalized turn text
-        plan = r.sentences._jdf.queryExecution().optimizedPlan().toString()
-        assert ("substring(" in plan) is slim
+    path = str(tmp_path / "t.parquet")
+    pq.write_table(pa.Table.from_pandas(datagen.transcripts_pdf(240, seed=7),
+                                        preserve_index=False),
+                   path, coerce_timestamps="us")
+    t = spark.read.parquet(path)
+    sc = spark.sparkContext
+    before = set(sc.statusTracker().getJobIdsForGroup(None))
+    ann = pl.annotate(spark, t)
+    r = pl.run_pipeline(spark, t)
+    r_ann = pl.run_pipeline(spark, t, annotated=ann)
+    started = set(sc.statusTracker().getJobIdsForGroup(None)) - before
+    try:
+        assert not started, f"construction started Spark jobs {sorted(started)}"
+    finally:
+        r_ann.unpersist()
+        r.unpersist()
+        ann.unpersist()
 
 
 def test_plan_cache_keys_on_resolved_gazetteer_rows(spark):

@@ -1,11 +1,8 @@
-"""Round-5 regression tests: ADVICE r4 fixes (annotate() slim-decision
-marker; the legacy checkpoint-fingerprint tests moved to
-test_checkpoints.py) + VERDICT r4 directives (pr_curve quantization,
-fused-pass robustness fuzzing). The spine-oracle tests are moving to
-test_oracles.py.
+"""Round-5 regression tests: VERDICT r4 directives (pr_curve
+quantization, fused-pass robustness fuzzing; the legacy
+checkpoint-fingerprint tests moved to test_checkpoints.py). The
+spine-oracle tests are moving to test_oracles.py.
 """
-
-import pytest
 
 from pyspark.sql import functions as F
 
@@ -13,36 +10,6 @@ from docopenie_spark import datagen
 from docopenie_spark.functions import textnorm
 from docopenie_spark.operators import classifier, fused, segment, tokenize
 from docopenie_spark.operators.assembly import with_turn_offsets
-from docopenie_spark.plans.pipeline import annotate, run_pipeline
-
-
-# ------------------------------------- ADVICE: annotate() slim marker
-
-def test_annotate_records_slim_decision_and_pipeline_prefers_it(spark):
-    t = datagen.transcripts_df(spark, 400)
-    # force the AT-SCALE path at test scale: 's' rows carry no inline
-    # text, so sentence text MUST come from the turns join. Before the
-    # marker, run_pipeline re-derived slim=False from the small input and
-    # read the (null) inline text.
-    ann = annotate(spark, t, slim_sentences=True)
-    assert ann.schema["e_text"].metadata == {"docopenie_slim": True}
-    r_marked = run_pipeline(spark, t, annotated=ann)
-    r_plain = run_pipeline(spark, t)
-    got = {tuple(x) for x in r_marked.sentences.select(
-        "conv_id", "turn_idx", "sent_num", "offset", "text").collect()}
-    want = {tuple(x) for x in r_plain.sentences.select(
-        "conv_id", "turn_idx", "sent_num", "offset", "text").collect()}
-    assert got == want and got, "marker must route sentence text through the join"
-    assert r_marked.triples.count() == r_plain.triples.count()
-    r_marked.unpersist(); r_plain.unpersist(); ann.unpersist()
-
-
-def test_annotate_marker_contradiction_raises(spark):
-    t = datagen.transcripts_df(spark, 200)
-    ann = annotate(spark, t, slim_sentences=False)
-    with pytest.raises(ValueError, match="contradicts"):
-        run_pipeline(spark, t, annotated=ann, slim_sentences=True)
-    ann.unpersist()
 
 
 # ------------------------------------------ VERDICT: pr_curve quantize
@@ -97,117 +64,6 @@ def test_fused_pass_adds_no_exchange_over_assembly(spark):
     full = ann._jdf.queryExecution().executedPlan().toString()
     assert full.count("Exchange") == base.count("Exchange")
     assert "MapInPandas" in full
-
-
-# ------------------- kg_coref_expansion oracle gate coverage (DuckDB)
-
-def test_expansion_oracle_gate_coverage():
-    """The T12 external check must exercise BOTH XOR-gate polarities:
-    a personal pronoun propagated into a PERSON-linked cluster and
-    non-personal pronouns into non-PERSON clusters."""
-    import duckdb
-
-    import __spark_entry__ as e
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        "'/root/testdata/sf0.001/documents.parquet'"
-    )
-    sql = e.oracle_sql()["kg_coref_expansion"]
-    types = dict(con.execute(
-        f"SELECT target_type, count(*) FROM ({sql}) GROUP BY 1").fetchall())
-    assert types.get("PERSON", 0) > 0, "personal-polarity propagation missing"
-    assert types.get("OTHER", 0) > 0, "non-personal polarity missing"
-
-
-# ------------------ kg_best_mention_rules oracle preconditions (DuckDB)
-
-def test_bem_oracle_preconditions_and_nonvacuity():
-    """The T11 oracle's two-branch reduction rests on: the corpus has no
-    sentence punctuation (P-b's period flank, best_org's paren anchor,
-    best_loc's comma regex all dead), its capitalized vocabulary is
-    exactly the two injections' words (so NNP spans classify only
-    PERSON/OTHER — org/loc rules never dispatch), and both rule branches
-    actually fire."""
-    import duckdb
-
-    import __spark_entry__ as e
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        "'/root/testdata/sf0.001/documents.parquet'"
-    )
-    bad = con.execute(
-        "SELECT count(*) FROM documents "
-        "WHERE regexp_matches(text, '[.,()\\x27\"]')").fetchone()[0]
-    assert bad == 0, "corpus must stay punctuation-free"
-
-    spans_sql = e._corpus_prefix_sql(e._BEM_INJECT) + e._ner_branch_sql() + \
-        " SELECT DISTINCT entity_type FROM cls"
-    types = {r[0] for r in con.execute(spans_sql).fetchall()}
-    assert types <= {"PERSON", "OTHER"}, types
-
-    caps = e._corpus_prefix_sql(e._BEM_INJECT) + """
-        SELECT DISTINCT word FROM pos WHERE regexp_matches(word, '[A-Z]')"""
-    words = {r[0] for r in con.execute(caps).fetchall()}
-    assert words == {"Brian", "Okafor", "Zorblatt"}, words
-
-    sql = e.oracle_sql()["kg_best_mention_rules"]
-    kinds = dict(con.execute(
-        f"SELECT kind, count(*) FROM ({sql}) GROUP BY 1").fetchall())
-    assert kinds.get("full", 0) > 0 and kinds.get("identity", 0) > 0
-    crossing = con.execute(
-        f"SELECT count(*) FROM ({sql}) "
-        "WHERE best_mention LIKE '%' || chr(10) || '%'").fetchone()[0]
-    assert crossing > 0, "the cross-turn P-b surface must be exercised"
-
-
-# -------------------- kg_bem_features oracle coverage (DuckDB only)
-
-def test_bem_features_oracle_agree_coverage():
-    """The U1 external check must exercise the Coref Cluster Agrees
-    feature in all three outcomes (1 agree / -1 disagree / 0 neutral)
-    and both live entity-type features."""
-    import duckdb
-
-    import __spark_entry__ as e
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        "'/root/testdata/sf0.001/documents.parquet'"
-    )
-    sql = e.oracle_sql()["kg_bem_features"]
-    agrees = {r[0] for r in con.execute(
-        f"SELECT DISTINCT f_coref_cluster_agrees FROM ({sql})").fetchall()}
-    assert {float(a) for a in agrees} == {-1.0, 0.0, 1.0}, agrees
-    n_p, n_o = con.execute(
-        f"SELECT sum(f_is_person_rule), sum(f_is_other_rule) FROM ({sql})"
-    ).fetchone()
-    assert n_p > 0 and n_o > 0
-
-
-# ---------------------------- kg_relnoun oracle non-vacuity (DuckDB)
-
-def test_relnoun_oracle_nonvacuous():
-    """The T5 external check must fire on the corpus with multi-word
-    argument spans (the NP runs extend past the injected words)."""
-    import duckdb
-
-    import __spark_entry__ as e
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        "'/root/testdata/sf0.001/documents.parquet'"
-    )
-    sql = e.oracle_sql()["kg_relnoun"]
-    n, m1, m2 = con.execute(
-        f"SELECT count(*), max(len(string_split(arg1, ' '))), "
-        f"max(len(string_split(arg2, ' '))) FROM ({sql})").fetchone()
-    assert n > 50 and m1 > 1 and m2 > 1
 
 
 # ---------------------- kg_extraction oracle reduction holds (no Spark)
@@ -395,7 +251,7 @@ def test_fused_pass_spark_end_to_end_on_adversarial_corpus(spark):
     )
     turns = with_turn_offsets(t)
     ann = fused.parse_extract_annotate(turns, set(), set(), set())
-    sents = fused.split_sentences(ann, turns).collect()
+    sents = fused.split_sentences(ann).collect()
     norm_turn = {
         (r["conv_id"], r["turn_idx"]): (r["turn_offset"], r["text"])
         for r in turns.select(

@@ -1,7 +1,7 @@
 """Round-6 regression tests — VERDICT r5 directives (vector-free
 embedding-LSH candidate shuffle + hot-bucket guard, broadcast IVF
-quantizer, schema-carried slim decision, corpus-scale pr_curve
-quantization, kg_eval_diff oracle nonvacuity) + ADVICE r5 items
+quantizer, corpus-scale pr_curve quantization, kg_eval_diff oracle
+nonvacuity) + ADVICE r5 items
 (windowed_agg rounding-margin pin, PNG decompression-bomb guard,
 bounded ivf_topk training sample).
 """
@@ -20,7 +20,6 @@ from docopenie_spark import datagen
 from docopenie_spark.operators import classifier, similarity
 from docopenie_spark.operators.multimodal import _decode_png
 from docopenie_spark.plans.evaluation import classifier_pr
-from docopenie_spark.plans.pipeline import annotate, run_pipeline
 
 
 # ------------------------------------------------ plan-shape machinery
@@ -175,36 +174,6 @@ def test_ivf_default_training_sample_is_bounded(spark, monkeypatch):
     )
     assert out.count() >= 0
     assert seen["frac"] == pytest.approx(100 / n)
-
-
-# --------------------- VERDICT #4: schema-carried slim decision
-
-def test_slim_decision_survives_transformed_annotated(spark):
-    """The round-5 Python attribute died on ANY transformation of the
-    annotated DataFrame, silently falling back to re-derivation; the
-    column-metadata marker must survive filter/select and keep routing
-    sentence text through the turns join."""
-    t = datagen.transcripts_df(spark, 400)
-    want = {tuple(x) for x in run_pipeline(spark, t).sentences.select(
-        "conv_id", "turn_idx", "sent_num", "offset", "text").collect()}
-    for slim in (True, False):
-        ann = annotate(spark, t, slim_sentences=slim)
-        transformed = ann.where(F.col("conv_id").isNotNull()).select(*ann.columns)
-        r = run_pipeline(spark, t, annotated=transformed)
-        got = {tuple(x) for x in r.sentences.select(
-            "conv_id", "turn_idx", "sent_num", "offset", "text").collect()}
-        assert got == want and got, f"slim={slim} lost sentence text"
-        r.unpersist()
-        ann.unpersist()
-
-
-def test_slim_contradiction_detected_on_transformed_annotated(spark):
-    t = datagen.transcripts_df(spark, 200)
-    ann = annotate(spark, t, slim_sentences=True)
-    transformed = ann.where(F.col("conv_id").isNotNull())
-    with pytest.raises(ValueError, match="contradicts"):
-        run_pipeline(spark, t, annotated=transformed, slim_sentences=False)
-    ann.unpersist()
 
 
 # --------------------- VERDICT #6: corpus-scale pr_curve quantization

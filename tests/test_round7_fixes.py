@@ -138,7 +138,7 @@ def test_best_mentions_single_cogroup(spark):
     gaz_rows = datagen.gazetteer_rows()
     turns = assembly.with_turn_offsets(t)
     ann = fused.parse_extract_annotate(
-        turns, fn, gz | {r[0] for r in gaz_rows}, ln, emit_sentence_text=True,
+        turns, fn, gz | {r[0] for r in gaz_rows}, ln,
     )
     mentions = fused.split_entities(ann)
     ents, _ = ner.split_mentions(mentions)
@@ -181,7 +181,6 @@ def test_fused_arrow_null_struct_layout(spark):
     fn, gz, ln = default_dictionaries()
     ann = fused.parse_extract_annotate(
         assembly.with_turn_offsets(t), fn, gz, ln,
-        emit_sentence_text=True,
     ).collect()
     kinds = {r.row_kind for r in ann}
     assert kinds == {"s", "t", "e"}
@@ -192,7 +191,8 @@ def test_fused_arrow_null_struct_layout(spark):
         else:
             assert r.arg1 is None and r.rel is None and r.arg2 is None
         if r.row_kind == "s":
-            assert r.e_text is not None and r.e_len == len(r.e_text)
+            assert r.e_text and r.e_text == r.e_text.strip()
+            assert r.e_offset is not None and r.e_name is None
         if r.row_kind == "e":
             assert r.e_text is not None and r.e_name is not None
 

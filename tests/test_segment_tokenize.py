@@ -58,7 +58,7 @@ def test_sentence_offsets_address_doc_text(spark):
     docs = assembly.doc_text(t)
     fn, gz, ln = default_dictionaries()
     s = fused.split_sentences(
-        fused.parse_extract_annotate(tw, fn, gz, ln, emit_sentence_text=True)
+        fused.parse_extract_annotate(tw, fn, gz, ln)
     )
     assert not s.isEmpty()
     j = s.join(docs, "conv_id").select(

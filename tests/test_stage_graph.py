@@ -97,7 +97,7 @@ def test_bench_extra_times_no_cached_stage_output(spark):
     import bench_extra
 
     t = datagen.transcripts_df(spark, 160, seed=41)
-    stages = bench_extra.pipeline_stages(t, *pipeline.adaptive_decisions(t))
+    stages = bench_extra.pipeline_stages(t)
     assert [name for name, _ in stages] == STAGES
     for name, build in stages:
         root = build()._jdf.queryExecution().optimizedPlan().nodeName()

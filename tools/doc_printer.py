@@ -26,6 +26,8 @@ from pyspark.sql import functions as F
 def print_conversation(result, conv_id: str, out=sys.stdout) -> None:
     """One conversation, every stage — section order and shapes follow
     KbpDocPrinter.print (KbpDocPrinter.scala:24-41)."""
+    from docopenie_spark.operators import assembly
+
     w = out.write
     cid = F.col("conv_id") == conv_id
 
@@ -42,7 +44,9 @@ def print_conversation(result, conv_id: str, out=sys.stdout) -> None:
         result.best_mentions_expanded.where(cid).collect(),
         key=lambda r: r.target.offset,
     )
-    doc = result.docs.where(cid).select("doc_text").first()
+    # the document text is assembled here, from the turns the pipeline
+    # read: no stage of the pipeline needs it as one string
+    doc = assembly.doc_text_salted(result.turns.where(cid)).first()
 
     w(f"{conv_id}\n")
     w(f"Number of sentences: {len(sents)}\n")

@@ -29,7 +29,6 @@ def main():
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     n_turns = 8 * docs.count()
     transcripts = datagen.transcripts_df(spark, n_turns)
-    slim, hot = pl.adaptive_decisions(transcripts)
 
     # instrument the stage constructors
     import docopenie_spark.operators.assembly as assembly
@@ -42,7 +41,6 @@ def main():
 
     targets = [
         (assembly, "with_turn_offsets"),
-        (assembly, "doc_text_salted"),
         (assembly, "doc_chunks"),
         (fused, "parse_extract_annotate"),
         (fused, "split_sentences"),
@@ -74,8 +72,7 @@ def main():
     walls = []
     for i in range(reps):
         t0 = time.time()
-        r = pl.run_pipeline(spark, transcripts, slim_sentences=slim,
-                            coref_hot_threshold=hot)
+        r = pl.run_pipeline(spark, transcripts)
         walls.append(time.time() - t0)
         r.unpersist()
         # nothing executed: construction only
