@@ -28,6 +28,8 @@ used since round 2).
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -62,8 +64,17 @@ def _subst_sql(text: str, subs: str) -> str:
         acc -> concat(acc.out, substring({text}, acc.cursor + 1, length({text}))))"""
 
 
-def substituted_triples(triples_raw: DataFrame, bems_display: DataFrame) -> DataFrame:
-    """TRIPLES_RAW + displayable BEST_MENTIONS → TRIPLES (canonical strings)."""
+def substituted_variants(triples_raw: DataFrame,
+                         displays: dict[str, DataFrame]) -> DataFrame:
+    """TRIPLES_RAW + one displayable BEST_MENTIONS set per tag (an SQL
+    identifier) → one row per raw triple: its identity columns (pred,
+    subj_raw, obj_raw, …) plus ``subj_<tag>``/``obj_<tag>``, the
+    arguments as displayed under that tag's set. The sets run through
+    ONE fold: their mentions are unioned with a tag column, joined to the
+    arguments once, folded per (argument, tag) and pivoted once per
+    triple — so variants that differ only in the display set (eval_diff's
+    baseline and comparison) share the join and every shuffle instead of
+    building a DAG each."""
     t = triples_raw.withColumn("tid", F.expr(_TRIPLE_ID_SQL))
 
     args = t.selectExpr(
@@ -76,12 +87,16 @@ def substituted_triples(triples_raw: DataFrame, bems_display: DataFrame) -> Data
         "a.part.text as text", "a.part.offset as offset",
     )
 
-    m = bems_display.selectExpr(
-        "conv_id",
-        "target.offset as m_off",
-        "length(target.text) as m_len",
-        "best_mention",
-    )
+    m = reduce(DataFrame.union, [
+        d.selectExpr(
+            "conv_id",
+            "target.offset as m_off",
+            "length(target.text) as m_len",
+            "best_mention",
+            f"'{tag}' as tag",
+        )
+        for tag, d in displays.items()
+    ])
 
     # bucketed interval-containment join: mention ∈ [arg start, arg end]
     args_b = args.selectExpr(
@@ -97,7 +112,7 @@ def substituted_triples(triples_raw: DataFrame, bems_display: DataFrame) -> Data
     )
 
     subs = (
-        joined.groupBy("conv_id", "tid", "which", "text", "offset")
+        joined.groupBy("conv_id", "tid", "which", "text", "offset", "tag")
         .agg(
             F.expr(
                 "sort_array(collect_set(struct("
@@ -106,23 +121,48 @@ def substituted_triples(triples_raw: DataFrame, bems_display: DataFrame) -> Data
                 "best_mention as best)))"
             ).alias("subs")
         )
-        .selectExpr("tid", "which", _subst_sql("text", "subs") + " as subst")
+        .selectExpr("tid", "which", "tag", _subst_sql("text", "subs") + " as subst")
     )
 
-    pivoted = subs.groupBy("tid").agg(
-        F.expr("max(CASE WHEN which = 'arg1' THEN subst END)").alias("subj_sub"),
-        F.expr("max(CASE WHEN which = 'arg2' THEN subst END)").alias("obj_sub"),
-    )
+    pivoted = subs.groupBy("tid").agg(*[
+        F.expr(f"max(CASE WHEN which = '{which}' AND tag = '{tag}' THEN subst END)")
+        .alias(f"{side}_{tag}")
+        for tag in displays
+        for which, side in (("arg1", "subj"), ("arg2", "obj"))
+    ])
 
     return t.join(pivoted, "tid", "left").selectExpr(
         "conv_id",
         "turn_idx",
         "sent_num",
-        "coalesce(subj_sub, arg1.text) as subj",
         "rel.text as pred",
-        "coalesce(obj_sub, arg2.text) as obj",
         "arg1.text as subj_raw",
         "arg2.text as obj_raw",
         "confidence",
         "extractor",
+        *[f"coalesce({side}_{tag}, {arg}.text) as {side}_{tag}"
+          for tag in displays
+          for arg, side in (("arg1", "subj"), ("arg2", "obj"))],
     )
+
+
+def substituted_triples(triples_raw: DataFrame, bems_display: DataFrame) -> DataFrame:
+    """TRIPLES_RAW + displayable BEST_MENTIONS → TRIPLES (canonical strings):
+    :func:`substituted_variants` with one display set. The result records
+    its two inputs as ``_substitution_inputs`` so plans/evaluation.eval_diff
+    can fold two runs over the same raw triples in one pass; a DataFrame
+    derived from it (a select, a checkpoint read) carries no record."""
+    out = substituted_variants(triples_raw, {"x": bems_display}).selectExpr(
+        "conv_id",
+        "turn_idx",
+        "sent_num",
+        "subj_x as subj",
+        "pred",
+        "obj_x as obj",
+        "subj_raw",
+        "obj_raw",
+        "confidence",
+        "extractor",
+    )
+    out._substitution_inputs = (triples_raw, bems_display)
+    return out

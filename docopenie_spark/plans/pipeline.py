@@ -128,8 +128,15 @@ def _plan_cached(spark, dfs, scalars, storage_level: str, build):
     return hit[0]
 
 
-def _rows_key(rows: list[tuple]) -> tuple:
-    return tuple(tuple(r) for r in rows)
+def _plan_key(builder: str, gazetteer_rows: list[tuple] | None,
+              **scalars) -> tuple[list[tuple], tuple]:
+    """(the gazetteer rows a build uses, its plan-cache key): the builder's
+    name and every scalar argument, with the RESOLVED gazetteer rows — the
+    default and the same rows passed explicitly build the same DAG, so
+    they must share one entry."""
+    gaz_rows = gazetteer_rows if gazetteer_rows is not None else datagen.gazetteer_rows()
+    return gaz_rows, (builder, *sorted(scalars.items()),
+                      tuple(tuple(r) for r in gaz_rows))
 
 
 def default_dictionaries(
@@ -235,12 +242,9 @@ def annotate(
     EMPTY."""
     from pyspark import StorageLevel
 
-    # keyed on the RESOLVED gazetteer rows: the default and the same rows
-    # passed explicitly build the same DAG, so they must share one entry
-    gaz_rows = gazetteer_rows if gazetteer_rows is not None else datagen.gazetteer_rows()
-    scalars = (
-        "annotate", fabricate_metadata, cache, storage_level, _rows_key(gaz_rows),
-    )
+    gaz_rows, key = _plan_key("annotate", gazetteer_rows,
+                              fabricate_metadata=fabricate_metadata, cache=cache,
+                              storage_level=storage_level)
 
     def build():
         t = (assembly.fabricated_metadata_turns(transcripts)
@@ -251,7 +255,7 @@ def annotate(
         out = out.persist(getattr(StorageLevel, storage_level))
         return out, [out]
 
-    return _plan_cached(spark, (transcripts,), scalars, storage_level, build)
+    return _plan_cached(spark, (transcripts,), key, storage_level, build)
 
 
 def run_pipeline(
@@ -291,11 +295,12 @@ def run_pipeline(
     multi-million-turn scaling runs pass ``1 << 22``)."""
     from pyspark import StorageLevel
 
-    gaz_rows = gazetteer_rows if gazetteer_rows is not None else datagen.gazetteer_rows()
-    scalars = (
-        with_linking, with_coref_expansion, fabricate_metadata, cache,
-        storage_level, coref_hot_threshold, _rows_key(gaz_rows),
-    )
+    gaz_rows, key = _plan_key("run_pipeline", gazetteer_rows,
+                              with_linking=with_linking,
+                              with_coref_expansion=with_coref_expansion,
+                              fabricate_metadata=fabricate_metadata, cache=cache,
+                              storage_level=storage_level,
+                              coref_hot_threshold=coref_hot_threshold)
 
     def build():
         lvl = getattr(StorageLevel, storage_level)
@@ -329,7 +334,5 @@ def run_pipeline(
         result.extras["persisted"] = persisted
         return result, persisted
 
-    return _plan_cached(
-        spark, (transcripts, entity_dict, annotated), scalars, storage_level,
-        build,
-    )
+    return _plan_cached(spark, (transcripts, entity_dict, annotated), key,
+                        storage_level, build)

@@ -296,3 +296,26 @@ def test_relnoun_oracle_nonvacuous():
         f"SELECT count(*), max(len(string_split(arg1, ' '))), "
         f"max(len(string_split(arg2, ' '))) FROM ({sql})").fetchone()
     assert n > 50 and m1 > 1 and m2 > 1
+
+
+# ---------------------- kg_eval_diff non-vacuity (Spark side only)
+
+def test_kg_eval_diff_nonvacuous_and_consistent(spark):
+    """The oracled eval diff must exercise real differential semantics:
+    nonempty, strictly smaller than the triple set (unchanged rows are
+    filtered), both change-flag polarities consistent with the args."""
+    import __spark_entry__ as entry
+
+    out = entry._q_kg_eval_diff(spark, "/root/testdata/sf0.001")
+    rows = out.collect()
+    assert rows, "eval diff vacuous on the injection corpus"
+    total = entry._q_kg_end_to_end(spark, "/root/testdata/sf0.001").count()
+    assert len(rows) < total
+    for r in rows:
+        assert (r.arg1_changed == "YES") == (r.comp_arg1 != r.base_arg1)
+        assert (r.arg2_changed == "YES") == (r.comp_arg2 != r.base_arg2)
+        assert r.arg1_changed == "YES" or r.arg2_changed == "YES"
+        assert r.sentence_text
+    assert any(r.arg1_changed == "YES" for r in rows)
+    assert any(r.arg2_changed == "YES" for r in rows)
+    out.unpersist()

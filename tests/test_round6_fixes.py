@@ -1,7 +1,7 @@
 """Round-6 regression tests — VERDICT r5 directives (vector-free
 embedding-LSH candidate shuffle + hot-bucket guard, broadcast IVF
-quantizer, corpus-scale pr_curve quantization, kg_eval_diff oracle
-nonvacuity) + ADVICE r5 items
+quantizer, corpus-scale pr_curve quantization; the kg_eval_diff
+non-vacuity test now lives in test_oracles.py) + ADVICE r5 items
 (windowed_agg rounding-margin pin, PNG decompression-bomb guard,
 bounded ivf_topk training sample).
 """
@@ -284,29 +284,6 @@ def test_windowed_agg_group_sums_clear_rounding_boundaries():
             SELECT max(abs(s * 10000 - round(s * 10000))) FROM g
         """).fetchone()[0]
         assert worst < 1e-3, f"sf{sf}: a group sum drifted near a boundary"
-
-
-# --------------------- VERDICT #3: kg_eval_diff oracle nonvacuity
-
-def test_kg_eval_diff_nonvacuous_and_consistent(spark):
-    """The oracled eval diff must exercise real differential semantics:
-    nonempty, strictly smaller than the triple set (unchanged rows are
-    filtered), both change-flag polarities consistent with the args."""
-    import __spark_entry__ as entry
-
-    out = entry._q_kg_eval_diff(spark, "/root/testdata/sf0.001")
-    rows = out.collect()
-    assert rows, "eval diff vacuous on the injection corpus"
-    total = entry._q_kg_end_to_end(spark, "/root/testdata/sf0.001").count()
-    assert len(rows) < total
-    for r in rows:
-        assert (r.arg1_changed == "YES") == (r.comp_arg1 != r.base_arg1)
-        assert (r.arg2_changed == "YES") == (r.comp_arg2 != r.base_arg2)
-        assert r.arg1_changed == "YES" or r.arg2_changed == "YES"
-        assert r.sentence_text
-    assert any(r.arg1_changed == "YES" for r in rows)
-    assert any(r.arg2_changed == "YES" for r in rows)
-    out.unpersist()
 
 
 # --------------- broadcast weights-table backend for the LSH family
