@@ -40,8 +40,6 @@ def test_eval_diff_baseline_vs_full(spark):
 def test_eval_diff_shared_annotated_matches_independent_runs(spark):
     """VERDICT r2 #3: base/comp built from ONE annotate() pass must emit
     exactly the rows of two independent run_pipeline calls."""
-    from docopenie_spark.plans.pipeline import annotate
-
     t = datagen.transcripts_df(spark, 240)
     indep = eval_diff(
         run_pipeline(spark, t, with_linking=False, with_coref_expansion=False).triples,
