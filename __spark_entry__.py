@@ -271,31 +271,21 @@ def _planted_recall(spark, sf_dir, stride, shift, run):
 
 
 def _q_lsh_recall(spark, sf_dir):
-    """Hyperplane-LSH ANN end-to-end recall check (VERDICT r2 #5),
-    PINNED to the LITERAL signature backend so both backends keep
-    distinct end-to-end oracle coverage (at dims=64 the auto threshold
-    would otherwise route this and lsh_recall_broadcast through the
-    same broadcast plan)."""
+    """Hyperplane-LSH ANN end-to-end recall check (VERDICT r2 #5): an
+    EXACT duplicate gets its original's signature in every table, so
+    top-1 must be the planted duplicate at cosine 1.0. Signatures come
+    from similarity's one backend, the broadcast weights row."""
     return _planted_recall(
         spark, sf_dir, 11, 1000000,
-        lambda c, q, d: similarity.lsh_topk(c, q, dims=d, k=1,
-                                            weights="literal"),
+        lambda c, q, d: similarity.lsh_topk(c, q, dims=d, k=1),
     )
 
 
 def _q_lsh_recall_broadcast(spark, sf_dir):
-    """lsh_recall through the BROADCAST weights-row backend (the
-    high-dims path: hyperplane matrices attach as a broadcast column
-    instead of codegen literals — similarity.weights_row). The wmat
-    row carries the SAME crc32 matrices, and the projection expressions
-    share op order, so buckets are bit-identical across backends
-    (parity-pinned) and the planted exact duplicate still collides in
-    every table — same closed-form oracle."""
-    return _planted_recall(
-        spark, sf_dir, 11, 1000000,
-        lambda c, q, d: similarity.lsh_topk(c, q, dims=d, k=1,
-                                            weights="broadcast"),
-    )
+    """lsh_recall under a second name the driver contract lists: the
+    same plan (the hyperplane matrices attach as one broadcast ``wmat``
+    column — similarity.weights_row) and the same closed-form oracle."""
+    return _q_lsh_recall(spark, sf_dir)
 
 
 def _q_ivf_recall(spark, sf_dir):
@@ -304,28 +294,21 @@ def _q_ivf_recall(spark, sf_dir):
     shares its original's argmin centroid cell — identical vector,
     identical distance expression — so with n_probe >= 1 the probe join
     always surfaces it and top-1 must be the planted duplicate at
-    cosine 1.0, regardless of where k-means puts the centroids.
-    PINNED to the LITERAL quantizer (same two-backend-coverage argument
-    as lsh_recall); the approximate part (cross-cell neighbors needing
-    n_probe > 1) is pytest-covered."""
+    cosine 1.0, regardless of where k-means puts the centroids. Cells
+    come from similarity's one quantizer, the broadcast centroid table;
+    the approximate part (cross-cell neighbors needing n_probe > 1) is
+    pytest-covered."""
     return _planted_recall(
         spark, sf_dir, 13, 2000000,
-        lambda c, q, d: similarity.ivf_topk(c, q, k=1, quantizer="literal"),
+        lambda c, q, d: similarity.ivf_topk(c, q, k=1),
     )
 
 
 def _q_ivf_recall_broadcast(spark, sf_dir):
-    """ivf_recall through the BROADCAST-table quantizer (VERDICT r5 #2):
-    identical plantation, identical oracle — cell assignment runs the
-    broadcast distance-join + partial-min path instead of centroid
-    literals. An exact duplicate still shares its original's argmin
-    cell (same distance expression, same lowest-distance/lowest-cell
-    tie order across backends — pinned by the parity test), so top-1
-    recall stays deterministic."""
-    return _planted_recall(
-        spark, sf_dir, 13, 2000000,
-        lambda c, q, d: similarity.ivf_topk(c, q, k=1, quantizer="broadcast"),
-    )
+    """ivf_recall under a second name the driver contract lists: the
+    same broadcast distance-join + partial-min cell assignment
+    (similarity.centroids_table) and the same closed-form oracle."""
+    return _q_ivf_recall(spark, sf_dir)
 
 
 def _neardup_planted_corpus(spark, sf_dir):

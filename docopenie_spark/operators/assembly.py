@@ -154,9 +154,10 @@ def fabricated_metadata_turns(transcripts: DataFrame) -> DataFrame:
     flow through assembly → extraction like any turn, keeping every
     offset real and the per-turn text-equality invariant intact.
 
-    Gated OFF by default in run_pipeline (SURVEY S6): the metadata
-    already survives as queryable columns; enable it when downstream
-    consumers need author/date as graph triples."""
+    Opt-in (SURVEY S6): the metadata already survives as queryable
+    columns, so the pipeline never fabricates by itself. A caller that
+    wants author/date as graph triples passes this function's output as
+    the transcripts of ``annotate`` / ``run_pipeline``."""
     # anchor on the conversation's FIRST PRESENT turn, not literal index
     # 0 — a trimmed conversation (first turns dropped upstream) must still
     # fabricate its metadata turns (VERDICT r2 #8)

@@ -188,11 +188,11 @@ def simhash(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     return counts.selectExpr("id", f"({sim}) AS simhash")
 
 
-def simhash_near_dups(sims: DataFrame, max_hamming: int = 3, bands: int | None = None) -> DataFrame:
+def simhash_near_dups(sims: DataFrame, max_hamming: int = 3) -> DataFrame:
     """Candidate pairs via banded chunk equality, verified by exact
     popcount. Pigeonhole: with B bands, any pair with hamming < B shares
-    at least one identical band — so bands defaults to max_hamming + 1
-    (rounded to a divisor of 64) for guaranteed recall.
+    at least one identical band — so B is the first of 4, 8, 16, 32
+    (divisors of 64) above ``max_hamming``, for guaranteed recall.
 
     ``sims`` is persisted here unless the caller already chose a level
     (the minhash_dedup pattern): the banded self-join reads the
@@ -203,9 +203,7 @@ def simhash_near_dups(sims: DataFrame, max_hamming: int = 3, bands: int | None =
 
     if sims.storageLevel == StorageLevel.NONE:
         sims = sims.persist(StorageLevel.MEMORY_AND_DISK)
-    if bands is None:
-        bands = next(b for b in (4, 8, 16, 32) if b > max_hamming)
-    assert 64 % bands == 0
+    bands = next(b for b in (4, 8, 16, 32) if b > max_hamming)
     width = 64 // bands
     mask = (1 << width) - 1
     chunks = sims.select(

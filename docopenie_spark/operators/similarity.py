@@ -9,8 +9,15 @@ Two paths, same contract — (query_id, vec_id, cosine) top-k rows:
   per-query top-k (tiny).
 - LSH-bucketed (random hyperplanes): deterministic signed projections
   bucket the corpus once; queries probe only their bucket. The hyperplane
-  matrix is derived from xxhash64(dim, plane) so signatures are stable
-  across runs with no stored model.
+  matrices are derived on the driver from crc32(table, plane, dim), so
+  signatures are stable across runs with no stored model, and ride to
+  the executors as ONE broadcast row (:func:`weights_row`).
+
+The IVF variant (:func:`ivf_topk`) assigns cells the same way: its
+k-means centroids ride as a broadcast (cell, cvec) table
+(:func:`centroids_table`). Neither model is ever embedded in the plan
+as literal arrays — Catalyst analysis and codegen of such expression
+trees cost more than the broadcast already at dims=64.
 """
 
 from __future__ import annotations
@@ -83,66 +90,17 @@ def _plane_weights(dims: int, planes: int, table: int = 0) -> list[list[float]]:
     ]
 
 
-def hyperplane_signature(vec_col, dims: int, planes: int = 16, table: int = 0):
-    """Deterministic random-hyperplane bit signature as a JVM expression.
-    Weights are embedded as literal arrays (driver-computed constants);
-    above ``LITERAL_WEIGHTS_MAX`` total embedded doubles the LSH entry
-    points' ``weights="auto"`` switches to the broadcast weights-table
-    backend (:func:`weights_row` / ``weights="broadcast"``) — identical
-    bucket semantics, parity-pinned. ``table`` selects an independent
-    hash table for OR-ed multi-table probing.
-    """
-    v = F.col(vec_col) if isinstance(vec_col, str) else vec_col
-    bits = []
-    for p, w in enumerate(_plane_weights(dims, planes, table)):
-        wl = F.array(*[F.lit(x) for x in w])
-        proj = F.aggregate(
-            F.zip_with(v, wl, lambda x, wv: x * wv),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        bits.append(F.when(proj >= 0, F.lit(1)).otherwise(F.lit(0)) * F.lit(2**p))
-    out = bits[0]
-    for b in bits[1:]:
-        out = out + b
-    return out
-
-
-# literal-weights budget for the hyperplane backends: above this many
-# embedded doubles ((tables*planes + refine_planes) × dims) weights=
-# "auto" switches to the broadcast weights-row backend. MEASURED, not
-# guessed (round 6, 2k vectors, warmed + interleaved lsh_topk medians):
-# literal vs broadcast = 1.98s vs 1.00s at dims=64 (1.5k literals),
-# 5.2 vs 1.3 at 256, 15.0 vs 1.9 at 1024, 30.9 vs 3.8 at 2048 —
-# Catalyst analysis/codegen of the literal expression tree dominates
-# LONG before the original 200k "codegen budget" estimate, and the
-# broadcast row adds NO exchange. The IVF broadcast quantizer pays a
-# real argmin groupBy exchange yet measures the same way (see
-# LITERAL_QUANTIZER_MAX below). Identical buckets either way
-# (parity-pinned), so the threshold is pure performance policy.
-LITERAL_WEIGHTS_MAX = 1024
-
-
-def _use_broadcast_weights(dims: int, planes: int, tables: int,
-                           refine_planes: int, weights: str) -> bool:
-    if weights not in ("auto", "literal", "broadcast"):
-        raise ValueError(f"unknown weights mode {weights!r}")
-    if weights != "auto":
-        return weights == "broadcast"
-    return (tables * planes + refine_planes) * dims > LITERAL_WEIGHTS_MAX
-
-
 def weights_row(spark, dims: int, planes: int, tables: int,
                 refine_planes: int = 0) -> DataFrame:
     """The hyperplane model as ONE broadcastable row — ``wmat`` is
-    array<table><plane><dim> of the SAME crc32-derived weights the
-    literal backend embeds (:func:`_plane_weights`), with the
-    refinement matrix (table index = ``tables``) appended when the
-    hot-bucket guard needs a secondary signature. A crossJoin against
-    this broadcast row attaches the model as a column with NO exchange
-    and no codegen blowup — signatures are computed by higher-order
-    functions over the column, and every caller drops ``wmat`` in its
-    projection before anything shuffles."""
+    array<table><plane><dim> of the crc32-derived weights
+    (:func:`_plane_weights`), with the refinement matrix (table index
+    = ``tables``) appended when the hot-bucket guard needs a secondary
+    signature. A crossJoin against this broadcast row attaches the
+    model as a column with NO exchange and no codegen blowup —
+    signatures are computed by higher-order functions over the column,
+    and every caller drops ``wmat`` in its projection before anything
+    shuffles."""
     mats = [_plane_weights(dims, planes, t) for t in range(tables)]
     if refine_planes:
         mats.append(_plane_weights(dims, refine_planes, tables))
@@ -150,26 +108,21 @@ def weights_row(spark, dims: int, planes: int, tables: int,
 
 
 def _signature_from_wmat(vec_col, table_idx: int):
-    """Bit signature from the broadcast ``wmat`` column — bit p is
-    2^p exactly as in :func:`hyperplane_signature`, and the projection
-    sum uses the same zip_with + 0.0-seeded aggregate op order, so the
-    sign decisions (hence buckets) are bit-identical across backends."""
+    """Bit signature from the broadcast ``wmat`` column: bit p is 2^p
+    when vector · plane p >= 0. The projection is :func:`_dot`, a
+    0.0-seeded left fold in dim order — the op order the pure-Python
+    reference in the tests repeats, so the sign decisions (hence
+    buckets) are reproducible off Spark."""
     v = F.col(vec_col) if isinstance(vec_col, str) else vec_col
     planes_arr = F.col("wmat")[table_idx]
     bits = F.transform(
         planes_arr,
         lambda w, i: F.when(
-            F.aggregate(
-                F.zip_with(v, w, lambda x, wv: x * wv),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-            >= 0,
+            _dot(v, w) >= 0,
             # bit p = 2^p (shiftleft needs a literal shift count; the
             # double pow is exact to 2^53). LONG, not int: plane 31
             # overflows int32 — ANSI mode raises CAST_OVERFLOW, non-ANSI
-            # silently clamps and corrupts the bucket (the literal
-            # backend's F.lit(2**p) auto-promotes to long there).
+            # silently clamps and corrupts the bucket.
             F.pow(F.lit(2.0), i).cast("long"),
         ).otherwise(F.lit(0).cast("long")),
     )
@@ -184,8 +137,8 @@ def kmeans_centroids(
     sample_fraction: float | None = None,
 ) -> list[list[float]]:
     """IVF coarse quantizer: k-means centroids (pyspark.ml, seeded),
-    returned as plain lists — the 'model constant' ivf_topk embeds as
-    literals (like the LSH hyperplanes). Training is the only iterative
+    returned as plain lists — the 'model constant' ivf_topk broadcasts
+    as a (cell, cvec) table. Training is the only iterative
     part and runs once; at corpus scale fit on a sample
     (``sample_fraction``) — cell assignment quality degrades gracefully,
     the index stays exact-verified downstream."""
@@ -202,32 +155,6 @@ def kmeans_centroids(
     return [[float(x) for x in c] for c in model.clusterCenters()]
 
 
-def _centroid_dists(vec_col, centroids: list[list[float]]):
-    """Array of squared-L2 distances to every centroid — pure JVM
-    expressions over literal centroid arrays."""
-    v = F.col(vec_col) if isinstance(vec_col, str) else vec_col
-    dists = []
-    for c in centroids:
-        cl = F.array(*[F.lit(x) for x in c])
-        dists.append(
-            F.aggregate(
-                F.zip_with(v, cl, lambda x, y: (x - y) * (x - y)),
-                F.lit(0.0),
-                lambda acc, d: acc + d,
-            )
-        )
-    return F.array(*dists)
-
-
-# literal-quantizer budget: above this many embedded doubles
-# (n_centroids × dims) quantizer="auto" switches to the broadcast
-# table. Measured like LITERAL_WEIGHTS_MAX (round 6, sf0.01 corpus,
-# warmed interleaved ivf_topk medians, precomputed centroids): literal
-# vs broadcast = 2.4s vs 1.35s at 16×64=1k literals, 10.4 vs 1.5 at
-# 128×64=8k — Catalyst planning of the literal distance array swamps
-# the broadcast path's extra argmin groupBy exchange even at 1k.
-LITERAL_QUANTIZER_MAX = 512
-
 # ivf_topk(centroids=None) trains k-means in the query path; above this
 # row count the fit runs on a deterministic sample of ~this many rows
 # (ADVICE r5: the 20-iteration full-corpus fit was hiding a training
@@ -235,17 +162,9 @@ LITERAL_QUANTIZER_MAX = 512
 IVF_TRAIN_MAX_ROWS = 100_000
 
 
-def _use_broadcast_quantizer(centroids: list[list[float]], quantizer: str) -> bool:
-    if quantizer not in ("auto", "literal", "broadcast"):
-        raise ValueError(f"unknown quantizer mode {quantizer!r}")
-    if quantizer != "auto":
-        return quantizer == "broadcast"
-    return len(centroids) * len(centroids[0]) > LITERAL_QUANTIZER_MAX
-
-
 def centroids_table(spark, centroids: list[list[float]]) -> DataFrame:
-    """(cell, cvec) DataFrame form of a quantizer — the broadcast-side
-    twin of the literal embedding."""
+    """(cell, cvec) DataFrame form of a quantizer, broadcast by
+    :func:`ivf_topk`'s cell assignment."""
     return local_table(
         spark,
         [(i, [float(x) for x in c]) for i, c in enumerate(centroids)],
@@ -260,15 +179,16 @@ def _broadcast_cells(
     id_col: str,
     n_probe: int = 1,
 ) -> DataFrame:
-    """(id, cell) assignment via a broadcast distance-join — the large-
-    quantizer path (no literals in codegen). Shape at scale: the
-    broadcast nested-loop join amplifies each row ×n_centroids ONLY
-    map-side over a narrow (id, cell, dist) projection; for n_probe=1 the
+    """(id, cell) assignment via a broadcast distance-join (no model
+    literals in codegen). Shape at scale: the broadcast nested-loop
+    join amplifies each row ×n_centroids ONLY map-side over a narrow
+    (id, cell, dist) projection; for n_probe=1 the
     partial min(struct(dist, cell)) collapses back to one row per id
     BEFORE the exchange, so the shuffle ships (id, 16 bytes). Vectors
     never enter this subplan — callers join them back by unique id.
-    Tie order matches the literal path exactly: lowest distance, then
-    lowest cell (array_position returns the FIRST minimal index)."""
+    Tie order: lowest distance, then lowest cell — for n_probe=1 the
+    min(struct(dist, cell)) compares dist first, and the window orders
+    by (dist, cell)."""
     v = df.select(
         F.col(id_col).alias("_id"),
         F.col(vec_col).cast("array<double>").alias("_av"),
@@ -302,7 +222,6 @@ def ivf_topk(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     centroids: list[list[float]] | None = None,
-    quantizer: str = "auto",
     train_sample_fraction: float | None = None,
 ) -> DataFrame:
     """IVF-bucketed approximate cosine top-k (the brief's 'IVF variant'
@@ -310,21 +229,13 @@ def ivf_topk(
     nearest-centroid cell, queries probe their ``n_probe`` nearest
     cells, candidates get the exact cosine and a per-query top-k window.
 
-    Two parity-identical quantizer backends (``quantizer=``):
-
-    - ``"literal"``: centroids embedded as literal arrays — no model
-      object on the executors, zero extra joins; right while
-      n_centroids × dims stays within codegen budget.
-    - ``"broadcast"``: centroids as a broadcast (cell, cvec) table;
-      argmin via distance-join + partial min(struct) (corpus side —
-      narrow rows only through the exchange, vectors join back by unique
-      id) and a row_number window (query side, tiny). The large-
-      quantizer path the round-5 docstring promised.
-    - ``"auto"`` (default): literal until the quantizer exceeds
-      ``LITERAL_QUANTIZER_MAX`` embedded doubles.
-
-    Tie-breaks match across backends (lowest distance, then lowest
-    cell), pinned by a literal-vs-broadcast parity test. Recall lever:
+    The centroids ride as a broadcast (cell, cvec) table
+    (:func:`centroids_table`). Cells come from :func:`_broadcast_cells`:
+    argmin via distance-join + partial min(struct) on the corpus side
+    (narrow rows only through the exchange, vectors join back by unique
+    id) and a row_number window on the (tiny) query side. Ties go to
+    the lowest distance, then the lowest cell; a test pins the cells
+    against a pure-Python argmin of the same squared-L2 fold. Recall lever:
     ``n_probe`` (a query whose true neighbor sits across a cell
     boundary needs the second-nearest cell — the standard IVF trade).
     An EXACT duplicate of a query vector always shares its argmin cell,
@@ -352,49 +263,26 @@ def ivf_topk(
         centroids = kmeans_centroids(
             corpus, n_centroids, vec_col, sample_fraction=frac
         )
-    if _use_broadcast_quantizer(centroids, quantizer):
-        cents = centroids_table(corpus.sparkSession, centroids)
-        c = with_norm(corpus, vec_col).select(
-            F.col(id_col).alias("vec_id"),
-            F.col(vec_col).cast("array<double>").alias("_cv"),
-            F.col("_norm").alias("_cn"),
-        ).join(
-            _broadcast_cells(corpus, cents, vec_col, id_col).withColumnRenamed(
-                "_id", "vec_id"
-            ),
-            "vec_id",
-        )
-        q = with_norm(queries, vec_col).select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).cast("array<double>").alias("_qv"),
-            F.col("_norm").alias("_qn"),
-        ).join(
-            _broadcast_cells(queries, cents, vec_col, id_col, n_probe)
-            .withColumnRenamed("_id", "query_id"),
-            "query_id",
-        )
-    else:
-        dv = _centroid_dists(F.col(vec_col).cast("array<double>"), centroids)
-        cell = (F.array_position(dv, F.array_min(dv)) - 1).cast("int")
-        c = with_norm(corpus, vec_col).select(
-            F.col(id_col).alias("vec_id"),
-            F.col(vec_col).cast("array<double>").alias("_cv"),
-            F.col("_norm").alias("_cn"),
-            cell.alias("cell"),
-        )
-        ranked = F.slice(
-            F.array_sort(
-                F.transform(dv, lambda d, i: F.struct(d.alias("d"), i.alias("i")))
-            ),
-            1,
-            n_probe,
-        )
-        q = with_norm(queries, vec_col).select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).cast("array<double>").alias("_qv"),
-            F.col("_norm").alias("_qn"),
-            F.explode(F.transform(ranked, lambda s: s["i"].cast("int"))).alias("cell"),
-        )
+    cents = centroids_table(corpus.sparkSession, centroids)
+    c = with_norm(corpus, vec_col).select(
+        F.col(id_col).alias("vec_id"),
+        F.col(vec_col).cast("array<double>").alias("_cv"),
+        F.col("_norm").alias("_cn"),
+    ).join(
+        _broadcast_cells(corpus, cents, vec_col, id_col).withColumnRenamed(
+            "_id", "vec_id"
+        ),
+        "vec_id",
+    )
+    q = with_norm(queries, vec_col).select(
+        F.col(id_col).alias("query_id"),
+        F.col(vec_col).cast("array<double>").alias("_qv"),
+        F.col("_norm").alias("_qn"),
+    ).join(
+        _broadcast_cells(queries, cents, vec_col, id_col, n_probe)
+        .withColumnRenamed("_id", "query_id"),
+        "query_id",
+    )
     j = c.join(F.broadcast(q), ["cell"]).where(F.col("vec_id") != F.col("query_id"))
     cos = _dot(F.col("_cv"), F.col("_qv")) / (F.col("_cn") * F.col("_qn"))
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
@@ -410,7 +298,6 @@ def cosine_neardup_pairs(
     threshold: float,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    broadcast_right: bool = True,
 ) -> DataFrame:
     """Exact embedding-cosine near-duplicate pairs: every (id_a < id_b)
     pair whose cosine ≥ ``threshold``. This is the all-pairs EXACT path —
@@ -435,10 +322,9 @@ def cosine_neardup_pairs(
     b = e.select(
         F.col("_id").alias("id_b"), F.col("_v").alias("_vb"), F.col("_n").alias("_nb")
     )
-    rhs = F.broadcast(b) if broadcast_right else b
     cos = _dot(F.col("_va"), F.col("_vb")) / (F.col("_na") * F.col("_nb"))
     return (
-        a.join(rhs, F.col("id_a") < F.col("id_b"))
+        a.join(F.broadcast(b), F.col("id_a") < F.col("id_b"))
         .where(cos >= threshold)
         .select("id_a", "id_b", F.round(cos, 4).alias("cosine"))
     )
@@ -452,7 +338,6 @@ def _sig_rows(
     vec_col: str,
     id_col: str,
     refine_planes: int = 0,
-    weights: str = "auto",
 ) -> DataFrame:
     """One corpus scan → narrow (table, bucket[, refined], _id) rows.
     Signatures are computed IN the scan projection; the vector column is
@@ -462,29 +347,17 @@ def _sig_rows(
     vec, norm) and self-joined on the bucket, shipping ``tables`` full
     copies of the vector corpus through the candidate exchange).
     ``refine_planes`` adds ONE extra table-independent signature used to
-    split hot buckets (see :func:`_guarded_sig_rows`). ``weights``
-    picks the signature backend (literal expressions vs the broadcast
-    weights row; "auto" switches on ``LITERAL_WEIGHTS_MAX``) — both
-    produce bit-identical buckets and neither lets the model or the
-    vectors reach a shuffle."""
+    split hot buckets (see :func:`_guarded_sig_rows`). The hyperplanes
+    attach as the broadcast :func:`weights_row`; neither the model nor
+    the vectors reach a shuffle."""
     v = F.col(vec_col).cast("array<double>")
-    if _use_broadcast_weights(dims, planes, tables, refine_planes, weights):
-        corpus = corpus.crossJoin(F.broadcast(weights_row(
-            corpus.sparkSession, dims, planes, tables, refine_planes
-        )))
-        sigs = F.array(*[_signature_from_wmat(v, t) for t in range(tables)])
-        refined = _signature_from_wmat(v, tables) if refine_planes else None
-    else:
-        sigs = F.array(
-            *[hyperplane_signature(v, dims, planes, t) for t in range(tables)]
-        )
-        refined = (
-            hyperplane_signature(v, dims, refine_planes, tables)
-            if refine_planes else None
-        )
+    corpus = corpus.crossJoin(F.broadcast(weights_row(
+        corpus.sparkSession, dims, planes, tables, refine_planes
+    )))
+    sigs = F.array(*[_signature_from_wmat(v, t) for t in range(tables)])
     cols = [F.col(id_col).alias("_id")]
     if refine_planes:
-        cols.append(refined.alias("refined"))
+        cols.append(_signature_from_wmat(v, tables).alias("refined"))
     return corpus.select(*cols, F.posexplode(sigs).alias("table", "bucket"))
 
 
@@ -540,12 +413,13 @@ def lsh_candidate_pairs(
     id_col: str = "vec_id",
     max_bucket_size: int | None = None,
     refine_planes: int = 6,
-    weights: str = "auto",
 ) -> DataFrame:
     """Deduped candidate (id_a, id_b) pairs colliding in ≥1 hyperplane
-    table. The ENTIRE plan is vector-free past the scan: the self-join
-    and the dedup exchange carry (table, bucket, sub, id) only —
-    mirroring the minhash band join (dedup.py minhash_candidates).
+    table. The ENTIRE plan is vector-free past the scan: signatures are
+    computed there against the broadcast :func:`weights_row`, and the
+    self-join and the dedup exchange carry (table, bucket, sub, id)
+    only — mirroring the minhash band join (dedup.py
+    minhash_candidates).
 
     ``max_bucket_size`` enables the hot-bucket guard: oversized buckets
     split by ``refine_planes`` extra hyperplanes (still LSH semantics —
@@ -555,8 +429,7 @@ def lsh_candidate_pairs(
     degrades gracefully, and the drops are enumerable via
     :func:`lsh_dropped_buckets` (same deterministic hyperplanes)."""
     e = _sig_rows(corpus, dims, planes, tables, vec_col, id_col,
-                  refine_planes if max_bucket_size is not None else 0,
-                  weights)
+                  refine_planes if max_bucket_size is not None else 0)
     key = ["table", "bucket"]
     if max_bucket_size is not None:
         e = _guarded_sig_rows(e, max_bucket_size).where(
@@ -582,7 +455,6 @@ def lsh_dropped_buckets(
     id_col: str = "vec_id",
     max_bucket_size: int = 8192,
     refine_planes: int = 6,
-    weights: str = "auto",
 ) -> DataFrame:
     """Disclosure accessor for the hot-bucket guard: the (table, bucket,
     sub, n) groups :func:`lsh_candidate_pairs` excluded at the same
@@ -590,8 +462,7 @@ def lsh_dropped_buckets(
     set, so a scale run can report its recall concession instead of
     silently truncating."""
     e = _guarded_sig_rows(
-        _sig_rows(corpus, dims, planes, tables, vec_col, id_col, refine_planes,
-                  weights),
+        _sig_rows(corpus, dims, planes, tables, vec_col, id_col, refine_planes),
         max_bucket_size,
     )
     return (
@@ -611,7 +482,6 @@ def cosine_neardup_lsh(
     id_col: str = "vec_id",
     max_bucket_size: int | None = 8192,
     refine_planes: int = 6,
-    weights: str = "auto",
 ) -> DataFrame:
     """Scale path for embedding-cosine near-dup: narrow candidate pairs
     from :func:`lsh_candidate_pairs` (the bucket self-join and the pair
@@ -630,7 +500,7 @@ def cosine_neardup_lsh(
     :func:`lsh_dropped_buckets`)."""
     cand = lsh_candidate_pairs(
         corpus, dims, planes, tables, vec_col, id_col,
-        max_bucket_size, refine_planes, weights,
+        max_bucket_size, refine_planes,
     )
     vecs = with_norm(corpus, vec_col).select(
         F.col(id_col).alias("_id"),
@@ -661,7 +531,6 @@ def lsh_topk(
     tables: int = 2,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    weights: str = "auto",
 ) -> DataFrame:
     """Approximate cosine top-k: probe the query's hyperplane bucket in
     ``tables`` independent hash tables (OR-ed — a candidate only needs to
@@ -676,16 +545,10 @@ def lsh_topk(
     identical cosine map-side instead of shipping vectors through the
     dedup shuffle (VERDICT r5 #1, the milder lsh_topk form)."""
     v = F.col(vec_col).cast("array<double>")
-    broadcast_w = _use_broadcast_weights(dims, planes, tables, 0, weights)
-    if broadcast_w:
-        wrow = weights_row(corpus.sparkSession, dims, planes, tables)
-        corpus = corpus.crossJoin(F.broadcast(wrow))
-        queries = queries.crossJoin(F.broadcast(wrow))
-        sigs = F.array(*[_signature_from_wmat(v, t) for t in range(tables)])
-    else:
-        sigs = F.array(
-            *[hyperplane_signature(v, dims, planes, t) for t in range(tables)]
-        )
+    wrow = weights_row(corpus.sparkSession, dims, planes, tables)
+    corpus = corpus.crossJoin(F.broadcast(wrow))
+    queries = queries.crossJoin(F.broadcast(wrow))
+    sigs = F.array(*[_signature_from_wmat(v, t) for t in range(tables)])
     c = (
         with_norm(corpus, vec_col)
         .select(

@@ -225,7 +225,6 @@ def annotate(
     spark: SparkSession,
     transcripts: DataFrame,
     gazetteer_rows: list[tuple] | None = None,
-    fabricate_metadata: bool = False,
     cache: bool = True,
     storage_level: str = "MEMORY_AND_DISK",
 ) -> DataFrame:
@@ -242,14 +241,11 @@ def annotate(
     EMPTY."""
     from pyspark import StorageLevel
 
-    gaz_rows, key = _plan_key("annotate", gazetteer_rows,
-                              fabricate_metadata=fabricate_metadata, cache=cache,
+    gaz_rows, key = _plan_key("annotate", gazetteer_rows, cache=cache,
                               storage_level=storage_level)
 
     def build():
-        t = (assembly.fabricated_metadata_turns(transcripts)
-             if fabricate_metadata else transcripts)
-        out = _fused_pass(assembly.with_turn_offsets(t), gaz_rows)
+        out = _fused_pass(assembly.with_turn_offsets(transcripts), gaz_rows)
         if not cache:
             return out, []
         out = out.persist(getattr(StorageLevel, storage_level))
@@ -265,7 +261,6 @@ def run_pipeline(
     gazetteer_rows: list[tuple] | None = None,
     with_linking: bool = True,
     with_coref_expansion: bool = True,
-    fabricate_metadata: bool = False,
     cache: bool = True,
     annotated: DataFrame | None = None,
     storage_level: str = "MEMORY_AND_DISK",
@@ -277,9 +272,9 @@ def run_pipeline(
     (SURVEY.md §4 row 1). At cluster scale these become checkpoint
     tables (plans/checkpointed.py) instead of memory.
 
-    ``annotated`` (from :func:`annotate` over the SAME transcripts and
-    fabrication setting) skips the fused Python pass — callers running
-    several variants (eval_diff base vs comp) pay for it once.
+    ``annotated`` (from :func:`annotate` over the SAME transcripts)
+    skips the fused Python pass — callers running several variants
+    (eval_diff base vs comp) pay for it once.
 
     ``storage_level`` picks the persist level for the fan-out points:
     the default keeps deserialized rows in executor memory (fastest when
@@ -298,8 +293,7 @@ def run_pipeline(
     gaz_rows, key = _plan_key("run_pipeline", gazetteer_rows,
                               with_linking=with_linking,
                               with_coref_expansion=with_coref_expansion,
-                              fabricate_metadata=fabricate_metadata, cache=cache,
-                              storage_level=storage_level,
+                              cache=cache, storage_level=storage_level,
                               coref_hot_threshold=coref_hot_threshold)
 
     def build():
@@ -317,9 +311,6 @@ def run_pipeline(
             return _p(df) if name in FANOUT_STAGES else df
 
         t = transcripts
-        if fabricate_metadata:
-            # S6: role/ts metadata becomes mention-bearing fabricated turns
-            t = assembly.fabricated_metadata_turns(t)
         # the raw input is itself a fan-out point: the salted-offset join
         # reads it twice (rows + per-group partial sums) and doc_chunks
         # reads it again — for a generated/derived source each of those

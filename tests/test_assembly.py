@@ -88,10 +88,10 @@ def test_fabricated_metadata_turns(spark):
         assembly.with_turn_offsets(fab_t), assembly.doc_text_salted(fab_t)
     ).isEmpty()
 
-    r = run_pipeline(spark, t, fabricate_metadata=True)
+    r = run_pipeline(spark, fab)
     meta = r.triples.where(F.col("pred").contains("written")).collect()
     assert meta, "fabricated sentences must yield metadata triples"
     assert any("written by" in m.pred for m in meta)
-    # default pipeline stays gated off
+    # the pipeline fabricates nothing by itself
     r0 = run_pipeline(spark, t)
     assert r0.triples.where(F.col("pred").contains("written by")).isEmpty()

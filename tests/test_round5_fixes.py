@@ -1,7 +1,7 @@
 """Round-5 regression tests: VERDICT r4 directives (pr_curve
 quantization, fused-pass robustness fuzzing; the legacy
-checkpoint-fingerprint tests moved to test_checkpoints.py). The
-spine-oracle tests are moving to test_oracles.py.
+checkpoint-fingerprint tests moved to test_checkpoints.py, the
+DuckDB oracle precondition tests to test_oracles.py).
 """
 
 from pyspark.sql import functions as F
@@ -64,92 +64,6 @@ def test_fused_pass_adds_no_exchange_over_assembly(spark):
     full = ann._jdf.queryExecution().executedPlan().toString()
     assert full.count("Exchange") == base.count("Exchange")
     assert "MapInPandas" in full
-
-
-# ---------------------- kg_extraction oracle reduction holds (no Spark)
-
-def test_extraction_oracle_vocabulary_reduction():
-    """The T4 oracle's closed form rests on: the corpus vocabulary tags
-    entirely NN/DT except "join" (VB), and "join" is a verb iff not
-    preceded by a determiner. Verify against the ACTUAL sf0.001
-    vocabulary through the real tagger, so a tokenizer or datagen change
-    breaks THIS test before it silently breaks the oracle."""
-    import duckdb
-
-    words = [r[0] for r in duckdb.connect().execute(
-        "SELECT DISTINCT unnest(string_split(text, ' ')) FROM "
-        "'/root/testdata/sf0.001/documents.parquet'").fetchall()]
-    assert len(words) > 20
-    for w in words:
-        # mid-sentence after a noun
-        toks = tokenize.tokenize_sentence("x " + w)
-        tag = toks[1][tokenize.POS]
-        if w == "join":
-            assert tag == "VB", w
-        elif w in ("a", "the"):
-            assert tag == "DT", w
-        else:
-            assert tag in ("NN", "NNS"), (w, tag)
-        # after a determiner: the noun reading must win
-        toks = tokenize.tokenize_sentence("the " + w)
-        if w == "join":
-            assert toks[1][tokenize.POS] == "NN", "DT-gating broken"
-
-
-def test_extraction_oracle_nonvacuous():
-    import duckdb
-
-    import __spark_entry__ as e
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        "'/root/testdata/sf0.001/documents.parquet'"
-    )
-    sql = e.oracle_sql()["kg_extraction"]
-    n, max_a1, max_a2 = con.execute(
-        f"SELECT count(*), max(len(string_split(arg1, ' '))), "
-        f"max(len(string_split(arg2, ' '))) FROM ({sql})"
-    ).fetchone()
-    assert n > 50, "extraction oracle must fire on the corpus"
-    assert max_a1 > 1 and max_a2 > 1, "multi-word NP arguments must occur"
-
-
-# ------------------- kg_bem_predictions oracle preconditions (DuckDB)
-
-def test_bem_predictions_oracle_label_nonvacuous():
-    """The U2 prediction-level check is only meaningful if (a) both
-    classes occur and (b) BOTH conjuncts of the separable label decide
-    rows: person rows with a disagreeing cluster (agree = -1) must
-    exist and flip to negative — otherwise the label degenerates to
-    f_is_person_rule and the agree feature is not load-bearing."""
-    import duckdb
-
-    import __spark_entry__ as e
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        "'/root/testdata/sf0.001/documents.parquet'"
-    )
-    feat_sql = e.oracle_sql()["kg_bem_features"]
-    n_pos, n_neg, n_neg_person = con.execute(
-        f"""SELECT
-              sum(cast(f_is_person_rule = 1.0
-                       AND f_coref_cluster_agrees >= 0.0 AS INT)),
-              sum(cast(NOT (f_is_person_rule = 1.0
-                            AND f_coref_cluster_agrees >= 0.0) AS INT)),
-              sum(cast(f_is_person_rule = 1.0
-                       AND f_coref_cluster_agrees = -1.0 AS INT))
-            FROM ({feat_sql})"""
-    ).fetchone()
-    assert n_pos > 50 and n_neg > 50, (n_pos, n_neg)
-    assert n_neg_person > 0, "AND conjunct must flip person rows"
-    pred_sql = e.oracle_sql()["kg_bem_predictions"]
-    mism = con.execute(
-        f"SELECT count(*) FROM ({pred_sql}) WHERE label <> prediction"
-    ).fetchone()[0]
-    assert mism == 0
 
 
 def test_train_classifier_perfect_on_separable(spark):
@@ -265,88 +179,3 @@ def test_fused_pass_spark_end_to_end_on_adversarial_corpus(spark):
         off, txt = norm_turn[(r["conv_id"], r["turn_idx"])]
         local = r["offset"] - off
         assert txt[local:local + len(r["text"])] == r["text"]
-
-
-# --------------- kg_end_to_end oracle preconditions + nonvacuity (DuckDB)
-
-def test_e2e_oracle_preconditions_and_nonvacuity():
-    """The end-to-end oracle composes every per-stage closed form; this
-    pins the corpus properties the composition rests on: (a) entity
-    types are only PERSON/OTHER (the org/loc rule branches stay dead, as
-    in the T11 oracle); (b) the only dict-matched link keys are
-    'brian okafor'/'okafor', each with exactly one candidate (ambiguity
-    semi-join empty => doc_sim provably 0); (c) BOTH T12 decision
-    branches are live (link-decided and bem-decided clusters); (d) both
-    XOR-gate polarities fire AND the gate rejects some pronoun (it
-    bites); (e) multi-splice arguments exist (the greedy fold is
-    exercised beyond one sub); (f) final substitutions occur in both
-    argument positions, including a '\n'-carrying P-b best spliced
-    into a triple (real engine output). Probes run as SEPARATE
-    statements so DuckDB prunes the chain to each probe's depth
-    (scalar subqueries would re-evaluate the full chain per probe)."""
-    import duckdb
-    from collections import Counter
-
-    import __spark_entry__ as e
-
-    # (b) static half: candidate multiplicity of the matched keys
-    keys = Counter()
-    for (_i, nm, aliases, _t, _inl, _c) in datagen.entity_dict_rows():
-        keys[nm.lower()] += 1
-        for a in aliases:
-            keys[a.lower()] += 1
-    assert keys["brian okafor"] == 1 and keys["okafor"] == 1
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        "'/root/testdata/sf0.001/documents.parquet'"
-    )
-    chain = e._e2e_chain_sql()
-
-    types = [r[0] for r in con.execute(
-        chain + " SELECT DISTINCT entity_type FROM cls").fetchall()]
-    assert sorted(types) == ["OTHER", "PERSON"], types
-    lkeys = [r[0] for r in con.execute(
-        chain + " SELECT DISTINCT lower(clean_text) FROM links").fetchall()]
-    assert sorted(lkeys) == ["brian okafor", "okafor"], lkeys
-
-    # T12 decisions + gate outcomes in ONE pass over members x decisions
-    n_link, n_bem, n_he, n_thing, n_reject = con.execute(chain + """
-        SELECT
-          count(DISTINCT CASE WHEN d.use_link
-                THEN d.conv_id || '#' || d.cluster_id END),
-          count(DISTINCT CASE WHEN NOT d.use_link
-                THEN d.conv_id || '#' || d.cluster_id END),
-          sum(cast(lower(p.m_text) = 'he' AND
-              (CASE WHEN d.use_link THEN d.l_person
-                    ELSE d.b_type = 'PERSON' END) AS INT)),
-          sum(cast(lower(p.m_text) IN ('it', 'they') AND NOT
-              (CASE WHEN d.use_link THEN d.l_person
-                    ELSE d.b_type = 'PERSON' END) AS INT)),
-          sum(cast(lower(p.m_text) IN ('he', 'it', 'they') AND
-              (lower(p.m_text) = 'he') <>
-              (CASE WHEN d.use_link THEN d.l_person
-                    ELSE d.b_type = 'PERSON' END) AS INT))
-        FROM xm p JOIN xdec d
-          ON d.conv_id = p.conv_id AND d.cluster_id = p.cluster_id
-    """).fetchone()
-    assert n_link > 0 and n_bem > 0, (n_link, n_bem)
-    assert n_he > 0 and n_thing > 0, (n_he, n_thing)
-    assert n_reject > 0, "the XOR gate must reject at least one pronoun"
-
-    n_multi = con.execute(
-        chain + " SELECT count(*) FROM xfold WHERE len(subs) >= 2"
-    ).fetchone()[0]
-    assert n_multi > 0, "multi-splice arguments must occur"
-
-    final = e.oracle_sql()["kg_end_to_end"]
-    n_subj, n_obj, n_nl = con.execute(f"""
-        SELECT sum(cast(subj <> subj_raw AS INT)),
-               sum(cast(obj <> obj_raw AS INT)),
-               sum(cast(subj LIKE '%' || chr(10) || '%'
-                        OR obj LIKE '%' || chr(10) || '%' AS INT))
-        FROM ({final})
-    """).fetchone()
-    assert n_subj > 0 and n_obj > 0, (n_subj, n_obj)
-    assert n_nl > 0, "a newline-carrying P-b best must be spliced"

@@ -8,9 +8,11 @@ bounded ivf_topk training sample).
 
 import contextlib
 import io
+import math
 import re
 import struct
 import zlib
+from collections import Counter
 
 import pytest
 
@@ -128,30 +130,34 @@ def test_hot_bucket_guard_is_identity_on_cold_corpora(spark):
 
 # --------------------- VERDICT #2: broadcast-table IVF quantizer
 
-def test_ivf_literal_vs_broadcast_parity(spark):
-    """The two quantizer backends assign identical cells (same argmin,
-    same tie order) so the top-k output is identical — exercised at a
-    larger quantizer trained on a bounded sample (VERDICT r5 #2)."""
+def test_ivf_cells_match_python_reference(spark):
+    """The broadcast quantizer's cells equal a pure-Python argmin of the
+    same squared-L2 fold, lowest cell winning ties: corpus rows get one
+    cell, queries their ``n_probe`` nearest by (distance, cell), and
+    ivf_topk's output equals the Python top-k over those cells. The
+    last centroid duplicates the first, so ties really occur."""
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    qs = emb.where(F.col("vec_id") % 50 == 0)
-    cents = similarity.kmeans_centroids(
-        emb, n_centroids=32, sample_fraction=0.5
-    )
-    lit = {(r.query_id, r.vec_id, round(r.cosine, 9)) for r in similarity.ivf_topk(
-        emb, qs, k=5, n_probe=2, centroids=cents, quantizer="literal").collect()}
-    bc = {(r.query_id, r.vec_id, round(r.cosine, 9)) for r in similarity.ivf_topk(
-        emb, qs, k=5, n_probe=2, centroids=cents, quantizer="broadcast").collect()}
-    assert lit == bc and lit
+    vecs = _vectors(emb)
+    cents = [vecs[i] for i in sorted(vecs) if i % 37 == 0]
+    cents.append(cents[0])
+    tab = similarity.centroids_table(spark, cents)
+    corpus_cells = {r._id: {r.cell} for r in similarity._broadcast_cells(
+        emb, tab, "embedding", "vec_id").collect()}
+    assert corpus_cells == {i: set(_ref_cells(v, cents, 1))
+                            for i, v in vecs.items()}
+    assert len(cents) - 1 not in set().union(*corpus_cells.values())
 
+    qs = emb.where(F.col("vec_id") % 10 == 0)
+    probe = {}
+    for r in similarity._broadcast_cells(
+            qs, tab, "embedding", "vec_id", n_probe=2).collect():
+        probe.setdefault(r._id, set()).add(r.cell)
+    ref_probe = {i: set(_ref_cells(vecs[i], cents, 2)) for i in probe}
+    assert probe == ref_probe and {0, len(cents) - 1} in ref_probe.values()
 
-def test_ivf_auto_quantizer_switch():
-    """auto = literal within codegen budget, broadcast above it."""
-    small = [[0.0] * 8] * 16
-    big = [[0.0] * 100] * ((similarity.LITERAL_QUANTIZER_MAX // 100) + 1)
-    assert similarity._use_broadcast_quantizer(small, "auto") is False
-    assert similarity._use_broadcast_quantizer(big, "auto") is True
-    assert similarity._use_broadcast_quantizer(small, "broadcast") is True
-    assert similarity._use_broadcast_quantizer(big, "literal") is False
+    got = {(r.query_id, r.vec_id, round(r.cosine, 9)) for r in similarity.ivf_topk(
+        emb, qs, k=5, n_probe=2, centroids=cents).collect()}
+    assert got == _ref_topk(vecs, probe, corpus_cells, 5) and got
 
 
 def test_ivf_default_training_sample_is_bounded(spark, monkeypatch):
@@ -286,64 +292,130 @@ def test_windowed_agg_group_sums_clear_rounding_boundaries():
         assert worst < 1e-3, f"sf{sf}: a group sum drifted near a boundary"
 
 
-# --------------- broadcast weights-table backend for the LSH family
-# (the high-dims path hyperplane_signature's round-5 docstring promised,
-# closing the same gap VERDICT r5 #2 closed for the IVF quantizer)
+# --------------- pure-Python references for the LSH and IVF backends
 
-def test_lsh_weights_literal_vs_broadcast_parity(spark):
-    """Identical buckets ⇒ identical top-k and near-dup output across
-    the two signature backends (the broadcast row carries the SAME
-    crc32 weight matrices the literal path embeds, and the projection
-    expressions share op order)."""
+def _fold(xs) -> float:
+    """0.0-seeded left fold in dim order: the op order of Spark's
+    aggregate(zip_with(...)). numpy.dot adds in another order, and the
+    builtin sum compensates from Python 3.12 on; either can flip a sign
+    decision on a near-zero projection."""
+    acc = 0.0
+    for x in xs:
+        acc += x
+    return acc
+
+
+def _vectors(df) -> dict:
+    return {r.vec_id: r.v for r in df.select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("v")).collect()}
+
+
+def _ref_signature(vec, plane_weights) -> int:
+    return sum(2 ** p for p, w in enumerate(plane_weights)
+               if _fold(x * wv for x, wv in zip(vec, w)) >= 0)
+
+
+def _ref_buckets(vecs, dims, planes, tables, refine_planes=0) -> dict:
+    """id -> (bucket in table 0 .. tables-1[, refined]), the refinement
+    matrix at table index ``tables`` as in similarity.weights_row."""
+    mats = [similarity._plane_weights(dims, planes, t) for t in range(tables)]
+    if refine_planes:
+        mats.append(similarity._plane_weights(dims, refine_planes, tables))
+    return {i: tuple(_ref_signature(v, m) for m in mats) for i, v in vecs.items()}
+
+
+def _spark_buckets(corpus, dims, planes, tables, refine_planes=0) -> dict:
+    rows = similarity._sig_rows(
+        corpus, dims, planes, tables, "embedding", "vec_id", refine_planes
+    ).collect()
+    out = {}
+    for r in rows:
+        b = out.setdefault(r._id, [None] * (tables + (1 if refine_planes else 0)))
+        b[r.table] = r.bucket
+        if refine_planes:
+            b[tables] = r.refined
+    return {i: tuple(b) for i, b in out.items()}
+
+
+def _ref_cells(vec, cents, n_probe) -> list:
+    """The ``n_probe`` nearest cells by (squared L2, cell)."""
+    d = sorted((_fold((x - y) * (x - y) for x, y in zip(vec, c)), cell)
+               for cell, c in enumerate(cents))
+    return [cell for _, cell in d[:n_probe]]
+
+
+def _ref_cos(a, b) -> float:
+    def norm(v):
+        return math.sqrt(_fold(x * x for x in v))
+    return _fold(x * y for x, y in zip(a, b)) / (norm(a) * norm(b))
+
+
+def _ref_topk(vecs, probe_keys, corpus_keys, k) -> set:
+    """(query_id, vec_id, cosine) of the k best corpus rows sharing a
+    join key with the query, ordered by cosine desc then vec_id."""
+    out = set()
+    for q, keys in probe_keys.items():
+        cands = sorted((-_ref_cos(vecs[v], vecs[q]), v) for v in vecs
+                       if v != q and corpus_keys[v] & keys)
+        out |= {(q, v, round(-c, 9)) for c, v in cands[:k]}
+    return out
+
+
+def _table_keys(buckets, tables) -> dict:
+    return {i: {(t, b[t]) for t in range(tables)} for i, b in buckets.items()}
+
+
+def test_lsh_signatures_match_python_reference(spark):
+    """Every vector's bucket per table, and its refinement signature,
+    equal the Python fold over similarity._plane_weights (bit p = 2^p),
+    and lsh_topk's output equals the Python top-k over those buckets."""
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    vecs = _vectors(emb)
+    ref = _ref_buckets(vecs, 64, 12, 2, 6)
+    assert _spark_buckets(emb, 64, 12, 2, 6) == ref
+    assert len({b[0] for b in ref.values()}) > 100, "buckets degenerate"
+
     qs = emb.where(F.col("vec_id") % 50 == 0)
-    lit = {(r.query_id, r.vec_id, round(r.cosine, 9)) for r in similarity.lsh_topk(
-        emb, qs, dims=64, k=5, weights="literal").collect()}
-    bc = {(r.query_id, r.vec_id, round(r.cosine, 9)) for r in similarity.lsh_topk(
-        emb, qs, dims=64, k=5, weights="broadcast").collect()}
-    assert lit == bc and lit
+    keys = _table_keys(ref, 2)
+    got = {(r.query_id, r.vec_id, round(r.cosine, 9)) for r in similarity.lsh_topk(
+        emb, qs, dims=64, k=5).collect()}
+    probe = {i: keys[i] for i in vecs if i % 50 == 0}
+    assert got == _ref_topk(vecs, probe, keys, 5) and got
 
 
 def test_lsh_weights_parity_through_hot_bucket_guard(spark):
-    """The guard's REFINED signature (the appended refinement matrix,
-    table index = tables) must also agree across backends: guarded
-    candidate sets and disclosed drops are identical on the skewed
-    corpus where the refinement actually fires."""
+    """The guard's refined signature (refinement matrix at table index
+    ``tables``) splits hot buckets exactly as a Python replay of the
+    guard over the reference buckets: same candidate pairs, same
+    disclosed drops, on the skewed corpus where the refinement fires."""
     corpus = _skewed_corpus(spark)
-    lit = {(r.id_a, r.id_b) for r in similarity.lsh_candidate_pairs(
-        corpus, dims=32, max_bucket_size=40, weights="literal").collect()}
-    bc = {(r.id_a, r.id_b) for r in similarity.lsh_candidate_pairs(
-        corpus, dims=32, max_bucket_size=40, weights="broadcast").collect()}
-    assert lit == bc
-    dl = {(r.table, r.bucket, r.sub, r.n) for r in similarity.lsh_dropped_buckets(
-        corpus, dims=32, max_bucket_size=40, weights="literal").collect()}
-    db = {(r.table, r.bucket, r.sub, r.n) for r in similarity.lsh_dropped_buckets(
-        corpus, dims=32, max_bucket_size=40, weights="broadcast").collect()}
-    assert dl == db and dl
+    ref = _ref_buckets(_vectors(corpus), 32, 12, 2, 6)
+    bn = Counter((t, b[t]) for b in ref.values() for t in range(2))
+    groups = {}
+    for i, b in ref.items():
+        for t in range(2):
+            sub = b[2] if bn[t, b[t]] > 40 else 0
+            groups.setdefault((t, b[t], sub), []).append(i)
+    pairs = {(a, b) for g in groups.values() if len(g) <= 40
+             for a in g for b in g if a < b}
+    drops = {(*key, len(g)) for key, g in groups.items() if len(g) > 40}
 
-
-def test_lsh_auto_weights_switch():
-    # tiny models stay literal (no broadcast row for toy corpora);
-    # (tables*planes + refine) * dims over the MEASURED 1024-double
-    # budget → broadcast (2× faster already at dims=64, see the
-    # LITERAL_WEIGHTS_MAX comment)
-    assert not similarity._use_broadcast_weights(8, 12, 2, 6, "auto")
-    assert similarity._use_broadcast_weights(64, 12, 2, 6, "auto")
-    assert similarity._use_broadcast_weights(64, 12, 2, 0, "broadcast")
-    assert not similarity._use_broadcast_weights(8192, 12, 2, 0, "literal")
-    with pytest.raises(ValueError):
-        similarity._use_broadcast_weights(64, 12, 2, 0, "bogus")
+    got = {(r.id_a, r.id_b) for r in similarity.lsh_candidate_pairs(
+        corpus, dims=32, max_bucket_size=40).collect()}
+    assert got == pairs
+    dropped = {(r.table, r.bucket, r.sub, r.n) for r in similarity.lsh_dropped_buckets(
+        corpus, dims=32, max_bucket_size=40).collect()}
+    assert dropped == drops and drops
+    assert any(k[2] != 0 for k in groups), "refinement never fired"
 
 
 def test_broadcast_weights_plan_exchanges_stay_slim(spark):
-    """Under the broadcast backend the candidate exchanges must carry
-    neither vectors NOR the weights matrix — the wmat column attaches
-    map-side via a broadcast crossJoin and is projected away with the
-    embedding before anything shuffles."""
+    """The candidate exchanges must carry neither vectors NOR the
+    weights matrix — the wmat column attaches map-side via a broadcast
+    crossJoin and is projected away with the embedding before anything
+    shuffles."""
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    cand = similarity.lsh_candidate_pairs(
-        emb, dims=64, max_bucket_size=64, weights="broadcast"
-    )
+    cand = similarity.lsh_candidate_pairs(emb, dims=64, max_bucket_size=64)
     exchanges = _exchange_details(_formatted_plan(cand))
     assert exchanges
     for sec in exchanges:
@@ -354,9 +426,9 @@ def test_broadcast_weights_plan_exchanges_stay_slim(spark):
 def test_broadcast_signature_survives_planes_32(spark):
     """Regression (round-6 review): bit 31 as pow(2,i).cast('int')
     overflowed int32 — ANSI raises CAST_OVERFLOW, non-ANSI silently
-    corrupts the bucket. The broadcast backend now accumulates LONG
-    bits; parity with the literal backend (whose 2**p literals
-    auto-promote) must hold at planes=32."""
+    corrupts the bucket. Signatures accumulate LONG bits: at planes=32
+    every bucket equals the Python reference, bit 31 included, and
+    lsh_topk finds the planted duplicates the reference finds."""
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     qs = emb.where(F.col("vec_id") % 10 == 0)
     # planted exact duplicates guarantee bucket collisions at ANY plane
@@ -364,11 +436,16 @@ def test_broadcast_signature_survives_planes_32(spark):
     corpus = emb.unionByName(
         qs.withColumn("vec_id", F.col("vec_id") + F.lit(1 << 20))
     )
-    lit = {(r.query_id, r.vec_id) for r in similarity.lsh_topk(
-        corpus, qs, dims=64, k=2, planes=32, tables=1, weights="literal").collect()}
-    bc = {(r.query_id, r.vec_id) for r in similarity.lsh_topk(
-        corpus, qs, dims=64, k=2, planes=32, tables=1, weights="broadcast").collect()}
-    assert lit == bc and lit
+    vecs = _vectors(corpus)
+    ref = _ref_buckets(vecs, 64, 32, 1)
+    assert _spark_buckets(corpus, 64, 32, 1) == ref
+    assert any(b[0] >= 2 ** 31 for b in ref.values()), "bit 31 never set"
+
+    keys = _table_keys(ref, 1)
+    got = {(r.query_id, r.vec_id, round(r.cosine, 9)) for r in similarity.lsh_topk(
+        corpus, qs, dims=64, k=2, planes=32, tables=1).collect()}
+    probe = {i: keys[i] for i in vecs if i < (1 << 20) and i % 10 == 0}
+    assert got == _ref_topk(vecs, probe, keys, 2) and got
 
 
 def test_hot_bucket_guard_with_refinement_disabled(spark):

@@ -286,6 +286,7 @@ def test_fused_pass_plans_semantically_equal(spark):
 
 def test_annotate_plan_cache_hit_and_repersist(spark):
     from pyspark import StorageLevel
+    from docopenie_spark.operators import assembly
     from docopenie_spark.plans import pipeline as pl
 
     t = datagen.transcripts_df(spark, 184)
@@ -297,9 +298,9 @@ def test_annotate_plan_cache_hit_and_repersist(spark):
     # the hit re-registered the dropped persist (empty — recomputes)
     assert a2.storageLevel != StorageLevel.NONE
     assert a2.count() == n1
-    # a different input or scalar misses
+    # a different input misses
     assert pl.annotate(spark, datagen.transcripts_df(spark, 192)) is not a1
-    assert pl.annotate(spark, t, fabricate_metadata=True) is not a1
+    assert pl.annotate(spark, assembly.fabricated_metadata_turns(t)) is not a1
     a2.unpersist()
 
 

@@ -6,6 +6,10 @@ way the driver's per-query comparison does.
 Wall time includes query-function construction (some functions run
 eager work — ML fits, count probes) plus execution and collection —
 the number a caller of queries()[name] actually experiences.
+
+The session takes get_spark()'s defaults: ``local[$SPARK_GRAFT_CPUS]``
+with as many shuffle partitions (unset: ``local[*]`` and 32;
+``SPARK_GRAFT_MASTER`` overrides the master).
 """
 
 from __future__ import annotations
@@ -27,7 +31,7 @@ def main():
 
     import __spark_entry__ as e
 
-    spark = get_spark(master="local[8]", shuffle_partitions=8)
+    spark = get_spark()
     spark.sparkContext.setLogLevel("ERROR")
 
     times: dict[str, float] = {}
