@@ -981,8 +981,8 @@ def _substitution_oracle_sql() -> str:
 # mentions through the XOR gate (PERSONAL_PRONOUNS × entity-type).
 # Reduction notes: the mention↔link join key (clean_offset == mention
 # offset) is closed-form; he is personal / it,they are not, so both gate
-# polarities fire; he/it/they are non-possessive, so _possessive_fix is
-# the identity. The extraction closed form gains the 0.10 pronoun-
+# polarities fire; he/it/they are non-possessive, so the possessive fix
+# is the identity. The extraction closed form gains the 0.10 pronoun-
 # subject confidence penalty on this corpus (single-PRP arg1), already
 # encoded generically in _extract_branch_sql.
 _EXPAND_INJECT = _LINK_INJECT + [
@@ -1504,10 +1504,10 @@ def _q_kg_end_to_end(spark, sf_dir):
     """The flagship: production run_pipeline over the composed oracle
     corpus; final substituted triples, externally checked end-to-end."""
     t = _injected_transcripts(spark, sf_dir, _E2E_INJECT)
-    # cache=True (r7): with cache=False the fused Arrow pass re-executed
-    # once per fan-out reference inside the triples DAG; the persisted
-    # fan-out points compute it once (same leak profile as the other
-    # run_pipeline-based queries in this file)
+    # run_pipeline persists its fan-out points (r7): without them the
+    # fused Arrow pass re-executed once per fan-out reference inside the
+    # triples DAG (same leak profile as the other run_pipeline-based
+    # queries in this file)
     r = run_pipeline(spark, t)
     return r.triples.select(
         "conv_id", "turn_idx", "sent_num", "subj", "pred", "obj",

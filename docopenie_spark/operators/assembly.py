@@ -13,13 +13,16 @@ Scale notes:
 - ``with_turn_offsets`` is ONE window over conv_id — the pipeline's first
   and (for the narrow stages) only shuffle. Everything sentence-scoped
   afterwards (segment → tokenize → extract) is a narrow mapInPandas chain.
-- ``doc_text`` materializes the full conversation string — needed only by
-  the per-conversation stages (coref, best-mention regex fallbacks). For
-  hot conversations (one conv holding ~10% of turns) a naive
-  collect_list concat puts the whole conversation into one shuffle
-  record; ``doc_text_salted`` does a two-level concat — partial concat
-  per (conv_id, turn_idx // group) then final merge — so no single
-  shuffle record exceeds ~group·avg_turn chars (SURVEY.md §4 item 1).
+- ``doc_chunks`` feeds the doc-scoped stage (best-mention regex
+  fallbacks) the conversation text as BOUNDED overlapping chunks, so the
+  hot conversation (~10% of turns) never becomes one giant row.
+- ``doc_text_salted`` materializes the full conversation string (the
+  doc_assembly query, the text-equality invariant). A naive
+  collect_list concat would put a hot conversation into one shuffle
+  record; it does a two-level concat — partial concat per
+  (conv_id, turn_idx // group) then final merge — so no single shuffle
+  record before the merge exceeds ~group·avg_turn chars (SURVEY.md §4
+  item 1).
 """
 
 from __future__ import annotations
@@ -68,23 +71,6 @@ def with_turn_offsets(transcripts: DataFrame, group: int = 64) -> DataFrame:
     )
 
 
-def doc_text(transcripts: DataFrame) -> DataFrame:
-    """(conv_id, doc_text) — order-stable concat of turns.
-
-    collect_list after groupBy has no ordering guarantee, so we sort the
-    collected (turn_idx, text) structs explicitly: array_sort on structs
-    orders by the first field. Deterministic regardless of partitioning.
-    """
-    return (
-        transcripts.groupBy("conv_id")
-        .agg(F.array_sort(F.collect_list(F.struct("turn_idx", "text"))).alias("_turns"))
-        .select(
-            "conv_id",
-            F.array_join(F.transform("_turns", lambda t: t["text"]), SEP).alias("doc_text"),
-        )
-    )
-
-
 def _salted_parts(transcripts: DataFrame, group: int) -> DataFrame:
     """(conv_id, salt, part_text) — partial ordered concat per
     (conv_id, turn_idx // group); no record exceeds ~group·avg_turn chars."""
@@ -128,11 +114,13 @@ def doc_chunks(transcripts: DataFrame, group: int = 64, overlap: int = 200) -> D
 
 
 def doc_text_salted(transcripts: DataFrame, group: int = 64) -> DataFrame:
-    """Skew-safe two-level assembly: partial concat per
-    (conv_id, turn_idx // group), then ordered merge of the partials.
-    Same result as :func:`doc_text`; bounds per-record shuffle size for
-    hot conversations (the salting required by the north rule, axis B).
-    """
+    """(conv_id, doc_text) — the turns joined by SEP in turn_idx order,
+    assembled in two levels: partial concat per (conv_id, turn_idx //
+    group), then ordered merge of the partials. Bounds per-record shuffle
+    size for hot conversations (the salting required by the north rule,
+    axis B). collect_list has no ordering guarantee, so both levels sort
+    the collected structs explicitly (array_sort orders by the first
+    field)."""
     return (
         _salted_parts(transcripts, group).groupBy("conv_id")
         .agg(F.array_sort(F.collect_list(F.struct("salt", "part_text"))).alias("_parts"))

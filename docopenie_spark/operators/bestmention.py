@@ -62,7 +62,12 @@ text (bounded rows even for the hot conversation — assembly.doc_chunks);
 per-occurrence fan-out happens as a JVM hash join, with offset-dependent
 (multi-candidate) names re-resolved natively via nested array_min. The
 gazetteer ships as a broadcast variable (the reference loads it as a
-process singleton, :611-637).
+process singleton, :611-637). :func:`best_mentions` is the stage's one
+Spark path; :func:`resolve_conversation` runs the same rules per
+occurrence over the full document string in plain Python — the reference
+the Spark path is tested against. Coref expansion (T12,
+:func:`expand_with_coref`) states its possessive fix and XOR gate once,
+as SQL.
 """
 
 from __future__ import annotations
@@ -92,14 +97,6 @@ POSSESSIVE_PRONOUNS = frozenset(
     {"his", "her", "hers", "its", "their", "our", "my", "your", "mine",
      "theirs", "ours", "yours"}
 )
-
-
-def _possessive_fix(best_col, target_text_col):
-    is_poss = F.lower(target_text_col).isin(*sorted(POSSESSIVE_PRONOUNS))
-    fixed = F.when(
-        best_col.endswith("s"), F.concat(best_col, F.lit("'"))
-    ).otherwise(F.concat(best_col, F.lit("'s")))
-    return F.when(is_poss, fixed).otherwise(best_col)
 
 
 def location_casing(s: str) -> str:
@@ -539,15 +536,12 @@ def _entity_ref(t, typ):
     return {"text": t[0], "offset": int(t[2]), "name": t[1], "entity_type": typ}
 
 
-_BEM_COLS = ["conv_id", "kind", "target", "best_mention", "best_entity",
-             "container_entity", "contained_entity", "candidate_count", "cluster_id"]
-
-
 def resolve_conversation(ents: pd.DataFrame, doc: ChunkedDoc,
                          gaz: Gazetteer) -> list[tuple]:
     """All entities of one conversation → best-mention rows (T11),
-    PER-OCCURRENCE (the parity-reference path). Offset-independent
-    resolutions memoize per (type, name)."""
+    PER-OCCURRENCE: the pure-Python reference :func:`best_mentions` is
+    tested against. Offset-independent resolutions memoize per
+    (type, name)."""
     conv_id = ents["conv_id"].iloc[0]
     by_type: dict[str, dict[str, list[int]]] = {}
     for r in ents.itertuples():
@@ -579,31 +573,6 @@ def resolve_conversation(ents: pd.DataFrame, doc: ChunkedDoc,
         cde = _entity_ref(res["contained"], loc_typ) if kind == "containment" else None
         rows.append((conv_id, kind, target, res["best"], be, ce, cde, res["count"], None))
     return rows
-
-
-def best_mentions_python(entities: DataFrame, docs: DataFrame,
-                         gazetteer_rows: list[tuple]) -> DataFrame:
-    """Per-occurrence cogrouped variant over the FULL doc string (parity
-    reference): every entity occurrence flows through Python. Kept for
-    the parity tests (join-based and chunked paths must match it)."""
-    spark = entities.sparkSession
-    b_gaz = content_broadcast(
-        spark.sparkContext, Gazetteer(gazetteer_rows),
-        key=tuple(tuple(r) for r in gazetteer_rows),
-    )
-
-    def run(ents: pd.DataFrame, dpdf: pd.DataFrame) -> pd.DataFrame:
-        if ents.empty or dpdf.empty:
-            return pd.DataFrame([], columns=_BEM_COLS)
-        doc = ChunkedDoc.single(dpdf["doc_text"].iloc[0])
-        rows = resolve_conversation(ents, doc, b_gaz.value)
-        return pd.DataFrame(rows, columns=_BEM_COLS)
-
-    return (
-        entities.groupBy("conv_id")
-        .cogroup(docs.groupBy("conv_id"))
-        .applyInPandas(run, schema=schemas.BEST_MENTIONS)
-    )
 
 
 _ENT_REF_DDL = "struct<text:string,offset:bigint,name:string,entity_type:string>"
@@ -768,14 +737,6 @@ def display_filter(bems: DataFrame) -> DataFrame:
 
 # --------------------------------------------------------------- T12
 
-def _pronoun_gate(text_col, type_col):
-    """The reference's XOR gate (DocumentExtractor.scala:143-145):
-    propagate iff personalPronouns(text) XOR (entity_type != PERSON)."""
-    is_personal = F.lower(text_col).isin(*PERSONAL_PRONOUNS)
-    not_person = type_col != F.lit("PERSON")
-    return (is_personal & ~not_person) | (~is_personal & not_person)
-
-
 def expand_with_coref(bems: DataFrame, clusters: DataFrame,
                       links: DataFrame | None = None) -> DataFrame:
     """T12: per cluster, if exactly one distinct link (else exactly one
@@ -865,7 +826,7 @@ def expand_with_coref(bems: DataFrame, clusters: DataFrame,
         " WHEN b.b_kind = 'identity' THEN b.b_target.name"
         " ELSE b.best_mention END"
     )
-    # _possessive_fix as SQL (tool/link/Linker.scala:102-120)
+    # the reference's fixPossessive (tool/link/Linker.scala:102-120)
     best = (
         f"CASE WHEN lower(m_text) IN ({sql_strlist(POSSESSIVE_PRONOUNS)})"
         f" THEN (CASE WHEN endswith({raw_best}, 's')"
@@ -873,7 +834,8 @@ def expand_with_coref(bems: DataFrame, clusters: DataFrame,
         f"       ELSE concat({raw_best}, \"'s\") END)"
         f" ELSE {raw_best} END"
     )
-    # the reference's XOR gate (_pronoun_gate; DocumentExtractor.scala:143-145)
+    # the reference's XOR gate (DocumentExtractor.scala:143-145): propagate
+    # iff personalPronouns(text) XOR (entity_type != PERSON)
     gate = (
         f"((lower(m_text) IN ({sql_strlist(PERSONAL_PRONOUNS)}))"
         f" AND NOT (({ent_type}) != 'PERSON'))"

@@ -2,9 +2,12 @@
 tool/coref/CorefResolver.scala:13-46).
 
 The reference runs Stanford dcoref over the FULL document text — the one
-stage whose scope is inherently the whole conversation, which is why it
-is a grouped ``applyInPandas`` on conv_id here (doc-scoped logic without
-per-row Python; SURVEY.md §4 item 2).
+stage whose scope is inherently the whole conversation. Here it is one
+Spark path with no Python: :func:`clusters` resolves pronouns with a
+window per conversation (or per offset block of a hot conversation, see
+:func:`_resolve_segmented`) and assembles clusters with one groupBy.
+:func:`cluster_conversation` is the pure-Python kernel of the same rules,
+the reference the Spark path is tested against.
 
 Deterministic rule set (published string-match + Hobbs-style heuristics,
 standing in for the dcoref models that live in the reference's deps):
@@ -29,10 +32,9 @@ import re
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .. import schemas
 from ..functions.sqltext import sql_strlist
 from .ner import PRONOUN_TYPE
 
@@ -128,14 +130,6 @@ def cluster_conversation(pdf: pd.DataFrame) -> pd.DataFrame:
     )
 
 
-def clusters_python(mentions: DataFrame) -> DataFrame:
-    """Grouped-applyInPandas variant (kept as the parity reference for the
-    native implementation below)."""
-    return mentions.groupBy("conv_id").applyInPandas(
-        lambda pdf: cluster_conversation(pdf), schema=schemas.CLUSTERS
-    )
-
-
 def _with_keys(mentions: DataFrame) -> DataFrame:
     """Whole-stage-codegen'd canonical-key derivation (mention_key).
     One composite SQL string (round 7): the Column-built tree cost a
@@ -162,27 +156,7 @@ def _with_keys(mentions: DataFrame) -> DataFrame:
     )
 
 
-def _cats():
-    # built lazily — Column construction needs an active SparkContext
-    return [
-        ("person", F.col("entity_type") == "PERSON"),
-        ("thing", F.col("entity_type").isin("ORGANIZATION", "LOCATION", "OTHER")),
-        ("org", F.col("entity_type") == "ORGANIZATION"),
-        ("any", F.lit(True)),
-    ]
-
-
 _RESOLVED_COLS = ["conv_id", "text", "offset", "is_pron", "ckey"]
-
-
-def _pron_key(last: dict):
-    lw = F.lower(F.col("text"))
-    return (
-        F.when(lw.isin(*sorted(_PERSON_PRON)), last["person"])
-        .when(lw.isin(*sorted(_THING_PRON)), last["thing"])
-        .when(lw.isin(*sorted(_PLURAL_PRON)), F.coalesce(last["org"], last["any"]))
-        .otherwise(last["person"])
-    )
 
 
 _CAT_SQL = [
@@ -192,12 +166,37 @@ _CAT_SQL = [
     ("any", "true"),
 ]
 
+# running last entity key per category; ``part`` is the window partition
+# (the conversation, or one offset block of it in the segmented scan)
 _LAST_OVER = (
     "last(CASE WHEN ({cond}) AND NOT (is_pron = 1) THEN key END, true)"
-    " OVER (PARTITION BY conv_id"
+    " OVER (PARTITION BY {part}"
     " ORDER BY offset ASC, is_pron DESC, text ASC, key ASC"
     " ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
 )
+
+
+def _with_ckey(lasts: DataFrame) -> DataFrame:
+    """Cluster key per mention from the per-category antecedent keys
+    ``_l_<category>``: an entity keeps its own key, a pronoun takes the
+    antecedent of its category (plural falls back to any); mentions
+    left without a key drop out."""
+    person_p = sql_strlist(_PERSON_PRON)
+    thing_p = sql_strlist(_THING_PRON)
+    plural_p = sql_strlist(_PLURAL_PRON)
+    ckey = (
+        "CASE WHEN is_pron = 1 THEN ("
+        f" CASE WHEN lower(text) IN ({person_p}) THEN _l_person"
+        f"      WHEN lower(text) IN ({thing_p}) THEN _l_thing"
+        f"      WHEN lower(text) IN ({plural_p}) THEN coalesce(_l_org, _l_any)"
+        "       ELSE _l_person END"
+        ") ELSE key END"
+    )
+    return (
+        lasts.selectExpr("*", f"{ckey} as ckey")
+        .where("ckey IS NOT NULL")
+        .select(*_RESOLVED_COLS)
+    )
 
 
 def _resolve_plain(m: DataFrame) -> DataFrame:
@@ -218,82 +217,48 @@ def _resolve_plain(m: DataFrame) -> DataFrame:
     stability luck and the two paths can diverge. Window expressions
     are SQL strings (round 7, construction cost).
     """
-    lasts = m.selectExpr(
+    return _with_ckey(m.selectExpr(
         "*",
         *[
-            _LAST_OVER.format(cond=c) + f" as _l_{n}"
+            _LAST_OVER.format(cond=c, part="conv_id") + f" as _l_{n}"
             for n, c in _CAT_SQL
         ],
-    )
-    person_p = sql_strlist(_PERSON_PRON)
-    thing_p = sql_strlist(_THING_PRON)
-    plural_p = sql_strlist(_PLURAL_PRON)
-    ckey = (
-        "CASE WHEN is_pron = 1 THEN ("
-        f" CASE WHEN lower(text) IN ({person_p}) THEN _l_person"
-        f"      WHEN lower(text) IN ({thing_p}) THEN _l_thing"
-        f"      WHEN lower(text) IN ({plural_p}) THEN coalesce(_l_org, _l_any)"
-        "       ELSE _l_person END"
-        ") ELSE key END"
-    )
-    return (
-        lasts.selectExpr("*", f"{ckey} as ckey")
-        .where("ckey IS NOT NULL")
-        .select(*_RESOLVED_COLS)
-    )
+    ))
 
 
 def _resolve_segmented(m: DataFrame, block_chars: int = 1 << 13) -> DataFrame:
     """The same resolution as :func:`_resolve_plain` as a TWO-LEVEL
     segmented scan (VERDICT r2 #4) — for HOT conversations whose single
     window partition would be a straggler sort task. Same trick as the
-    turn offsets (assembly.with_turn_offsets): (1) running last per
-    category WITHIN (conv, offset-block) — balanced partitions; (2)
-    per-block final lasts, prefix-carried across blocks by a window over
-    the tiny blocks table (lag of the running last — incremental
-    O(#blocks)); (3) join the carry-in back on (conv, block), which
-    reuses the window's (conv, block) partitioning, and coalesce.
-    Identical output to the plain window (parity-tested)."""
-    is_pron, CATS = F.col("is_pron") == 1, _cats()
-    m = m.withColumn("_blk", (F.col("offset") / block_chars).cast("long"))
-    wb = (
-        Window.partitionBy("conv_id", "_blk")
-        .orderBy("offset", F.desc("is_pron"), "text", "key")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    within = {
-        n: F.last(F.when(c & ~is_pron, F.col("key")), ignorenulls=True).over(wb)
-        for n, c in CATS
-    }
-    # per-block final last per category: max over the window's (offset,
-    # text) ordering restricted to entity rows (entities all sort after
-    # pronouns at equal offset, so is_pron never discriminates here)
-    blocks = m.groupBy("conv_id", "_blk").agg(*[
-        F.max(F.when(c & ~is_pron, F.struct("offset", "text", "key")))
-        .alias(f"_f_{n}") for n, c in CATS
+    turn offsets (assembly.with_turn_offsets): (1) the plain path's
+    running last per category, partitioned by (conv, offset-block) —
+    balanced partitions; (2) each block's final entity per category
+    (max of struct(offset, text, key): entity rows all sort after
+    pronouns at equal offset, so this is the window's last), carried
+    across blocks by a last-of-preceding-blocks window over the blocks
+    table (one row per block, so its frame shape costs nothing); (3)
+    join the carry-in back on (conv, block), which reuses the window's
+    (conv, block) partitioning, and coalesce. Same rows as the plain
+    path (both are tested against :func:`cluster_conversation`)."""
+    m = m.selectExpr("*", f"cast(offset / {block_chars} as bigint) as _blk")
+    within = m.selectExpr("*", *[
+        _LAST_OVER.format(cond=c, part="conv_id, _blk") + f" as _w_{n}"
+        for n, c in _CAT_SQL
     ])
-    wblk = Window.partitionBy("conv_id").orderBy("_blk")
-    run = blocks.select(
-        "conv_id", "_blk", *[
-            F.last(f"_f_{n}", ignorenulls=True)
-            .over(wblk.rowsBetween(Window.unboundedPreceding, Window.currentRow))
-            .alias(f"_r_{n}") for n, _ in CATS
-        ]
-    )
-    carry = run.select(
-        "conv_id", "_blk", *[
-            F.lag(f"_r_{n}").over(wblk)["key"].alias(f"_carry_{n}")
-            for n, _ in CATS
-        ]
-    )
-    mw = m.select(
-        "conv_id", "_blk", "text", "offset", "entity_type", "key", "is_pron",
-        *[within[n].alias(f"_w_{n}") for n, _ in CATS],
-    ).join(carry, ["conv_id", "_blk"])
-    last = {n: F.coalesce(F.col(f"_w_{n}"), F.col(f"_carry_{n}")) for n, _ in CATS}
-    return mw.withColumn(
-        "ckey", F.when(is_pron, _pron_key(last)).otherwise(F.col("key"))
-    ).where(F.col("ckey").isNotNull()).select(*_RESOLVED_COLS)
+    blocks = m.groupBy("conv_id", "_blk").agg(*[
+        F.expr(f"max(CASE WHEN ({c}) AND NOT (is_pron = 1)"
+               " THEN struct(offset, text, key) END)").alias(f"_f_{n}")
+        for n, c in _CAT_SQL
+    ])
+    carry = blocks.selectExpr("conv_id", "_blk", *[
+        f"(last(_f_{n}, true) OVER (PARTITION BY conv_id ORDER BY _blk"
+        " ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)).key"
+        f" as _carry_{n}"
+        for n, _ in _CAT_SQL
+    ])
+    return _with_ckey(within.join(carry, ["conv_id", "_blk"]).selectExpr("*", *[
+        f"coalesce(_w_{n}, _carry_{n}) as _l_{n}" for n, _ in _CAT_SQL
+    ]))
 
 
 def _assemble(resolved: DataFrame) -> DataFrame:
@@ -319,28 +284,29 @@ def _assemble(resolved: DataFrame) -> DataFrame:
     )
 
 
-def clusters(mentions: DataFrame, hot_threshold: int | None = 1 << 22) -> DataFrame:
+def clusters(mentions: DataFrame, hot_threshold: int | None = None) -> DataFrame:
     """mentions (fused.split_entities, incl. pronoun rows) → CLUSTERS, FULLY
     NATIVE (zero Python): whole-stage-codegen'd key derivation, window
     nearest-preceding-antecedent pronoun resolution, one groupBy for
     cluster assembly. Semantics identical to
-    :func:`cluster_conversation` (asserted by a parity test).
+    :func:`cluster_conversation` (asserted by parity tests).
 
-    SKEW-ADAPTIVE (VERDICT r2 #4): conversations with more than
-    ``hot_threshold`` mentions would make the per-conversation window a
-    single straggler sort task, so they are split off (one broadcast
-    semi/anti pair over a tiny hot-conversation list — the AQE skew-join
-    idea applied to a window) and resolved with the two-level segmented
-    scan; everything else takes the plain one-window path.
+    SKEW-ADAPTIVE (VERDICT r2 #4), off by default: with a
+    ``hot_threshold``, conversations with more mentions than it (whose
+    per-conversation window would be a single straggler sort task) are
+    split off (one broadcast semi/anti pair over a tiny hot-conversation
+    list — the AQE skew-join idea applied to a window) and resolved with
+    the two-level segmented scan; everything else takes the plain
+    one-window path.
 
-    The default threshold sits at the measured crossover (local[32],
-    single-conversation probe): at 4M mentions in one conversation the
-    two paths tie (~8-10s each — the segmented scan's extra block-carry
-    shuffle cancels the straggler saving), at 16M the segmented path is
-    2.5-3× faster (15-18s vs 38-46s single-task sort) and the gap widens
-    with size. Below the crossover plain is ~2× cheaper, so segmenting
-    everything would tax the common case (measured: 3→7s on a balanced
-    4M-mention table). ``hot_threshold=None`` disables the split."""
+    2^22, the threshold the scaling runs pass, sits at the measured
+    crossover (local[32], single-conversation probe): at 4M mentions in
+    one conversation the two paths tie (~8-10s each — the segmented
+    scan's extra block-carry shuffle cancels the straggler saving), at
+    16M the segmented path is 2.5-3× faster (15-18s vs 38-46s
+    single-task sort) and the gap widens with size. Below the crossover
+    plain is ~2× cheaper, so segmenting everything would tax the common
+    case (measured: 3→7s on a balanced 4M-mention table)."""
     m = _with_keys(mentions)
     if hot_threshold is None:
         resolved = _resolve_plain(m)

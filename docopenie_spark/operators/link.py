@@ -3,8 +3,8 @@
 The reference builds an ArgContext per extraction argument (clean the
 arg, gather context sentences via coref siblings) and calls an external
 linker against an on-disk index, keeping links with combinedScore >= 5.0
-(Linker.scala:63,156) and recomputing offsets from token + sentence
-offset (:153-162).
+(Linker.scala:63,156; MIN_COMBINED_SCORE here) and recomputing offsets
+from token + sentence offset (:153-162).
 
 Spark-first re-expression:
 - candidate generation = a BROADCAST equi-join of normalized arg keys
@@ -13,6 +13,9 @@ Spark-first re-expression:
 - scoring = deterministic column expressions (exact-name 6.0 / alias 5.5
   / word-containment 4.0 base, + 0.4·log10(1+inlinks)); only relative
   ordering and the 5.0 threshold are observable behavior (SURVEY.md U3);
+- context (T9) = own and coref-sibling sentences of each ambiguous arg,
+  gathered with ``containment_join`` — the one bucketed interval join,
+  which substitution (substitute.py) uses too;
 - argmax per argument = row_number over a descending-score window —
   the reference's getBestEntity head-of-sorted-list.
 
@@ -66,21 +69,28 @@ def with_clean_arg(args: DataFrame) -> DataFrame:
     ).where(F.length("clean_text") > 0)
 
 
-_CTX_BUCKET = 256  # chars per offset bucket in the containment joins
+_BUCKET = 256  # chars per offset bucket in the containment joins
+
+# the reference's hardcoded minCombinedScore (Linker.scala:63)
+MIN_COMBINED_SCORE = 5.0
 
 
-def _containment_join(points: DataFrame, spans: DataFrame, p_off, p_len, s_off, s_len):
-    """points ⊆ spans interval join, bucketed on (conv_id, offset//B) so
-    it stays skew-proof — no per-conversation cross product even for the
-    hot conversation (SURVEY.md J3 pattern, same as substitute.py).
+def containment_join(points: DataFrame, spans: DataFrame, p_off, p_len, s_off, s_len):
+    """points ⊆ spans interval join: a point row [p_off, p_off + p_len]
+    pairs with every span row [s_off, s_off + s_len] of its conversation
+    that contains it. Bucketed on (conv_id, offset // _BUCKET) — a span
+    explodes over every bucket it touches, a point sits in its start's
+    bucket — so it stays skew-proof: no per-conversation cross product
+    even for the hot conversation (SURVEY.md J3 pattern). The linking
+    context joins and substitution (substitute.py) share it.
     Offset/length arguments are SQL expression strings (round 7: the
-    five containment joins cost ~0.5 s of py4j driver time per
-    run_pipeline construction as Column trees)."""
-    p = points.selectExpr("*", f"cast(({p_off}) / {_CTX_BUCKET} as bigint) as _b")
+    containment joins cost ~0.5 s of py4j driver time per run_pipeline
+    construction as Column trees)."""
+    p = points.selectExpr("*", f"cast(({p_off}) / {_BUCKET} as bigint) as _b")
     s = spans.selectExpr(
         "*",
-        f"explode(sequence(cast(({s_off}) / {_CTX_BUCKET} as bigint),"
-        f" cast((({s_off}) + ({s_len})) / {_CTX_BUCKET} as bigint))) as _b",
+        f"explode(sequence(cast(({s_off}) / {_BUCKET} as bigint),"
+        f" cast((({s_off}) + ({s_len})) / {_BUCKET} as bigint))) as _b",
     )
     return p.join(s, ["conv_id", "_b"]).where(
         f"({p_off}) >= ({s_off}) AND ({p_off}) + ({p_len}) <= ({s_off}) + ({s_len})"
@@ -102,7 +112,7 @@ def arg_contexts(args: DataFrame, clusters: DataFrame, sentences: DataFrame) -> 
         "conv_id", "offset as s_off", "length(text) as s_len", "text as s_text"
     )
     # 1. the arg's own sentence
-    own = _containment_join(
+    own = containment_join(
         a, s, "clean_offset", "length(clean_text)", "s_off", "s_len"
     ).select(*akey, "s_off", "s_text")
     # 2. cluster mentions inside the arg span
@@ -110,7 +120,7 @@ def arg_contexts(args: DataFrame, clusters: DataFrame, sentences: DataFrame) -> 
         "conv_id", "cluster_id", "explode(mentions) as m"
     ).selectExpr("conv_id", "cluster_id",
                  "m.offset as m_off", "length(m.text) as m_len")
-    arg_clusters = _containment_join(
+    arg_clusters = containment_join(
         cm, a, "m_off", "m_len", "clean_offset", "length(clean_text)"
     ).select("conv_id", "offset", "text", "cluster_id").distinct()
     # 3. sibling mentions of those clusters
@@ -118,7 +128,7 @@ def arg_contexts(args: DataFrame, clusters: DataFrame, sentences: DataFrame) -> 
         "conv_id", "offset", "text", "m_off", "m_len"
     )
     # 4. sentences containing the siblings (the EXTENDED context)
-    extended = _containment_join(
+    extended = containment_join(
         siblings, s, "m_off", "m_len", "s_off", "s_len"
     ).select(*akey, "s_off", "s_text")
     ctx_sents = own.unionByName(extended).dropDuplicates(akey + ["s_off"])
@@ -132,15 +142,14 @@ def arg_contexts(args: DataFrame, clusters: DataFrame, sentences: DataFrame) -> 
 def links(
     triples_raw: DataFrame,
     entity_dict: DataFrame,
-    min_combined_score: float = 5.0,
-    clusters: DataFrame | None = None,
-    sentences: DataFrame | None = None,
+    clusters: DataFrame,
+    sentences: DataFrame,
 ) -> DataFrame:
-    """TRIPLES_RAW × entity_dict → LINKS (threshold = the reference's
-    hardcoded minCombinedScore 5.0, Linker.scala:63). With clusters +
-    sentences, doc_sim scores candidate context overlap against the T9
-    arg context (round 1 stubbed it to 0.0) — two dictionary entries
-    sharing an alias are disambiguated by context, not id order."""
+    """TRIPLES_RAW × entity_dict → LINKS, keeping scores of at least
+    MIN_COMBINED_SCORE. doc_sim scores candidate context overlap against
+    the T9 arg context built from ``clusters`` and ``sentences`` (round 1
+    stubbed it to 0.0) — two dictionary entries sharing an alias are
+    disambiguated by context, not id order."""
     args = with_clean_arg(exploded_args(triples_raw))
 
     # explode the dictionary over name + aliases with a per-key kind
@@ -153,28 +162,25 @@ def links(
     ).selectExpr("id", "name", "types", "inlinks", "d_ctx",
                  "k.key as key", "k.src as src")
 
-    if clusters is not None and sentences is not None:
-        # semi-join reduction: doc_sim only orders candidates WITHIN one
-        # argument, so context matters only for args whose key matches
-        # MORE THAN ONE dictionary entry — a tiny broadcast filter keeps
-        # the 5-stage context machinery off the 99% unambiguous args
-        # (their doc_sim is reported as 0; their selected link cannot
-        # change). The reference computes docSim unconditionally against
-        # its KB index; observable behavior — which entity each arg links
-        # to, and the 5.0 threshold — is identical.
-        multi = (
-            cand.groupBy("key")
-            .agg(F.countDistinct("id").alias("_n"))
-            .where(F.col("_n") > 1)
-            .select("key")
-        )
-        ambiguous = args.join(
-            F.broadcast(multi), F.lower(args.clean_text) == multi.key, "left_semi"
-        )
-        ctx = arg_contexts(ambiguous, clusters, sentences)
-        args = args.join(ctx, ["conv_id", "offset", "text"], "left")
-    else:
-        args = args.withColumn("ctx", F.lit(None).cast("array<string>"))
+    # semi-join reduction: doc_sim only orders candidates WITHIN one
+    # argument, so context matters only for args whose key matches
+    # MORE THAN ONE dictionary entry — a tiny broadcast filter keeps
+    # the 5-stage context machinery off the 99% unambiguous args
+    # (their doc_sim is reported as 0; their selected link cannot
+    # change). The reference computes docSim unconditionally against
+    # its KB index; observable behavior — which entity each arg links
+    # to, and the 5.0 threshold — is identical.
+    multi = (
+        cand.groupBy("key")
+        .agg(F.countDistinct("id").alias("_n"))
+        .where(F.col("_n") > 1)
+        .select("key")
+    )
+    ambiguous = args.join(
+        F.broadcast(multi), F.lower(args.clean_text) == multi.key, "left_semi"
+    )
+    ctx = arg_contexts(ambiguous, clusters, sentences)
+    args = args.join(ctx, ["conv_id", "offset", "text"], "left")
 
     j = args.join(
         F.broadcast(cand), F.lower(args.clean_text) == cand.key, "inner"
@@ -209,7 +215,7 @@ def links(
             "inlinks",
             "types",
         )
-        .where(F.col("score") >= min_combined_score)
+        .where(F.col("score") >= MIN_COMBINED_SCORE)
         .withColumn("rn", F.row_number().over(w))
         .where(F.col("rn") == 1)
         .drop("rn")

@@ -7,6 +7,7 @@ overlap a previously kept one (greedy, input-order — O7). Ours is FULLY
 NATIVE Spark:
 
 - the (argument × best-mention) interval-containment join (J3/§1.4) is
+  link.containment_join, the bucketed join linking's context build uses:
   an equi-join on (conv_id, offset-bucket) plus a range predicate — the
   bucket key keeps the join skew-proof even for the hot conversation
   (no per-conversation grouping anywhere in this stage);
@@ -33,7 +34,7 @@ from functools import reduce
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-BUCKET = 256  # chars per offset bucket in the interval join
+from .link import containment_join
 
 _TRIPLE_ID_SQL = (
     "xxhash64(conv_id, turn_idx, sent_num, arg1.offset, rel.offset, "
@@ -98,18 +99,8 @@ def substituted_variants(triples_raw: DataFrame,
         for tag, d in displays.items()
     ])
 
-    # bucketed interval-containment join: mention ∈ [arg start, arg end]
-    args_b = args.selectExpr(
-        "*",
-        f"explode(sequence(cast(offset / {BUCKET} as bigint),"
-        f"                 cast((offset + length(text)) / {BUCKET} as bigint)))"
-        " as bucket",
-    )
-    m_b = m.selectExpr("*", f"cast(m_off / {BUCKET} as bigint) as bucket")
-
-    joined = args_b.join(m_b, ["conv_id", "bucket"]).where(
-        F.expr("m_off >= offset AND m_off + m_len <= offset + length(text)")
-    )
+    # mention ∈ [arg start, arg end]
+    joined = containment_join(m, args, "m_off", "m_len", "offset", "length(text)")
 
     subs = (
         joined.groupBy("conv_id", "tid", "which", "text", "offset", "tag")

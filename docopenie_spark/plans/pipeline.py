@@ -36,15 +36,15 @@ class PipelineResult:
     best_mentions: DataFrame
     best_mentions_expanded: DataFrame
     triples: DataFrame
-    extras: dict = field(default_factory=dict)
+    persisted: list[DataFrame] = field(default_factory=list)
 
     def unpersist(self, blocking: bool = False) -> None:
         """Release every DataFrame run_pipeline persisted (the fan-out
-        points live in ``extras["persisted"]``). Call once downstream
+        points, listed in ``persisted``). Call once downstream
         results are materialized — a long-lived session running many
         pipeline variants leaks executor storage otherwise (VERDICT r3
         #4: eval_diff's shared annotate() output was never freed)."""
-        for df in self.extras.get("persisted", []):
+        for df in self.persisted:
             df.unpersist(blocking)
 
 
@@ -225,8 +225,6 @@ def annotate(
     spark: SparkSession,
     transcripts: DataFrame,
     gazetteer_rows: list[tuple] | None = None,
-    cache: bool = True,
-    storage_level: str = "MEMORY_AND_DISK",
 ) -> DataFrame:
     """The fused segment+tokenize+extract+NER pass alone, persisted —
     pass the result as ``run_pipeline(..., annotated=)`` to share ONE
@@ -241,17 +239,14 @@ def annotate(
     EMPTY."""
     from pyspark import StorageLevel
 
-    gaz_rows, key = _plan_key("annotate", gazetteer_rows, cache=cache,
-                              storage_level=storage_level)
+    gaz_rows, key = _plan_key("annotate", gazetteer_rows)
 
     def build():
         out = _fused_pass(assembly.with_turn_offsets(transcripts), gaz_rows)
-        if not cache:
-            return out, []
-        out = out.persist(getattr(StorageLevel, storage_level))
+        out = out.persist(StorageLevel.MEMORY_AND_DISK)
         return out, [out]
 
-    return _plan_cached(spark, (transcripts,), key, storage_level, build)
+    return _plan_cached(spark, (transcripts,), key, "MEMORY_AND_DISK", build)
 
 
 def run_pipeline(
@@ -261,12 +256,11 @@ def run_pipeline(
     gazetteer_rows: list[tuple] | None = None,
     with_linking: bool = True,
     with_coref_expansion: bool = True,
-    cache: bool = True,
     annotated: DataFrame | None = None,
     storage_level: str = "MEMORY_AND_DISK",
     coref_hot_threshold: int | None = None,
 ) -> PipelineResult:
-    """Build the full DAG. With cache=True the fan-out points
+    """Build the full DAG. The raw input and the fan-out points
     (FANOUT_STAGES) are persisted so shared prefixes compute once — the
     Spark analogue of the reference's lazy-val memoization per document
     (SURVEY.md §4 row 1). At cluster scale these become checkpoint
@@ -293,7 +287,7 @@ def run_pipeline(
     gaz_rows, key = _plan_key("run_pipeline", gazetteer_rows,
                               with_linking=with_linking,
                               with_coref_expansion=with_coref_expansion,
-                              cache=cache, storage_level=storage_level,
+                              storage_level=storage_level,
                               coref_hot_threshold=coref_hot_threshold)
 
     def build():
@@ -301,9 +295,8 @@ def run_pipeline(
         persisted: list[DataFrame] = []
 
         def _p(df: DataFrame) -> DataFrame:
-            if cache:
-                df = df.persist(lvl)
-                persisted.append(df)
+            df = df.persist(lvl)
+            persisted.append(df)
             return df
 
         def stage(name, fn, *inputs):
@@ -318,11 +311,11 @@ def run_pipeline(
         # mapInPandas generator, so the un-persisted turn table ran 2-4×
         # per pipeline materialization). Persist only if the caller has not
         # already chosen a level (persist with a different level raises).
-        if cache and t.storageLevel == StorageLevel.NONE:
+        if t.storageLevel == StorageLevel.NONE:
             t = _p(t)
         result = _stage_graph(stage, t, entity_dict, gaz_rows, coref_hot_threshold,
                               with_linking, with_coref_expansion, annotated)
-        result.extras["persisted"] = persisted
+        result.persisted = persisted
         return result, persisted
 
     return _plan_cached(spark, (transcripts, entity_dict, annotated), key,

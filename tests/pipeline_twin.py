@@ -59,6 +59,15 @@ _WS_RUN = re.compile(r"\s+")
 
 # ------------------------------------------------------------ stage 1-3
 
+def _doc_texts(transcripts_pdf):
+    """conv_id → the raw turns joined by SEP ('\\n') in turn_idx order:
+    the twin of assembly.doc_text_salted and of the text doc_chunks cuts."""
+    convs: dict[str, list] = defaultdict(list)
+    for r in transcripts_pdf.itertuples():
+        convs[r.conv_id].append((int(r.turn_idx), r.text))
+    return {c: "\n".join(t for _, t in sorted(ts)) for c, ts in convs.items()}
+
+
 def _turn_rows(transcripts_pdf):
     """(conv_id → ordered [(turn_idx, turn_offset, norm_text)]); offsets
     are an imperative prefix sum — the twin of assembly.with_turn_offsets'

@@ -198,6 +198,18 @@ def test_chunked_doc_boundary_matches_once():
     got = sorted(off + m.start() for off, m in chunked.finditer(pat))
     want = sorted(m.start() for m in pat.finditer(full))
     assert got == want
+    # assembly.doc_chunks' layout (part + SEP + head of the next part,
+    # keep = len(part) + 1): a match starting at the next part's first
+    # char sits at local index keep of the overlap and belongs to the
+    # next chunk only
+    part0, part1 = "alpha beta", "Dana Kim delta"
+    full = part0 + "\n" + part1
+    chunked = ChunkedDoc(
+        [0, len(part0) + 1], [part0 + "\n" + part1[:8], part1],
+        [len(part0) + 1, len(part1) + 1],
+    )
+    got = sorted(off + m.start() for off, m in chunked.finditer(pat))
+    assert got == [m.start() for m in pat.finditer(full)] == [len(part0) + 1]
 
 
 def test_personal_pronoun_gate_semantics():

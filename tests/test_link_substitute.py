@@ -66,8 +66,9 @@ def test_with_clean_arg_one_leading_one_trailing(spark):
 def test_context_disambiguates_same_alias_entries(spark):
     """T9/T10 (Linker.scala:125-162): two dictionary entries share the
     alias 'Meridian' with EQUAL inlinks — only the arg's sentence context
-    can pick between them. Without context the tie breaks by id; with
-    context the theater-flavored sentence must select Meridian Theater."""
+    can pick between them. Without context (no clusters, no sentences)
+    the tie breaks by id; with context the theater-flavored sentence
+    must select Meridian Theater."""
     from docopenie_spark import schemas
     from docopenie_spark.operators import link
 
@@ -93,7 +94,13 @@ def test_context_disambiguates_same_alias_entries(spark):
         ],
         schemas.ENTITY_DICT,
     )
-    no_ctx = {r.text: r for r in link.links(triples_raw, ed).collect()}
+    no_ctx = {
+        r.text: r
+        for r in link.links(
+            triples_raw, ed, clusters=clusters,
+            sentences=spark.createDataFrame([], schemas.SENTENCES),
+        ).collect()
+    }
     assert no_ctx["The Meridian"].id == "AMBX001"  # id-order tie-break
     with_ctx = {
         r.text: r

@@ -130,7 +130,7 @@ def test_no_create_dataframe_outside_local_table():
 
 # --------------------------------------------------------------- plan cache
 
-def test_plan_cache_sees_files_appended_under_same_path(spark, tmp_path):
+def test_plan_cache_sees_files_appended_under_same_path(spark, tmp_path, monkeypatch):
     """Two reads of one parquet path compare sameSemantics even after an
     append; the cache must not hand back the DAG over the old listing."""
     d = str(tmp_path / "transcripts")
@@ -146,17 +146,28 @@ def test_plan_cache_sees_files_appended_under_same_path(spark, tmp_path):
         n2 = r2.triples.count()
     finally:
         r2.unpersist()
-    fresh = run_pipeline(spark, spark.read.parquet(d), cache=False)
-    assert n2 == fresh.triples.count() > n1
+    with monkeypatch.context() as mp:  # an independent build
+        mp.setenv("SPARK_GRAFT_PLAN_CACHE", "0")
+        fresh = run_pipeline(spark, spark.read.parquet(d))
+    try:
+        assert n2 == fresh.triples.count() > n1
+    finally:
+        fresh.unpersist()
     # an unchanged listing still hits
     r3 = run_pipeline(spark, spark.read.parquet(d))
     assert r3 is r2
     r3.unpersist()
 
 
-def test_run_pipeline_from_two_threads(spark):
+def test_run_pipeline_from_two_threads(spark, monkeypatch):
     inputs = [datagen.transcripts_df(spark, 80, seed=s) for s in (21, 22)]
-    want = [run_pipeline(spark, t, cache=False).triples.count() for t in inputs]
+    want = []
+    with monkeypatch.context() as mp:  # independent builds
+        mp.setenv("SPARK_GRAFT_PLAN_CACHE", "0")
+        for t in inputs:
+            r = run_pipeline(spark, t)
+            want.append(r.triples.count())
+            r.unpersist()
     got, errors = [None, None], []
 
     def work(i):

@@ -212,7 +212,7 @@ def test_plan_cache_hit_reuses_plans_and_repersists(spark):
     n1 = r1.triples.count()
     r1.unpersist()
     assert all(df.storageLevel == StorageLevel.NONE
-               for df in r1.extras["persisted"])
+               for df in r1.persisted)
 
     # a FRESH DataFrame object with the same semantics must hit
     t2 = datagen.transcripts_df(spark, 160)
@@ -221,7 +221,7 @@ def test_plan_cache_hit_reuses_plans_and_repersists(spark):
     assert r2 is r1
     # the hit re-applied every persist registration
     assert all(df.storageLevel != StorageLevel.NONE
-               for df in r2.extras["persisted"])
+               for df in r2.persisted)
     # and the recomputation from inputs yields the same result
     assert r2.triples.count() == n1
     r2.unpersist()

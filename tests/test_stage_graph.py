@@ -79,7 +79,7 @@ def test_run_pipeline_persists_the_fanout_stages_in_order(spark):
     try:
         assert pipeline.FANOUT_STAGES == ("annotated", "clusters", "links",
                                           "best_mentions")
-        persisted = r.extras["persisted"]
+        persisted = r.persisted
         assert len(persisted) == 5
         assert persisted[0] is t  # the raw input, persisted first
         assert "row_kind" in persisted[1].columns  # the annotated table

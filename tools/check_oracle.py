@@ -5,6 +5,10 @@ reported as ERROR and counted as a failure; the sweep goes on to the
 next query. Usage:
 
     python tools/check_oracle.py [sf_dir] [query ...]
+
+The session takes get_spark()'s defaults: ``local[$SPARK_GRAFT_CPUS]``
+with as many shuffle partitions (unset: ``local[*]`` and 32;
+``SPARK_GRAFT_MASTER`` overrides the master).
 """
 
 from __future__ import annotations
@@ -39,7 +43,7 @@ def main():
     import __spark_entry__ as e
     from docopenie_spark.session import get_spark
 
-    spark = get_spark(master="local[8]", shuffle_partitions=8)
+    spark = get_spark()
     spark.sparkContext.setLogLevel("ERROR")
 
     con = duckdb.connect()
