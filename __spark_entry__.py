@@ -372,13 +372,11 @@ _NEARDUP_ORACLE = """
 
 
 def _q_windowed_agg(spark, sf_dir):
-    """Event-time tumbling-window aggregation (the batch twin of the
-    watermarked streaming path in streaming/windows.py — Spark's
-    unified semantics make withWatermark a no-op on batch, so this
-    oracles the exact aggregation expression the stream runs). Window
-    boundaries are epoch-aligned 10-minute buckets in both engines
-    (session timezone pinned UTC); DuckDB's time_bucket uses the same
-    alignment for minute-granularity intervals."""
+    """Event-time tumbling-window aggregation over the events table
+    (streaming/windows.py). Window boundaries are epoch-aligned
+    10-minute buckets in both engines (session timezone pinned UTC);
+    DuckDB's time_bucket uses the same alignment for minute-granularity
+    intervals."""
     from docopenie_spark.streaming.windows import windowed_event_aggregate
 
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
@@ -2115,9 +2113,9 @@ def oracle_sql() -> dict[str, str]:
                    1.0 AS cosine
             FROM embeddings WHERE vec_id % 13 = 0
         """,
-        # Batch twin of the watermarked streaming window agg: DuckDB's
-        # time_bucket and Spark's window() both align minute-granularity
-        # tumbling windows to epoch multiples (session tz pinned UTC).
+        # DuckDB's time_bucket and Spark's window() both align
+        # minute-granularity tumbling windows to epoch multiples
+        # (session tz pinned UTC).
         # round(sum, 4) is boundary-safe here (ADVICE r5): event values
         # are exact 2-decimal doubles, so every group sum sits a full
         # 5e-5 from any 1e-4 rounding boundary — 8 orders above cross-

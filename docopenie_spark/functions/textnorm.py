@@ -63,7 +63,8 @@ def sentence_keep(col: Column | str) -> Column:
 
 
 def asciify_py(s: str) -> str:
-    """Driver/UDF-side twin of :func:`asciify` (same map, for pandas ops)."""
+    """Python twin of :func:`asciify` (same map; the pipeline twin's
+    reference kernel)."""
     return s.translate(str.maketrans(_ASCII_MAP))
 
 
@@ -71,5 +72,6 @@ _INLINE_WS = {ord("\n"): " ", ord("\t"): " ", ord("\r"): " "}
 
 
 def normalize_inline_ws_py(s: str) -> str:
-    """Python twin of :func:`normalize_inline_ws` (streaming state UDF)."""
+    """Python twin of :func:`normalize_inline_ws` (the pipeline twin's
+    reference kernel)."""
     return s.translate(_INLINE_WS)

@@ -12,7 +12,8 @@ mention) is addressed by a char offset into this assembled text.
 Scale notes:
 - ``with_turn_offsets`` is ONE window over conv_id — the pipeline's first
   and (for the narrow stages) only shuffle. Everything sentence-scoped
-  afterwards (segment → tokenize → extract) is a narrow mapInPandas chain.
+  afterwards (segment → tokenize → extract → NER) is the one narrow
+  ``mapInArrow`` pass in fused.py.
 - ``doc_chunks`` feeds the doc-scoped stage (best-mention regex
   fallbacks) the conversation text as BOUNDED overlapping chunks, so the
   hot conversation (~10% of turns) never becomes one giant row.

@@ -93,20 +93,6 @@ def fingerprint(col) -> Column:
     return F.md5(F.lower(F.regexp_replace(col, "\\s+", " ")))
 
 
-def rolling_fingerprints(col, k: int = 8, window: int = 4) -> Column:
-    """Winnowing-style sketch: k-shingle hashes, min per sliding window,
-    distinct — selects stable representative hashes for partial-overlap
-    detection. All higher-order functions, no UDF."""
-    c = F.col(col) if isinstance(col, str) else col
-    n = F.greatest(F.length(c) - (k - 1), F.lit(1))
-    hashes = F.transform(F.sequence(F.lit(1), n), lambda i: F.xxhash64(F.substring(c, i, k)))
-    m = F.greatest(F.size(hashes) - (window - 1), F.lit(1))
-    mins = F.transform(
-        F.sequence(F.lit(1), m), lambda i: F.array_min(F.slice(hashes, i, window))
-    )
-    return F.array_sort(F.array_distinct(mins))
-
-
 def profile(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """One-pass text profile of a documents table."""
     c = F.col(text_col)

@@ -1,29 +1,25 @@
 """Incremental ingest (SURVEY.md §2.9).
 
-The reference is strictly batch; the north rule requires batch too. This
-module is the optional incremental-ingest mode the checkpoint/lineage
-design enables for free: new transcript files land in a directory, a
-``trigger(availableNow=True)`` Structured Streaming pass drains whatever
-arrived since the last checkpoint, runs the NARROW part of the pipeline
-(assembly-scoped stages need the full conversation, so streaming covers
-the turn-scoped spine: normalize → segment → tokenize → extract on
-per-turn offsets is not possible without the window — instead we stage
-raw turns into the bucketed transcripts table and let the batch pipeline
-resume from lineage).
+New transcript files land in a directory; ``ingest_available_now`` runs
+a ``trigger(availableNow=True)`` Structured Streaming pass that drains
+whatever arrived since the last streaming checkpoint and appends those
+turns, exactly once, to a transcripts table partitioned by conversation
+bucket. ``read_ingested`` reads that table back as plain transcripts.
+No NLP stage runs here: turn offsets, coref and everything after them
+need the whole conversation, so they stay in the batch pipeline.
 
-So the streaming job's contract is deliberately small: exactly-once
-append of arriving turns into the bucketed ``transcripts`` stage table;
-the batch pipeline (plans/pipeline.py + sources/checkpoints.py) picks up
-from there. That split mirrors production KG builds: streaming handles
-ingest/dedup, batch handles conversation-scoped semantics.
+Limit: a ``run_checkpointed`` resume over ``read_ingested`` does not
+notice new turns in a bucket it already committed. It counts a bucket
+as done once lineage holds a row for it and never compares the input
+fingerprint recorded there, so after a second drain it serves those
+buckets' old rows without a warning (ROADMAP direction 1). Until that
+is fixed, give each resume over a changed table a fresh ``StageStore``,
+or run ``run_pipeline`` over it.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 
 from .. import schemas
 from ..sources.checkpoints import BUCKET_COL, with_bucket
@@ -58,142 +54,3 @@ def ingest_available_now(
 
 def read_ingested(spark: SparkSession, table_dir: str):
     return spark.read.parquet(table_dir).drop(BUCKET_COL)
-
-
-# ------------------------------------------------ stateful extraction
-
-_STATE_DDL = (
-    "next_off long, next_idx int, pend_idx array<int>, pend_text array<string>"
-)
-_OUT_DDL = (
-    "conv_id string, turn_idx int, sent_num int, "
-    "arg1_text string, arg1_offset bigint, rel_text string, rel_offset bigint, "
-    "arg2_text string, arg2_offset bigint, confidence double, extractor string"
-)
-
-
-def _make_extract_update(max_gap: int | None):
-    """Build the per-conversation stateful update fn.
-
-    State carries the conversation's RUNNING char offset and next expected
-    turn index, plus a buffer of out-of-order turns; each micro-batch
-    extends the assembled document exactly as the batch pipeline's
-    turn-offset scan would — emitted offsets are identical to a batch run
-    over the same turns (asserted by test_streaming).
-
-    ``max_gap`` bounds the out-of-order buffer (VERDICT r2 #7): once the
-    buffered turns span more than ``max_gap`` indexes past the next
-    expected one, the missing index(es) are declared lost — the buffer
-    drains from its smallest present index, assembling exactly what a
-    batch run over the turns that actually arrived would. A gap-closing
-    turn arriving after the skip is LATE DATA and is dropped (its offsets
-    were already assigned to later turns). Only the buffer is evicted;
-    the scalar (offset, next index) state persists so post-skip turns
-    keep correct offsets. (A wall-clock GroupStateTimeout is the other
-    bounding lever, but processing-time timeouts never fire under the
-    availableNow drain-and-stop trigger this module uses — the query
-    loops micro-batches forever waiting for them — so the bound is
-    expressed in turn-index space, which is also deterministic to test.)
-    """
-
-    def _extract_update(key, pdfs, state):
-        import pandas as pd
-
-        from ..functions.textnorm import asciify_py, normalize_inline_ws_py
-        from ..operators.extract import extract_sentence
-        from ..operators.fused import _keep
-        from ..operators.segment import segment_turn
-        from ..operators.tokenize import tokenize_sentence
-
-        conv_id = key[0]
-        if state.exists:
-            next_off, next_idx, pend_idx, pend_text = state.get
-            pending = dict(zip(list(pend_idx), list(pend_text)))
-        else:
-            next_off, next_idx, pending = 0, 0, {}
-
-        for pdf in pdfs:
-            for r in pdf.itertuples():
-                idx = int(r.turn_idx)
-                if idx >= next_idx:  # < next_idx: late after a gap skip
-                    pending[idx] = r.text
-
-        rows = []
-
-        def emit(idx: int, raw: str, off0: int) -> int:
-            text = normalize_inline_ws_py(asciify_py(raw))
-            for i, (local, s) in enumerate(segment_turn(text)):
-                if _keep(s):
-                    toks = tokenize_sentence(s)
-                    off = off0 + local
-                    for a1, rel, a2, conf, ext in extract_sentence(toks, s):
-                        rows.append((
-                            conv_id, idx, i,
-                            a1[0], off + a1[1], rel[0], off + rel[1],
-                            a2[0], off + a2[1], conf, ext,
-                        ))
-            return off0 + len(raw) + 1  # the assembly SEP
-
-        while True:
-            while next_idx in pending:
-                next_off = emit(next_idx, pending.pop(next_idx), next_off)
-                next_idx += 1
-            if (
-                max_gap is not None
-                and pending
-                and max(pending) - next_idx + 1 > max_gap
-            ):
-                next_idx = min(pending)  # the missing index(es) are lost
-            else:
-                break
-
-        keys = sorted(pending)
-        state.update((next_off, next_idx, keys, [pending[k] for k in keys]))
-        if rows:
-            yield pd.DataFrame(
-                rows,
-                columns=["conv_id", "turn_idx", "sent_num",
-                         "arg1_text", "arg1_offset", "rel_text", "rel_offset",
-                         "arg2_text", "arg2_offset", "confidence", "extractor"],
-            )
-
-    return _extract_update
-
-
-def streaming_extract(
-    spark: SparkSession,
-    input_dir: str,
-    output_dir: str,
-    checkpoint_dir: str,
-    max_gap: int | None = None,
-) -> None:
-    """Custom stateful streaming operator (SURVEY.md §2.9 upgrade): as
-    turn files land, ``applyInPandasWithState`` keeps per-conversation
-    (running offset, next turn index, out-of-order buffer) state and
-    emits extraction rows INCREMENTALLY with exactly the offsets a batch
-    run over the full conversation would produce. Exactly-once via the
-    streaming checkpoint; drain-and-stop via availableNow.
-
-    ``max_gap`` bounds the out-of-order buffer (see
-    ``_make_extract_update``): a conversation stuck on a missing turn
-    index skips it once the buffered turns span more than ``max_gap``
-    indexes, instead of accumulating every later turn in state forever.
-    """
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    stream = spark.readStream.schema(schemas.TRANSCRIPTS).parquet(input_dir)
-    out = stream.groupBy("conv_id").applyInPandasWithState(
-        _make_extract_update(max_gap),
-        outputStructType=_OUT_DDL,
-        stateStructType=_STATE_DDL,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    q = (
-        out.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()

@@ -1,45 +1,28 @@
-"""Watermarked event-time windowed aggregation — the standard
-Structured-Streaming late-data pattern (readStream → watermark →
-tumbling-window agg → writeStream), complementing the custom stateful
-operator in ``incremental.py``.
+"""Event-time tumbling-window aggregation behind the ``windowed_agg``
+driver query.
 
-The aggregation itself is ONE declarative expression shared by the
-batch and streaming paths (Spark's unified semantics: ``withWatermark``
-is a no-op on a batch DataFrame, so the batch twin both oracle-checks
-the logic in DuckDB and states the exactly-once answer the stream
-converges to). At 100 TB-rate ingest this is the shape that scales:
-the window+key groupBy is a hash aggregation partitioned by (window,
-key), state is bounded by the watermark horizon (windows older than
-the watermark are finalized, emitted once in append mode, and their
-state dropped), and late rows beyond the horizon are dropped at the
-source — no unbounded state, no reprocessing.
+One declarative expression: a hash aggregation on (window, key) with a
+map-side partial aggregate before one shuffle, no Python stage. Window
+boundaries are epoch-aligned, so DuckDB's ``time_bucket`` oracle agrees
+with Spark's ``window()`` (session timezone pinned UTC in session.py).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
 def windowed_event_aggregate(
     events: DataFrame,
     window_len: str = "10 minutes",
-    watermark: str = "30 minutes",
     ts_col: str = "ts",
     key_col: str = "event_type",
     value_col: str = "value",
 ) -> DataFrame:
-    """Tumbling-window (window_start, key) → (count, sum) aggregation.
-
-    Works on a streaming OR batch ``events`` DataFrame. On a stream the
-    watermark bounds state and finalizes windows (append mode emits each
-    window exactly once, when the watermark passes its end); on batch it
-    is the plain groupBy — the DuckDB ``time_bucket`` oracle checks that
-    twin (epoch-aligned boundaries agree between the engines; session
-    timezone is pinned UTC in session.py)."""
+    """Tumbling-window (window_start, key) → (count, sum) aggregation."""
     return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(F.window(ts_col, window_len).alias("win"), F.col(key_col))
+        events.groupBy(F.window(ts_col, window_len).alias("win"), F.col(key_col))
         .agg(
             F.count("*").alias("n_events"),
             F.round(F.sum(value_col), 4).alias("sum_value"),
@@ -51,37 +34,4 @@ def windowed_event_aggregate(
             "n_events",
             "sum_value",
         )
-    )
-
-
-def stream_windowed_events(
-    spark: SparkSession,
-    source_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    schema,
-    window_len: str = "10 minutes",
-    watermark: str = "30 minutes",
-    max_files_per_trigger: int | None = None,
-) -> None:
-    """File-source stream → watermarked windowed agg → parquet sink,
-    processing everything currently in ``source_dir`` (availableNow)
-    then stopping. Append output mode: a window row is written exactly
-    once, after the watermark passes its end — so rows later than the
-    watermark horizon are DROPPED (the late-data contract the tests
-    pin), and re-running with the same checkpoint is idempotent.
-    ``max_files_per_trigger`` splits the backlog into micro-batches
-    (the watermark advances BETWEEN batches — one file per batch makes
-    window finalization observable in tests)."""
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(source_dir)
-    agg = windowed_event_aggregate(stream, window_len, watermark)
-    (
-        agg.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start(out_dir)
-        .awaitTermination()
     )

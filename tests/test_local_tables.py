@@ -13,7 +13,7 @@ from pyspark.sql.types import StructType
 
 from docopenie_spark import datagen, schemas
 from docopenie_spark.functions.sqltext import sql_strlist
-from docopenie_spark.operators import multimodal, similarity
+from docopenie_spark.operators import similarity
 from docopenie_spark.plans.pipeline import run_pipeline
 from docopenie_spark.session import local_table
 
@@ -25,6 +25,11 @@ LINEAGE_DDL = (
     "schema_fp string"
 )
 METRICS_DDL = "run_id string, stage string, metric string, value double, ts double"
+# a binary column plus a nullable nested struct that is None in one row
+MEDIA_DDL = (
+    "media_id string not null, kind string not null, payload binary not null, "
+    "meta struct<mime: string, width: int, height: int, duration_ms: int>"
+)
 
 
 def _tables():
@@ -47,10 +52,8 @@ def _tables():
         "centroids": (lambda s: similarity.centroids_table(s, cents),
                       [(0, cents[0]), (1, cents[1])],
                       "cell int, cvec array<double>"),
-        "media": (lambda s: local_table(s, media_rows, multimodal.MEDIA),
-                  media_rows, multimodal.MEDIA),
-        "synthetic_media": (lambda s: multimodal.synthetic_media(s, n=6),
-                            None, multimodal.MEDIA),
+        "media": (lambda s: local_table(s, media_rows, MEDIA_DDL),
+                  media_rows, MEDIA_DDL),
         "empty_best_mentions": (lambda s: local_table(s, [], schemas.BEST_MENTIONS),
                                 [], schemas.BEST_MENTIONS),
         "lineage": (lambda s: local_table(
@@ -74,10 +77,9 @@ def test_helper_tables_are_local_relations(spark, name):
     assert analyzed.nodeName() == "LocalRelation", analyzed.toString()
     want = StructType.fromDDL(schema) if isinstance(schema, str) else schema
     assert _jvm_schema(df) == want  # nullability included
-    if rows is not None:
-        # same rows as the Python-RDD path it replaces
-        old = spark.createDataFrame(rows, schema)
-        assert sorted(map(repr, df.collect())) == sorted(map(repr, old.collect()))
+    # same rows as the Python-RDD path it replaces
+    old = spark.createDataFrame(rows, schema)
+    assert sorted(map(repr, df.collect())) == sorted(map(repr, old.collect()))
 
 
 def test_local_table_rejects_none_in_non_nullable_field(spark):

@@ -2,16 +2,13 @@
 embedding-LSH candidate shuffle + hot-bucket guard, broadcast IVF
 quantizer, corpus-scale pr_curve quantization; the kg_eval_diff
 non-vacuity test now lives in test_oracles.py) + ADVICE r5 items
-(windowed_agg rounding-margin pin, PNG decompression-bomb guard,
-bounded ivf_topk training sample).
+(windowed_agg rounding-margin pin, bounded ivf_topk training sample).
 """
 
 import contextlib
 import io
 import math
 import re
-import struct
-import zlib
 from collections import Counter
 
 import pytest
@@ -20,7 +17,6 @@ from pyspark.sql import functions as F
 
 from docopenie_spark import datagen
 from docopenie_spark.operators import classifier, similarity
-from docopenie_spark.operators.multimodal import _decode_png
 from docopenie_spark.plans.evaluation import classifier_pr
 
 
@@ -199,68 +195,6 @@ def test_classifier_pr_quantizes_continuous_scores_by_default(spark):
     plan = classifier_pr(scored)._jdf.queryExecution().executedPlan().toString()
     assert "hashpartitioning(confidence" in plan
     assert "HashAggregate" in plan
-
-
-# --------------------- ADVICE: PNG decompression-bomb guard
-
-def _png(w, h, idat, ctype=0):
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, ctype, 0, 0, 0)
-    def chunk(t, d):
-        return struct.pack(">I", len(d)) + t + d + b"\0\0\0\0"
-    return (b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
-            + chunk(b"IDAT", idat) + chunk(b"IEND", b""))
-
-
-def test_png_absurd_dimensions_rejected_before_inflate():
-    payload = _png(1 << 20, 1 << 20, zlib.compress(b"\x00" * 8))
-    with pytest.raises(ValueError, match="outside decode bounds"):
-        _decode_png(payload)
-
-
-def test_png_oversized_stream_fails_at_cap_not_full_size():
-    """A 2×2 gray PNG whose IDAT inflates to 10 MB must fail at the
-    expected-size cap — decompressobj(max_length) stops at expected+1
-    bytes, never materializing the bomb."""
-    payload = _png(2, 2, zlib.compress(b"\x00" * 10_000_000))
-    with pytest.raises(ValueError, match="length mismatch"):
-        _decode_png(payload)
-
-
-def test_png_undersized_stream_still_rejected():
-    payload = _png(4, 4, zlib.compress(b"\x00" * 3))
-    with pytest.raises(ValueError, match="length mismatch"):
-        _decode_png(payload)
-
-
-def test_png_valid_average_paeth_rows_decode():
-    """The pixel-stepped Average/Paeth rewrite: a 3×2 RGB image filtered
-    (row 0: Average, row 1: Paeth) decodes to the closed-form values of
-    the per-byte reference recurrence."""
-    import numpy as np
-
-    px = np.arange(18, dtype=np.uint8).reshape(2, 3, 3) * 7 % 251
-    # encode: filter 3 for row 0 (up = 0), filter 4 for row 1
-    rows = []
-    prev = np.zeros(9, dtype=np.int32)
-    for y, f in ((0, 3), (1, 4)):
-        cur = px[y].reshape(-1).astype(np.int32)
-        enc = np.empty(9, dtype=np.uint8)
-        for x in range(9):
-            a = cur[x - 3] if x >= 3 else 0
-            b = prev[x]
-            c = prev[x - 3] if x >= 3 else 0
-            if f == 3:
-                pred = (a + b) >> 1
-            else:
-                pa, pb, pc = abs(b - c), abs(a - c), abs(a + b - 2 * c)
-                pred = a if pa <= pb and pa <= pc else (b if pb <= pc else c)
-            enc[x] = (cur[x] - pred) & 0xFF
-        rows.append(bytes([f]) + enc.tobytes())
-        prev = cur
-    payload = _png(3, 2, zlib.compress(b"".join(rows)), ctype=2)
-    out = _decode_png(payload)
-    assert out.shape == (2, 3, 3)
-    assert (out == px).all()
 
 
 # --------------------- ADVICE: windowed_agg rounding-margin pin

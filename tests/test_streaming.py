@@ -1,5 +1,5 @@
-"""availableNow incremental ingest: exactly-once, resume picks up only
-new files."""
+"""availableNow incremental ingest (exactly-once, resume picks up only
+new files) and the windowed_agg plan shape."""
 
 from docopenie_spark import datagen
 from docopenie_spark.streaming.incremental import ingest_available_now, read_ingested
@@ -23,180 +23,6 @@ def test_available_now_exactly_once(spark, tmp_path):
     datagen.transcripts_df(spark, 40, seed=7).write.mode("append").parquet(inp)
     ingest_available_now(spark, inp, tbl, cp, buckets=4)
     assert read_ingested(spark, tbl).count() == 120
-
-
-def test_max_gap_bounds_buffer_and_drops_late_gap_closer(spark, tmp_path):
-    """VERDICT r2 #7: the out-of-order buffer is bounded. Once buffered
-    turns span more than ``max_gap`` indexes past a permanently-missing
-    one, the missing index is skipped and the buffer drains — extracting
-    with the offsets a batch run over the DELIVERED turns would assign —
-    and a gap-closing turn arriving after the skip is late data
-    (dropped). Turns after the skip keep correct offsets."""
-    import pyspark.sql.functions as F
-
-    from docopenie_spark.operators import assembly, fused
-    from docopenie_spark.plans.pipeline import default_dictionaries
-    from docopenie_spark.streaming.incremental import streaming_extract
-
-    inp = str(tmp_path / "gin")
-    out = str(tmp_path / "gout")
-    cp = str(tmp_path / "gcp")
-
-    t = datagen.transcripts_df(spark, 160).cache()
-    mine = sorted(
-        r.conv_id for r in t.select("conv_id").distinct().collect()
-        if r.conv_id != "conv_hot"
-    )[0]
-    m = t.where(F.col("conv_id") == mine)
-
-    # batch 1: turns 0,1,3,4 — turn 2 missing; buffered span (3..4) is
-    # within max_gap=3, so 3,4 stay buffered
-    m.where(F.col("turn_idx").isin(0, 1, 3, 4)).write.mode("append").parquet(inp)
-    streaming_extract(spark, inp, out, cp, max_gap=3)
-    first = spark.read.parquet(out)
-    assert first.where(F.col("turn_idx") > 1).isEmpty()
-
-    # batch 2: turns 5,6 arrive — the buffer now spans 3..6 (> max_gap
-    # past the missing index 2): turn 2 is declared lost, 3..6 drain
-    m.where(F.col("turn_idx").isin(5, 6)).write.mode("append").parquet(inp)
-    streaming_extract(spark, inp, out, cp, max_gap=3)
-    flushed = spark.read.parquet(out).where(F.col("conv_id") == mine)
-    assert not flushed.where(F.col("turn_idx").isin(3, 4, 5, 6)).isEmpty()
-
-    # the gap closes late: turn 2 arrives (dropped) along with turn 7
-    m.where(F.col("turn_idx").isin(2, 7)).write.mode("append").parquet(inp)
-    streaming_extract(spark, inp, out, cp, max_gap=3)
-
-    got = spark.read.parquet(out).where(F.col("conv_id") == mine).select(
-        "conv_id", "turn_idx", "sent_num",
-        "arg1_text", "arg1_offset", "rel_text", "rel_offset",
-        "arg2_text", "arg2_offset", "confidence", "extractor",
-    )
-    assert got.where(F.col("turn_idx") == 2).isEmpty(), "late gap-closer not dropped"
-
-    # ≡ batch pipeline over the turns that were actually PROCESSED
-    fn, gz, ln = default_dictionaries()
-    delivered = m.where(F.col("turn_idx") != 2)
-    batch = fused.split_triples(
-        fused.parse_extract_annotate(assembly.with_turn_offsets(delivered), fn, gz, ln)
-    ).select(
-        "conv_id", "turn_idx", "sent_num",
-        F.col("arg1.text").alias("arg1_text"), F.col("arg1.offset").alias("arg1_offset"),
-        F.col("rel.text").alias("rel_text"), F.col("rel.offset").alias("rel_offset"),
-        F.col("arg2.text").alias("arg2_text"), F.col("arg2.offset").alias("arg2_offset"),
-        "confidence", "extractor",
-    )
-    assert got.exceptAll(batch).isEmpty(), "streaming ⊄ batch-over-delivered"
-    assert batch.exceptAll(got).isEmpty(), "batch-over-delivered ⊄ streaming"
-    assert got.count() == batch.count() > 0
-
-
-def test_stateful_streaming_extract_matches_batch(spark, tmp_path):
-    """applyInPandasWithState incremental extraction: turns arriving over
-    two micro-batches WITH an out-of-order gap must emit exactly the
-    batch pipeline's raw triples (same offsets — the state carries the
-    running document offset and buffers the gap until it fills)."""
-    import pyspark.sql.functions as F
-
-    from docopenie_spark import schemas
-    from docopenie_spark.operators import assembly, fused
-    from docopenie_spark.plans.pipeline import default_dictionaries
-    from docopenie_spark.streaming.incremental import streaming_extract
-
-    inp = str(tmp_path / "sin")
-    out = str(tmp_path / "sout")
-    cp = str(tmp_path / "scp")
-
-    t = datagen.transcripts_df(spark, 80).cache()
-    # batch 1: every conversation's turns EXCEPT turn 2 (a gap)
-    t.where(F.col("turn_idx") != 2).write.mode("append").parquet(inp)
-    streaming_extract(spark, inp, out, cp)
-    first = spark.read.parquet(out)
-    # nothing beyond the gap may be emitted yet
-    assert first.where(F.col("turn_idx") > 2).isEmpty()
-
-    # batch 2: the missing turn arrives → the buffered tail drains
-    t.where(F.col("turn_idx") == 2).write.mode("append").parquet(inp)
-    streaming_extract(spark, inp, out, cp)
-    got = spark.read.parquet(out).select(
-        "conv_id", "turn_idx", "sent_num",
-        "arg1_text", "arg1_offset", "rel_text", "rel_offset",
-        "arg2_text", "arg2_offset", "confidence", "extractor",
-    )
-
-    fn, gz, ln = default_dictionaries()
-    batch = fused.split_triples(
-        fused.parse_extract_annotate(assembly.with_turn_offsets(t), fn, gz, ln)
-    ).select(
-        "conv_id", "turn_idx", "sent_num",
-        F.col("arg1.text").alias("arg1_text"), F.col("arg1.offset").alias("arg1_offset"),
-        F.col("rel.text").alias("rel_text"), F.col("rel.offset").alias("rel_offset"),
-        F.col("arg2.text").alias("arg2_text"), F.col("arg2.offset").alias("arg2_offset"),
-        "confidence", "extractor",
-    )
-    assert got.exceptAll(batch).isEmpty(), "streaming ⊄ batch"
-    assert batch.exceptAll(got).isEmpty(), "batch ⊄ streaming"
-    assert got.count() == batch.count() > 0
-
-
-def _mk_events(spark, rows):
-    return spark.createDataFrame(
-        rows, "event_id bigint, ts timestamp, event_type string, value double"
-    )
-
-
-def test_windowed_stream_equals_batch_and_drops_late(spark, tmp_path):
-    """Watermarked tumbling-window agg (streaming/windows.py): the
-    availableNow stream's append-mode output must equal the batch twin
-    over the on-time rows — and a late row arriving after its window
-    was finalized (watermark passed window end) is DROPPED, never a
-    duplicate or an update.
-
-    File layout drives the watermark deterministically: one file per
-    micro-batch (maxFilesPerTrigger=1, lexicographic arrival), the last
-    on-time file is a far-future sentinel whose only job is to push the
-    watermark past every real window's end so append mode emits them."""
-    import datetime as dt
-
-    from docopenie_spark.streaming.windows import (
-        stream_windowed_events, windowed_event_aggregate,
-    )
-
-    t0 = dt.datetime(2024, 1, 1, 0, 0, 0)
-    main = [
-        (i, t0 + dt.timedelta(minutes=m, seconds=13), k, 1.5 * (i + 1))
-        for i, (m, k) in enumerate(
-            [(0, "click"), (4, "view"), (9, "click"), (12, "view"),
-             (17, "click"), (23, "error"), (29, "view"), (31, "click")]
-        )
-    ]
-    sentinel = [(99, t0 + dt.timedelta(hours=6), "click", 0.0)]
-    src, out, chk = str(tmp_path / "src"), str(tmp_path / "out"), str(tmp_path / "chk")
-    schema = _mk_events(spark, main).schema
-    _mk_events(spark, main).coalesce(1).write.parquet(src + "/f=0")
-    _mk_events(spark, sentinel).coalesce(1).write.parquet(src + "/f=1")
-    # parquet dir-as-file-source: point the stream at the glob of parts
-    stream_windowed_events(
-        spark, src + "/f=*", out, chk, schema, max_files_per_trigger=1
-    )
-    got = spark.read.parquet(out)
-    want = windowed_event_aggregate(_mk_events(spark, main))
-    assert got.exceptAll(want).isEmpty(), "stream emitted rows batch would not"
-    assert want.exceptAll(got).isEmpty(), "stream missed finalized windows"
-    n_before = got.count()
-    assert n_before == want.count() > 0
-
-    # late arrival: inside the (already finalized) first window, but the
-    # watermark (6h - 30min) is far past it -> dropped on the second run
-    _mk_events(
-        spark, [(100, t0 + dt.timedelta(minutes=1), "click", 1000.0)]
-    ).coalesce(1).write.parquet(src + "/f=2")
-    stream_windowed_events(
-        spark, src + "/f=*", out, chk, schema, max_files_per_trigger=1
-    )
-    after = spark.read.parquet(out)
-    assert after.count() == n_before, "late row must be dropped, not appended"
-    assert after.exceptAll(want).isEmpty() and want.exceptAll(after).isEmpty()
 
 
 def test_windowed_agg_plan_shape(spark):

@@ -8,7 +8,8 @@ next query. Usage:
 
 The session takes get_spark()'s defaults: ``local[$SPARK_GRAFT_CPUS]``
 with as many shuffle partitions (unset: ``local[*]`` and 32;
-``SPARK_GRAFT_MASTER`` overrides the master).
+``SPARK_GRAFT_MASTER`` overrides the master), but the test suite's 4g
+driver heap, not get_spark()'s 8g.
 """
 
 from __future__ import annotations
@@ -43,7 +44,7 @@ def main():
     import __spark_entry__ as e
     from docopenie_spark.session import get_spark
 
-    spark = get_spark()
+    spark = get_spark(extra_conf={"spark.driver.memory": "4g"})
     spark.sparkContext.setLogLevel("ERROR")
 
     con = duckdb.connect()
