@@ -1058,12 +1058,12 @@ def _expansion_oracle_sql() -> str:
 # this round): a TWO-injection corpus ("Brian Okafor" full person +
 # "Zorblatt" no-dictionary word) constrains the 330-LoC rule cascade to
 # exactly two live branches, both closed-form:
-# - P-a (bestmention.best_person:486-494): candidate PERSON names with
+# - P-a (bestmention.best_person:493-501): candidate PERSON names with
 #   more (but <4) words extending the source by word-prefix/suffix,
 #   picked by _pick's (distance, occurrence, display, entity) order —
 #   _nearest_occ breaks distance ties toward the smaller offset, so the
 #   global min over all candidate occurrences is exact;
-# - P-b (:496-513): the conservative person regex over the CONVERSATION
+# - P-b (:503-520): the conservative person regex over the CONVERSATION
 #   text (turns joined by SEP='\n'). On this corpus its hits reduce to
 #   capitalized runs of EXACTLY two doc-words flanked by lowercase
 #   words with surrounding separators, and re.finditer's non-overlap
@@ -1077,7 +1077,8 @@ def _expansion_oracle_sql() -> str:
 # through to best_person(probably_person=False) = P-a only. The
 # distinct-pass semantics are mirrored exactly: resolution at
 # rep_off=min(occurrence), identity when the rep-pick equals the name,
-# per-occurrence re-pick only for multi-entry (dep) names.
+# and, only for names with more than one matching entry, the pick at
+# each occurrence (the engine's ``picks`` map, read by offset).
 _BEM_INJECT = [
     ("\\bscan\\b", "Brian Okafor"),
     ("\\bslow\\b", "Zorblatt"),
@@ -1086,9 +1087,9 @@ _BEM_INJECT = [
 
 def _q_kg_best_mention_rules(spark, sf_dir):
     """T11 rule engine externally checked — run_pipeline's
-    ``.best_mentions`` (distinct-pass Python rules + JVM occurrence
-    fan-out + native per-occurrence proximity re-pick) on the
-    two-injection corpus."""
+    ``.best_mentions`` (distinct-pass Python rules, which also return the
+    per-occurrence proximity picks of offset-dependent names + JVM
+    occurrence fan-out) on the two-injection corpus."""
     t = _injected_transcripts(spark, sf_dir, _BEM_INJECT)
     bems = run_pipeline(spark, t, with_linking=False,
                         with_coref_expansion=False).best_mentions

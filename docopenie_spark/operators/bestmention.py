@@ -59,8 +59,10 @@ identity after the pick.
 Execution shape: the rule engine runs ONCE PER DISTINCT (conv_id,
 entity_type, name) in a cogrouped ``applyInPandas`` against CHUNKED doc
 text (bounded rows even for the hot conversation — assembly.doc_chunks);
-per-occurrence fan-out happens as a JVM hash join, with offset-dependent
-(multi-candidate) names re-resolved natively via nested array_min. The
+per-occurrence fan-out happens as a JVM hash join. For an offset-dependent
+(multi-candidate) name the engine also returns its proximity pick at each
+of the name's occurrences, a map the join's projection looks up by
+offset, so the pick rule is stated once, in :func:`_pick`. The
 gazetteer ships as a broadcast variable (the reference loads it as a
 process singleton, :611-637). :func:`best_mentions` is the stage's one
 Spark path; :func:`resolve_conversation` runs the same rules per
@@ -294,19 +296,24 @@ def _res(kind, best, ent, count, matches=None, contained=None):
     }
 
 
-def _pick(kind: str, matching: dict, off: int):
+def _pick(kind: str, matching, off: int):
     """Nearest-occurrence proximity selection — reproduces the reference's
     sortBy(|cand.offset - entity.offset|).head (ref :129-132); count =
-    1/|distinct display names| (ref :433). Tie order (distance,
-    occurrence, disp, ent) matches the native dep-path array_min EXACTLY.
+    1/|distinct display names| (ref :433). Ties break by (distance,
+    occurrence, display, entity).
 
     ``matching`` is keyed by (display, candidate entity name) with the
     offsets OF THAT CANDIDATE — two candidates renaming to the same
     display stay separate entries, so the emitted entity text and
     occurrence offset always come from the same candidate (the reference's
-    acronymMatches.head keeps one consistent candidate; ADVICE r2)."""
-    entries = sorted((d, e, sorted(o)) for (d, e), o in matching.items())
-    (dist, occ), disp, ent = min(
+    acronymMatches.head keeps one consistent candidate; ADVICE r2). With
+    more than one entry the pick varies with the offset: the result keeps
+    the sorted entries [(disp, ent, sorted offs)] as ``matches``, which
+    ``matching`` also accepts, to re-pick at another occurrence."""
+    entries = matching if isinstance(matching, list) else sorted(
+        (d, e, sorted(o)) for (d, e), o in matching.items()
+    )
+    (_, occ), disp, ent = min(
         (_nearest_occ(offs, off), d, e) for d, e, offs in entries
     )
     ent_ref = (ent, disp, occ) if kind == "full" else (ent, ent, occ)
@@ -536,6 +543,21 @@ def _entity_ref(t, typ):
     return {"text": t[0], "offset": int(t[2]), "name": t[1], "entity_type": typ}
 
 
+def _row(name, typ: str, res) -> tuple:
+    """Rule result → (kind, best_mention, best_entity, container_entity,
+    contained_entity, candidate_count). Identity when no rule fired or the
+    pick is the name itself (``name=None`` never demotes). A full pick's
+    entity carries the mention's type; container and containment
+    provenance is a LOCATION."""
+    if res is None or res["best"] == name:
+        return ("identity", name, None, None, None, 1.0)
+    full = res["kind"] == "full"
+    ent = _entity_ref(res["ent"], typ if full else "LOCATION")
+    return (res["kind"], res["best"], ent if full else None,
+            None if full else ent, _entity_ref(res["contained"], "LOCATION"),
+            res["count"])
+
+
 def resolve_conversation(ents: pd.DataFrame, doc: ChunkedDoc,
                          gaz: Gazetteer) -> list[tuple]:
     """All entities of one conversation → best-mention rows (T11),
@@ -563,15 +585,8 @@ def resolve_conversation(ents: pd.DataFrame, doc: ChunkedDoc,
             if res is None or res["matches"] is None:
                 full_memo[fkey] = res  # cannot vary with offset
         target = {"text": r.text, "offset": off, "name": name, "entity_type": typ}
-        if res is None or res["best"] == name:
-            rows.append((conv_id, "identity", target, name, None, None, None, 1.0, None))
-            continue
-        kind = res["kind"]
-        loc_typ = "LOCATION"
-        be = _entity_ref(res["ent"], typ) if kind == "full" else None
-        ce = _entity_ref(res["ent"], loc_typ) if kind in ("container", "containment") else None
-        cde = _entity_ref(res["contained"], loc_typ) if kind == "containment" else None
-        rows.append((conv_id, kind, target, res["best"], be, ce, cde, res["count"], None))
+        kind, *fields = _row(name, typ, res)
+        rows.append((conv_id, kind, target, *fields, None))
     return rows
 
 
@@ -582,8 +597,9 @@ _RESOLVED = (
     f"best_entity {_ENT_REF_DDL}, "
     f"container_entity {_ENT_REF_DDL}, "
     f"contained_entity {_ENT_REF_DDL}, "
-    "candidate_count double, dep boolean, "
-    "matches array<struct<disp:string,ent:string,offs:array<bigint>>>"
+    "candidate_count double, "
+    f"picks map<bigint,struct<best_mention:string,best_entity:{_ENT_REF_DDL},"
+    f"container_entity:{_ENT_REF_DDL}>>"
 )
 
 
@@ -598,13 +614,15 @@ def best_mentions(entities: DataFrame, doc_chunks: DataFrame,
     boundary. Doc text arrives as bounded CHUNKS (assembly.doc_chunks),
     so no single row grows with conversation size.
 
-    Offset-dependent resolutions (more than one matching candidate name —
-    proximity decides per occurrence, ref :129-132) are detected in the
-    distinct pass and re-resolved per occurrence FULLY NATIVELY: the
-    matching set rides along as an array column and a nested
-    array_min(transform(...)) reproduces _pick's exact tie order
-    (distance, occurrence, display, entity) per occurrence. No explode,
-    no Python, no self-join."""
+    A name is resolved at its first occurrence (``rep_off``), which also
+    decides identity. When that resolution is offset-dependent (more than
+    one matching candidate — proximity decides per occurrence, ref
+    :129-132), the engine also emits ``picks``: the pick's best_mention,
+    best_entity and container_entity at each of the name's distinct
+    offsets, re-picked from the result's sorted candidate entries. The
+    join's projection reads ``picks[offset]`` ahead of the name's own
+    fields; candidate_count (1/|distinct displays|) does not vary with
+    the offset, and contained_entity is null on such names."""
     spark = entities.sparkSession
     b_gaz = content_broadcast(
         spark.sparkContext, Gazetteer(gazetteer_rows),
@@ -616,28 +634,10 @@ def best_mentions(entities: DataFrame, doc_chunks: DataFrame,
         F.min("offset").alias("rep_off"),
     )
 
-    def _emit(conv_id, name, typ, res):
-        if res is None or res["best"] == name:
-            return (conv_id, typ, name, "identity", name,
-                    None, None, None, 1.0, False, None)
-        kind = res["kind"]
-        be = _entity_ref(res["ent"], typ) if kind == "full" else None
-        ce = _entity_ref(res["ent"], "LOCATION") if kind != "full" else None
-        cde = _entity_ref(res["contained"], "LOCATION") if kind == "containment" else None
-        dep = res["matches"] is not None
-        matches = None
-        if dep:
-            matches = [
-                {"disp": d, "ent": e, "offs": offs}
-                for d, e, offs in res["matches"]
-            ]
-        return (conv_id, typ, name, kind, res["best"], be, ce, cde,
-                res["count"], dep, matches)
-
     def resolve_names(names_pdf: pd.DataFrame, chunks_pdf: pd.DataFrame) -> pd.DataFrame:
         cols = ["conv_id", "entity_type", "name", "kind", "best_mention",
                 "best_entity", "container_entity", "contained_entity",
-                "candidate_count", "dep", "matches"]
+                "candidate_count", "picks"]
         if names_pdf.empty or chunks_pdf.empty:
             return pd.DataFrame([], columns=cols)
         gaz = b_gaz.value
@@ -652,11 +652,18 @@ def best_mentions(entities: DataFrame, doc_chunks: DataFrame,
         for r in names_pdf.itertuples():
             by_type.setdefault(r.entity_type, {})[r.name] = [int(o) for o in r.offs]
         memo: dict = {}
-        rows = [
-            _emit(conv_id, r.name, r.entity_type,
-                  _resolve_one(r.name, int(r.rep_off), r.entity_type, by_type, doc, gaz, memo))
-            for r in names_pdf.itertuples()
-        ]
+        rows = []
+        for r in names_pdf.itertuples():
+            name, typ = r.name, r.entity_type
+            res = _resolve_one(name, int(r.rep_off), typ, by_type, doc, gaz, memo)
+            row = _row(name, typ, res)
+            picks = None
+            if row[0] != "identity" and res["matches"] is not None:
+                picks = {
+                    o: _row(None, typ, _pick(res["kind"], res["matches"], o))[1:4]
+                    for o in by_type[typ][name]
+                }
+            rows.append((conv_id, typ, name, *row, picks))
         return pd.DataFrame(rows, columns=cols)
 
     resolved = (
@@ -667,62 +674,20 @@ def best_mentions(entities: DataFrame, doc_chunks: DataFrame,
 
     joined = entities.join(resolved, ["conv_id", "entity_type", "name"], "left")
 
+    # ONE projection for every row: splitting ``joined`` into filtered
+    # branches and unioning them runs the rule-engine cogroup once per
+    # branch (measured r7: 6.1s → ~2.5s at sf0.1 with one projection).
     ref_ddl = schemas.ENTITY_REF.simpleString()
-    target = (
-        f"cast(struct(text, offset, name, entity_type) as {ref_ddl}) as target"
-    )
-
-    # ONE projection for both the independent and the dep (per-occurrence
-    # proximity) paths, branching per column on the dep flag — the
-    # round-6 version split `joined` into two filtered branches and
-    # unioned them, which executed the rule-engine cogroup once PER
-    # BRANCH (measured r7: the whole Python cogroup ran 2-3× per
-    # materialization; merging the branches runs it once, 6.1s → ~2.5s
-    # at sf0.1). Row multiset is identical — every row satisfies exactly
-    # one branch — only the union's concatenation order is gone, which
-    # was never part of the contract.
-    #
-    # dep path: the inner pick per element is bound ONCE in a nested
-    # struct (Catalyst does not CSE inside lambda bodies), and the outer
-    # array_min orders lexicographically on ((distance, occurrence),
-    # display, entity) — exactly _pick's tie order.
-    best = (
-        "array_min(transform(matches, m -> struct("
-        " array_min(transform(m.offs,"
-        "   o -> struct(abs(o - offset) as d, o as occ))) as pick,"
-        " m.disp as disp, m.ent as ent)))"
-    )
-    picked_full = (
-        f"cast(struct(({best}).ent as text, ({best}).pick.occ as offset,"
-        f" ({best}).disp as name, entity_type) as {ref_ddl})"
-    )
-    picked_container = (
-        f"cast(struct(({best}).ent as text, ({best}).pick.occ as offset,"
-        f" ({best}).ent as name, 'LOCATION' as entity_type) as {ref_ddl})"
-    )
-    dep_f = "coalesce(dep, false)"
     return joined.selectExpr(
         "conv_id",
-        # dep rows always carry a non-null kind, so the coalesce is the
-        # identity on them — one expression serves both paths
         "coalesce(kind, 'identity') as kind",
-        target,
-        f"CASE WHEN {dep_f} THEN ({best}).disp"
-        " ELSE coalesce(best_mention, name) END as best_mention",
-        f"CASE WHEN {dep_f}"
-        f" THEN (CASE WHEN kind = 'full' THEN {picked_full} END)"
-        f" ELSE cast(best_entity as {ref_ddl}) END as best_entity",
-        f"CASE WHEN {dep_f}"
-        f" THEN (CASE WHEN NOT (kind = 'full') THEN {picked_container} END)"
-        f" ELSE cast(container_entity as {ref_ddl}) END as container_entity",
-        f"CASE WHEN NOT {dep_f}"
-        f" THEN cast(contained_entity as {ref_ddl}) END as contained_entity",
-        # dep: 1/|distinct DISPLAYS| — entries are per (display,
-        # candidate), so two candidates renaming to one display count
-        # once (≡ _pick)
-        f"CASE WHEN {dep_f}"
-        " THEN 1.0D / size(array_distinct(transform(matches, m -> m.disp)))"
-        " ELSE coalesce(candidate_count, 1.0D) END as candidate_count",
+        f"cast(struct(text, offset, name, entity_type) as {ref_ddl}) as target",
+        "coalesce(picks[offset].best_mention, best_mention, name) as best_mention",
+        "coalesce(picks[offset].best_entity, best_entity) as best_entity",
+        "coalesce(picks[offset].container_entity, container_entity)"
+        " as container_entity",
+        "contained_entity",
+        "coalesce(candidate_count, 1.0D) as candidate_count",
         "cast(null as int) as cluster_id",
     )
 

@@ -13,24 +13,19 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def windowed_event_aggregate(
-    events: DataFrame,
-    window_len: str = "10 minutes",
-    ts_col: str = "ts",
-    key_col: str = "event_type",
-    value_col: str = "value",
-) -> DataFrame:
-    """Tumbling-window (window_start, key) → (count, sum) aggregation."""
+def windowed_event_aggregate(events: DataFrame) -> DataFrame:
+    """10-minute tumbling-window (win_start, event_type) → (n_events,
+    sum_value) aggregation over the events table's ts and value."""
     return (
-        events.groupBy(F.window(ts_col, window_len).alias("win"), F.col(key_col))
+        events.groupBy(F.window("ts", "10 minutes").alias("win"), "event_type")
         .agg(
             F.count("*").alias("n_events"),
-            F.round(F.sum(value_col), 4).alias("sum_value"),
+            F.round(F.sum("value"), 4).alias("sum_value"),
         )
         .select(
             F.col("win.start").alias("win_start"),
             F.col("win.end").alias("win_end"),
-            key_col,
+            "event_type",
             "n_events",
             "sum_value",
         )

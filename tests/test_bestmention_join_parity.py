@@ -8,9 +8,10 @@ consumed nowhere downstream."""
 
 import json
 
-from docopenie_spark import datagen
+from docopenie_spark import datagen, schemas
 from docopenie_spark.operators import assembly, bestmention, fused, ner
 from docopenie_spark.plans.pipeline import default_dictionaries
+from docopenie_spark.session import local_table
 
 from pipeline_twin import _best_mentions, _turn_rows
 
@@ -58,6 +59,81 @@ def test_join_based_chunked_equals_python_full_doc(spark):
         f"spark-only {[r for r in got if r not in want][:3]}; "
         f"python-only {[r for r in want if r not in got][:3]}"
     )
+
+
+# Offset-dependent names: more than one matching candidate, so the pick
+# is made per occurrence (nearest candidate occurrence, ties to the
+# smaller occurrence). The datagen corpus has no such name.
+_DEP_MENTIONS = [
+    ("PERSON", "Brian Okafor", [0, 100]),
+    ("PERSON", "Ada Okafor", [50, 150]),
+    ("PERSON", "Okafor", [20, 75, 125, 170]),  # P-a, two candidates
+    ("LOCATION", "Massachusetts", [200, 340]),
+    ("LOCATION", "Illinois", [300]),
+    ("LOCATION", "Springfield", [220, 250, 280, 320]),  # L-b, two containers
+]
+_DEP_GAZETTEER = [
+    ("Springfield", "CITY", "Massachusetts", "PROVINCE", None),
+    ("Springfield", "CITY", "Illinois", "PROVINCE", None),
+    ("Massachusetts", "PROVINCE", "United States", "COUNTRY", "MA"),
+    ("Illinois", "PROVINCE", "United States", "COUNTRY", "IL"),
+    ("United States", "COUNTRY", None, None, None),
+]
+# (name, occurrence) -> (kind, best_mention, picked entity, its occurrence)
+_DEP_PICKS = {
+    ("Okafor", 20): ("full", "Brian Okafor", "Brian Okafor", 0),
+    ("Okafor", 75): ("full", "Ada Okafor", "Ada Okafor", 50),  # tie: 25 vs 25
+    ("Okafor", 125): ("full", "Brian Okafor", "Brian Okafor", 100),  # tie
+    ("Okafor", 170): ("full", "Ada Okafor", "Ada Okafor", 150),
+    ("Springfield", 220): ("container", "Springfield, Massachusetts", "Massachusetts", 200),
+    ("Springfield", 250): ("container", "Springfield, Massachusetts", "Massachusetts", 200),  # tie
+    ("Springfield", 280): ("container", "Springfield, Illinois", "Illinois", 300),
+    ("Springfield", 320): ("container", "Springfield, Illinois", "Illinois", 300),  # tie
+}
+
+
+def test_offset_dependent_picks_equal_python_per_occurrence(spark):
+    """Names with two matching candidates are picked per occurrence by
+    proximity (ref :129-132). The Spark path must give the expected pick
+    at every occurrence and equal resolve_conversation on every field,
+    best_entity.offset and container_entity.offset included."""
+    ents = sorted(
+        (("c0", name, off, name, typ)
+         for typ, name, offs in _DEP_MENTIONS for off in offs),
+        key=lambda r: r[2],
+    )
+    text = [" "] * 360
+    for _, name, off, _, _ in ents:
+        text[off:off + len(name)] = name
+    text = "".join(text)
+    ents_df = local_table(
+        spark, ents,
+        "conv_id string, text string, offset bigint, name string, entity_type string",
+    )
+    chunks = local_table(spark, [("c0", 0, len(text) + 1, text)], schemas.DOC_CHUNKS)
+    got = [r.asDict(recursive=True) for r in
+           bestmention.best_mentions(ents_df, chunks, _DEP_GAZETTEER).collect()]
+
+    by_occ = {(r["target"]["name"], r["target"]["offset"]): r for r in got}
+    assert len(by_occ) == len(got) == len(ents)
+    for (name, off), (kind, best, ent, occ) in _DEP_PICKS.items():
+        r = by_occ[(name, off)]
+        picked = r["best_entity"] if kind == "full" else r["container_entity"]
+        assert (r["kind"], r["best_mention"], picked["text"], picked["offset"]) == (
+            kind, best, ent, occ), (name, off, r)
+        assert r["candidate_count"] == 0.5
+        assert r["contained_entity"] is None
+    # the candidates themselves resolve to identity
+    assert {r["kind"] for k, r in by_occ.items() if k not in _DEP_PICKS} == {"identity"}
+
+    cols = ("conv_id", "text", "offset", "name", "entity_type")
+    want = _best_mentions([dict(zip(cols, e)) for e in ents],
+                          {"c0": [(0, 0, text)]}, _DEP_GAZETTEER)
+
+    def key(r):
+        return json.dumps(r, sort_keys=True)
+
+    assert sorted(map(key, got)) == sorted(map(key, want))
 
 
 def test_doc_chunks_reassemble_to_doc_text(spark):

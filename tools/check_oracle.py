@@ -2,7 +2,10 @@
 on DuckDB at the given sf dir; compare row count + order-insensitive
 values (columns sorted by name). A query or oracle that raises is
 reported as ERROR and counted as a failure; the sweep goes on to the
-next query. Usage:
+next query. Before a query's oracle runs, its line ``<query> digest
+<hex>`` gives an order-independent sha256 of the Spark rows, so two
+sweeps' Spark results compare with one diff of their logs, also where an
+oracle fails. Usage:
 
     python tools/check_oracle.py [sf_dir] [query ...]
 
@@ -14,6 +17,7 @@ driver heap, not get_spark()'s 8g.
 
 from __future__ import annotations
 
+import hashlib
 import sys
 
 import duckdb
@@ -25,7 +29,7 @@ sys.path.insert(0, ".")
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
 
-def normalize(df: pd.DataFrame) -> pd.DataFrame:
+def _canonical(df: pd.DataFrame) -> pd.DataFrame:
     df = df[sorted(df.columns)].copy()
     for c in df.columns:
         if pd.api.types.is_float_dtype(df[c]):
@@ -34,7 +38,21 @@ def normalize(df: pd.DataFrame) -> pd.DataFrame:
             df[c] = df[c].astype("int64")
         elif pd.api.types.is_datetime64_any_dtype(df[c]):
             df[c] = df[c].astype("datetime64[us]")
+    return df
+
+
+def normalize(df: pd.DataFrame) -> pd.DataFrame:
+    df = _canonical(df)
     return df.sort_values(list(df.columns)).reset_index(drop=True)
+
+
+def row_digest(df: pd.DataFrame) -> str:
+    """sha256 of the column names and the sorted rows, each row the str()
+    of its canonical values (arrays printed in full)."""
+    df = _canonical(df)
+    with np.printoptions(threshold=sys.maxsize):
+        rows = sorted("\x1f".join(map(str, r)) for r in df.itertuples(index=False))
+    return hashlib.sha256("\x1e".join([",".join(df.columns), *rows]).encode()).hexdigest()
 
 
 def main():
@@ -58,6 +76,7 @@ def main():
             continue
         try:
             spdf = fn(spark, sf_dir).toPandas()
+            print(f"{name:24s} digest {row_digest(spdf)}", flush=True)
             opdf = con.execute(oracles[name]).df() if name in oracles else None
         except Exception as exc:  # e.g. an oracle out of memory on a small host
             failures.append(name)
