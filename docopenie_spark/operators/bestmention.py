@@ -546,9 +546,8 @@ def _entity_ref(t, typ):
 def _row(name, typ: str, res) -> tuple:
     """Rule result → (kind, best_mention, best_entity, container_entity,
     contained_entity, candidate_count). Identity when no rule fired or the
-    pick is the name itself (``name=None`` never demotes). A full pick's
-    entity carries the mention's type; container and containment
-    provenance is a LOCATION."""
+    pick is the name itself. A full pick's entity carries the mention's
+    type; container and containment provenance is a LOCATION."""
     if res is None or res["best"] == name:
         return ("identity", name, None, None, None, 1.0)
     full = res["kind"] == "full"
@@ -591,15 +590,17 @@ def resolve_conversation(ents: pd.DataFrame, doc: ChunkedDoc,
 
 
 _ENT_REF_DDL = "struct<text:string,offset:bigint,name:string,entity_type:string>"
-_RESOLVED = (
-    "conv_id string, entity_type string, name string, kind string, "
-    "best_mention string, "
+# one _row: the name's own row, and the struct of its per-offset picks
+_ROW_DDL = (
+    "kind string, best_mention string, "
     f"best_entity {_ENT_REF_DDL}, "
     f"container_entity {_ENT_REF_DDL}, "
     f"contained_entity {_ENT_REF_DDL}, "
-    "candidate_count double, "
-    f"picks map<bigint,struct<best_mention:string,best_entity:{_ENT_REF_DDL},"
-    f"container_entity:{_ENT_REF_DDL}>>"
+    "candidate_count double"
+)
+_RESOLVED = (
+    f"conv_id string, entity_type string, name string, {_ROW_DDL}, "
+    f"picks map<bigint,struct<{_ROW_DDL}>>"
 )
 
 
@@ -614,15 +615,14 @@ def best_mentions(entities: DataFrame, doc_chunks: DataFrame,
     boundary. Doc text arrives as bounded CHUNKS (assembly.doc_chunks),
     so no single row grows with conversation size.
 
-    A name is resolved at its first occurrence (``rep_off``), which also
-    decides identity. When that resolution is offset-dependent (more than
-    one matching candidate — proximity decides per occurrence, ref
-    :129-132), the engine also emits ``picks``: the pick's best_mention,
-    best_entity and container_entity at each of the name's distinct
-    offsets, re-picked from the result's sorted candidate entries. The
-    join's projection reads ``picks[offset]`` ahead of the name's own
-    fields; candidate_count (1/|distinct displays|) does not vary with
-    the offset, and contained_entity is null on such names."""
+    A name is resolved at its first occurrence (``rep_off``). When that
+    resolution is offset-dependent (more than one matching candidate —
+    proximity decides per occurrence, ref :129-132), the engine also
+    emits ``picks``: the row at each of the name's distinct offsets,
+    re-picked from the result's sorted candidate entries and demoted to
+    identity there when the pick is the name itself, as the reference
+    does per occurrence. The join's projection reads every field from
+    ``picks[offset]`` when the name has picks."""
     spark = entities.sparkSession
     b_gaz = content_broadcast(
         spark.sparkContext, Gazetteer(gazetteer_rows),
@@ -656,14 +656,13 @@ def best_mentions(entities: DataFrame, doc_chunks: DataFrame,
         for r in names_pdf.itertuples():
             name, typ = r.name, r.entity_type
             res = _resolve_one(name, int(r.rep_off), typ, by_type, doc, gaz, memo)
-            row = _row(name, typ, res)
             picks = None
-            if row[0] != "identity" and res["matches"] is not None:
+            if res is not None and res["matches"] is not None:
                 picks = {
-                    o: _row(None, typ, _pick(res["kind"], res["matches"], o))[1:4]
+                    o: _row(name, typ, _pick(res["kind"], res["matches"], o))
                     for o in by_type[typ][name]
                 }
-            rows.append((conv_id, typ, name, *row, picks))
+            rows.append((conv_id, typ, name, *_row(name, typ, res), picks))
         return pd.DataFrame(rows, columns=cols)
 
     resolved = (
@@ -678,16 +677,19 @@ def best_mentions(entities: DataFrame, doc_chunks: DataFrame,
     # branches and unioning them runs the rule-engine cogroup once per
     # branch (measured r7: 6.1s → ~2.5s at sf0.1 with one projection).
     ref_ddl = schemas.ENTITY_REF.simpleString()
+
+    def per_occ(field, own):
+        return f"if(picks IS NULL, {own}, picks[offset].{field}) as {field}"
+
     return joined.selectExpr(
         "conv_id",
-        "coalesce(kind, 'identity') as kind",
+        per_occ("kind", "coalesce(kind, 'identity')"),
         f"cast(struct(text, offset, name, entity_type) as {ref_ddl}) as target",
-        "coalesce(picks[offset].best_mention, best_mention, name) as best_mention",
-        "coalesce(picks[offset].best_entity, best_entity) as best_entity",
-        "coalesce(picks[offset].container_entity, container_entity)"
-        " as container_entity",
-        "contained_entity",
-        "coalesce(candidate_count, 1.0D) as candidate_count",
+        per_occ("best_mention", "coalesce(best_mention, name)"),
+        per_occ("best_entity", "best_entity"),
+        per_occ("container_entity", "container_entity"),
+        per_occ("contained_entity", "contained_entity"),
+        per_occ("candidate_count", "coalesce(candidate_count, 1.0D)"),
         "cast(null as int) as cluster_id",
     )
 

@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 
 from ..functions.sqltext import sql_strlist
 from .bestmention import Gazetteer
+from .link import containment_join
 
 # (column, reference feature name) in the reference's featuresList order
 # (BestMentionFeatures.scala:109)
@@ -57,8 +58,6 @@ FEATURES = [
     ("f_loc_type_similarity", "Target and Best location type similarity"),
 ]
 FEATURE_COLS = [c for c, _ in FEATURES]
-
-_B = 256  # chars per offset bucket (same containment-join pattern as J3)
 
 
 def with_bem_index(bems: DataFrame) -> DataFrame:
@@ -89,17 +88,9 @@ def _span_clusters(spans: DataFrame, clusters: DataFrame, off: str, ln: str,
     cm = clusters.selectExpr(
         "conv_id", "cluster_id", "explode(mentions) as m"
     ).selectExpr(
-        "conv_id", "cluster_id", "m.offset as m_off",
-        "length(m.text) as m_len", f"cast(m.offset / {_B} as bigint) as _b",
+        "conv_id", "cluster_id", "m.offset as m_off", "length(m.text) as m_len",
     )
-    sp = spans.selectExpr(
-        "*",
-        f"explode(sequence(cast(({off}) / {_B} as bigint),"
-        f" cast((({off}) + ({ln})) / {_B} as bigint))) as _b",
-    )
-    j = sp.join(cm, ["conv_id", "_b"]).where(
-        f"m_off >= ({off}) AND m_off + m_len <= ({off}) + ({ln})"
-    )
+    j = containment_join(cm, spans, "m_off", "m_len", off, ln)
     return j.groupBy("conv_id", "bem_index").agg(
         F.collect_set("cluster_id").alias(out)
     )
@@ -244,30 +235,22 @@ def training_rows(features: DataFrame, sentences: DataFrame) -> DataFrame:
     containing the offset, BestMentionHelper.context), features, index,
     doc id. Contexts come from a bucketed containment join; tabs/newlines
     are scrubbed exactly like the reference's noTabs."""
-    def _ctx(off_col, out):
-        s = sentences.select(
-            "conv_id", F.col("offset").alias("s_off"),
-            F.length("text").alias("s_len"), F.col("text").alias("s_text"),
-        ).withColumn(
-            "_b",
-            F.explode(F.sequence(
-                (F.col("s_off") / _B).cast("long"),
-                ((F.col("s_off") + F.col("s_len")) / _B).cast("long"),
-            )),
-        )
-        p = features.select(
-            "conv_id", "bem_index", off_col.alias("p_off")
-        ).withColumn("_b", (F.col("p_off") / _B).cast("long"))
-        j = p.join(s, ["conv_id", "_b"]).where(
-            (F.col("p_off") > F.col("s_off"))
-            & (F.col("p_off") < F.col("s_off") + F.col("s_len"))
+    s = sentences.selectExpr(
+        "conv_id", "offset as s_off", "length(text) as s_len", "text as s_text"
+    )
+
+    def _ctx(off, out):
+        p = features.selectExpr("conv_id", "bem_index", f"{off} as p_off")
+        # strictly inside: a sentence starting or ending AT the offset is
+        # not its context
+        j = containment_join(p, s, "p_off", "0", "s_off", "s_len").where(
+            "p_off > s_off AND p_off < s_off + s_len"
         )
         return j.groupBy("conv_id", "bem_index").agg(F.min("s_text").alias(out))
 
-    t_ctx = _ctx(F.col("target.offset"), "target_context")
+    t_ctx = _ctx("target.offset", "target_context")
     b_ctx = _ctx(
-        F.coalesce(F.col("best_entity.offset"), F.col("container_entity.offset"),
-                   F.col("target.offset")),
+        "coalesce(best_entity.offset, container_entity.offset, target.offset)",
         "best_context",
     )
     clean = lambda c: F.regexp_replace(F.coalesce(c, F.lit("NA")), "[\\t\\n]", " ")

@@ -100,9 +100,6 @@ def sentence_entities(toks, text, offset, firsts, gaz, lasts,
     return recs
 
 
-def split_mentions(ents: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """(real entities, pronoun mentions)."""
-    return (
-        ents.where(F.col("entity_type") != PRONOUN_TYPE),
-        ents.where(F.col("entity_type") == PRONOUN_TYPE),
-    )
+def entity_mentions(mentions: DataFrame) -> DataFrame:
+    """The mention rows that are real entities, not pronouns."""
+    return mentions.where(F.col("entity_type") != PRONOUN_TYPE)

@@ -193,7 +193,7 @@ def _stage_graph(stage, transcripts: DataFrame, entity_dict: DataFrame | None,
     sents = fused.split_sentences(annotated)
     triples_raw = fused.split_triples(annotated)
     mentions = fused.split_entities(annotated)
-    ents, _prons = ner.split_mentions(mentions)
+    ents = ner.entity_mentions(mentions)
     cl = stage("clusters", lambda m: coref.clusters(m, hot_threshold=hot_thr), mentions)
 
     lk = None

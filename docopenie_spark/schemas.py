@@ -42,16 +42,6 @@ TRANSCRIPTS = StructType(
     ]
 )
 
-# turn-level view after assembly: each turn + its char offset into the
-# assembled conversation document text
-TURNS_WITH_OFFSETS = StructType(
-    TRANSCRIPTS.fields
-    + [
-        StructField("turn_offset", LongType(), False),  # char offset of turn in doc
-        StructField("doc_len", LongType(), False),
-    ]
-)
-
 SENTENCES = StructType(
     [
         StructField("conv_id", StringType(), False),
@@ -202,5 +192,8 @@ LINEAGE = StructType(
         StructField("input_fingerprint", StringType(), False),
         StructField("row_count", LongType(), False),
         StructField("wall_ms", LongType(), False),
+        # output-schema fingerprint; null in lineage written before the
+        # column existed (read back through this schema)
+        StructField("schema_fp", StringType(), True),
     ]
 )

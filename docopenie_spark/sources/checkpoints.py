@@ -15,18 +15,22 @@ idempotency guarantee at bucket granularity:
   row count, wall ms) for EVERY ATTEMPTED bucket — including buckets
   whose output is legitimately empty (row_count 0), so resume's all-done
   short-circuit fires even for empty buckets;
-- lineage is computed from the buckets just written (partition-pruned,
-  column-pruned read of the key column only — O(written buckets), never
-  a full-table rescan) and the input fingerprint from the batch's INPUT;
-- ``read_stage`` exposes only lineage-committed buckets, so data whose
-  lineage write never landed is invisible until the resume replaces it.
+- a bucket's row count and output fingerprint come from the persisted
+  output of the write itself (one grouped aggregate over the rows being
+  written — O(written buckets), never a read-back of the directory), and
+  the input fingerprint from the batch's INPUT;
+- ``done_buckets`` answers "which buckets of this stage are committed
+  under this output schema" with one grouped query over lineage, read
+  through the one stated layout, ``schemas.LINEAGE``;
+- reads expose only lineage-committed buckets, so data whose lineage
+  write never landed is invisible until the resume replaces it.
 
 In production these are Iceberg tables (``partitionedBy(bucket(N,
 conv_id))``, lineage keyed by snapshot id). This environment has no
 Iceberg runtime jar, so the same layout is realized as
-parquet-partitioned directories behind one small API — swap
-``_write``/``_read`` for ``writeTo(...)``/``read.table`` and nothing
-else changes.
+parquet-partitioned directories behind one small API — swap the
+``write.parquet`` in ``write_stage`` and the ``read.parquet`` in
+``_read`` for ``writeTo(...)``/``read.table`` and nothing else changes.
 """
 
 from __future__ import annotations
@@ -42,6 +46,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from .. import schemas
 from ..session import local_table
 
 BUCKET_COL = "_bucket"
@@ -61,19 +66,21 @@ def schema_fingerprint(schema: StructType) -> str:
     return hashlib.md5(ddl.encode()).hexdigest()[:16]
 
 
-def with_bucket(df: DataFrame, key: str = "conv_id", buckets: int = 32) -> DataFrame:
+def with_bucket(df: DataFrame, buckets: int = 32) -> DataFrame:
     """Stable hash-bucket column — the bucket(N, conv_id) partition
-    transform. xxhash64 is deterministic across runs and executors."""
-    return df.withColumn(BUCKET_COL, F.pmod(F.xxhash64(key), F.lit(buckets)).cast("int"))
+    transform. xxhash64 is deterministic across runs and executors.
+    Every stage buckets on conv_id, so bucket b of one stage derives only
+    from bucket b of its inputs."""
+    return df.withColumn(BUCKET_COL, F.pmod(F.xxhash64("conv_id"), F.lit(buckets)).cast("int"))
 
 
-def _bucket_stats(df_with_bucket: DataFrame, key: str) -> dict[int, tuple[int, str]]:
+def _bucket_stats(df_with_bucket: DataFrame) -> dict[int, tuple[int, str]]:
     """{bucket: (row_count, fingerprint_hex)} — one column-pruned agg.
-    bit_xor of xxhash64(key) is order-independent and never overflows."""
+    bit_xor of xxhash64(conv_id) is order-independent and never overflows."""
     rows = (
         df_with_bucket.groupBy(BUCKET_COL)
         .agg(F.count(F.lit(1)).alias("n"),
-             F.expr(f"bit_xor(xxhash64({key}))").alias("fp"))
+             F.expr("bit_xor(xxhash64(conv_id))").alias("fp"))
         .collect()
     )
     return {
@@ -102,10 +109,10 @@ class StageStore:
         return os.path.join(self.root, "_metrics")
 
     # ------------------------------------------------------------ write
-    def write_stage(self, stage: str, df: DataFrame, key: str = "conv_id",
+    def write_stage(self, stage: str, df: DataFrame,
                     run_id: str | None = None, only_buckets: list[int] | None = None,
                     input_fps: dict[int, str] | None = None) -> str:
-        """Write a stage table bucketed on ``key`` with dynamic partition
+        """Write a stage table bucketed on conv_id with dynamic partition
         overwrite (idempotent per bucket); record one lineage row per
         ATTEMPTED bucket (``only_buckets`` if given, else all) — buckets
         that produced no rows get row_count 0, so resume never retries
@@ -117,7 +124,7 @@ class StageStore:
         run_id = run_id or uuid.uuid4().hex[:12]
         attempted = sorted(only_buckets) if only_buckets is not None else list(range(self.buckets))
         t0 = time.time()
-        b = with_bucket(df, key, self.buckets)
+        b = with_bucket(df, self.buckets)
         if only_buckets is not None:
             b = b.where(F.col(BUCKET_COL).isin(attempted))
         # persist so stats and the write share ONE computation of the
@@ -128,7 +135,7 @@ class StageStore:
         # replaces partitions PRESENT in the output).
         b = b.persist(StorageLevel.MEMORY_AND_DISK)
         try:
-            stats = _bucket_stats(b, key)
+            stats = _bucket_stats(b)
             (
                 b.write.mode("overwrite")
                 .option("partitionOverwriteMode", "dynamic")
@@ -162,12 +169,8 @@ class StageStore:
             n, out_fp = stats.get(bk, (0, "0"))
             fp = (input_fps or {}).get(bk, out_fp)
             rows.append((stage, bk, run_id, fp, n, wall_ms, sfp))
-        local_table(
-            self.spark, rows,
-            "stage string, partition_id int, run_id string, "
-            "input_fingerprint string, row_count long, wall_ms long, "
-            "schema_fp string",
-        ).coalesce(1).write.mode("append").parquet(self._lineage_path())
+        lineage = local_table(self.spark, rows, schemas.LINEAGE)
+        lineage.coalesce(1).write.mode("append").parquet(self._lineage_path())
         return run_id
 
     def record_metric(self, run_id: str, stage: str, metric: str, value: float) -> None:
@@ -177,66 +180,59 @@ class StageStore:
         ).write.mode("append").parquet(self._metrics_path())
 
     # ------------------------------------------------------------- read
-    def read_stage(self, stage: str, committed_only: bool = True,
-                   schema_fp: str | None = None,
-                   trust_legacy: bool = True) -> DataFrame:
-        """The stage table, restricted to lineage-committed buckets:
-        data whose lineage write never landed (a kill between the two
-        writes) stays invisible until resume overwrites it — including
-        when NO lineage write ever landed (zero committed buckets means
-        zero visible rows, not everything). ``schema_fp`` additionally
-        hides buckets committed under a DIFFERENT output schema."""
+    def read_stage(self, stage: str, schema_fp: str) -> DataFrame:
+        """The stage table, restricted to the buckets ``done_buckets``
+        counts as committed under ``schema_fp``: data whose lineage write
+        never landed (a kill between the two writes) stays invisible until
+        resume overwrites it — including when NO lineage write ever landed
+        (zero committed buckets means zero visible rows, not everything)
+        — and so do buckets committed under a DIFFERENT output schema."""
+        return self._read(stage, self.done_buckets(stage, schema_fp))
+
+    def _read(self, stage: str, buckets: list[int]) -> DataFrame:
         df = self.spark.read.parquet(self._path(stage))
-        if committed_only:
-            done = self.done_buckets(stage, schema_fp=schema_fp,
-                                     trust_legacy=trust_legacy)
-            df = df.where(F.col(BUCKET_COL).isin(done) if done else F.lit(False))
+        df = df.where(F.col(BUCKET_COL).isin(buckets) if buckets else F.lit(False))
         return df.drop(BUCKET_COL)
 
     def lineage(self) -> DataFrame:
-        # mergeSchema: lineage directories written before a column was
-        # added (e.g. schema_fp) stay readable, with nulls for the gap
-        return self.spark.read.option("mergeSchema", "true").parquet(self._lineage_path())
+        # read through the stated layout: lineage written before a column
+        # was added (e.g. schema_fp) reads back with nulls for the gap
+        return self.spark.read.schema(schemas.LINEAGE).parquet(self._lineage_path())
 
     def metrics(self) -> DataFrame:
         return self.spark.read.parquet(self._metrics_path())
 
-    def done_buckets(self, stage: str, schema_fp: str | None = None,
-                     trust_legacy: bool = True) -> list[int]:
-        """Buckets with a lineage row for ``stage``. With ``schema_fp``,
-        only rows whose recorded output schema matches count — a stale-
-        schema checkpoint is "not done" and gets recomputed. Legacy rows
-        with no recorded fingerprint can't be verified: by default they
-        keep their pre-guard behavior of counting as done, but LOUDLY —
-        a warning names the stage and bucket count, so a pre-guard
-        checkpoint is visibly trusted, never silently accepted (ADVICE
-        r4: the silent path was the exact stale-column hazard the guard
-        targets). ``trust_legacy=False`` treats them as not-done
-        instead (recompute)."""
+    def done_buckets(self, stage: str, schema_fp: str) -> list[int]:
+        """Buckets with a lineage row for ``stage`` whose recorded output
+        schema is ``schema_fp`` — a stale-schema checkpoint is "not done"
+        and gets recomputed. Legacy rows with no recorded fingerprint
+        can't be verified: they keep their pre-guard behavior of counting
+        as done, but LOUDLY — a warning names the stage and the number of
+        such rows, so a pre-guard checkpoint is visibly trusted, never
+        silently accepted. One grouped query answers both."""
         if not os.path.exists(self._lineage_path()):
             return []
-        lin = self.lineage().where(F.col("stage") == stage)
-        if schema_fp is not None and "schema_fp" in lin.columns:
-            n_legacy = lin.where(F.col("schema_fp").isNull()).count()
-            if n_legacy and trust_legacy:
-                warnings.warn(
-                    f"checkpoint stage {stage!r}: {n_legacy} lineage rows "
-                    "predate the schema guard (no recorded fingerprint) and "
-                    "are trusted as-is; pass trust_legacy=False to recompute "
-                    "them under the current schema",
-                    stacklevel=2,
-                )
-            fp_ok = F.col("schema_fp") == schema_fp
-            if trust_legacy:
-                fp_ok = F.col("schema_fp").isNull() | fp_ok
-            lin = lin.where(fp_ok)
-        rows = lin.select("partition_id").distinct().collect()
-        return sorted(r.partition_id for r in rows)
+        legacy = F.col("schema_fp").isNull()
+        rows = (
+            self.lineage().where(F.col("stage") == stage)
+            .groupBy("partition_id")
+            .agg(F.bool_or(legacy | (F.col("schema_fp") == schema_fp)).alias("done"),
+                 F.count_if(legacy).alias("n_legacy"))
+            .collect()
+        )
+        n_legacy = sum(r.n_legacy for r in rows)
+        if n_legacy:
+            warnings.warn(
+                f"checkpoint stage {stage!r}: {n_legacy} lineage rows "
+                "predate the schema guard (no recorded fingerprint) and "
+                "are trusted as-is",
+                stacklevel=2,
+            )
+        return sorted(r.partition_id for r in rows if r.done)
 
     # ----------------------------------------------------------- resume
     def run_resumable(self, stage: str, inputs: DataFrame | list[DataFrame], fn,
-                      key: str = "conv_id", run_id: str | None = None,
-                      trust_legacy: bool = True) -> DataFrame:
+                      run_id: str | None = None) -> DataFrame:
         """Compute ``fn(*inputs)`` (one DataFrame or a list, each filtered
         with the same bucket predicate) only for buckets lineage has not
         recorded for ``stage`` (resume = anti-join of partitions against
@@ -249,27 +245,26 @@ class StageStore:
         Buckets committed under a different OUTPUT schema than the
         current ``fn`` produces count as not-done (schema guard): the
         expected schema comes from applying ``fn`` to empty slices of
-        the inputs — plan analysis only, nothing executes."""
+        the inputs — plan analysis only, nothing executes. Lineage is
+        queried once: after the remaining buckets are written every
+        bucket is committed, so the table is read back without asking
+        again."""
         dfs = inputs if isinstance(inputs, list) else [inputs]
         expected_fp = schema_fingerprint(fn(*[df.limit(0) for df in dfs]).schema)
-        done = set(self.done_buckets(stage, schema_fp=expected_fp,
-                                     trust_legacy=trust_legacy))
+        done = self.done_buckets(stage, expected_fp)
         remaining = [b for b in range(self.buckets) if b not in done]
-        if not remaining:
-            return self.read_stage(stage, schema_fp=expected_fp,
-                                   trust_legacy=trust_legacy)
-        t0 = time.time()
-        srcs = [with_bucket(df, key, self.buckets) for df in dfs]
-        if done:
-            srcs = [s.where(~F.col(BUCKET_COL).isin(sorted(done))) for s in srcs]
-        stats = [_bucket_stats(src, key) for src in srcs]
-        input_fps = {
-            bk: ",".join("{:x}:{}".format(*st.get(bk, (0, "0"))) for st in stats)
-            for bk in set().union(*stats)
-        }
-        out = fn(*[src.drop(BUCKET_COL) for src in srcs])
-        run_id = self.write_stage(stage, out, key=key, run_id=run_id,
-                                  only_buckets=remaining, input_fps=input_fps)
-        self.record_metric(run_id, stage, "wall_sec", time.time() - t0)
-        return self.read_stage(stage, schema_fp=expected_fp,
-                               trust_legacy=trust_legacy)
+        if remaining:
+            t0 = time.time()
+            srcs = [with_bucket(df, self.buckets) for df in dfs]
+            if done:
+                srcs = [s.where(~F.col(BUCKET_COL).isin(done)) for s in srcs]
+            stats = [_bucket_stats(src) for src in srcs]
+            input_fps = {
+                bk: ",".join("{:x}:{}".format(*st.get(bk, (0, "0"))) for st in stats)
+                for bk in set().union(*stats)
+            }
+            out = fn(*[src.drop(BUCKET_COL) for src in srcs])
+            run_id = self.write_stage(stage, out, run_id=run_id,
+                                      only_buckets=remaining, input_fps=input_fps)
+            self.record_metric(run_id, stage, "wall_sec", time.time() - t0)
+        return self._read(stage, list(range(self.buckets)))

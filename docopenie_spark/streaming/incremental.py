@@ -40,7 +40,7 @@ def ingest_available_now(
         spark.readStream.schema(schemas.TRANSCRIPTS)
         .parquet(input_dir)
     )
-    bucketed = with_bucket(stream, "conv_id", buckets)
+    bucketed = with_bucket(stream, buckets)
     q = (
         bucketed.writeStream.format("parquet")
         .option("path", table_dir)

@@ -47,7 +47,7 @@ def test_join_based_chunked_equals_python_full_doc(spark):
     # tiny chunks (group=4 turns) force many boundaries on the fixture
     chunks = assembly.doc_chunks(t, group=4)
     gzr = datagen.gazetteer_rows()
-    ents = ner.split_mentions(mentions)[0]
+    ents = ner.entity_mentions(mentions)
     got = _norm(r.asDict(recursive=True)
                 for r in bestmention.best_mentions(ents, chunks, gzr).collect())
     want = _norm(_best_mentions([r.asDict() for r in mentions.collect()],
@@ -71,6 +71,18 @@ _DEP_MENTIONS = [
     ("LOCATION", "Massachusetts", [200, 340]),
     ("LOCATION", "Illinois", [300]),
     ("LOCATION", "Springfield", [220, 250, 280, 320]),  # L-b, two containers
+    # P-b over regex hits that contain the name, the name's own hit
+    # included: the nearest hit is the name itself at one occurrence
+    # (identity there) and another person at the other
+    ("PERSON", "Ann Lee", [400, 520]),
+    ("PERSON", "Bo Chan", [460, 560]),
+]
+# the P-b regex hits: a capitalized pair between lowercase words
+_DEP_TEXT = [
+    (425, " met Ann Leeds now "),
+    (515, " saw Ann Lee now "),
+    (455, " met Bo Chan now "),
+    (575, " saw Bo Chang now "),
 ]
 _DEP_GAZETTEER = [
     ("Springfield", "CITY", "Massachusetts", "PROVINCE", None),
@@ -89,22 +101,27 @@ _DEP_PICKS = {
     ("Springfield", 250): ("container", "Springfield, Massachusetts", "Massachusetts", 200),  # tie
     ("Springfield", 280): ("container", "Springfield, Illinois", "Illinois", 300),
     ("Springfield", 320): ("container", "Springfield, Illinois", "Illinois", 300),  # tie
+    # non-identity at the first occurrence, identity (own hit) at 520
+    ("Ann Lee", 400): ("full", "Ann Leeds", "Ann Leeds", 430),
+    # identity (own hit) at the first occurrence, non-identity at 560
+    ("Bo Chan", 560): ("full", "Bo Chang", "Bo Chang", 580),
 }
 
 
 def test_offset_dependent_picks_equal_python_per_occurrence(spark):
     """Names with two matching candidates are picked per occurrence by
-    proximity (ref :129-132). The Spark path must give the expected pick
-    at every occurrence and equal resolve_conversation on every field,
+    proximity (ref :129-132), and demoted to identity where the pick is
+    the name itself. The Spark path must give the expected pick at every
+    occurrence and equal resolve_conversation on every field,
     best_entity.offset and container_entity.offset included."""
     ents = sorted(
         (("c0", name, off, name, typ)
          for typ, name, offs in _DEP_MENTIONS for off in offs),
         key=lambda r: r[2],
     )
-    text = [" "] * 360
-    for _, name, off, _, _ in ents:
-        text[off:off + len(name)] = name
+    text = [" "] * 600
+    for off, piece in [(e[2], e[1]) for e in ents] + _DEP_TEXT:
+        text[off:off + len(piece)] = piece
     text = "".join(text)
     ents_df = local_table(
         spark, ents,
@@ -123,8 +140,12 @@ def test_offset_dependent_picks_equal_python_per_occurrence(spark):
             kind, best, ent, occ), (name, off, r)
         assert r["candidate_count"] == 0.5
         assert r["contained_entity"] is None
-    # the candidates themselves resolve to identity
-    assert {r["kind"] for k, r in by_occ.items() if k not in _DEP_PICKS} == {"identity"}
+    # the candidates themselves, and the two occurrences whose nearest
+    # hit is the name, resolve to identity
+    others = {k: r for k, r in by_occ.items() if k not in _DEP_PICKS}
+    assert {r["kind"] for r in others.values()} == {"identity"}
+    assert {("Ann Lee", 520), ("Bo Chan", 460)} <= set(others)
+    assert {others[k]["candidate_count"] for k in others} == {1.0}
 
     cols = ("conv_id", "text", "offset", "name", "entity_type")
     want = _best_mentions([dict(zip(cols, e)) for e in ents],

@@ -8,7 +8,7 @@ import pytest
 from docopenie_spark import datagen
 from docopenie_spark.plans.checkpointed import run_checkpointed
 from docopenie_spark.plans.pipeline import run_pipeline
-from docopenie_spark.sources.checkpoints import StageStore
+from docopenie_spark.sources.checkpoints import StageStore, schema_fingerprint
 
 
 def _norm(df):
@@ -41,7 +41,7 @@ def test_mid_run_kill_then_resume(spark, tmp_path):
         assembly.with_turn_offsets(t), fn, gz, ln
     )
     store.write_stage("annotated", annotated, run_id="killed", only_buckets=[0, 1])
-    assert store.done_buckets("annotated") == [0, 1]
+    assert store.done_buckets("annotated", schema_fingerprint(annotated.schema)) == [0, 1]
 
     resumed = _norm(run_checkpointed(spark, t, store, run_id="resume"))
     assert resumed.exceptAll(fresh).isEmpty()
@@ -68,7 +68,6 @@ def test_annotated_checkpoint_in_the_old_layout_is_recomputed(spark, tmp_path):
 
     from docopenie_spark.operators import assembly, fused
     from docopenie_spark.plans.pipeline import default_dictionaries
-    from docopenie_spark.sources.checkpoints import schema_fingerprint
 
     t = datagen.transcripts_df(spark, 160)
     fresh = _norm(run_pipeline(spark, t).triples)
@@ -90,14 +89,15 @@ def test_annotated_checkpoint_in_the_old_layout_is_recomputed(spark, tmp_path):
 
     store = StageStore(spark, str(tmp_path / "cp"), buckets=4)
     store.write_stage("annotated", old, run_id="old")
-    assert store.done_buckets("annotated") == [0, 1, 2, 3]
+    assert store.done_buckets("annotated", schema_fingerprint(old.schema)) == [0, 1, 2, 3]
 
     resumed = _norm(run_checkpointed(spark, t, store, run_id="resume"))
     assert resumed.exceptAll(fresh).isEmpty()
     assert fresh.exceptAll(resumed).isEmpty()
     lin = store.lineage().where(F.col("stage") == "annotated").collect()
     assert sorted(r.partition_id for r in lin if r.run_id == "resume") == [0, 1, 2, 3]
-    back = store.read_stage("annotated")
+    back = store.read_stage("annotated", schema_fingerprint(ann.schema))
+    assert not back.isEmpty()
     assert "e_len" not in back.columns
     assert back.where((F.col("row_kind") == "s") & F.col("e_text").isNull()).isEmpty()
 
@@ -126,7 +126,8 @@ def test_kill_inside_multi_input_stage_then_resume(spark, tmp_path):
         run_checkpointed(spark, t, _KilledInLinks(spark, root, buckets=4),
                          run_id="killed")
     store = StageStore(spark, root, buckets=4)
-    assert store.done_buckets("links") == [0, 1]
+    killed = store.lineage().where(F.col("stage") == "links").collect()
+    assert sorted(r.partition_id for r in killed) == [0, 1]
 
     resumed = _norm(run_checkpointed(spark, t, store, run_id="resume"))
     assert resumed.exceptAll(fresh).isEmpty()

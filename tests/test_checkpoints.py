@@ -6,14 +6,16 @@ import pytest
 import pyspark.sql.functions as F
 
 from docopenie_spark import datagen
-from docopenie_spark.sources.checkpoints import StageStore, with_bucket
+from docopenie_spark.sources.checkpoints import (
+    StageStore, schema_fingerprint, with_bucket,
+)
 
 
 def test_write_read_roundtrip(spark, tmp_path):
     store = StageStore(spark, str(tmp_path / "cp"), buckets=8)
     t = datagen.transcripts_df(spark, 160)
     store.write_stage("transcripts", t)
-    back = store.read_stage("transcripts")
+    back = store.read_stage("transcripts", schema_fingerprint(t.schema))
     assert back.count() == 160
     assert set(back.columns) == set(t.columns)
 
@@ -41,17 +43,16 @@ def test_resume_equals_fresh_run(spark, tmp_path):
     store = StageStore(spark, str(tmp_path / "cp"), buckets=8)
     # simulate a run killed after buckets 0-3
     partial = fn(t)
-    store.write_stage("agg", partial, key="conv_id", run_id="run1",
-                      only_buckets=[0, 1, 2, 3])
-    done_before = store.done_buckets("agg")
+    store.write_stage("agg", partial, run_id="run1", only_buckets=[0, 1, 2, 3])
+    done_before = store.done_buckets("agg", schema_fingerprint(partial.schema))
     assert 0 < len(done_before) < 8
 
-    resumed = store.run_resumable("agg", t, fn, key="conv_id", run_id="run2")
+    resumed = store.run_resumable("agg", t, fn, run_id="run2")
     assert resumed.exceptAll(fresh).isEmpty()
     assert fresh.exceptAll(resumed).isEmpty()
 
     # second resume is a no-op (everything recorded)
-    again = store.run_resumable("agg", t, fn, key="conv_id", run_id="run3")
+    again = store.run_resumable("agg", t, fn, run_id="run3")
     assert again.count() == fresh.count()
     runs = {r.run_id for r in store.lineage().collect()}
     assert "run3" not in runs  # nothing recomputed
@@ -62,7 +63,7 @@ def test_lineage_no_full_table_rescan(spark, tmp_path):
     a conflation with prior runs' buckets already in the directory."""
     store = StageStore(spark, str(tmp_path / "cp"), buckets=8)
     t = datagen.transcripts_df(spark, 240)
-    b = with_bucket(t, "conv_id", 8)
+    b = with_bucket(t, 8)
     first = sorted(r._bucket for r in b.select("_bucket").distinct().collect())[:3]
     rest = [x for x in range(8) if x not in first]
     store.write_stage("s", t, run_id="runA", only_buckets=first)
@@ -75,7 +76,7 @@ def test_lineage_no_full_table_rescan(spark, tmp_path):
     assert sorted(r.partition_id for r in by_run["runB"]) == rest
     # total committed rows across both runs == input rows (no conflation)
     assert sum(r.row_count for r in lin) == 240
-    assert store.read_stage("s").count() == 240
+    assert store.read_stage("s", schema_fingerprint(t.schema)).count() == 240
 
 
 def test_crash_between_data_and_lineage_no_duplicates(spark, tmp_path):
@@ -95,7 +96,7 @@ def test_crash_between_data_and_lineage_no_duplicates(spark, tmp_path):
     store.write_stage("agg", fn(t), run_id="killed")
     shutil.rmtree(str(tmp_path / "cp" / "_lineage"))
     # orphaned data is invisible until recommitted
-    assert store.done_buckets("agg") == []
+    assert store.done_buckets("agg", schema_fingerprint(fresh.schema)) == []
     resumed = store.run_resumable("agg", t, fn, run_id="resume")
     assert resumed.exceptAll(fresh).isEmpty()
     assert fresh.exceptAll(resumed).isEmpty()
@@ -137,7 +138,7 @@ def test_crash_then_resume_with_filtering_fn_no_stale_rows(spark, tmp_path):
 
 def test_read_stage_invisible_when_no_lineage_ever_landed(spark, tmp_path):
     """ADVICE r2 (low): a crash before ANY lineage write leaves orphaned
-    stage data; committed_only must hide it (zero committed buckets ⇒
+    stage data; read_stage must hide it (zero committed buckets ⇒
     zero visible rows), not fall back to returning everything."""
     import shutil
 
@@ -145,8 +146,8 @@ def test_read_stage_invisible_when_no_lineage_ever_landed(spark, tmp_path):
     t = datagen.transcripts_df(spark, 80)
     store.write_stage("s", t, run_id="killed")
     shutil.rmtree(str(tmp_path / "cp" / "_lineage"))
-    assert store.read_stage("s").count() == 0
-    assert store.read_stage("s", committed_only=False).count() == 80
+    assert store.read_stage("s", schema_fingerprint(t.schema)).count() == 0
+    assert spark.read.parquet(str(tmp_path / "cp" / "s")).count() == 80
 
 
 def test_empty_buckets_get_lineage_and_short_circuit(spark, tmp_path):
@@ -263,19 +264,51 @@ def test_legacy_null_fingerprint_trusted_but_warns(spark, tmp_path):
     assert vals == set(range(20)), "legacy checkpoint must be read back, not recomputed"
 
 
-def test_legacy_null_fingerprint_recomputed_when_untrusted(spark, tmp_path):
+def test_lineage_without_fingerprint_column_trusted_but_warns(spark, tmp_path):
+    """Lineage written before schema_fp existed has no such column at
+    all; read through schemas.LINEAGE its rows carry a null fingerprint
+    and are trusted with the same warning as null-fingerprint rows."""
     store = StageStore(spark, str(tmp_path / "ck"), buckets=4)
     src = spark.range(20).select(
         F.col("id").cast("string").alias("conv_id"), F.col("id").alias("v")
     )
     store.run_resumable("s", src, lambda d: d.select("conv_id", "v"))
-    _null_out_fingerprints(spark, store, tmp_path)
+    lin_path = store._lineage_path()
+    tmp = str(tmp_path / "_old_lineage")
+    spark.read.parquet(lin_path).drop("schema_fp").write.parquet(tmp)
+    shutil.rmtree(lin_path)
+    shutil.move(tmp, lin_path)
+    assert "schema_fp" not in spark.read.parquet(lin_path).columns
 
-    assert store.done_buckets(
-        "s", schema_fp="anything", trust_legacy=False
-    ) == []
-    out = store.run_resumable(
-        "s", src, lambda d: d.select("conv_id", F.lit(99).cast("long").alias("v")),
-        trust_legacy=False,
+    with pytest.warns(UserWarning, match="4 lineage rows predate the schema guard"):
+        out = store.run_resumable(
+            "s", src, lambda d: d.select("conv_id", F.lit(99).cast("long").alias("v"))
+        )
+    assert {r.v for r in out.collect()} == set(range(20))
+
+
+class _LineageSpy(StageStore):
+    reads = 0
+
+    def lineage(self):
+        self.reads += 1
+        return super().lineage()
+
+
+def test_run_resumable_reads_lineage_once(spark, tmp_path):
+    """One lineage query per run_resumable call: after a compute pass
+    every bucket is committed, and the no-op pass reads back the buckets
+    it was already told were done."""
+    store = _LineageSpy(spark, str(tmp_path / "ck"), buckets=4)
+    src = spark.range(20).select(
+        F.col("id").cast("string").alias("conv_id"), F.col("id").alias("v")
     )
-    assert {r.v for r in out.collect()} == {99}, "untrusted legacy must recompute"
+    fn = lambda d: d.select("conv_id", "v")  # noqa: E731
+    store.write_stage("s", fn(src), run_id="killed", only_buckets=[0, 1])
+    for run_id in ("resume", "noop"):
+        store.reads = 0
+        out = store.run_resumable("s", src, fn, run_id=run_id)
+        assert store.reads == 1, run_id
+        assert sorted(r.v for r in out.collect()) == list(range(20)), run_id
+    runs = {r.run_id for r in store.lineage().collect()}
+    assert runs == {"killed", "resume"}

@@ -19,11 +19,6 @@ from docopenie_spark.session import local_table
 
 REPO = pathlib.Path(__file__).resolve().parent.parent
 
-LINEAGE_DDL = (
-    "stage string, partition_id int, run_id string, "
-    "input_fingerprint string, row_count long, wall_ms long, "
-    "schema_fp string"
-)
 METRICS_DDL = "run_id string, stage string, metric string, value double, ts double"
 # a binary column plus a nullable nested struct that is None in one row
 MEDIA_DDL = (
@@ -57,8 +52,8 @@ def _tables():
         "empty_best_mentions": (lambda s: local_table(s, [], schemas.BEST_MENTIONS),
                                 [], schemas.BEST_MENTIONS),
         "lineage": (lambda s: local_table(
-            s, [("links", 3, "r1", "fp", 10, 42, "sfp")], LINEAGE_DDL),
-            [("links", 3, "r1", "fp", 10, 42, "sfp")], LINEAGE_DDL),
+            s, [("links", 3, "r1", "fp", 10, 42, "sfp")], schemas.LINEAGE),
+            [("links", 3, "r1", "fp", 10, 42, "sfp")], schemas.LINEAGE),
         "metrics": (lambda s: local_table(
             s, [("r1", "links", "rows", 1.5, 2.5)], METRICS_DDL),
             [("r1", "links", "rows", 1.5, 2.5)], METRICS_DDL),

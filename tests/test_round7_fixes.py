@@ -141,7 +141,7 @@ def test_best_mentions_single_cogroup(spark):
         turns, fn, gz | {r[0] for r in gaz_rows}, ln,
     )
     mentions = fused.split_entities(ann)
-    ents, _ = ner.split_mentions(mentions)
+    ents = ner.entity_mentions(mentions)
     chunks = assembly.doc_chunks(t)
     bems = bestmention.best_mentions(ents, chunks, gaz_rows)
     # the CONSTRUCTED shape: one logical cogroup occurrence (the round-6

@@ -46,7 +46,7 @@ def main():
         (fused, "split_sentences"),
         (fused, "split_triples"),
         (fused, "split_entities"),
-        (ner, "split_mentions"),
+        (ner, "entity_mentions"),
         (coref, "clusters"),
         (link, "links"),
         (bestmention, "best_mentions"),
