@@ -80,6 +80,7 @@ import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import MapType, StructField, StructType
 
 from .. import schemas
 from ..functions.sqltext import sql_strlist
@@ -589,19 +590,21 @@ def resolve_conversation(ents: pd.DataFrame, doc: ChunkedDoc,
     return rows
 
 
-_ENT_REF_DDL = "struct<text:string,offset:bigint,name:string,entity_type:string>"
+def _fields(schema: StructType, *names: str) -> list[StructField]:
+    """``names`` of a declared layout, each nullable (cogroup output)."""
+    return [StructField(n, schema[n].dataType) for n in names]
+
+
 # one _row: the name's own row, and the struct of its per-offset picks
-_ROW_DDL = (
-    "kind string, best_mention string, "
-    f"best_entity {_ENT_REF_DDL}, "
-    f"container_entity {_ENT_REF_DDL}, "
-    f"contained_entity {_ENT_REF_DDL}, "
-    "candidate_count double"
+_PICK = StructType(_fields(schemas.BEST_MENTIONS, "kind", "best_mention", "best_entity",
+                           "container_entity", "contained_entity", "candidate_count"))
+_RESOLVED = StructType(
+    _fields(schemas.BEST_MENTIONS, "conv_id")
+    + _fields(schemas.ENTITY_REF, "entity_type", "name")
+    + _PICK.fields
+    + [StructField("picks", MapType(schemas.ENTITY_REF["offset"].dataType, _PICK))]
 )
-_RESOLVED = (
-    f"conv_id string, entity_type string, name string, {_ROW_DDL}, "
-    f"picks map<bigint,struct<{_ROW_DDL}>>"
-)
+_REF = schemas.ENTITY_REF.simpleString()
 
 
 def best_mentions(entities: DataFrame, doc_chunks: DataFrame,
@@ -635,9 +638,7 @@ def best_mentions(entities: DataFrame, doc_chunks: DataFrame,
     )
 
     def resolve_names(names_pdf: pd.DataFrame, chunks_pdf: pd.DataFrame) -> pd.DataFrame:
-        cols = ["conv_id", "entity_type", "name", "kind", "best_mention",
-                "best_entity", "container_entity", "contained_entity",
-                "candidate_count", "picks"]
+        cols = _RESOLVED.fieldNames()
         if names_pdf.empty or chunks_pdf.empty:
             return pd.DataFrame([], columns=cols)
         gaz = b_gaz.value
@@ -676,15 +677,13 @@ def best_mentions(entities: DataFrame, doc_chunks: DataFrame,
     # ONE projection for every row: splitting ``joined`` into filtered
     # branches and unioning them runs the rule-engine cogroup once per
     # branch (measured r7: 6.1s → ~2.5s at sf0.1 with one projection).
-    ref_ddl = schemas.ENTITY_REF.simpleString()
-
     def per_occ(field, own):
         return f"if(picks IS NULL, {own}, picks[offset].{field}) as {field}"
 
     return joined.selectExpr(
         "conv_id",
         per_occ("kind", "coalesce(kind, 'identity')"),
-        f"cast(struct(text, offset, name, entity_type) as {ref_ddl}) as target",
+        f"cast(struct(text, offset, name, entity_type) as {_REF}) as target",
         per_occ("best_mention", "coalesce(best_mention, name)"),
         per_occ("best_entity", "best_entity"),
         per_occ("container_entity", "container_entity"),
@@ -809,7 +808,6 @@ def expand_with_coref(bems: DataFrame, clusters: DataFrame,
         f" OR ((NOT (lower(m_text) IN ({sql_strlist(PERSONAL_PRONOUNS)})))"
         f" AND (({ent_type}) != 'PERSON'))"
     )
-    ref_ddl = schemas.ENTITY_REF.simpleString()
     new_rows = (
         pron_mentions.join(decided, ["conv_id", "cluster_id"])
         # clusters decided by bem need a bem; link clusters need a link row
@@ -822,9 +820,9 @@ def expand_with_coref(bems: DataFrame, clusters: DataFrame,
             f" {ent_type} as entity_type) as target",
             f"{best} as best_mention",
             f"cast(CASE WHEN NOT use_link THEN b.best_entity END"
-            f" as {ref_ddl}) as best_entity",
-            f"cast(null as {ref_ddl}) as container_entity",
-            f"cast(null as {ref_ddl}) as contained_entity",
+            f" as {_REF}) as best_entity",
+            f"cast(null as {_REF}) as container_entity",
+            f"cast(null as {_REF}) as contained_entity",
             "CASE WHEN use_link THEN 1.0D"
             " ELSE b.candidate_count END as candidate_count",
             "cluster_id",

@@ -24,7 +24,9 @@ import pyarrow as pa
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
+from .. import schemas
 from ..functions import textnorm
 from ..session import content_broadcast
 from .extract import extract_sentence
@@ -39,48 +41,22 @@ def _keep(s: str) -> bool:
     return len(s) <= 750 and len(s.split()) >= 4
 
 
-_PART_DDL = "struct<text:string,offset:bigint>"
-# row_kind: 's' = sentence (e_text/e_offset carry its text and doc
-# offset), 't' = triple, 'e' = entity/pronoun
-ANNOTATED = (
-    "conv_id string, row_kind string, turn_idx int, sent_num int, "
-    f"arg1 {_PART_DDL}, rel {_PART_DDL}, arg2 {_PART_DDL}, "
-    "confidence double, extractor string, "
-    "e_text string, e_offset bigint, e_name string, e_type string"
-)
-
-# the same schema as Arrow types — the fused pass yields RecordBatches
-# built column-wise (pa.array over plain lists is a C loop), bypassing
-# the pandas list-of-tuples → object-Series → per-row struct boxing
-# path entirely (measured r7: 2.1s of the 7.4s fused wall at sf0.1 was
-# output-side construction; guide §4.2 "hand whole batches to
-# vectorized native libraries")
-_PART_PA = pa.struct([("text", pa.string()), ("offset", pa.int64())])
-ANNOTATED_PA = pa.schema(
-    [
-        ("conv_id", pa.string()),
-        ("row_kind", pa.string()),
-        ("turn_idx", pa.int32()),
-        ("sent_num", pa.int32()),
-        ("arg1", _PART_PA),
-        ("rel", _PART_PA),
-        ("arg2", _PART_PA),
-        ("confidence", pa.float64()),
-        ("extractor", pa.string()),
-        ("e_text", pa.string()),
-        ("e_offset", pa.int64()),
-        ("e_name", pa.string()),
-        ("e_type", pa.string()),
-    ]
-)
+# schemas.ANNOTATED in Arrow: the pass yields RecordBatches built
+# column-wise (pa.array over plain lists is a C loop), never through the
+# pandas per-row struct boxing path (measured r7: 2.1s of the 7.4s fused
+# wall at sf0.1 was output-side construction; guide §4.2)
+_ARROW = to_arrow_schema(schemas.ANNOTATED)
 
 
-def _part_array(texts: list, offs: list, mask: list) -> pa.StructArray:
-    """struct<text,offset> column from child lists + null mask
-    (True = null row) — no per-row dict/tuple boxing."""
+def _column(values, typ: pa.DataType) -> pa.Array:
+    """One output column; a struct column arrives as its child lists plus
+    a null mask (True = null row) — no per-row dict/tuple boxing."""
+    if not pa.types.is_struct(typ):
+        return pa.array(values, typ)
+    *children, mask = values
     return pa.StructArray.from_arrays(
-        [pa.array(texts, pa.string()), pa.array(offs, pa.int64())],
-        fields=list(_PART_PA),
+        [pa.array(c, f.type) for c, f in zip(children, typ)],
+        fields=list(typ),
         mask=pa.array(mask, pa.bool_()),
     )
 
@@ -170,28 +146,15 @@ def parse_extract_annotate(
                         conf_l.append(None); ext_l.append(None)
                         etext.append(e_text); eoff.append(e_off)
                         ename.append(e_name); etyp.append(e_type)
+            cols = [conv, kind, til, snl, (a1t, a1o, a1m), (rlt, rlo, rlm),
+                    (a2t, a2o, a2m), conf_l, ext_l, etext, eoff, ename, etyp]
             yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(conv, pa.string()),
-                    pa.array(kind, pa.string()),
-                    pa.array(til, pa.int32()),
-                    pa.array(snl, pa.int32()),
-                    _part_array(a1t, a1o, a1m),
-                    _part_array(rlt, rlo, rlm),
-                    _part_array(a2t, a2o, a2m),
-                    pa.array(conf_l, pa.float64()),
-                    pa.array(ext_l, pa.string()),
-                    pa.array(etext, pa.string()),
-                    pa.array(eoff, pa.int64()),
-                    pa.array(ename, pa.string()),
-                    pa.array(etyp, pa.string()),
-                ],
-                schema=ANNOTATED_PA,
+                [_column(c, f.type) for c, f in zip(cols, _ARROW)], schema=_ARROW
             )
 
     # the select() above pins the column order the kernel indexes by
     # position (guide §4.1: explicit projection before an opaque map)
-    return src.mapInArrow(run, schema=ANNOTATED)
+    return src.mapInArrow(run, schema=schemas.ANNOTATED)
 
 
 def split_sentences(annotated: DataFrame) -> DataFrame:

@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .. import schemas
 from ..session import local_table
 
 
@@ -104,7 +105,7 @@ def weights_row(spark, dims: int, planes: int, tables: int,
     mats = [_plane_weights(dims, planes, t) for t in range(tables)]
     if refine_planes:
         mats.append(_plane_weights(dims, refine_planes, tables))
-    return local_table(spark, [(mats,)], "wmat array<array<array<double>>>")
+    return local_table(spark, [(mats,)], schemas.LSH_WEIGHTS)
 
 
 def _signature_from_wmat(vec_col, table_idx: int):
@@ -168,7 +169,7 @@ def centroids_table(spark, centroids: list[list[float]]) -> DataFrame:
     return local_table(
         spark,
         [(i, [float(x) for x in c]) for i, c in enumerate(centroids)],
-        "cell int, cvec array<double>",
+        schemas.IVF_CENTROIDS,
     )
 
 

@@ -12,7 +12,6 @@ becomes per-stage tables + lineage).
 
 from __future__ import annotations
 
-import os
 import threading
 from dataclasses import dataclass, field
 
@@ -69,14 +68,9 @@ class PipelineResult:
 # too or the hit would be the DAG over the old listing. Guarded by one
 # lock: driver threads sharing a session (a parallel query sweep) must
 # not race the scan against the FIFO eviction.
-# Kill-switch: SPARK_GRAFT_PLAN_CACHE=0.
 _PLAN_CACHE: list[tuple] = []
 _PLAN_CACHE_MAX = 16  # annotate() entries share the list with run_pipeline's
 _PLAN_CACHE_LOCK = threading.Lock()
-
-
-def _plan_cache_enabled() -> bool:
-    return os.environ.get("SPARK_GRAFT_PLAN_CACHE", "1") != "0"
 
 
 def _same_df(a: DataFrame | None, b: DataFrame | None) -> bool:
@@ -116,8 +110,6 @@ def _plan_cached(spark, dfs, scalars, storage_level: str, build):
     every action still computes from the inputs."""
     from pyspark import StorageLevel
 
-    if not _plan_cache_enabled():
-        return build()[0]
     hit = _plan_cache_get(spark, dfs, scalars)
     if hit is None:
         hit = build()

@@ -1,7 +1,10 @@
 """Explicit StructTypes for every stage table (SURVEY.md §1.2).
 
 The reference's data model is fixed-schema case classes; ours is explicit
-StructTypes declared once here — no schema inference anywhere.
+StructTypes declared once here, and only here (a source-scan test refuses
+a layout stated elsewhere; another pins every stage to its declaration).
+Arrow and cogroup schemas derive from these, and checkpoint reads go
+through them — no schema inference anywhere.
 
 Reference mapping (file:line refer to /root/reference/src/main/scala/edu/knowitall/):
 - TRANSCRIPTS      ← the KBP corpus file rows (BASELINE.json input_hint)
@@ -72,6 +75,28 @@ TRIPLES_RAW = StructType(
         StructField("arg2", EXTRACTION_PART, False),
         StructField("confidence", DoubleType(), False),
         StructField("extractor", StringType(), False),  # 'verb' | 'relnoun'
+    ]
+)
+
+# the fused pass's output (operators/fused.py), all nullable; row_kind: 's' =
+# sentence (e_text/e_offset carry its text and doc offset), 't' = triple,
+# 'e' = entity/pronoun
+_PART = StructType([StructField("text", StringType()), StructField("offset", LongType())])
+ANNOTATED = StructType(
+    [
+        StructField("conv_id", StringType()),
+        StructField("row_kind", StringType()),
+        StructField("turn_idx", IntegerType()),
+        StructField("sent_num", IntegerType()),
+        StructField("arg1", _PART),
+        StructField("rel", _PART),
+        StructField("arg2", _PART),
+        StructField("confidence", DoubleType()),
+        StructField("extractor", StringType()),
+        StructField("e_text", StringType()),
+        StructField("e_offset", LongType()),
+        StructField("e_name", StringType()),
+        StructField("e_type", StringType()),
     ]
 )
 
@@ -196,4 +221,24 @@ LINEAGE = StructType(
         # column existed (read back through this schema)
         StructField("schema_fp", StringType(), True),
     ]
+)
+
+METRICS = StructType(
+    [
+        StructField("run_id", StringType()),
+        StructField("stage", StringType()),
+        StructField("metric", StringType()),
+        StructField("value", DoubleType()),
+        StructField("ts", DoubleType()),
+    ]
+)
+
+# the LSH hyperplane model as one broadcast row (operators/similarity.weights_row)
+LSH_WEIGHTS = StructType(
+    [StructField("wmat", ArrayType(ArrayType(ArrayType(DoubleType()))))]
+)
+
+# an IVF coarse quantizer (operators/similarity.centroids_table)
+IVF_CENTROIDS = StructType(
+    [StructField("cell", IntegerType()), StructField("cvec", ArrayType(DoubleType()))]
 )

@@ -81,14 +81,12 @@ def content_broadcast(sc, value, key=None):
 # builds from driver-side rows goes through :func:`local_table`.
 
 
-def local_table(spark: SparkSession, rows, schema) -> DataFrame:
+def local_table(spark: SparkSession, rows, schema: StructType) -> DataFrame:
     """``rows`` (tuples in ``schema`` field order; dicts for struct
     values) as a LocalRelation-backed DataFrame with exactly ``schema``
-    (a StructType or a DDL string), nullability included. As with
+    (a declared StructType, schemas.*), nullability included. As with
     createDataFrame's default schema verification, a value of the wrong
     type or a None in a non-nullable field raises."""
-    if isinstance(schema, str):
-        schema = StructType.fromDDL(schema)
     arrow_schema = to_arrow_schema(schema)
     rows = list(rows)
     columns = [

@@ -20,10 +20,11 @@ idempotency guarantee at bucket granularity:
   written — O(written buckets), never a read-back of the directory), and
   the input fingerprint from the batch's INPUT;
 - ``done_buckets`` answers "which buckets of this stage are committed
-  under this output schema" with one grouped query over lineage, read
-  through the one stated layout, ``schemas.LINEAGE``;
+  under this output schema" with one grouped query over lineage;
 - reads expose only lineage-committed buckets, so data whose lineage
-  write never landed is invisible until the resume replaces it.
+  write never landed is invisible until the resume replaces it;
+- nothing is read by inference: a stage table reads through its expected
+  schema (all-empty reads back empty), lineage and metrics through theirs.
 
 In production these are Iceberg tables (``partitionedBy(bucket(N,
 conv_id))``, lineage keyed by snapshot id). This environment has no
@@ -44,7 +45,7 @@ import warnings
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import IntegerType, StructField, StructType
 
 from .. import schemas
 from ..session import local_table
@@ -176,21 +177,23 @@ class StageStore:
     def record_metric(self, run_id: str, stage: str, metric: str, value: float) -> None:
         local_table(
             self.spark, [(run_id, stage, metric, float(value), time.time())],
-            "run_id string, stage string, metric string, value double, ts double",
+            schemas.METRICS,
         ).write.mode("append").parquet(self._metrics_path())
 
     # ------------------------------------------------------------- read
-    def read_stage(self, stage: str, schema_fp: str) -> DataFrame:
-        """The stage table, restricted to the buckets ``done_buckets``
-        counts as committed under ``schema_fp``: data whose lineage write
+    def read_stage(self, stage: str, schema: StructType) -> DataFrame:
+        """The stage table in ``schema``, restricted to the buckets
+        ``done_buckets`` counts as committed under it: data whose lineage write
         never landed (a kill between the two writes) stays invisible until
         resume overwrites it — including when NO lineage write ever landed
         (zero committed buckets means zero visible rows, not everything)
         — and so do buckets committed under a DIFFERENT output schema."""
-        return self._read(stage, self.done_buckets(stage, schema_fp))
+        return self._read(stage, schema,
+                          self.done_buckets(stage, schema_fingerprint(schema)))
 
-    def _read(self, stage: str, buckets: list[int]) -> DataFrame:
-        df = self.spark.read.parquet(self._path(stage))
+    def _read(self, stage: str, schema: StructType, buckets: list[int]) -> DataFrame:
+        layout = StructType(schema.fields + [StructField(BUCKET_COL, IntegerType())])
+        df = self.spark.read.schema(layout).parquet(self._path(stage))
         df = df.where(F.col(BUCKET_COL).isin(buckets) if buckets else F.lit(False))
         return df.drop(BUCKET_COL)
 
@@ -200,7 +203,7 @@ class StageStore:
         return self.spark.read.schema(schemas.LINEAGE).parquet(self._lineage_path())
 
     def metrics(self) -> DataFrame:
-        return self.spark.read.parquet(self._metrics_path())
+        return self.spark.read.schema(schemas.METRICS).parquet(self._metrics_path())
 
     def done_buckets(self, stage: str, schema_fp: str) -> list[int]:
         """Buckets with a lineage row for ``stage`` whose recorded output
@@ -250,8 +253,8 @@ class StageStore:
         bucket is committed, so the table is read back without asking
         again."""
         dfs = inputs if isinstance(inputs, list) else [inputs]
-        expected_fp = schema_fingerprint(fn(*[df.limit(0) for df in dfs]).schema)
-        done = self.done_buckets(stage, expected_fp)
+        expected = fn(*[df.limit(0) for df in dfs]).schema
+        done = self.done_buckets(stage, schema_fingerprint(expected))
         remaining = [b for b in range(self.buckets) if b not in done]
         if remaining:
             t0 = time.time()
@@ -267,4 +270,4 @@ class StageStore:
             run_id = self.write_stage(stage, out, run_id=run_id,
                                       only_buckets=remaining, input_fps=input_fps)
             self.record_metric(run_id, stage, "wall_sec", time.time() - t0)
-        return self._read(stage, list(range(self.buckets)))
+        return self._read(stage, expected, list(range(self.buckets)))

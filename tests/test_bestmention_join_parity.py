@@ -8,6 +8,8 @@ consumed nowhere downstream."""
 
 import json
 
+from pyspark.sql.types import StructType
+
 from docopenie_spark import datagen, schemas
 from docopenie_spark.operators import assembly, bestmention, fused, ner
 from docopenie_spark.plans.pipeline import default_dictionaries
@@ -123,10 +125,8 @@ def test_offset_dependent_picks_equal_python_per_occurrence(spark):
     for off, piece in [(e[2], e[1]) for e in ents] + _DEP_TEXT:
         text[off:off + len(piece)] = piece
     text = "".join(text)
-    ents_df = local_table(
-        spark, ents,
-        "conv_id string, text string, offset bigint, name string, entity_type string",
-    )
+    ents_df = local_table(spark, ents, StructType.fromDDL(
+        "conv_id string, text string, offset bigint, name string, entity_type string"))
     chunks = local_table(spark, [("c0", 0, len(text) + 1, text)], schemas.DOC_CHUNKS)
     got = [r.asDict(recursive=True) for r in
            bestmention.best_mentions(ents_df, chunks, _DEP_GAZETTEER).collect()]

@@ -64,8 +64,9 @@ def test_annotated_checkpoint_in_the_old_layout_is_recomputed(spark, tmp_path):
     ``e_len`` column, and null ``e_text`` on 's' rows whose text was
     rebuilt from the turn table) must not be read back: the schema guard
     recomputes every bucket, and the triples equal a fresh run's."""
-    from pyspark.sql.types import StructType
+    from pyspark.sql.types import IntegerType, StructField, StructType
 
+    from docopenie_spark import schemas
     from docopenie_spark.operators import assembly, fused
     from docopenie_spark.plans.pipeline import default_dictionaries
 
@@ -83,8 +84,9 @@ def test_annotated_checkpoint_in_the_old_layout_is_recomputed(spark, tmp_path):
         *[F.when(~is_s, F.col(c)).alias(c) if c == "e_text" else c for c in cols],
         F.when(is_s, F.length("e_text")).cast("int").alias("e_len"),
     ).select(*old_cols)
-    old_ddl = fused.ANNOTATED.replace("e_offset bigint,", "e_offset bigint, e_len int,")
-    assert schema_fingerprint(old.schema) == schema_fingerprint(StructType.fromDDL(old_ddl))
+    new = schemas.ANNOTATED.fields
+    old_layout = StructType(new[:at] + [StructField("e_len", IntegerType())] + new[at:])
+    assert schema_fingerprint(old.schema) == schema_fingerprint(old_layout)
     assert old.where(is_s & F.col("e_text").isNotNull()).isEmpty()
 
     store = StageStore(spark, str(tmp_path / "cp"), buckets=4)
@@ -96,7 +98,7 @@ def test_annotated_checkpoint_in_the_old_layout_is_recomputed(spark, tmp_path):
     assert fresh.exceptAll(resumed).isEmpty()
     lin = store.lineage().where(F.col("stage") == "annotated").collect()
     assert sorted(r.partition_id for r in lin if r.run_id == "resume") == [0, 1, 2, 3]
-    back = store.read_stage("annotated", schema_fingerprint(ann.schema))
+    back = store.read_stage("annotated", ann.schema)
     assert not back.isEmpty()
     assert "e_len" not in back.columns
     assert back.where((F.col("row_kind") == "s") & F.col("e_text").isNull()).isEmpty()

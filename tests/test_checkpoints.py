@@ -15,7 +15,7 @@ def test_write_read_roundtrip(spark, tmp_path):
     store = StageStore(spark, str(tmp_path / "cp"), buckets=8)
     t = datagen.transcripts_df(spark, 160)
     store.write_stage("transcripts", t)
-    back = store.read_stage("transcripts", schema_fingerprint(t.schema))
+    back = store.read_stage("transcripts", t.schema)
     assert back.count() == 160
     assert set(back.columns) == set(t.columns)
 
@@ -58,6 +58,25 @@ def test_resume_equals_fresh_run(spark, tmp_path):
     assert "run3" not in runs  # nothing recomputed
 
 
+def test_stage_empty_in_every_bucket_reads_back_empty(spark, tmp_path):
+    """A stage with no output row in any bucket leaves no data file to
+    infer a schema from; it reads back through the stage's expected
+    schema as an empty table, on the computing call and on the no-op
+    resume after it."""
+    store = StageStore(spark, str(tmp_path / "cp"), buckets=4)
+    src = spark.range(10).selectExpr("cast(id as string) as conv_id", "id as v")
+
+    def fn(d):
+        return d.where("v < 0")
+
+    for run_id in ("r1", "r2"):
+        out = store.run_resumable("s", src, fn, run_id=run_id)
+        assert out.columns == ["conv_id", "v"]
+        assert out.schema.simpleString() == fn(src).schema.simpleString()
+        assert out.isEmpty()
+    assert {r.run_id for r in store.lineage().collect()} == {"r1"}
+
+
 def test_lineage_no_full_table_rescan(spark, tmp_path):
     """Lineage rows for a write reflect ONLY that write's buckets — never
     a conflation with prior runs' buckets already in the directory."""
@@ -76,7 +95,7 @@ def test_lineage_no_full_table_rescan(spark, tmp_path):
     assert sorted(r.partition_id for r in by_run["runB"]) == rest
     # total committed rows across both runs == input rows (no conflation)
     assert sum(r.row_count for r in lin) == 240
-    assert store.read_stage("s", schema_fingerprint(t.schema)).count() == 240
+    assert store.read_stage("s", t.schema).count() == 240
 
 
 def test_crash_between_data_and_lineage_no_duplicates(spark, tmp_path):
@@ -146,7 +165,7 @@ def test_read_stage_invisible_when_no_lineage_ever_landed(spark, tmp_path):
     t = datagen.transcripts_df(spark, 80)
     store.write_stage("s", t, run_id="killed")
     shutil.rmtree(str(tmp_path / "cp" / "_lineage"))
-    assert store.read_stage("s", schema_fingerprint(t.schema)).count() == 0
+    assert store.read_stage("s", t.schema).count() == 0
     assert spark.read.parquet(str(tmp_path / "cp" / "s")).count() == 80
 
 

@@ -4,6 +4,7 @@ link diff + the cross-variant text-equality invariant."""
 import re
 
 import pyspark.sql.functions as F
+from pyspark.sql.types import StructType
 
 from docopenie_spark import datagen, schemas
 from docopenie_spark.operators.substitute import substituted_triples
@@ -97,6 +98,10 @@ def _part(text, offset):
 _DISPLAY = "conv_id string, target struct<text:string, offset:long>, best_mention string"
 
 
+def _bems(spark, rows):
+    return local_table(spark, rows, StructType.fromDDL(_DISPLAY))
+
+
 def test_eval_diff_one_pass_fans_out_duplicate_keys_like_the_join(spark):
     """Extractions A and B share the 8-column identity key at different
     offsets; only A's subject has a comparison mention. The join pairs
@@ -113,10 +118,10 @@ def test_eval_diff_one_pass_fans_out_duplicate_keys_like_the_join(spark):
     sent_rows = [("c1", 0, 0, "he told him and he told him"),
                  ("c1", 1, 0, "Ada met Bob")]
     raw = local_table(spark, raw_rows, schemas.TRIPLES_RAW)
-    sents = local_table(spark, sent_rows,
-                        "conv_id string, turn_idx int, sent_num int, text string")
-    base = substituted_triples(raw, local_table(spark, bem_b, _DISPLAY))
-    comp = substituted_triples(raw, local_table(spark, bem_c, _DISPLAY))
+    sents = local_table(spark, sent_rows, StructType.fromDDL(
+        "conv_id string, turn_idx int, sent_num int, text string"))
+    base = substituted_triples(raw, _bems(spark, bem_b))
+    comp = substituted_triples(raw, _bems(spark, bem_c))
 
     one = eval_diff(base, comp, sents)
     assert _folds(one) == 1
@@ -146,10 +151,10 @@ def test_eval_diff_one_pass_drops_null_keys_like_the_join(spark):
     raw = local_table(spark, [
         ("c1", 0, 0, _part("he", 0), _part("told", 3), _part("him", 8), None, "verb"),
         ("c1", 0, 1, _part("she", 20), _part("saw", 24), _part("it", 28), 0.7, "verb"),
-    ], ddl)
-    base = substituted_triples(raw, local_table(spark, [], _DISPLAY))
-    comp = substituted_triples(raw, local_table(
-        spark, [("c1", _part("he", 0), "Ada"), ("c1", _part("she", 20), "Eve")], _DISPLAY))
+    ], StructType.fromDDL(ddl))
+    base = substituted_triples(raw, _bems(spark, []))
+    comp = substituted_triples(raw, _bems(
+        spark, [("c1", _part("he", 0), "Ada"), ("c1", _part("she", 20), "Eve")]))
     one = eval_diff(base, comp)
     assert _folds(one) == 1
     got = sorted(tuple(r) for r in one.collect())

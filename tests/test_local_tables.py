@@ -1,6 +1,7 @@
-"""Driver-built tables are JVM LocalRelations (session.local_table), the
-run_pipeline plan cache is listing-aware and thread-safe, and the SQL
-literal helper keeps any dictionary name one literal."""
+"""Driver-built tables are JVM LocalRelations (session.local_table) in a
+layout stated only in schemas.py, the run_pipeline plan cache is
+listing-aware and thread-safe, and the SQL literal helper keeps any
+dictionary name one literal."""
 
 import ast
 import json
@@ -14,12 +15,12 @@ from pyspark.sql.types import StructType
 from docopenie_spark import datagen, schemas
 from docopenie_spark.functions.sqltext import sql_strlist
 from docopenie_spark.operators import similarity
+from docopenie_spark.plans import pipeline
 from docopenie_spark.plans.pipeline import run_pipeline
 from docopenie_spark.session import local_table
 
 REPO = pathlib.Path(__file__).resolve().parent.parent
 
-METRICS_DDL = "run_id string, stage string, metric string, value double, ts double"
 # a binary column plus a nullable nested struct that is None in one row
 MEDIA_DDL = (
     "media_id string not null, kind string not null, payload binary not null, "
@@ -43,11 +44,11 @@ def _tables():
         "gazetteer": (datagen.gazetteer_df, datagen.gazetteer_rows(),
                       schemas.GAZETTEER),
         "weights_row": (lambda s: similarity.weights_row(s, 3, 2, 2, refine_planes=1),
-                        [(wmat,)], "wmat array<array<array<double>>>"),
+                        [(wmat,)], schemas.LSH_WEIGHTS),
         "centroids": (lambda s: similarity.centroids_table(s, cents),
                       [(0, cents[0]), (1, cents[1])],
-                      "cell int, cvec array<double>"),
-        "media": (lambda s: local_table(s, media_rows, MEDIA_DDL),
+                      schemas.IVF_CENTROIDS),
+        "media": (lambda s: local_table(s, media_rows, StructType.fromDDL(MEDIA_DDL)),
                   media_rows, MEDIA_DDL),
         "empty_best_mentions": (lambda s: local_table(s, [], schemas.BEST_MENTIONS),
                                 [], schemas.BEST_MENTIONS),
@@ -55,8 +56,8 @@ def _tables():
             s, [("links", 3, "r1", "fp", 10, 42, "sfp")], schemas.LINEAGE),
             [("links", 3, "r1", "fp", 10, 42, "sfp")], schemas.LINEAGE),
         "metrics": (lambda s: local_table(
-            s, [("r1", "links", "rows", 1.5, 2.5)], METRICS_DDL),
-            [("r1", "links", "rows", 1.5, 2.5)], METRICS_DDL),
+            s, [("r1", "links", "rows", 1.5, 2.5)], schemas.METRICS),
+            [("r1", "links", "rows", 1.5, 2.5)], schemas.METRICS),
     }
 
 
@@ -125,6 +126,57 @@ def test_no_create_dataframe_outside_local_table():
     assert not stray, "build driver-side tables with session.local_table: " + ", ".join(stray)
 
 
+# Spark calls that take a table schema; ``read.schema`` is matched apart
+_SCHEMA_TAKERS = {"mapInArrow", "applyInPandas", "local_table", "createDataFrame"}
+
+
+def _is_ddl(node: ast.AST, ddl_names: set[str]) -> bool:
+    """A string literal, an f-string, a concatenation of them, or a name
+    bound to one at module level."""
+    if isinstance(node, ast.Constant):
+        return isinstance(node.value, str)
+    if isinstance(node, ast.BinOp):
+        return _is_ddl(node.left, ddl_names) or _is_ddl(node.right, ddl_names)
+    return isinstance(node, ast.JoinedStr) or (
+        isinstance(node, ast.Name) and node.id in ddl_names)
+
+
+def _stated_layouts(path: pathlib.Path) -> list[str]:
+    """Every ``pa.schema(``/``pa.struct(`` call, and every DDL string
+    handed to a call that takes a table schema."""
+    tree = ast.parse(path.read_text())
+    ddl_names = {
+        t.id for n in tree.body if isinstance(n, ast.Assign) and _is_ddl(n.value, set())
+        for t in n.targets if isinstance(t, ast.Name)
+    }
+    out = []
+    for node in ast.walk(tree):
+        if not isinstance(node, ast.Call):
+            continue
+        f = node.func
+        name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+        if (isinstance(f, ast.Attribute) and isinstance(f.value, ast.Name)
+                and f.value.id == "pa" and name in ("schema", "struct")):
+            out.append(f"{node.lineno}: pa.{name}(")
+        elif name in _SCHEMA_TAKERS or (
+                name == "schema" and isinstance(f.value, ast.Attribute)
+                and f.value.attr == "read"):
+            args = [*node.args, *(k.value for k in node.keywords)]
+            if any(_is_ddl(a, ddl_names) for a in args):
+                out.append(f"{node.lineno}: DDL string to {name}(")
+    return out
+
+
+def test_no_table_layout_stated_outside_schemas():
+    pkg = REPO / "docopenie_spark"
+    stray = [
+        f"{p.relative_to(REPO)}:{hit}"
+        for p in sorted(pkg.rglob("*.py")) if p != pkg / "schemas.py"
+        for hit in _stated_layouts(p)
+    ]
+    assert not stray, "declare table layouts once, in schemas.py: " + ", ".join(stray)
+
+
 # --------------------------------------------------------------- plan cache
 
 def test_plan_cache_sees_files_appended_under_same_path(spark, tmp_path, monkeypatch):
@@ -144,7 +196,7 @@ def test_plan_cache_sees_files_appended_under_same_path(spark, tmp_path, monkeyp
     finally:
         r2.unpersist()
     with monkeypatch.context() as mp:  # an independent build
-        mp.setenv("SPARK_GRAFT_PLAN_CACHE", "0")
+        mp.setattr(pipeline, "_PLAN_CACHE", [])
         fresh = run_pipeline(spark, spark.read.parquet(d))
     try:
         assert n2 == fresh.triples.count() > n1
@@ -160,7 +212,7 @@ def test_run_pipeline_from_two_threads(spark, monkeypatch):
     inputs = [datagen.transcripts_df(spark, 80, seed=s) for s in (21, 22)]
     want = []
     with monkeypatch.context() as mp:  # independent builds
-        mp.setenv("SPARK_GRAFT_PLAN_CACHE", "0")
+        mp.setattr(pipeline, "_PLAN_CACHE", [])
         for t in inputs:
             r = run_pipeline(spark, t)
             want.append(r.triples.count())
@@ -190,8 +242,6 @@ def test_plan_cache_concurrent_put_and_get():
     readers look the target up. Any 16 consecutive puts hold at least
     four target copies, so a locked scan always finds it — an unlocked
     scan can skip entries while a writer evicts the list head."""
-    from docopenie_spark.plans import pipeline
-
     owner, target = object(), ("target",)
     saved = list(pipeline._PLAN_CACHE)
     pipeline._PLAN_CACHE.clear()

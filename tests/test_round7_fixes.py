@@ -238,18 +238,6 @@ def test_plan_cache_misses_on_different_input_or_args(spark):
         r.unpersist()
 
 
-def test_plan_cache_kill_switch(spark, monkeypatch):
-    from docopenie_spark.plans import pipeline as pl
-
-    t = datagen.transcripts_df(spark, 176)
-    r1 = pl.run_pipeline(spark, t)
-    monkeypatch.setenv("SPARK_GRAFT_PLAN_CACHE", "0")
-    r2 = pl.run_pipeline(spark, t)
-    assert r2 is not r1
-    r1.unpersist()
-    r2.unpersist()
-
-
 # ------------------------------------------------- broadcast content sharing
 #
 # r7: a fresh sc.broadcast id pickled into a UDF closure made two

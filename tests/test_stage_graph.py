@@ -1,12 +1,14 @@
 """The pipeline's stages are wired once (pipeline._stage_graph): every
 runner — run_pipeline, run_checkpointed, bench_extra.py — builds them
-through a ``stage`` callback instead of calling the builders itself."""
+through a ``stage`` callback instead of calling the builders itself. Each
+stage's layout is its schemas.py declaration."""
 
 import ast
 import pathlib
 import sys
 
-from docopenie_spark import datagen
+from docopenie_spark import datagen, schemas
+from docopenie_spark.operators import assembly
 from docopenie_spark.plans import pipeline
 
 REPO = pathlib.Path(__file__).resolve().parent.parent
@@ -87,6 +89,37 @@ def test_run_pipeline_persists_the_fanout_stages_in_order(spark):
             assert got is want
     finally:
         r.unpersist()
+
+
+def test_stage_layouts_match_declared_schemas(spark):
+    """Every stage's column names and data types, nested ones included,
+    are its schemas.* declaration's (nullability is what Spark derives
+    for each plan); annotate()'s layout is the declaration exactly."""
+    t = datagen.transcripts_df(spark, 80, seed=47)
+    r = pipeline.run_pipeline(spark, t)
+    ann = pipeline.annotate(spark, t)
+    try:
+        tables = {
+            "sentences": (r.sentences, schemas.SENTENCES),
+            "triples_raw": (r.triples_raw, schemas.TRIPLES_RAW),
+            "clusters": (r.clusters, schemas.CLUSTERS),
+            "links": (r.links, schemas.LINKS),
+            "best_mentions": (r.best_mentions, schemas.BEST_MENTIONS),
+            "best_mentions_expanded": (r.best_mentions_expanded, schemas.BEST_MENTIONS),
+            "triples": (r.triples, schemas.TRIPLES),
+            "doc_chunks": (assembly.doc_chunks(t), schemas.DOC_CHUNKS),
+            "annotated": (ann, schemas.ANNOTATED),
+        }
+        wrong = {
+            name: (df.schema.simpleString(), want.simpleString())
+            for name, (df, want) in tables.items()
+            if df.schema.simpleString() != want.simpleString()
+        }
+        assert not wrong, wrong
+        assert ann.schema == schemas.ANNOTATED
+    finally:
+        r.unpersist()
+        ann.unpersist()
 
 
 def test_bench_extra_times_no_cached_stage_output(spark):
