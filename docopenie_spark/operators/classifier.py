@@ -2,9 +2,10 @@
 reference tool/bestmention/classifier/*).
 
 U1 — the 13-feature FeatureSet (classifier/BestMentionFeatures.scala:54-115),
-re-expressed as COLUMN EXPRESSIONS + two bucketed containment joins (the
+re-expressed as COLUMN EXPRESSIONS + one bucketed containment join (the
 coref-cluster-agreement feature is the reference's mentionsBetween nested
-scan, here a hash join):
+scan, here a hash join of the target and best-entity spans, tagged by
+side, against the cluster mentions):
   4 × is-<EntityType>-rule    (isTypeFeature, :54-56)
   is Coref / is Linked / is Coref+Identity  (typeFeatures, :58-62)
   Ambiguous Candidate Count   (docFeatures, :65)
@@ -79,23 +80,6 @@ def with_bem_index(bems: DataFrame) -> DataFrame:
     )
 
 
-def _span_clusters(spans: DataFrame, clusters: DataFrame, off: str, ln: str,
-                   out: str) -> DataFrame:
-    """(conv_id, bem_index, <out>=set of cluster ids whose mentions fall
-    inside the span) — the mentionsBetween → cluster lookup as a bucketed
-    containment join (BestMentionFeatures.scala:68-72). ``off``/``ln``
-    are SQL expression strings (round-7 construction-cost rewrite)."""
-    cm = clusters.selectExpr(
-        "conv_id", "cluster_id", "explode(mentions) as m"
-    ).selectExpr(
-        "conv_id", "cluster_id", "m.offset as m_off", "length(m.text) as m_len",
-    )
-    j = containment_join(cm, spans, "m_off", "m_len", off, ln)
-    return j.groupBy("conv_id", "bem_index").agg(
-        F.collect_set("cluster_id").alias(out)
-    )
-
-
 def bem_features(bems: DataFrame, clusters: DataFrame,
                  gazetteer_rows: list[tuple]) -> DataFrame:
     """BEST_MENTIONS (+ index) → 13 feature columns (U1). The gazetteer
@@ -152,31 +136,37 @@ def bem_features(bems: DataFrame, clusters: DataFrame,
         " as f_loc_type_similarity",
     )
 
-    # Coref Cluster Agrees (ref :66-82): clusters touching the target span
-    # vs clusters touching the best-entity span; only FullResolvedBestMention
-    full = feats.where("best_entity IS NOT NULL").selectExpr(
-        "conv_id", "bem_index",
-        "target.offset as t_off", "length(target.text) as t_len",
-        "best_entity.offset as e_off", "length(best_entity.text) as e_len",
+    # Coref Cluster Agrees (ref :66-82): clusters with a mention inside
+    # the target span vs inside the best-entity span, both spans tagged
+    # by side in one join; only FullResolvedBestMention, others agree 0
+    full = feats.where("best_entity IS NOT NULL")
+    spans = full.selectExpr(
+        "conv_id", "bem_index", "'t' as side",
+        "target.offset as p_off", "length(target.text) as p_len",
+    ).unionByName(full.selectExpr(
+        "conv_id", "bem_index", "'b' as side",
+        "best_entity.offset as p_off", "length(best_entity.text) as p_len",
+    ))
+    cm = clusters.selectExpr(
+        "conv_id", "cluster_id", "explode(mentions) as m"
+    ).selectExpr(
+        "conv_id", "cluster_id", "m.offset as m_off", "length(m.text) as m_len",
     )
-    tc = _span_clusters(full, clusters, "t_off", "t_len", "t_clusters")
-    bc = _span_clusters(full, clusters, "e_off", "e_len", "b_clusters")
-    agree_src = (
-        full.select("conv_id", "bem_index")
-        .join(tc, ["conv_id", "bem_index"], "left")
-        .join(bc, ["conv_id", "bem_index"], "left")
+    agree_df = (
+        containment_join(cm, spans, "m_off", "m_len", "p_off", "p_len")
+        .groupBy("conv_id", "bem_index")
+        .agg(F.expr("collect_set(CASE WHEN side = 't' THEN cluster_id END) as tc"),
+             F.expr("collect_set(CASE WHEN side = 'b' THEN cluster_id END) as bc"))
+        .selectExpr(
+            "conv_id", "bem_index",
+            "CASE WHEN size(array_intersect(tc, bc)) > 0 THEN 1.0D"
+            " WHEN size(bc) > 0 THEN -1.0D"
+            " ELSE 0.0D END as f_coref_cluster_agrees",
+        )
     )
-    agree_df = agree_src.selectExpr(
-        "conv_id", "bem_index",
-        "CASE WHEN size(array_intersect(coalesce(t_clusters, array()),"
-        " coalesce(b_clusters, array()))) > 0 THEN 1.0D"
-        " WHEN size(coalesce(b_clusters, array())) > 0 THEN -1.0D"
-        " ELSE 0.0D END as f_coref_cluster_agrees",
-    )
-    out = feats.join(agree_df, ["conv_id", "bem_index"], "left").withColumn(
+    return feats.join(agree_df, ["conv_id", "bem_index"], "left").withColumn(
         "f_coref_cluster_agrees", F.coalesce("f_coref_cluster_agrees", F.lit(0.0))
     )
-    return out
 
 
 # ------------------------------------------------------------------ U2
@@ -233,30 +223,31 @@ def training_rows(features: DataFrame, sentences: DataFrame) -> DataFrame:
     """The writer's row layout (ResolvedBestMentionWriter.scala:50-73):
     label (empty — to be human-filled), texts, contexts (the sentence
     containing the offset, BestMentionHelper.context), features, index,
-    doc id. Contexts come from a bucketed containment join; tabs/newlines
-    are scrubbed exactly like the reference's noTabs."""
+    doc id. Both contexts come from one bucketed containment join of the
+    target and best offsets, tagged by side, against the sentences;
+    tabs/newlines are scrubbed exactly like the reference's noTabs."""
     s = sentences.selectExpr(
         "conv_id", "offset as s_off", "length(text) as s_len", "text as s_text"
     )
-
-    def _ctx(off, out):
-        p = features.selectExpr("conv_id", "bem_index", f"{off} as p_off")
-        # strictly inside: a sentence starting or ending AT the offset is
-        # not its context
-        j = containment_join(p, s, "p_off", "0", "s_off", "s_len").where(
-            "p_off > s_off AND p_off < s_off + s_len"
-        )
-        return j.groupBy("conv_id", "bem_index").agg(F.min("s_text").alias(out))
-
-    t_ctx = _ctx("target.offset", "target_context")
-    b_ctx = _ctx(
-        "coalesce(best_entity.offset, container_entity.offset, target.offset)",
-        "best_context",
+    p = features.selectExpr(
+        "conv_id", "bem_index", "'t' as side", "target.offset as p_off"
+    ).unionByName(features.selectExpr(
+        "conv_id", "bem_index", "'b' as side",
+        "coalesce(best_entity.offset, container_entity.offset, target.offset)"
+        " as p_off",
+    ))
+    # strictly inside: a sentence starting or ending AT the offset is not
+    # its context
+    ctx = (
+        containment_join(p, s, "p_off", "0", "s_off", "s_len")
+        .where("p_off > s_off AND p_off < s_off + s_len")
+        .groupBy("conv_id", "bem_index")
+        .agg(F.expr("min(CASE WHEN side = 't' THEN s_text END) as target_context"),
+             F.expr("min(CASE WHEN side = 'b' THEN s_text END) as best_context"))
     )
     clean = lambda c: F.regexp_replace(F.coalesce(c, F.lit("NA")), "[\\t\\n]", " ")
     return (
-        features.join(t_ctx, ["conv_id", "bem_index"], "left")
-        .join(b_ctx, ["conv_id", "bem_index"], "left")
+        features.join(ctx, ["conv_id", "bem_index"], "left")
         .select(
             F.lit("").alias("label"),
             clean(F.col("target.text")).alias("target_text"),

@@ -11,11 +11,12 @@ Spark-first re-expression:
   against the (small) entity dictionary exploded over name + aliases —
   the dictionary plays the role of the reference's linker index;
 - scoring = deterministic column expressions (exact-name 6.0 / alias 5.5
-  / word-containment 4.0 base, + 0.4·log10(1+inlinks)); only relative
+  base, + 0.4·log10(1+inlinks) + context overlap); only relative
   ordering and the 5.0 threshold are observable behavior (SURVEY.md U3);
 - context (T9) = own and coref-sibling sentences of each ambiguous arg,
   gathered with ``containment_join`` — the one bucketed interval join,
-  which substitution (substitute.py) uses too;
+  which the classifier (classifier.py) and substitution (substitute.py)
+  use too;
 - argmax per argument = row_number over a descending-score window —
   the reference's getBestEntity head-of-sorted-list.
 
@@ -81,8 +82,9 @@ def containment_join(points: DataFrame, spans: DataFrame, p_off, p_len, s_off, s
     that contains it. Bucketed on (conv_id, offset // _BUCKET) — a span
     explodes over every bucket it touches, a point sits in its start's
     bucket — so it stays skew-proof: no per-conversation cross product
-    even for the hot conversation (SURVEY.md J3 pattern). The linking
-    context joins and substitution (substitute.py) share it.
+    even for the hot conversation (SURVEY.md J3 pattern). Linking's
+    context, the classifier's cluster agreement and training contexts,
+    and substitution (substitute.py) share it, one call per table pair.
     Offset/length arguments are SQL expression strings (round 7: the
     containment joins cost ~0.5 s of py4j driver time per run_pipeline
     construction as Column trees)."""
@@ -104,34 +106,34 @@ def arg_contexts(args: DataFrame, clusters: DataFrame, sentences: DataFrame) -> 
     extended).distinct``, Linker.scala:50). Returns (conv_id, offset,
     text, ctx) with ctx = distinct lowercase tokens of those sentences.
 
-    All four steps are bucketed equi-joins — the reference's per-document
-    nested loops become hash joins that scale past the hot conversation."""
+    Two bucketed containment joins replace the reference's per-document
+    nested loops: cluster mentions inside the arg span find the sibling
+    mentions, then the arg span and its siblings' spans, as one point
+    table, find their sentences."""
     akey = ["conv_id", "offset", "text"]
     a = args.select(*akey, "clean_text", "clean_offset")
     s = sentences.selectExpr(
         "conv_id", "offset as s_off", "length(text) as s_len", "text as s_text"
     )
-    # 1. the arg's own sentence
-    own = containment_join(
-        a, s, "clean_offset", "length(clean_text)", "s_off", "s_len"
-    ).select(*akey, "s_off", "s_text")
-    # 2. cluster mentions inside the arg span
     cm = clusters.selectExpr(
         "conv_id", "cluster_id", "explode(mentions) as m"
     ).selectExpr("conv_id", "cluster_id",
                  "m.offset as m_off", "length(m.text) as m_len")
     arg_clusters = containment_join(
         cm, a, "m_off", "m_len", "clean_offset", "length(clean_text)"
-    ).select("conv_id", "offset", "text", "cluster_id").distinct()
-    # 3. sibling mentions of those clusters
-    siblings = arg_clusters.join(cm, ["conv_id", "cluster_id"]).select(
-        "conv_id", "offset", "text", "m_off", "m_len"
+    ).select(*akey, "cluster_id").distinct()
+    # the arg's own span (→ its own sentence) and every sibling mention
+    # of those clusters (→ the EXTENDED context)
+    points = a.selectExpr(
+        *akey, "clean_offset as p_off", "length(clean_text) as p_len"
+    ).unionByName(
+        arg_clusters.join(cm, ["conv_id", "cluster_id"]).selectExpr(
+            *akey, "m_off as p_off", "m_len as p_len"
+        )
     )
-    # 4. sentences containing the siblings (the EXTENDED context)
-    extended = containment_join(
-        siblings, s, "m_off", "m_len", "s_off", "s_len"
-    ).select(*akey, "s_off", "s_text")
-    ctx_sents = own.unionByName(extended).dropDuplicates(akey + ["s_off"])
+    ctx_sents = containment_join(
+        points, s, "p_off", "p_len", "s_off", "s_len"
+    ).select(*akey, "s_off", "s_text").dropDuplicates(akey + ["s_off"])
     return ctx_sents.groupBy(*akey).agg(
         F.expr(
             r"array_distinct(flatten(collect_list(split(lower(s_text), '\\s+'))))"

@@ -108,8 +108,19 @@ def test_pr_curve_hand_example(spark):
 def test_training_tsv_roundtrip(spark, bems, empty_clusters, tmp_path):
     # U4: writer layout (ResolvedBestMentionWriter.scala:50-62) and the
     # labeled reader that keeps only '1'/'0' rows (:27-30)
+    s0 = "GDC works with the Global Data Consortium daily x"
+    s1 = "Springfield\tsits near the state line of Massachusetts ."
+    s2 = "Later that week he said it too"  # [190, 220)
     sents = spark.createDataFrame(
-        [("c1", 0, 0, 0, "GDC works with the Global Data Consortium daily x")],
+        [
+            ("c1", 0, 0, 0, s0),
+            # starts AT the container target's offset: not its context
+            ("c1", 1, 1, 100, s1),
+            # ends AT the coref_identity target's offset: not its context
+            ("c1", 2, 2, 190, s2),
+            # another conversation's sentence never supplies context
+            ("c2", 0, 0, 0, "x" * 400),
+        ],
         schemas.SENTENCES,
     )
     feats = clf.bem_features(bems, empty_clusters, GAZ)
@@ -117,6 +128,18 @@ def test_training_tsv_roundtrip(spark, bems, empty_clusters, tmp_path):
     assert rows.columns[:5] == ["label", "target_text", "best_text",
                                 "target_context", "best_context"]
     assert rows.columns[-2:] == ["doc_bem_index", "doc_id"]
+    # contexts (BestMentionHelper.context): the sentence strictly
+    # containing the offset, else NA; best side reads best_entity, then
+    # container_entity, then the target's own offset; tabs scrubbed
+    s1_clean = s1.replace("\t", " ")
+    assert {r.target_text: (r.target_context, r.best_context)
+            for r in rows.collect()} == {
+        "GDC": (s0, s0),                  # 10 and 40 strictly inside s0
+        "Springfield": ("NA", s1_clean),  # 100 starts s1; 140 inside it
+        "he": (s2, s2),                   # 200 inside s2 (no best entity)
+        "his": ("NA", "NA"),              # 220 is s2's end
+        "Austin": ("NA", "NA"),           # no sentence at 300
+    }
     # simulate human labeling: label every other row
     labeled = rows.withColumn(
         "label", F.when(F.col("doc_bem_index") % 2 == 0, "1").otherwise("0")

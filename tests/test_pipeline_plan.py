@@ -1,5 +1,6 @@
 """run_pipeline's construction (no Spark job), its plan-cache key, and
-the one Spark path the NLP stages take in the driver queries."""
+the one Spark path the NLP stages take in the driver queries, and one
+containment join per table pair in linking and the classifier."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -83,3 +84,31 @@ def test_nlp_queries_run_only_the_fused_arrow_pass(spark, sf_dir, name):
     assert all("MapInPandas gen(" in ln for ln in hops), hops
     assert "MapInArrow" in plan
     assert df.count() > 0
+
+
+def test_each_table_pair_takes_one_containment_join(spark):
+    """A containment join explodes its span side over offset buckets
+    (``explode(sequence(…))``). Linking's context explodes the arg spans
+    once (cluster mentions inside the arg) and the sentences once (the
+    arg and its coref siblings, one point table); the cluster-agreement
+    feature explodes its target and best-entity spans once, and the
+    training contexts the sentences once."""
+    from docopenie_spark import schemas
+    from docopenie_spark.operators import classifier as clf
+    from docopenie_spark.operators import link
+
+    def explodes(df):
+        return df._jdf.queryExecution().analyzed().toString().count(
+            "explode(sequence(")
+
+    args = link.with_clean_arg(spark.createDataFrame(
+        [("c1", "the Meridian", 0)], "conv_id string, text string, offset long"))
+    clusters = spark.createDataFrame([], schemas.CLUSTERS)
+    sentences = spark.createDataFrame([], schemas.SENTENCES)
+    feats = clf.bem_features(spark.createDataFrame([], schemas.BEST_MENTIONS),
+                             clusters, datagen.gazetteer_rows())
+    assert explodes(link.arg_contexts(args, clusters, sentences)) == 2
+    assert explodes(feats) == 1
+    # over a feature table with no explode of its own
+    plain = spark.createDataFrame([], feats.schema)
+    assert explodes(clf.training_rows(plain, sentences)) == 1

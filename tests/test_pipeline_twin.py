@@ -99,13 +99,53 @@ def test_clusters_match(runs):
                   ["conv_id", "cluster_id", "best", "mentions"])
 
 
+_LINK_KEYS = ["conv_id", "text", "offset", "clean_text", "clean_offset",
+              "name", "id", "score", "doc_sim", "cand_score", "inlinks", "types"]
+
+
 def test_links_match(runs):
     comp, _, twin, _ = runs
-    _assert_stage(
-        "links", comp.links, twin["links"],
-        ["conv_id", "text", "offset", "clean_text", "clean_offset",
-         "name", "id", "score", "doc_sim", "cand_score", "inlinks", "types"],
-    )
+    _assert_stage("links", comp.links, twin["links"], _LINK_KEYS)
+
+
+def test_ambiguous_arg_links_match(spark):
+    """The datagen corpus never links an ambiguous argument by context
+    (no arg there is 'Meridian', the alias two dictionary entries share
+    with equal inlinks), so this corpus does. Its contexts come from the
+    arg's own sentence only (m_own, m_motor), from a coref sibling's
+    sentence only ('it' in m_sib's second turn), and from a sibling
+    inside the arg's own sentence (m_same), which must count once."""
+    import datetime as dt
+
+    import pandas as pd
+
+    from docopenie_spark import schemas
+
+    convs = {
+        "m_own": ["The Meridian staged a new play with local actors tonight."],
+        "m_motor": ["The Meridian opened a factory for cars last year."],
+        "m_sib": ["The Meridian announced a merger yesterday.",
+                  "later it put the drama on stage every night."],
+        "m_same": ["The Meridian said it hired actors for the play."],
+    }
+    pdf = pd.DataFrame(
+        [(c, i, "user", text, None, dt.datetime(2024, 1, 1))
+         for c, turns in convs.items() for i, text in enumerate(turns)],
+        columns=["conv_id", "turn_idx", "role", "text", "tool", "ts"],
+    ).astype({"turn_idx": "int32"})
+    r = run_pipeline(spark, spark.createDataFrame(pdf, schemas.TRANSCRIPTS))
+    try:
+        twin = twin_pipeline(pdf, datagen.entity_dict_rows(),
+                             datagen.gazetteer_rows())
+        _assert_stage("links", r.links, twin["links"], _LINK_KEYS)
+    finally:
+        r.unpersist()
+    picks = {(x["conv_id"], x["id"], x["doc_sim"] > 0)
+             for x in twin["links"] if x["clean_text"] == "Meridian"}
+    # every conversation's context decides; the theater is picked over
+    # the id-order tie-break (AMBX001) three times
+    assert picks == {("m_own", "AMBX002", True), ("m_motor", "AMBX001", True),
+                     ("m_sib", "AMBX002", True), ("m_same", "AMBX002", True)}
 
 
 _BEM_KEYS = ["conv_id", "kind", "target", "best_mention", "best_entity",

@@ -12,19 +12,30 @@ oracle fails. Usage:
 The session takes get_spark()'s defaults: ``local[$SPARK_GRAFT_CPUS]``
 with as many shuffle partitions (unset: ``local[*]`` and 32;
 ``SPARK_GRAFT_MASTER`` overrides the master), but the test suite's 4g
-driver heap, not get_spark()'s 8g.
+driver heap, not get_spark()'s 8g. DuckDB runs under the fixed caps
+below, printed in the sweep's first line: without them it takes 80% of
+the host's memory and every core beside the Spark driver. The heaviest
+oracle that fits, kg_end_to_end, needs the 10 GB buffer limit at one
+thread (peak RSS 4.7 GB at sf0.001); an oracle that does not fit is an
+ERROR line like any other failure.
 """
 
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
+import tempfile
 
 import duckdb
 import numpy as np
 import pandas as pd
 
 sys.path.insert(0, ".")
+
+DUCKDB_MEMORY_LIMIT = "10GB"
+DUCKDB_THREADS = 1
+DUCKDB_TEMP_DIR = os.path.join(tempfile.gettempdir(), "check_oracle_duckdb")
 
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
@@ -65,7 +76,11 @@ def main():
     spark = get_spark(extra_conf={"spark.driver.memory": "4g"})
     spark.sparkContext.setLogLevel("ERROR")
 
-    con = duckdb.connect()
+    con = duckdb.connect(config={"memory_limit": DUCKDB_MEMORY_LIMIT,
+                                 "threads": DUCKDB_THREADS,
+                                 "temp_directory": DUCKDB_TEMP_DIR})
+    print(f"duckdb memory_limit={DUCKDB_MEMORY_LIMIT} threads={DUCKDB_THREADS}"
+          f" temp_directory={DUCKDB_TEMP_DIR}", flush=True)
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 
